@@ -135,8 +135,8 @@ def compact_partials(
     idempotent per-batch overwrite, so a crashed batch N may be
     redelivered and rewrite `batch=N` — folding a batch that can still
     be redelivered would double-count it when the redelivery recreates
-    its directory. Only the newest `keep` (≥2, the vacuum_versions
-    window) are still in that window; everything older is final. And
+    its directory. Only the newest `keep` (≥2, the
+    vacuum_versions_partitioned window) are still in that window; everything older is final. And
     an in-place fold has no safe ordering: writing the folded sum
     before deleting the folded dirs over-counts on crash, deleting
     first loses data. A fresh store leaves `src_path` untouched until

@@ -242,13 +242,28 @@ class VersionManifests:
             out.append((v, payload))
         return sorted(out)
 
-    def current_partition_map(self, below: int | None = None) -> dict[int, int]:
-        """partition value -> newest committed version (< below) that
-        rewrote it. Folding manifests in version order is the read-time
-        analog of the merge itself: later rewrites shadow earlier
-        ones."""
-        current: dict[int, int] = {}
-        for v, payload in self.committed(below):
-            for p in payload["touched"]:
-                current[p] = v
-        return current
+    def leaf_dirs(self, current: dict[int, int], partitions=None) -> list[str]:
+        """Existing leaf dirs `v=<v>/p=<p>` of a partition map
+        (partition_versions), restricted to `partitions` when given. A
+        mapped partition with no dir was emptied by its newest rewrite
+        (touched-but-absent = empty), so it contributes no path."""
+        out = []
+        for p in current if partitions is None else partitions:
+            if p in current:
+                d = self.version_dir(current[p]) / f"p={p}"
+                if d.exists():
+                    out.append(str(d))
+        return out
+
+
+def partition_versions(manifests: list[tuple[int, dict]]) -> dict[int, int]:
+    """partition value -> newest version in `manifests` (an ascending
+    VersionManifests.committed chain) that rewrote it. Folding
+    manifests in version order is the read-time analog of the merge
+    itself: later rewrites shadow earlier ones. Taking the
+    already-listed chain lets each caller keep one manifest scan."""
+    current: dict[int, int] = {}
+    for v, payload in manifests:
+        for p in payload["touched"]:
+            current[p] = v
+    return current

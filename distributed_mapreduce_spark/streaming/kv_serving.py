@@ -48,10 +48,12 @@ from distributed_mapreduce_spark.operators.kv import (
     key2shard,
     key2shard_py,
 )
+from distributed_mapreduce_spark.streaming.commitlog import (
+    VersionManifests,
+    partition_versions,
+)
 from distributed_mapreduce_spark.streaming.sinks import (
-    _committed_manifests,
     _newest_recorded_schema,
-    _write_manifest,
     read_current_partitioned,
 )
 
@@ -74,10 +76,8 @@ def foreach_batch_kv_serving(
     order is fine, and redelivered rows are dropped by the persisted
     last_seq watermark (apply_kv_ops). Gets in the feed are ignored
     (reads are served from the store, not folded through it)."""
-    import pathlib
-
-    store = pathlib.Path(store_path)
-    committed = _committed_manifests(store_path)
+    vm = VersionManifests(store_path)
+    committed = vm.committed()
     if committed:
         pin = committed[0][1]
         rec = _newest_recorded_schema(committed)
@@ -109,22 +109,14 @@ def foreach_batch_kv_serving(
             ]
             if not touched:
                 # dense version chain, same rationale as the CDC sink
-                (store / f"v={batch_id}").mkdir(parents=True, exist_ok=True)
-                _write_manifest(
-                    store / f"v={batch_id}", [], NSHARDS, False, "key",
+                vm.commit(
+                    batch_id, [], NSHARDS, False, "key",
                     schema=_KV_SCHEMA, bucket_expr="key2shard",
                 )
                 return
-            manifests = _committed_manifests(store_path, below=batch_id)
-            current: dict[int, int] = {}
-            for v, m in manifests:
-                for p in m["touched"]:
-                    current[p] = v
-            base_paths = [
-                str(store / f"v={current[p]}" / f"p={p}")
-                for p in touched
-                if p in current and (store / f"v={current[p]}" / f"p={p}").exists()
-            ]
+            base_paths = vm.leaf_dirs(
+                partition_versions(vm.committed(below=batch_id)), touched
+            )
             if base_paths:
                 # explicit leaf paths: untouched shards are never
                 # listed, opened, or scanned
@@ -139,10 +131,10 @@ def foreach_batch_kv_serving(
             merged.withColumn("p", key2shard(F.col("key"))).repartition(
                 "p"
             ).write.mode("overwrite").partitionBy("p").parquet(
-                str(store / f"v={batch_id}")
+                str(vm.version_dir(batch_id))
             )
-            _write_manifest(
-                store / f"v={batch_id}", touched, NSHARDS, False, "key",
+            vm.commit(
+                batch_id, touched, NSHARDS, False, "key",
                 schema=_KV_SCHEMA, bucket_expr="key2shard",
             )
         finally:

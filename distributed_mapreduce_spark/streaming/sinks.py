@@ -1,6 +1,6 @@
 """Streaming sinks with exactly-once semantics.
 
-Two patterns a production pipeline uses:
+Two commit patterns a production pipeline uses:
 
 1. `parquet_stream_sink` — Spark's transactional file sink: committed
    files are recorded in the checkpoint's sink log, so a restarted or
@@ -8,14 +8,19 @@ Two patterns a production pipeline uses:
    the reference's temp-file+rename atomic commit, worker.go:184-198,
    extended across restarts).
 
-2. `foreach_batch_overwrite` — the idempotent-foreachBatch pattern for
-   sinks without a transaction log: each micro-batch overwrites its own
-   `batch=<id>` partition, so re-delivery of a batch after a crash
-   rewrites the same partition instead of appending twice.
+2. Manifest-committed foreachBatch stores, for sinks without a
+   transaction log: each micro-batch writes its own `batch=<id>` or
+   `v=<id>` directory with overwrite — redelivery after a crash
+   rewrites the same directory instead of appending twice — and one
+   atomic manifest rename makes it visible (streaming/commitlog). The
+   CDC table store (`foreach_batch_cdc_merge_partitioned`) and the
+   dedup/ANN/SemDeDup/decontam/clean ingest stores all commit this way.
+   `foreach_batch_rollup_partials` writes per-batch directories the
+   same way, without a manifest.
 
-Scale notes: both write one file per shuffle partition per batch; at
-real scale compact small files downstream or raise the per-batch
-trigger size.
+Scale notes: every sink writes one file per shuffle partition per
+batch; at real scale compact small files downstream (the compact_*
+maintenance functions) or raise the per-batch trigger size.
 """
 
 from __future__ import annotations
@@ -23,6 +28,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from distributed_mapreduce_spark.streaming.commitlog import (
+    ManifestStore,
+    VersionManifests,
+    atomic_write_json,
+    partition_versions,
+    read_json_tolerant,
+)
 
 
 def parquet_stream_sink(
@@ -79,206 +92,6 @@ def foreach_batch_rollup_partials(
     )
 
 
-def foreach_batch_cdc_merge(
-    changes: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    key: str,
-    init: DataFrame | None = None,
-    ord_col: str = "ord",
-    delete_col: str = "is_delete",
-    ordered: bool = False,
-    reap_tombstones_below=None,
-    merge_schema: bool = False,
-) -> StreamingQuery:
-    """Streaming MERGE INTO — the Delta streaming-upsert pattern on
-    plain parquet: each micro-batch of keyed changes (upserts +
-    delete tombstones, last-writer-wins by `ord_col`) is applied onto
-    the maintained table with operators/cdc.merge_changes (broadcast
-    left-anti + union — the base side never shuffles).
-
-    Exactly-once without a transaction log, via VERSIONED-DIRECTORY
-    commits: batch N reads the newest COMMITTED version `v=<m>` with
-    m < N, merges, and overwrites `v=<N>`. Redelivery of batch N after
-    a crash re-reads the same m (a half-written v=N is ignored by the
-    `< N` rule and clobbered by the overwrite), so replays converge to
-    the same content — the foreach_batch_overwrite idempotence rule
-    applied to stateful maintenance. `read_current_version` gives
-    readers the newest committed snapshot (_SUCCESS-gated).
-
-    Ordering contract: by default the snapshot stores no `ord`, so
-    last-writer-wins across micro-batches relies on the source
-    delivering each key's changes in nondecreasing `ord_col` order
-    batch-to-batch (Spark sources replay a CDC log in offset order, so
-    this holds; see operators/cdc.merge_changes for the out-of-order
-    caveat). `ordered=True` switches to merge_changes_ordered — the
-    snapshot persists per-key ord + delete tombstones and becomes
-    delivery-order independent; `reap_tombstones_below` is the
-    merge-time tombstone GC threshold (see the partitioned sink). The
-    two modes write different snapshot schemas; with no manifest to
-    pin the mode here, a resume under the WRONG mode is refused by a
-    schema check against the newest committed version (silently
-    dropping the ord/tombstone columns would downgrade the guarantee
-    and surface tombstones as live rows).
-
-    Scale notes: each batch rewrites the whole current snapshot — the
-    plain-parquet cost of not having a transaction log. At real scale
-    partition the snapshot (sources/files.write_partitioned
-    dynamic=True) so a batch rewrites only touched partitions, and
-    vacuum versions older than the checkpoint's committed batch on a
-    maintenance cadence.
-
-    Schema evolution (`merge_schema=True`): a resumed run whose change
-    schema carries ADDED payload columns evolves the snapshot through
-    operators/cdc's mergeSchema contract. This layout needs no schema
-    manifest: every version is a FULL snapshot written under one
-    schema, so a time-travel read of a pre-addition version naturally
-    returns the old schema. The mode guard below then accepts a base
-    whose columns are a SUBSET of the current snapshot columns (the
-    pre-evolution snapshot) — additions only; a base column missing
-    from the sink's schema still refuses."""
-    import pathlib
-
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.operators.cdc import (
-        merge_changes,
-        merge_changes_ordered,
-    )
-
-    if reap_tombstones_below is not None and not ordered:
-        raise ValueError("reap_tombstones_below requires ordered=True")
-
-    def _committed(below: int | None = None) -> list[int]:
-        return [
-            int(p.name.split("=", 1)[1])
-            for p in pathlib.Path(store_path).glob("v=*")
-            if (p / "_SUCCESS").exists()
-            and (below is None or int(p.name.split("=", 1)[1]) < below)
-        ]
-
-    payload_cols = (
-        init.columns
-        if init is not None
-        else [c for c in changes.columns if c not in (ord_col, delete_col)]
-    )
-    if merge_schema and init is not None:
-        # evolution with a narrower init in the SAME run — see the
-        # partitioned sink's note (r14 self-review)
-        payload_cols = payload_cols + [
-            c
-            for c in changes.columns
-            if c not in payload_cols and c not in (ord_col, delete_col)
-        ]
-    snapshot_cols = payload_cols + ([ord_col, delete_col] if ordered else [])
-
-    # Seed the initial base as committed version v=-1 (distributed
-    # write, never a driver collect) — only when the store is fresh,
-    # so a resumed stream keeps its maintained state.
-    if init is not None and not _committed():
-        seed = init
-        if ordered:
-            seed = seed.withColumn(
-                ord_col, F.lit(None).cast(changes.schema[ord_col].dataType)
-            ).withColumn(delete_col, F.lit(0))
-        seed.write.mode("overwrite").parquet(f"{store_path}/v=-1")
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        committed = _committed(below=batch_id)
-        if committed:
-            base = spark.read.parquet(f"{store_path}/v={max(committed)}")
-            # mode guard (no manifest in this layout): the snapshot
-            # schema IS the mode — refuse a resume that would silently
-            # drop (or fabricate) the ord/tombstone columns. Compared
-            # as the exact expected column SET, not mere ord-column
-            # presence, so an unordered payload that legitimately
-            # contains a column named like ord_col is not
-            # misclassified (code-review r7-final).
-            ok = (
-                set(base.columns) <= set(snapshot_cols)
-                if merge_schema
-                else set(base.columns) == set(snapshot_cols)
-            )
-            if not ok:
-                raise ValueError(
-                    f"store {store_path} snapshot columns "
-                    f"{sorted(base.columns)} do not match this sink's "
-                    f"ordered={ordered} schema {sorted(snapshot_cols)}; "
-                    "resume with the mode the store was maintained in "
-                    "(added feed columns require merge_schema=True — "
-                    "Delta mergeSchema)"
-                )
-            base = base.select(
-                *[c for c in snapshot_cols if c in base.columns]
-                if merge_schema
-                else snapshot_cols
-            )
-        else:
-            base = spark.createDataFrame([], df.select(*snapshot_cols).schema)
-        if ordered:
-            merged = merge_changes_ordered(
-                base, df, key, ord_col, delete_col,
-                reap_below=reap_tombstones_below,
-                merge_schema=merge_schema,
-            )
-        else:
-            merged = merge_changes(
-                base, df, key, ord_col, delete_col, merge_schema=merge_schema
-            )
-        merged.write.mode("overwrite").parquet(f"{store_path}/v={batch_id}")
-
-    return (
-        changes.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# The version-manifest commit protocol lives in streaming/commitlog
-# (VERDICT r9 #3 — one helper for every manifest-gated sink); these
-# thin delegates keep the sink-local names the tests and older call
-# sites use. Manifest semantics (atomic temp+rename commit, torn
-# payload = uncommitted, touched-but-absent = emptied) are documented
-# and tested ON the helper.
-def _write_manifest(
-    version_dir,
-    touched: list[int],
-    n_buckets: int,
-    ordered: bool = False,
-    key: str | None = None,
-    schema: list | None = None,
-    bucket_expr: str | None = None,
-) -> None:
-    import pathlib
-
-    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
-
-    version_dir = pathlib.Path(version_dir)
-    VersionManifests(version_dir.parent).commit(
-        int(version_dir.name.split("=", 1)[1]),
-        touched,
-        n_buckets,
-        ordered,
-        key,
-        schema,
-        bucket_expr,
-    )
-
-
-def _committed_manifests(store_path: str, below: int | None = None) -> list[tuple[int, dict]]:
-    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
-
-    return VersionManifests(store_path).committed(below)
-
-
-def _current_partition_map(store_path: str, below: int | None = None) -> dict[int, int]:
-    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
-
-    return VersionManifests(store_path).current_partition_map(below)
-
-
 def foreach_batch_cdc_merge_partitioned(
     changes: DataFrame,
     store_path: str,
@@ -292,13 +105,18 @@ def foreach_batch_cdc_merge_partitioned(
     reap_tombstones_below=None,
     merge_schema: bool = False,
 ) -> StreamingQuery:
-    """Partition-scoped streaming MERGE INTO — foreach_batch_cdc_merge
-    with the 100 TB cost model: the snapshot is hash-partitioned on
-    the key (`p = pmod(xxhash64(key), n_buckets)`) and each
-    micro-batch rewrites ONLY the partitions its change-keys touch,
+    """Streaming MERGE INTO — the Delta streaming-upsert pattern on
+    plain parquet, with the 100 TB cost model: each micro-batch of
+    keyed changes (upserts + delete tombstones, last-writer-wins by
+    `ord_col`) is applied with operators/cdc.merge_changes (broadcast
+    left-anti + union — the base side never shuffles) onto a snapshot
+    hash-partitioned on the key (`p = pmod(xxhash64(key), n_buckets)`),
+    and the batch rewrites ONLY the partitions its change-keys touch,
     instead of the whole table. Per-batch cost is
     ∝ touched-partition bytes + batch size — a selective batch against
     a 100 TB snapshot reads and writes a few buckets, never the table.
+    With `n_buckets=1` every batch rewrites the one bucket: a
+    whole-snapshot version chain under the same commit protocol.
 
     Layout: `store/v=<batch>/p=<bucket>/...` — every version directory
     holds ONLY the partitions its batch rewrote; the live snapshot is
@@ -307,23 +125,24 @@ def foreach_batch_cdc_merge_partitioned(
     older version dirs and are never rewritten nor rewritten-in-place,
     so they are byte-identical across batches by construction (✓test).
 
-    Exactly-once, same argument as the unpartitioned sink but
-    partition-scoped: the commit marker is a driver-written
-    `_touched.json` manifest (temp+rename atomic) listing the
-    partitions the batch rewrote — including partitions the batch
-    EMPTIED (listed but absent as a dir ⇒ empty as of that version,
-    so deletes cannot resurrect older state). Batch N builds its base
-    from committed manifests `< N` only; a crash before the manifest
-    lands leaves v=N invisible, and redelivery overwrites it —
-    replays converge. Why not dynamic partition overwrite in place:
-    plain parquet has no partition-level commit protocol, so a crash
-    mid-overwrite leaves a partition half old/half new with no marker
-    to detect it; versioned dirs + manifest make the torn state
-    unreachable instead.
+    Exactly-once without a transaction log, via versioned-directory
+    commits: the commit marker is a `_touched.json` manifest
+    (temp+rename atomic) listing the partitions the batch rewrote —
+    including partitions the batch EMPTIED (listed but absent as a dir
+    ⇒ empty as of that version, so deletes cannot resurrect older
+    state). Batch N builds its base from committed manifests `< N`
+    only; a crash before the manifest lands leaves v=N invisible, and
+    redelivery overwrites it — replays converge. Why not dynamic
+    partition overwrite in place: plain parquet has no
+    partition-level commit protocol, so a crash mid-overwrite leaves a
+    partition half old/half new with no marker to detect it; versioned
+    dirs + manifest make the torn state unreachable instead.
 
-    Ordering contract: by default the same as foreach_batch_cdc_merge
-    (per-key nondecreasing ord across batches; see
-    operators/cdc.merge_changes). With `ordered=True` the snapshot
+    Ordering contract: by default the snapshot stores no `ord`, so
+    last-writer-wins across micro-batches relies on the source
+    delivering each key's changes in nondecreasing `ord_col` order
+    batch-to-batch (Spark sources replay a CDC log in offset order;
+    see operators/cdc.merge_changes). With `ordered=True` the snapshot
     additionally persists each key's last-applied `ord_col` and merges
     through operators/cdc.merge_changes_ordered — stale out-of-order
     redeliveries become no-ops and the maintained snapshot is
@@ -363,19 +182,16 @@ def foreach_batch_cdc_merge_partitioned(
     hashes int and bigint to different values, so a widened key would
     route the same logical key to a different bucket than its stored
     row and the touched-partition merge would never see it (stale
-    duplicates, silently missed deletes). Non-key columns still widen;
-    the flat foreach_batch_cdc_merge rewrites the whole snapshot each
-    batch and keeps key widening."""
-    import pathlib
-
-    from pyspark.sql import functions as F
-
+    duplicates, silently missed deletes). Non-key columns still widen.
+    The sink offers no key widening at all (no caller needs it);
+    operators/cdc.merge_changes still widens the key in a one-shot
+    batch merge."""
     from distributed_mapreduce_spark.operators.cdc import (
         merge_changes,
         merge_changes_ordered,
     )
 
-    store = pathlib.Path(store_path)
+    vm = VersionManifests(store_path)
 
     # Validate argument coherence BEFORE any side effect: a fresh
     # store seeded under a mis-called mode would be permanently pinned
@@ -386,7 +202,7 @@ def foreach_batch_cdc_merge_partitioned(
     def bucket(col):
         return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
-    committed = _committed_manifests(store_path)
+    committed = vm.committed()
     if committed:
         have = committed[0][1]["n_buckets"]
         if have != n_buckets:
@@ -422,8 +238,7 @@ def foreach_batch_cdc_merge_partitioned(
         # every stored row to a bucket the touched-partition probe never
         # reads — merges silently miss them (stale/duplicate rows,
         # undetected deletes). Refuse at construction against the pinned
-        # recorded schema; the flat sink rewrites the whole snapshot and
-        # keeps key widening.
+        # recorded schema.
         rec = _newest_recorded_schema(committed)
         if rec is not None:
             rec_key_t = dict(rec).get(key)
@@ -476,9 +291,9 @@ def foreach_batch_cdc_merge_partitioned(
             ).withColumn(delete_col, F.lit(0))
         seed.withColumn("p", bucket(F.col(key))).write.mode(
             "overwrite"
-        ).partitionBy("p").parquet(str(store / "v=-1"))
-        _write_manifest(
-            store / "v=-1",
+        ).partitionBy("p").parquet(str(vm.version_dir(-1)))
+        vm.commit(
+            -1,
             list(range(n_buckets)),
             n_buckets,
             ordered,
@@ -563,18 +378,13 @@ def foreach_batch_cdc_merge_partitioned(
                 for r in df.select(bucket(F.col(key)).alias("p")).distinct().collect()
             ]
             if not touched:
-                _write_manifest_for_empty(batch_id)
+                # an all-filtered batch still commits (empty touched
+                # set) so the version sequence stays dense for
+                # debugging; readers and redelivery are indifferent.
+                vm.commit(batch_id, [], n_buckets, ordered, key, schema=snap_ddl)
                 return
-            manifests = _committed_manifests(store_path, below=batch_id)
-            current: dict[int, int] = {}
-            for v, m in manifests:
-                for p in m["touched"]:
-                    current[p] = v
-            base_paths = [
-                str(store / f"v={current[p]}" / f"p={p}")
-                for p in touched
-                if p in current and (store / f"v={current[p]}" / f"p={p}").exists()
-            ]
+            manifests = vm.committed(below=batch_id)
+            base_paths = vm.leaf_dirs(partition_versions(manifests), touched)
             if base_paths:
                 # Explicit leaf paths: partitions NOT in `base_paths`
                 # are never listed, opened, or scanned — the pruning
@@ -604,11 +414,10 @@ def foreach_batch_cdc_merge_partitioned(
                         "requires merge_schema=True (Delta mergeSchema); "
                         "refusing to guess"
                     )
-                # Reverse guard (ADVICE r14, mirrors the non-partitioned
-                # sink): stored columns ABSENT from this sink's snapshot
-                # schema would be silently dropped from every touched
-                # partition on rewrite — the rename/drop data loss
-                # _evolve_base refuses, bypassed before it could see it
+                # Reverse guard: stored columns ABSENT from this sink's
+                # snapshot schema would be silently dropped from every
+                # touched partition on rewrite — the rename/drop data
+                # loss _evolve_base refuses, bypassed before it could see it
                 # (e.g. resuming an evolved store with a pre-evolution
                 # feed). Loss only occurs when the stored data actually
                 # carries the column, so the data read — not the
@@ -647,9 +456,9 @@ def foreach_batch_cdc_merge_partitioned(
             merged = merge(base, df, key, ord_col, delete_col)
             merged.withColumn("p", bucket(F.col(key))).write.mode(
                 "overwrite"
-            ).partitionBy("p").parquet(str(store / f"v={batch_id}"))
-            _write_manifest(
-                store / f"v={batch_id}",
+            ).partitionBy("p").parquet(str(vm.version_dir(batch_id)))
+            vm.commit(
+                batch_id,
                 touched,
                 n_buckets,
                 ordered,
@@ -661,15 +470,6 @@ def foreach_batch_cdc_merge_partitioned(
             )
         finally:
             df.unpersist()
-
-    def _write_manifest_for_empty(batch_id: int) -> None:
-        # an all-filtered batch still commits (empty touched set) so
-        # the version sequence stays dense for debugging; readers and
-        # redelivery are indifferent.
-        (store / f"v={batch_id}").mkdir(parents=True, exist_ok=True)
-        _write_manifest(
-            store / f"v={batch_id}", [], n_buckets, ordered, key, schema=snap_ddl
-        )
 
     return (
         changes.writeStream.foreachBatch(write_batch)
@@ -750,22 +550,16 @@ def read_current_partitioned(
     hold no data returns an EMPTY frame in the recorded schema
     (absent = empty is well-defined per partition) rather than
     raising."""
-    import pathlib
-
-    store = pathlib.Path(store_path)
+    vm = VersionManifests(store_path)
+    store = vm.store
     # one manifest scan serves both the existence check and the map
-    manifests = _committed_manifests(
-        store_path, below=None if as_of is None else as_of + 1
-    )
+    manifests = vm.committed(below=None if as_of is None else as_of + 1)
     if not manifests:
         raise FileNotFoundError(
             f"no committed version under {store_path}"
             + (f" at or below as_of={as_of}" if as_of is not None else "")
         )
-    current: dict[int, int] = {}
-    for v, manifest in manifests:
-        for p in manifest["touched"]:
-            current[p] = v
+    current = partition_versions(manifests)
     if partitions is not None:
         current = {p: v for p, v in current.items() if p in set(partitions)}
     if as_of is not None:
@@ -774,10 +568,6 @@ def read_current_partitioned(
         # history floor (compact_store_partitioned writes it — the
         # Delta-checkpoint retention contract) marks where seed
         # content stops being readable as history.
-        from distributed_mapreduce_spark.streaming.commitlog import (
-            read_json_tolerant,
-        )
-
         floor_rec = read_json_tolerant(store / "_history_floor.json")
         if (
             floor_rec is not None
@@ -835,11 +625,7 @@ def read_current_partitioned(
             f"store {store_path} is not an ordered CDC store — its "
             "snapshot has no tombstones to filter (live_only=True)"
         )
-    paths = [
-        str(store / f"v={v}" / f"p={p}")
-        for p, v in current.items()
-        if (store / f"v={v}" / f"p={p}").exists()
-    ]
+    paths = vm.leaf_dirs(current)
     if not paths and partitions is not None:
         # a pruned read over empty/untouched partitions is a
         # well-defined EMPTY result — serve it in the recorded schema
@@ -865,8 +651,6 @@ def read_current_partitioned(
         )
     df = _read_with_recorded_schema(spark, paths, manifests)
     if live_only:
-        from pyspark.sql import functions as F
-
         df = df.where(
             F.coalesce(F.col(delete_col).cast("int"), F.lit(0)) == 0
         ).drop(delete_col)
@@ -914,11 +698,8 @@ def compact_store_partitioned(
     so it is not a free parameter; pass `key` only for stores written
     before the manifests carried it, and it must then match any
     pinned value."""
-    import pathlib
-
-    from pyspark.sql import functions as F
-
-    manifests = _committed_manifests(src_path)
+    src = VersionManifests(src_path)
+    manifests = src.committed()
     if not manifests:
         raise FileNotFoundError(f"no committed version under {src_path}")
     meta = manifests[0][1]
@@ -948,22 +729,13 @@ def compact_store_partitioned(
     # one manifest scan serves the invariants above AND the snapshot
     # paths below — the chain this function exists to shorten is not
     # walked twice (code-review r7-final)
-    current: dict[int, int] = {}
-    for v, manifest in manifests:
-        for p in manifest["touched"]:
-            current[p] = v
-    store = pathlib.Path(src_path)
-    paths = [
-        str(store / f"v={v}" / f"p={p}")
-        for p, v in current.items()
-        if (store / f"v={v}" / f"p={p}").exists()
-    ]
+    paths = src.leaf_dirs(partition_versions(manifests))
     if not paths:
         raise FileNotFoundError(
             f"store {src_path} has no surviving rows or files to compact"
         )
     snap = _read_with_recorded_schema(spark, paths, manifests)
-    dst = pathlib.Path(dst_path)
+    dst = VersionManifests(dst_path)
     if bucket_expr == "key2shard":
         from distributed_mapreduce_spark.operators.kv import key2shard
 
@@ -972,7 +744,7 @@ def compact_store_partitioned(
         p_col = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
     snap.withColumn("p", p_col).write.mode("overwrite").partitionBy(
         "p"
-    ).parquet(str(dst / "v=-1"))
+    ).parquet(str(dst.version_dir(-1)))
     # History floor (code-review r13; scope refined per ADVICE r13):
     # the v=-1 seed holds the HEAD snapshot of the source chain, so a
     # time-travel fold below the source's newest version that resolves
@@ -985,11 +757,9 @@ def compact_store_partitioned(
     # Written BEFORE the seed manifest: a crash in between leaves a
     # store with no committed version (unreadable), never a readable
     # store missing its floor.
-    from distributed_mapreduce_spark.streaming.commitlog import atomic_write_json
-
-    atomic_write_json(dst / "_history_floor.json", {"floor": manifests[-1][0]})
-    _write_manifest(
-        dst / "v=-1",
+    atomic_write_json(dst.store / "_history_floor.json", {"floor": manifests[-1][0]})
+    dst.commit(
+        -1,
         list(range(n_buckets)),
         n_buckets,
         ordered,
@@ -1007,20 +777,23 @@ def compact_store_partitioned(
 
 
 def vacuum_versions_partitioned(store_path: str, keep: int = 2) -> list[int]:
-    """Reclaim partition-scoped CDC versions: a version directory is
-    debris once NO partition's newest-`keep` rewrite history includes
-    it (each partition's last `keep` rewriting versions must survive —
-    the redelivery window of vacuum_versions applied per partition).
-    Uncommitted dirs older than the newest committed version are
-    debris too; anything newer may be an in-flight write. Returns
-    deleted version numbers."""
-    import pathlib
+    """Reclaim CDC store versions: a version directory is debris once
+    NO partition's newest-`keep` rewrite history includes it. Each
+    partition's last `keep` rewriting versions must survive, and
+    keep >= 2 is the redelivery window: a crashed batch N re-reads
+    each touched partition's newest version < N, so the second-newest
+    must survive until N commits. Uncommitted dirs older than the
+    newest committed version are debris too; anything newer may be an
+    in-flight write, and a store with NO committed version is left
+    untouched (any dir there may be a live stream's first write).
+    Returns deleted version numbers."""
     import shutil
 
     if keep < 2:
-        raise ValueError("keep < 2 breaks crash-redelivery (see vacuum_versions)")
-    store = pathlib.Path(store_path)
-    committed = _committed_manifests(store_path)
+        raise ValueError("keep < 2 breaks crash-redelivery (see docstring)")
+    vm = VersionManifests(store_path)
+    store = vm.store
+    committed = vm.committed()
     if not committed:
         return []
     history: dict[int, list[int]] = {}
@@ -1043,7 +816,7 @@ def vacuum_versions_partitioned(store_path: str, keep: int = 2) -> list[int]:
         v = int(p.name.split("=", 1)[1])
         if v in survivors:
             continue
-        if (p / "_touched.json").exists() or v < newest:
+        if (p / vm.MANIFEST).exists() or v < newest:
             doomed.append((v, p))
             if v in by_version:
                 # Record the reclaimed COMMITTED version's touched set
@@ -1061,11 +834,6 @@ def vacuum_versions_partitioned(store_path: str, keep: int = 2) -> list[int]:
         # deletions pending) is harmless: a recorded version whose
         # manifest still exists folds normally (current[p] == d passes
         # the guard), and the next vacuum finishes the deletions.
-        from distributed_mapreduce_spark.streaming.commitlog import (
-            atomic_write_json,
-            read_json_tolerant,
-        )
-
         prior = read_json_tolerant(store / "_vacuumed.json") or {"reclaimed": {}}
         prior["reclaimed"].update(reclaimed)
         atomic_write_json(store / "_vacuumed.json", prior)
@@ -1074,102 +842,6 @@ def vacuum_versions_partitioned(store_path: str, keep: int = 2) -> list[int]:
         shutil.rmtree(p)
         deleted.append(v)
     return sorted(deleted)
-
-
-def read_current_version(
-    spark,
-    store_path: str,
-    live_only: bool = False,
-    delete_col: str = "is_delete",
-    as_of: int | None = None,
-) -> DataFrame:
-    """Newest COMMITTED snapshot of a foreach_batch_cdc_merge store
-    (_SUCCESS-gated, so a crash mid-write never surfaces). `as_of=v`
-    is TIME TRAVEL (Delta/Iceberg `VERSION AS OF`): read the newest
-    committed version ≤ v — the whole-snapshot layout keeps each
-    version self-contained, so the historical read is one directory.
-    Reaches exactly the versions `vacuum_versions` has kept. For an
-    ordered store, `live_only=True` filters the delete tombstones and
-    drops the flag column (see read_current_partitioned); refused when
-    the snapshot carries no tombstone column."""
-    import pathlib
-
-    store = pathlib.Path(store_path)
-    committed = [
-        int(p.name.split("=", 1)[1])
-        for p in store.glob("v=*")
-        if (p / "_SUCCESS").exists()
-        and (as_of is None or int(p.name.split("=", 1)[1]) <= as_of)
-    ]
-    if not committed:
-        raise FileNotFoundError(
-            f"no committed version under {store_path}"
-            + (f" at or below as_of={as_of}" if as_of is not None else "")
-        )
-    df = spark.read.parquet(f"{store_path}/v={max(committed)}")
-    if live_only:
-        from pyspark.sql import functions as F
-
-        if delete_col not in df.columns:
-            raise ValueError(
-                f"store {store_path} is not an ordered CDC store — its "
-                "snapshot has no tombstones to filter (live_only=True)"
-            )
-        df = df.where(
-            F.coalesce(F.col(delete_col).cast("int"), F.lit(0)) == 0
-        ).drop(delete_col)
-    return df
-
-
-def vacuum_versions(store_path: str, keep: int = 2) -> list[int]:
-    """Maintenance companion to foreach_batch_cdc_merge: delete all but
-    the newest `keep` COMMITTED versions (plus any uncommitted debris
-    older than them). keep >= 2 preserves the redelivery contract — a
-    crashed batch N re-reads the newest version < N, so the
-    second-newest must survive until N commits. Returns the deleted
-    version numbers."""
-    import pathlib
-    import shutil
-
-    if keep < 2:
-        raise ValueError("keep < 2 breaks crash-redelivery (see docstring)")
-    store = pathlib.Path(store_path)
-    committed = sorted(
-        int(p.name.split("=", 1)[1])
-        for p in store.glob("v=*")
-        if (p / "_SUCCESS").exists()
-    )
-    if not committed:
-        # Nothing committed -> nothing is provably debris: any v=* here
-        # may be a live stream's in-flight write (ADVICE r6 — the old
-        # fallthrough deleted ALL versions in this state).
-        return []
-    survivors = set(committed[-keep:])
-    deleted = []
-    for p in store.glob("v=*"):
-        v = int(p.name.split("=", 1)[1])
-        # strictly older than the newest survivor: an uncommitted v=N
-        # NEWER than every committed version is an in-flight write,
-        # not debris.
-        if v not in survivors and v < max(survivors):
-            shutil.rmtree(p)
-            deleted.append(v)
-    return sorted(deleted)
-
-
-def foreach_batch_overwrite(result: DataFrame, path: str, checkpoint: str) -> StreamingQuery:
-    """Idempotent foreachBatch: overwrite the batch's own partition —
-    redelivered batches replace, never duplicate."""
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
-
-    return (
-        result.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def _id_bucket(col, id_buckets: int):
@@ -1589,8 +1261,6 @@ def foreach_batch_dedup_ingest(
     grow with corpus/id_buckets — size id_buckets to the target batch
     cardinality (thousands at 100 TB), and compaction keeps the
     per-bucket dir count at one per chain."""
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
     ms = ManifestStore(store_path)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -1680,15 +1350,6 @@ def foreach_batch_dedup_ingest(
     )
 
 
-def _dedup_committed_batches(store) -> list:
-    """Committed batch ids of a central-manifest ingest store,
-    ascending (delegates to commitlog.ManifestStore — the -1 seed
-    admission and torn-manifest tolerance live there)."""
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
-    return ManifestStore(store).committed()
-
-
 def _ingest_manifests_as_of(ms, store_path: str, as_of: int | None):
     """Committed (batch, payload) chain of an ingest store, optionally
     truncated to batch ids ≤ `as_of` — VERSION AS OF on the batch
@@ -1702,8 +1363,6 @@ def _ingest_manifests_as_of(ms, store_path: str, as_of: int | None):
     extend the seed at-or-above the floor stay reachable, as does any
     as_of on an uncompacted store."""
     import pathlib
-
-    from distributed_mapreduce_spark.streaming.commitlog import read_json_tolerant
 
     manifests = [
         (b, p) for b, p in ms.manifests() if as_of is None or b <= as_of
@@ -1743,8 +1402,6 @@ def read_dedup_accepted(spark, store_path: str, as_of: int | None = None) -> Dat
     the prefix union IS the historical state). Refuses below a
     compacted store's history floor when the fold would surface the
     seed — see _ingest_manifests_as_of."""
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
     ms = ManifestStore(store_path)
     manifests = _ingest_manifests_as_of(ms, store_path, as_of)
     dirs = ms.batch_dirs("accepted", manifests=manifests)
@@ -1806,8 +1463,6 @@ class _ChainReset:
     resolution, the clean sink's fp domain) stays in the caller."""
 
     def __init__(self, spark, src_path: str, dst_path: str):
-        from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
         self.spark = spark
         self.src_path, self.dst_path = src_path, dst_path
         self.src_ms, self.dst_ms = ManifestStore(src_path), ManifestStore(dst_path)
@@ -1887,10 +1542,6 @@ class _ChainReset:
         """Crash-ordered finish: history floor (write-ahead), then the
         seed manifest that makes the destination readable."""
         import pathlib
-
-        from distributed_mapreduce_spark.streaming.commitlog import (
-            atomic_write_json,
-        )
 
         atomic_write_json(
             pathlib.Path(self.dst_path) / "_history_floor.json",
@@ -1981,8 +1632,6 @@ def foreach_batch_ann_ingest(
         assign_cells,
         pq_encode,
     )
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
     ms = ManifestStore(store_path)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -2068,8 +1717,6 @@ def ann_ingest_members(
     store's history floor when the fold would surface the seed — see
     _ingest_manifests_as_of."""
     import pathlib
-
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
 
     store = pathlib.Path(store_path)
     ms = ManifestStore(store)
@@ -2275,8 +1922,6 @@ def foreach_batch_semdedup_ingest(
     from distributed_mapreduce_spark.functions.vectors import flat_normalized
     from distributed_mapreduce_spark.operators.dedup import GREEDY_MAX_PAIRS
     from distributed_mapreduce_spark.operators.similarity import kmeans_assign
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
     cap = GREEDY_MAX_PAIRS if max_pairs is None else max_pairs
     ms = ManifestStore(store_path)
 
@@ -2529,8 +2174,6 @@ def read_semdedup_representatives(
     only manifests with batch id ≤ k — labels AND merge records — so
     the read reproduces the surviving set exactly as it stood after
     batch k committed. Raises if no batch ≤ k is committed."""
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
     ms = ManifestStore(store_path)
     manifests = _ingest_manifests_as_of(ms, store_path, as_of)
     alias: dict = {}
@@ -2694,8 +2337,6 @@ def build_decontam_index(
         minhash_signatures,
         write_lsh_band_index,
     )
-    from distributed_mapreduce_spark.streaming.commitlog import atomic_write_json
-
     base = pathlib.Path(index_path)
     spark = bench_docs.sparkSession
 
@@ -2744,8 +2385,6 @@ def build_decontam_index(
 
 def _load_decontam_meta(index_path: str) -> dict:
     import pathlib
-
-    from distributed_mapreduce_spark.streaming.commitlog import read_json_tolerant
 
     meta = read_json_tolerant(pathlib.Path(index_path) / "_decontam_meta.json")
     if meta is None:
@@ -2879,8 +2518,6 @@ def foreach_batch_decontam_ingest(
     accepted (the gate read grows only with corpus/id_buckets, the
     dedup-ingest residual; size id_buckets to batch cardinality)."""
     from distributed_mapreduce_spark.operators.dedup import doc_shingles
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
     meta = _load_decontam_meta(index_path)
     ms = ManifestStore(store_path)
 
@@ -2970,8 +2607,6 @@ def read_decontam_accepted(spark, store_path: str, as_of: int | None = None) -> 
     store — committed batches only; `as_of=k` folds the batch-chain
     prefix ≤ k (VERSION AS OF; survivors only ever append, so the
     prefix union IS the post-batch-k state)."""
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
     ms = ManifestStore(store_path)
     manifests = _ingest_manifests_as_of(ms, store_path, as_of)
     dirs = ms.batch_dirs("accepted", manifests=manifests)
@@ -3046,8 +2681,6 @@ def foreach_batch_clean_ingest(
     )
     from distributed_mapreduce_spark.functions.text import fingerprint
     from distributed_mapreduce_spark.operators.dedup import doc_shingles
-    from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-
     meta = _load_decontam_meta(index_path)
     ms = ManifestStore(store_path)
 

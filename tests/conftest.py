@@ -12,14 +12,14 @@ SF_CORRECT = "/root/testdata/sf0.01"
 # was truncated mid-run two rounds straight, losing the green signal.
 # The DEFAULT tier must finish well inside that window (~8-10 min), so
 # the heavy batteries — the parametrized shadow-tier oracle parities,
-# the multi-minute streamed≡one-shot/compaction sink replays, the
-# hypothesis property folds, and the all-50-query plan sweeps — are
-# marked `full_tier` and SKIP unless DMR_FULL_TESTS=1. They are not
-# second-class: the builder's own round passes run the full tier
-# (DMR_FULL_TESTS=1 python -m pytest tests/ -q), and every skipped
-# battery guards semantics that the default tier still smoke-covers
-# with a cheaper representative (e.g. registered-tier parity stays
-# default; one sink e2e stays default).
+# the multi-minute streamed≡one-shot/compaction sink replays and the
+# hypothesis property folds — are marked `full_tier` and SKIP unless
+# DMR_FULL_TESTS=1. The registry-wide plan guards stay in the default
+# tier. The skipped batteries are not second-class: the full tier
+# (DMR_FULL_TESTS=1 python -m pytest tests/ -q) runs them, and each
+# guards semantics that the default tier still smoke-covers with a
+# cheaper representative (e.g. registered-tier parity stays default;
+# one sink e2e stays default).
 FULL_TESTS = os.environ.get("DMR_FULL_TESTS") == "1"
 
 

@@ -324,15 +324,14 @@ def test_streaming_cdc_ordered_sink_out_of_order_feed(spark, tmp_path):
 
 
 def test_streaming_cdc_ordered_unpartitioned_sink(spark, tmp_path):
-    """The whole-snapshot sink's ordered mode: same out-of-order feed
-    as the partitioned test converges to max-ord-wins; with no
-    manifest in this layout, the mode guard is the snapshot schema —
-    a resume under the wrong mode refuses instead of silently
-    dropping (or fabricating) the ord/tombstone columns."""
+    """Ordered mode on a single-bucket store (`n_buckets=1`: every
+    batch rewrites the whole snapshot): the same out-of-order feed as
+    the multi-bucket test converges to max-ord-wins, live_only hides
+    the tombstone, and the tombstone keeps its ord watermark."""
     from distributed_mapreduce_spark.streaming import event_stream
     from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_cdc_merge,
-        read_current_version,
+        foreach_batch_cdc_merge_partitioned,
+        read_current_partitioned,
     )
 
     src = tmp_path / "src"
@@ -345,40 +344,29 @@ def test_streaming_cdc_ordered_unpartitioned_sink(spark, tmp_path):
         base + 5,
     )
     store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
-    q = foreach_batch_cdc_merge(
-        _to_changes(event_stream(spark, str(src))), store, ckpt, "k", ordered=True
-    )
-    q.awaitTermination()
-    live = read_current_version(spark, store, live_only=True)
-    assert "is_delete" not in live.columns
-    assert {r.k: r.v for r in live.collect()} == {1: 1.0, 3: 10.0}
-    tomb = read_current_version(spark, store).where(F.col("is_delete") != 0)
-    assert [(r.k, r.ord) for r in tomb.collect()] == [(2, 200)]
-
-    # wrong-mode resume refuses via the schema guard. The SAME
-    # checkpoint must be reused: a fresh checkpoint restarts batch ids
-    # at 0 and the `< batch_id` base rule sees no committed version at
-    # all (a fresh stream identity legitimately rebuilds the store, by
-    # the redelivery contract) — only a genuine resume, whose next
-    # batch reads the newest ordered version, hits the guard.
-    _chunk(str(src / "c3.parquet"), [(300, 4, "up", 4.0)], base + 10)
-    q2 = foreach_batch_cdc_merge(
+    q = foreach_batch_cdc_merge_partitioned(
         _to_changes(event_stream(spark, str(src))),
         store,
         ckpt,
         "k",
-        ordered=False,
+        n_buckets=1,
+        ordered=True,
     )
-    with pytest.raises(Exception, match="ordered"):
-        q2.awaitTermination()
+    q.awaitTermination()
+    live = read_current_partitioned(spark, store, live_only=True)
+    assert "is_delete" not in live.columns
+    assert {r.k: r.v for r in live.collect()} == {1: 1.0, 3: 10.0}
+    tomb = read_current_partitioned(spark, store).where(F.col("is_delete") != 0)
+    assert [(r.k, r.ord) for r in tomb.collect()] == [(2, 200)]
 
-    # reaping requires ordered, same as the partitioned sink
+    # reaping requires ordered, at any bucket count
     with pytest.raises(ValueError, match="reap_tombstones_below"):
-        foreach_batch_cdc_merge(
+        foreach_batch_cdc_merge_partitioned(
             _to_changes(event_stream(spark, str(src))),
             str(tmp_path / "other"),
             str(tmp_path / "ckpt3"),
             "k",
+            n_buckets=1,
             reap_tombstones_below=5,
         )
 
@@ -394,8 +382,8 @@ def test_compact_store_resets_chain_and_replay_converges(spark, tmp_path):
     is gated to a no-op by its own persisted ord, and new data merges
     normally — the final state equals a straight uncompacted run."""
     from distributed_mapreduce_spark.streaming import event_stream
+    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
     from distributed_mapreduce_spark.streaming.sinks import (
-        _committed_manifests,
         compact_store_partitioned,
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
@@ -420,11 +408,11 @@ def test_compact_store_resets_chain_and_replay_converges(spark, tmp_path):
 
     s1 = str(tmp_path / "s1")
     run(s1, str(tmp_path / "ckpt1"))
-    assert len(_committed_manifests(s1)) == 2  # one per batch
+    assert len(VersionManifests(s1).committed()) == 2  # one per batch
 
     s2 = str(tmp_path / "s2")
     compact_store_partitioned(spark, s1, s2, "k")
-    assert len(_committed_manifests(s2)) == 1  # the chain reset
+    assert len(VersionManifests(s2).committed()) == 1  # the chain reset
     # snapshot identical through compaction, tombstone included
     assert sorted(
         (r.k, r.v, r.ord, r.is_delete)
@@ -465,8 +453,8 @@ def test_compact_store_unordered_replay_converges(spark, tmp_path):
     final state equals a straight run (the unordered snapshot has no
     tombstones — deletes replay as deletes)."""
     from distributed_mapreduce_spark.streaming import event_stream
+    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
     from distributed_mapreduce_spark.streaming.sinks import (
-        _committed_manifests,
         compact_store_partitioned,
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
@@ -488,7 +476,7 @@ def test_compact_store_unordered_replay_converges(spark, tmp_path):
     run(s1, str(tmp_path / "ckpt1"))
     s2 = str(tmp_path / "s2")
     compact_store_partitioned(spark, s1, s2)  # key comes from the manifest
-    assert len(_committed_manifests(s2)) == 1
+    assert len(VersionManifests(s2).committed()) == 1
 
     _chunk(str(src / "c3.parquet"), [(5, 1, "up", 9.0), (6, 4, "up", 4.0)], base + 10)
     run(s2, str(tmp_path / "ckpt2"))
@@ -827,8 +815,7 @@ def test_partitioned_sink_date_to_ntz_widening_e2e(spark, tmp_path):
         2: datetime.datetime(2020, 3, 1, 0, 0),
         3: datetime.datetime(2020, 3, 1, 0, 0),
     }
-    # time travel below the widening: the OLD schema, both layouts'
-    # contract (the r15 schema-on-read redesign)
+    # time travel below the widening: the OLD schema
     pre = read_current_partitioned(spark, store, as_of=0)
     assert dict(pre.dtypes)["d"] == "date"
     assert {r.k: r.d for r in pre.collect()} == {

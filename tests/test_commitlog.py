@@ -21,6 +21,7 @@ from distributed_mapreduce_spark.streaming.commitlog import (
     ManifestStore,
     VersionManifests,
     atomic_write_json,
+    partition_versions,
     read_json_tolerant,
 )
 from distributed_mapreduce_spark.streaming.sinks import (
@@ -173,11 +174,20 @@ def test_version_manifests_commit_fold_and_below(tmp_path):
     vm.commit(2, [1], n_buckets=4)
     assert [v for v, _ in vm.committed()] == [0, 2]
     # later versions shadow earlier ones per partition
-    assert vm.current_partition_map() == {0: 0, 1: 2}
-    assert vm.current_partition_map(below=2) == {0: 0, 1: 0}
+    current = partition_versions(vm.committed())
+    assert current == {0: 0, 1: 2}
+    assert partition_versions(vm.committed(below=2)) == {0: 0, 1: 0}
     # touched is sorted and invariants are pinned in the payload
     v0 = dict(vm.committed())[0]
     assert v0["touched"] == [0, 1] and v0["n_buckets"] == 4
+    # leaf dirs: touched-but-absent reads as empty (no path), unmapped
+    # partitions are skipped, and `partitions` order is kept
+    (vm.version_dir(0) / "p=0").mkdir()
+    (vm.version_dir(2) / "p=1").mkdir()
+    d0, d1 = str(vm.version_dir(0) / "p=0"), str(vm.version_dir(2) / "p=1")
+    assert vm.leaf_dirs(current) == [d0, d1]
+    assert vm.leaf_dirs(current, [1, 3, 0]) == [d1, d0]
+    assert vm.leaf_dirs({0: 2, 1: 2}) == [d1]
 
 
 def test_version_manifests_torn_manifest_is_uncommitted(tmp_path):
@@ -187,10 +197,10 @@ def test_version_manifests_torn_manifest_is_uncommitted(tmp_path):
     torn.mkdir(parents=True)
     (torn / VersionManifests.MANIFEST).write_text('{"touched": [0')
     assert [v for v, _ in vm.committed()] == [0]
-    assert vm.current_partition_map() == {0: 0}
+    assert partition_versions(vm.committed()) == {0: 0}
     # redelivery overwrites the torn version and it becomes visible
     vm.commit(1, [0], n_buckets=2)
-    assert vm.current_partition_map() == {0: 1}
+    assert partition_versions(vm.committed()) == {0: 1}
 
 
 def test_id_buckets_pin(tmp_path):

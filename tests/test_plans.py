@@ -46,7 +46,6 @@ def test_anti_join_no_cartesian(spark, sf_dir):
     plans.assert_no_cartesian(rel_q12_customers_without_orders(spark, sf_dir))
 
 
-@pytest.mark.full_tier
 def test_no_cartesian_in_any_registered_query(spark, sf_dir):
     """Registry-wide plan guard over BOTH tiers (50 registered + all
     shadow queries): no batch query may plan a CartesianProduct, and
@@ -232,7 +231,6 @@ def test_dup_spans_partial_agg_and_semi_join(spark, sf_dir):
     assert "LeftSemi" in p, p
 
 
-@pytest.mark.full_tier
 def test_no_global_window_in_any_query(spark, sf_dir):
     """Registry-wide scale guard (VERDICT r7 #5): `row_number() OVER
     (ORDER BY …)` with no PARTITION BY plans a single-partition Window

@@ -237,107 +237,75 @@ def test_compact_partials_preserves_fold_and_redelivery_window(spark, tmp_path):
 
 
 def test_streaming_cdc_merge_maintains_table(spark, tmp_path):
-    """Streaming MERGE INTO (foreach_batch_cdc_merge): a replayed
-    change stream — upserts, updates, delete tombstones — maintains a
-    keyed snapshot across micro-batches; resume with no data adds no
-    version; a late chunk folds in incrementally; and the final
-    content is batch-boundary INVARIANT (all changes in one batch ≡
-    one chunk per batch — last-writer-wins composes)."""
-    from pyspark.sql import functions as F
+    """Streaming MERGE INTO (foreach_batch_cdc_merge_partitioned): a
+    replayed change stream — upserts, updates, delete tombstones —
+    maintains a keyed snapshot across micro-batches; resume with no
+    data adds no version; a late chunk folds in incrementally; and the
+    final content is batch-boundary INVARIANT (all changes in one
+    batch ≡ one chunk per batch — last-writer-wins composes)."""
+    import pathlib as _pl
 
     from distributed_mapreduce_spark.streaming import event_stream
     from distributed_mapreduce_spark.streaming.replay import EVENT_SCHEMA
     from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_cdc_merge,
-        read_current_version,
+        foreach_batch_cdc_merge_partitioned,
+        read_current_partitioned,
     )
-
-    def change_chunk(path, rows, mtime):
-        # rows: (ord, key, type, value)
-        tbl = pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array(
-                    [r[0] * 1_000_000 for r in rows], pa.timestamp("us")
-                ),
-                "user_id": pa.array([r[1] for r in rows], pa.int64()),
-                "event_type": pa.array([r[2] for r in rows]),
-                "value": pa.array([float(r[3]) for r in rows]),
-                "props": pa.array(["{}"] * len(rows)),
-            }
-        )
-        pq.write_table(tbl, path)
-        os.utime(path, (mtime, mtime))
-
-    def to_changes(ev):
-        return ev.select(
-            F.col("user_id").alias("k"),
-            F.col("event_id").alias("ord"),
-            (F.col("event_type") == "del").cast("int").alias("is_delete"),
-            F.col("value").alias("v"),
-        )
 
     src = tmp_path / "src"
     src.mkdir()
     store = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
     base = time.time()
-    change_chunk(str(src / "c1.parquet"), [(1, 1, "up", 10), (2, 2, "up", 20), (3, 3, "up", 30)], base)
-    change_chunk(str(src / "c2.parquet"), [(4, 2, "up", 21), (5, 3, "del", 0), (6, 4, "up", 40)], base + 5)
+    _cdc_change_chunk(
+        str(src / "c1.parquet"), [(1, 1, "up", 10), (2, 2, "up", 20), (3, 3, "up", 30)], base
+    )
+    _cdc_change_chunk(
+        str(src / "c2.parquet"), [(4, 2, "up", 21), (5, 3, "del", 0), (6, 4, "up", 40)], base + 5
+    )
 
-    def run():
-        q = foreach_batch_cdc_merge(
-            to_changes(event_stream(spark, str(src))), store, ckpt, "k"
-        )
+    def run(changes, store, ckpt):
+        q = foreach_batch_cdc_merge_partitioned(changes, store, ckpt, "k", n_buckets=4)
         q.awaitTermination()
+        return {r.k: r.v for r in read_current_partitioned(spark, store).collect()}
 
-    def snapshot():
-        return {
-            r.k: r.v for r in read_current_version(spark, store).collect()
-        }
+    def run_chunked():
+        return run(_cdc_to_changes(event_stream(spark, str(src))), store, ckpt)
 
-    run()
-    assert snapshot() == {1: 10.0, 2: 21.0, 4: 40.0}
-    import pathlib as _pl
-
+    assert run_chunked() == {1: 10.0, 2: 21.0, 4: 40.0}
     n_versions = len(list(_pl.Path(store).glob("v=*")))
 
     # resume with no new data: no new version, same content
-    run()
+    assert run_chunked() == {1: 10.0, 2: 21.0, 4: 40.0}
     assert len(list(_pl.Path(store).glob("v=*"))) == n_versions
-    assert snapshot() == {1: 10.0, 2: 21.0, 4: 40.0}
 
     # late chunk folds in incrementally
-    change_chunk(str(src / "c3.parquet"), [(7, 1, "del", 0), (8, 5, "up", 50)], base + 10)
-    run()
-    assert snapshot() == {2: 21.0, 4: 40.0, 5: 50.0}
+    _cdc_change_chunk(
+        str(src / "c3.parquet"), [(7, 1, "del", 0), (8, 5, "up", 50)], base + 10
+    )
+    assert run_chunked() == {2: 21.0, 4: 40.0, 5: 50.0}
 
     # batch-boundary invariance: the same change set delivered as ONE
     # batch (plain readStream, no maxFilesPerTrigger) ends at the same
     # snapshot
-    store2 = str(tmp_path / "store2")
-    ckpt2 = str(tmp_path / "ckpt2")
-    one_batch = to_changes(
+    one_batch = _cdc_to_changes(
         spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
     )
-    q = foreach_batch_cdc_merge(one_batch, store2, ckpt2, "k")
-    q.awaitTermination()
-    assert {
-        r.k: r.v for r in read_current_version(spark, store2).collect()
-    } == {2: 21.0, 4: 40.0, 5: 50.0}
+    assert run(one_batch, str(tmp_path / "store2"), str(tmp_path / "ckpt2")) == {
+        2: 21.0,
+        4: 40.0,
+        5: 50.0,
+    }
 
 
 def test_streaming_cdc_merge_seeds_init_base(spark, tmp_path):
     """An initial base table seeds the maintained store as committed
-    version v=-1 (distributed write): untouched keys pass through,
-    changed keys take the stream's winning payload, and a resumed
-    stream does NOT re-seed (maintained state wins over init)."""
-    from pyspark.sql import functions as F
-
+    version v=-1 (distributed write): untouched keys pass through and
+    changed keys take the stream's winning payload."""
     from distributed_mapreduce_spark.streaming import event_stream
     from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_cdc_merge,
-        read_current_version,
+        foreach_batch_cdc_merge_partitioned,
+        read_current_partitioned,
     )
 
     src = tmp_path / "src"
@@ -348,19 +316,16 @@ def test_streaming_cdc_merge_seeds_init_base(spark, tmp_path):
 
     init = spark.createDataFrame([(1, 99.0), (7, 70.0)], "k bigint, v double")
 
-    def to_changes(ev):
-        return ev.select(
-            F.col("user_id").alias("k"),
-            F.col("event_id").alias("ord"),
-            F.lit(0).alias("is_delete"),
-            F.col("value").alias("v"),
-        )
-
-    q = foreach_batch_cdc_merge(
-        to_changes(event_stream(spark, str(src))), store, ckpt, "k", init=init
+    q = foreach_batch_cdc_merge_partitioned(
+        _cdc_to_changes(event_stream(spark, str(src))),
+        store,
+        ckpt,
+        "k",
+        n_buckets=4,
+        init=init,
     )
     q.awaitTermination()
-    got = {r.k: r.v for r in read_current_version(spark, store).collect()}
+    got = {r.k: r.v for r in read_current_partitioned(spark, store).collect()}
     assert got == {1: 1.0, 7: 70.0}  # k=1 upserted, k=7 passthrough
 
 
@@ -404,16 +369,15 @@ def _file_md5s(root):
 
 
 def test_streaming_cdc_partitioned_matches_unpartitioned(spark, tmp_path):
-    """The partition-scoped CDC sink must end at the same snapshot as
-    the whole-snapshot sink for the same chunked change feed (upserts,
-    updates, deletes), per-batch and as one batch (boundary
-    invariance), with an init base seeded."""
+    """A multi-bucket store must end at the same snapshot as a
+    single-bucket one (`n_buckets=1`, every batch rewrites the whole
+    snapshot) for the same chunked change feed (upserts, updates,
+    deletes) with an init base seeded — and both at the literal
+    expected snapshot."""
     from distributed_mapreduce_spark.streaming import event_stream
     from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_cdc_merge,
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
-        read_current_version,
     )
 
     src = tmp_path / "src"
@@ -436,22 +400,14 @@ def test_streaming_cdc_partitioned_matches_unpartitioned(spark, tmp_path):
     )
     init = spark.createDataFrame([(7, 70.0), (2, 2.0)], "k bigint, v double")
 
-    def snap_flat():
-        store, ckpt = str(tmp_path / "flat"), str(tmp_path / "flat_ckpt")
-        q = foreach_batch_cdc_merge(
-            _cdc_to_changes(event_stream(spark, str(src))), store, ckpt, "k", init=init
-        )
-        q.awaitTermination()
-        return {r.k: r.v for r in read_current_version(spark, store).collect()}
-
-    def snap_part():
-        store, ckpt = str(tmp_path / "part"), str(tmp_path / "part_ckpt")
+    def snap(name, n_buckets):
+        store, ckpt = str(tmp_path / name), str(tmp_path / f"{name}_ckpt")
         q = foreach_batch_cdc_merge_partitioned(
             _cdc_to_changes(event_stream(spark, str(src))),
             store,
             ckpt,
             "k",
-            n_buckets=4,
+            n_buckets=n_buckets,
             init=init,
         )
         q.awaitTermination()
@@ -459,9 +415,10 @@ def test_streaming_cdc_partitioned_matches_unpartitioned(spark, tmp_path):
             r.k: r.v for r in read_current_partitioned(spark, store).collect()
         }
 
-    expect = snap_flat()
-    store, got = snap_part()
-    assert got == expect == {2: 21.0, 4: 40.0, 5: 50.0, 7: 70.0, 11: 111.0}
+    expect = {2: 21.0, 4: 40.0, 5: 50.0, 7: 70.0, 11: 111.0}
+    assert snap("single", 1)[1] == expect
+    store, got = snap("part", 4)
+    assert got == expect
 
     # resume with no new data: no new version, same content
     import pathlib as _pl
@@ -733,19 +690,22 @@ def test_vacuum_versions_partitioned(spark, tmp_path):
 
 
 def test_vacuum_versions_keeps_redelivery_window(spark, tmp_path):
-    """vacuum_versions drops old committed versions and uncommitted
-    debris, keeps the newest `keep`, refuses keep<2, and the maintained
-    snapshot is unchanged after vacuuming."""
+    """vacuum_versions_partitioned on a one-bucket store drops old
+    committed versions, keeps the newest `keep`, refuses keep<2, never
+    touches uncommitted dirs that may be in-flight writes (a store with
+    nothing committed, a version newer than every committed one), and
+    the maintained snapshot is unchanged after vacuuming."""
     import pathlib as _pl
 
     import pytest as _pt
     from pyspark.sql import functions as F
 
     from distributed_mapreduce_spark.streaming import event_stream
+    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
     from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_cdc_merge,
-        read_current_version,
-        vacuum_versions,
+        foreach_batch_cdc_merge_partitioned,
+        read_current_partitioned,
+        vacuum_versions_partitioned,
     )
 
     src = tmp_path / "src"
@@ -764,24 +724,21 @@ def test_vacuum_versions_keeps_redelivery_window(spark, tmp_path):
             F.col("value").alias("v"),
         )
 
-    q = foreach_batch_cdc_merge(
-        to_changes(event_stream(spark, str(src))), store, ckpt, "k"
+    q = foreach_batch_cdc_merge_partitioned(
+        to_changes(event_stream(spark, str(src))), store, ckpt, "k", n_buckets=1
     )
     q.awaitTermination()
-    # uncommitted debris: a half-written version dir without _SUCCESS
-    debris = _pl.Path(store) / "v=0_junk"  # malformed names are ignored
-    half = _pl.Path(store) / "v=1"
-    assert (half / "_SUCCESS").exists()
-    before = {r.k: r.v for r in read_current_version(spark, store).collect()}
+    assert (_pl.Path(store) / "v=1" / VersionManifests.MANIFEST).exists()
+    before = {r.k: r.v for r in read_current_partitioned(spark, store).collect()}
 
     with _pt.raises(ValueError):
-        vacuum_versions(store, keep=1)
+        vacuum_versions_partitioned(store, keep=1)
 
     # a store with NO committed versions (e.g. a live stream's first
-    # in-flight write) must not be touched at all (ADVICE r6)
+    # in-flight write) must not be touched at all
     fresh = _pl.Path(str(tmp_path / "fresh_store"))
-    (fresh / "v=0").mkdir(parents=True)  # uncommitted: no _SUCCESS
-    assert vacuum_versions(str(fresh), keep=2) == []
+    (fresh / "v=0").mkdir(parents=True)  # uncommitted: no manifest
+    assert vacuum_versions_partitioned(str(fresh), keep=2) == []
     assert (fresh / "v=0").exists()
 
     # an uncommitted version NEWER than every committed one is an
@@ -789,7 +746,7 @@ def test_vacuum_versions_keeps_redelivery_window(spark, tmp_path):
     inflight = _pl.Path(store) / "v=99"
     inflight.mkdir()
 
-    deleted = vacuum_versions(store, keep=2)
+    deleted = vacuum_versions_partitioned(store, keep=2)
     assert deleted == [0, 1]
     assert inflight.exists()
     inflight.rmdir()
@@ -797,7 +754,7 @@ def test_vacuum_versions_keeps_redelivery_window(spark, tmp_path):
         int(p.name.split("=", 1)[1]) for p in _pl.Path(store).glob("v=*")
     )
     assert left == [2, 3]
-    after = {r.k: r.v for r in read_current_version(spark, store).collect()}
+    after = {r.k: r.v for r in read_current_partitioned(spark, store).collect()}
     assert after == before
 
 
@@ -1426,26 +1383,20 @@ def test_knn_join_over_maintained_ann_ingest_store(spark, tmp_path):
 
 
 def test_time_travel_as_of_both_layouts(spark, tmp_path):
-    """VERSION AS OF time travel on both CDC store layouts: as_of=v
+    """VERSION AS OF time travel on both CDC store layouts — one
+    bucket (each version a whole snapshot) and several: as_of=v
     reproduces the snapshot exactly as it stood after batch v
     committed (checked against every batch boundary), as_of below the
     first version raises, and the vacuum interplay is SOUND — the
-    whole-snapshot layout naturally refuses reclaimed versions (prefix
-    deletions leave nothing ≤ as_of), while the partitioned layout
-    detects, per partition via the _vacuumed.json record, a historical
-    fold that would silently resolve past a reclaimed rewrite, and
-    refuses instead of fabricating history."""
-    import pathlib
-
+    reader detects, per partition via the _vacuumed.json record, a
+    historical fold that would silently resolve past a reclaimed
+    rewrite, and refuses instead of fabricating history."""
     import pytest
 
     from distributed_mapreduce_spark.streaming import event_stream
     from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_cdc_merge,
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
-        read_current_version,
-        vacuum_versions,
         vacuum_versions_partitioned,
     )
 
@@ -1470,49 +1421,35 @@ def test_time_travel_as_of_both_layouts(spark, tmp_path):
         2: {1: 12.0, 2: 20.0},
     }
 
-    flat, flat_ckpt = str(tmp_path / "flat"), str(tmp_path / "flat_ckpt")
-    q = foreach_batch_cdc_merge(
-        _cdc_to_changes(event_stream(spark, str(src))), flat, flat_ckpt, "k"
-    )
-    q.awaitTermination()
-    part, part_ckpt = str(tmp_path / "part"), str(tmp_path / "part_ckpt")
-    q = foreach_batch_cdc_merge_partitioned(
-        _cdc_to_changes(event_stream(spark, str(src))),
-        part,
-        part_ckpt,
-        "k",
-        n_buckets=4,
-    )
-    q.awaitTermination()
+    def run(store, n_buckets):
+        q = foreach_batch_cdc_merge_partitioned(
+            _cdc_to_changes(event_stream(spark, str(src))),
+            store,
+            store + "_ckpt",
+            "k",
+            n_buckets=n_buckets,
+        )
+        q.awaitTermination()
 
-    for v, exp in expected.items():
-        assert {
-            r.k: r.v for r in read_current_version(spark, flat, as_of=v).collect()
-        } == exp, f"flat as_of={v}"
-        assert {
-            r.k: r.v
-            for r in read_current_partitioned(spark, part, as_of=v).collect()
-        } == exp, f"part as_of={v}"
+    single, part = str(tmp_path / "single"), str(tmp_path / "part")
+    run(single, 1)
+    run(part, 4)
+
+    for store in (single, part):
+        for v, exp in expected.items():
+            assert {
+                r.k: r.v
+                for r in read_current_partitioned(spark, store, as_of=v).collect()
+            } == exp, f"{store} as_of={v}"
+        with pytest.raises(FileNotFoundError):
+            read_current_partitioned(spark, store, as_of=-1)
     # as_of at/above the newest version == the live read
     assert {
         r.k: r.v for r in read_current_partitioned(spark, part, as_of=99).collect()
     } == expected[2]
-    with pytest.raises(FileNotFoundError):
-        read_current_version(spark, flat, as_of=-1)
-    with pytest.raises(FileNotFoundError):
-        read_current_partitioned(spark, part, as_of=-1)
 
-    # vacuum interplay — whole-snapshot layout: keep=2 deletes v=0;
-    # as_of=0 must now refuse (nothing committed ≤ 0), as_of=1 exact.
-    assert vacuum_versions(flat, keep=2) == [0]
-    with pytest.raises(FileNotFoundError):
-        read_current_version(spark, flat, as_of=0)
-    assert {
-        r.k: r.v for r in read_current_version(spark, flat, as_of=1).collect()
-    } == expected[1]
-
-    # vacuum interplay — partitioned layout: key 2's only rewrite is
-    # v=0, so v=0 SURVIVES keep=2 and every as_of stays exact...
+    # vacuum interplay: key 2's only rewrite is v=0, so v=0 SURVIVES
+    # keep=2 and every as_of stays exact...
     assert vacuum_versions_partitioned(part, keep=2) == []
     for v, exp in expected.items():
         assert {
@@ -1522,8 +1459,7 @@ def test_time_travel_as_of_both_layouts(spark, tmp_path):
     # ...until the hot partitions outgrow their windows: two more
     # batches touching keys 1 AND 3 push both their keep=2 windows to
     # {v3, v4}, leaving v1/v2 protected by nothing (key 2's partition
-    # only pins v0) — the mid-history reclamation the prefix-deleting
-    # whole-snapshot vacuum can never produce. Afterward, time travel
+    # only pins v0) — a mid-history reclamation. Afterward, time travel
     # into a reclaimed rewrite refuses, while as_of windows whose
     # every partition still resolves to a surviving manifest keep
     # working.
@@ -1533,14 +1469,7 @@ def test_time_travel_as_of_both_layouts(spark, tmp_path):
     _cdc_change_chunk(
         str(src / "c5.parquet"), [(9, 1, "up", 14), (10, 3, "del", 0)], base + 20
     )
-    q = foreach_batch_cdc_merge_partitioned(
-        _cdc_to_changes(event_stream(spark, str(src))),
-        part,
-        part_ckpt,
-        "k",
-        n_buckets=4,
-    )
-    q.awaitTermination()
+    run(part, 4)
     # key 1 history: v=0,1,2,3,4 — keep=2 keeps {3,4}; key 2: {0};
     # key 3: {1,2}; newest-2 overall {3,4} ⇒ nothing reclaimed yet?
     # v=0 still survives through key 2, but key 1's v=1,2 rewrites are
@@ -1799,19 +1728,17 @@ def test_cdc_schema_evolution_both_layouts(spark, tmp_path):
     """mergeSchema evolution end-to-end (VERDICT r13 #3): a CDC feed
     widens mid-stream — run 1 maintains (k, v); run 2 resumes over the
     SAME checkpoint with an added payload column x and
-    merge_schema=True. Both sink layouts evolve: pre-addition rows
-    read back with typed NULL x, post-addition winners carry values,
-    and on the partitioned layout a TIME-TRAVEL read below the
-    addition returns the OLD schema (the version manifest records the
-    snapshot schema). A resume with merge_schema left False refuses
-    loudly; so does a type change."""
+    merge_schema=True. Both store layouts (two buckets, one bucket)
+    evolve: pre-addition rows read back with typed NULL x,
+    post-addition winners carry values, and a TIME-TRAVEL read below
+    the addition returns the OLD schema (the version manifest records
+    the snapshot schema). A resume with merge_schema left False
+    refuses loudly."""
     import pytest
 
     from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_cdc_merge,
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
-        read_current_version,
     )
 
     src = tmp_path / "src"
@@ -1861,35 +1788,23 @@ def test_cdc_schema_evolution_both_layouts(spark, tmp_path):
     s1 = "k bigint, ord bigint, is_delete int, v string"
     s2 = s1 + ", x double"
 
-    for layout in ("partitioned", "flat"):
-        store = str(tmp_path / f"store_{layout}")
-        ckpt = str(tmp_path / f"ckpt_{layout}")
+    for n_buckets in (2, 1):
+        store = str(tmp_path / f"store_{n_buckets}")
+        ckpt = str(tmp_path / f"ckpt_{n_buckets}")
 
         def run(schema, merge_schema):
-            if layout == "partitioned":
-                q = foreach_batch_cdc_merge_partitioned(
-                    _cdc_to_changes_cols(stream(schema)),
-                    store,
-                    ckpt,
-                    "k",
-                    n_buckets=2,
-                    merge_schema=merge_schema,
-                )
-            else:
-                q = foreach_batch_cdc_merge(
-                    _cdc_to_changes_cols(stream(schema)),
-                    store,
-                    ckpt,
-                    "k",
-                    merge_schema=merge_schema,
-                )
+            q = foreach_batch_cdc_merge_partitioned(
+                _cdc_to_changes_cols(stream(schema)),
+                store,
+                ckpt,
+                "k",
+                n_buckets=n_buckets,
+                merge_schema=merge_schema,
+            )
             q.awaitTermination()
 
-        read = (
-            (lambda **kw: read_current_partitioned(spark, store, **kw))
-            if layout == "partitioned"
-            else (lambda **kw: read_current_version(spark, store, **kw))
-        )
+        def read(**kw):
+            return read_current_partitioned(spark, store, **kw)
 
         # run 1 processes ONLY c1 (c2 not yet written at its staging
         # mtime? both files exist — gate run 1 by removing c2 first)
@@ -1909,20 +1824,15 @@ def test_cdc_schema_evolution_both_layouts(spark, tmp_path):
         got = sorted((r.k, r.v, r.x) for r in read().collect())
         assert got == [(1, "a", None), (2, "b2", 9.5), (3, "c", None)]
 
-        if layout == "partitioned":
-            # time travel below the addition: OLD schema, old values
-            old = read(as_of=0)
-            assert old.columns == ["k", "v"]
-            assert sorted((r.k, r.v) for r in old.collect()) == [
-                (1, "a"),
-                (2, "b"),
-            ]
-            # at/after the addition: evolved schema
-            assert read(as_of=1).columns == ["k", "v", "x"]
-        else:
-            # whole-snapshot layout: each version IS one schema
-            assert read(as_of=0).columns == ["k", "v"]
-            assert read(as_of=1).columns == ["k", "v", "x"]
+        # time travel below the addition: OLD schema, old values
+        old = read(as_of=0)
+        assert old.columns == ["k", "v"]
+        assert sorted((r.k, r.v) for r in old.collect()) == [
+            (1, "a"),
+            (2, "b"),
+        ]
+        # at/after the addition: evolved schema
+        assert read(as_of=1).columns == ["k", "v", "x"]
 
 
 def _cdc_to_changes_cols(df):
@@ -2246,12 +2156,11 @@ def test_cdc_evolution_with_narrow_init_preserves_added_values(spark, tmp_path):
     must be part of the snapshot from batch 0, or each batch's base
     read would drop survivors' previously-merged values and re-pad
     NULLs. Two batches: batch 0 sets x for k=1; batch 1 touches only
-    k=2; k=1's x must SURVIVE batch 1 on both layouts."""
+    k=2; k=1's x must SURVIVE batch 1 on both layouts (two buckets,
+    one bucket)."""
     from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_cdc_merge,
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
-        read_current_version,
     )
 
     src = tmp_path / "src"
@@ -2286,31 +2195,23 @@ def test_cdc_evolution_with_narrow_init_preserves_added_values(spark, tmp_path):
 
     init = spark.createDataFrame([(1, "a0"), (2, "b0")], "k bigint, v string")
     schema = "k bigint, ord bigint, is_delete int, v string, x double"
-    for layout in ("partitioned", "flat"):
-        store = str(tmp_path / f"s_{layout}")
+    for n_buckets in (2, 1):
+        store = str(tmp_path / f"s_{n_buckets}")
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        if layout == "partitioned":
-            q = foreach_batch_cdc_merge_partitioned(
-                stream, store, str(tmp_path / f"c_{layout}"), "k",
-                n_buckets=2, init=init, merge_schema=True,
-            )
-        else:
-            q = foreach_batch_cdc_merge(
-                stream, store, str(tmp_path / f"c_{layout}"), "k",
-                init=init, merge_schema=True,
-            )
-        q.awaitTermination()
-        read = (
-            read_current_partitioned if layout == "partitioned"
-            else read_current_version
+        q = foreach_batch_cdc_merge_partitioned(
+            stream, store, str(tmp_path / f"c_{n_buckets}"), "k",
+            n_buckets=n_buckets, init=init, merge_schema=True,
         )
-        got = sorted((r.k, r.v, r.x) for r in read(spark, store).collect())
+        q.awaitTermination()
+        got = sorted(
+            (r.k, r.v, r.x) for r in read_current_partitioned(spark, store).collect()
+        )
         # k=1's x from batch 0 must survive batch 1 (which touched k=2)
-        assert got == [(1, "a1", 7.5), (2, "b1", None)], layout
+        assert got == [(1, "a1", 7.5), (2, "b1", None)], n_buckets
 
 
 def test_partitioned_sink_empty_newest_batch_schema(spark, tmp_path):
@@ -2379,8 +2280,7 @@ def test_partitioned_sink_refuses_stored_column_drop(spark, tmp_path):
     """ADVICE r14 #2: resuming an evolved store with a feed that LACKS
     a stored column must refuse — rewriting touched partitions without
     it is the silent column-drop data loss _evolve_base exists to
-    refuse. Mirrors the non-partitioned sink's reverse guard, in both
-    strict and merge_schema modes."""
+    refuse, in both strict and merge_schema modes."""
     import pytest as _pytest
 
     from distributed_mapreduce_spark.streaming.sinks import (
@@ -2480,16 +2380,14 @@ def test_partitioned_sink_init_only_column_fails_at_merge(spark, tmp_path):
 
 def test_cdc_sink_type_widening_both_layouts(spark, tmp_path):
     """VERDICT r14 #3 end-to-end: a feed that WIDENS a payload column
-    (float→double) mid-stream evolves both sink layouts under
-    merge_schema=True — stored rows cast up losslessly, the current
-    read returns the widened type, and a partitioned-layout time
+    (float→double) mid-stream evolves both store layouts (two
+    buckets, one bucket) under merge_schema=True — stored rows cast up
+    losslessly, the current read returns the widened type, and a time
     travel below the widening returns the OLD type (per-version
     manifest schemas)."""
     from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_cdc_merge,
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
-        read_current_version,
     )
 
     src = tmp_path / "src"
@@ -2513,27 +2411,19 @@ def test_cdc_sink_type_widening_both_layouts(spark, tmp_path):
     s1 = "k bigint, ord bigint, is_delete int, v float"
     s2 = "k bigint, ord bigint, is_delete int, v double"
 
-    for layout in ("partitioned", "flat"):
-        store = str(tmp_path / f"store_{layout}")
-        ckpt = str(tmp_path / f"ckpt_{layout}")
+    for n_buckets in (2, 1):
+        store = str(tmp_path / f"store_{n_buckets}")
+        ckpt = str(tmp_path / f"ckpt_{n_buckets}")
 
         def run(schema):
             stream = spark.readStream.schema(schema).parquet(str(src))
-            if layout == "partitioned":
-                q = foreach_batch_cdc_merge_partitioned(
-                    stream, store, ckpt, "k", n_buckets=2, merge_schema=True
-                )
-            else:
-                q = foreach_batch_cdc_merge(
-                    stream, store, ckpt, "k", merge_schema=True
-                )
+            q = foreach_batch_cdc_merge_partitioned(
+                stream, store, ckpt, "k", n_buckets=n_buckets, merge_schema=True
+            )
             q.awaitTermination()
 
-        read = (
-            (lambda **kw: read_current_partitioned(spark, store, **kw))
-            if layout == "partitioned"
-            else (lambda **kw: read_current_version(spark, store, **kw))
-        )
+        def read(**kw):
+            return read_current_partitioned(spark, store, **kw)
         run(s1)
         assert dict(read().dtypes)["v"] == "float"
         pq.write_table(pa.table(c2), str(src / "c2.parquet"))
