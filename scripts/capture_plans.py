@@ -22,6 +22,8 @@ import sys
 
 sys.path.insert(0, ".")
 
+from bench import clear_storage  # noqa: E402
+
 
 def main() -> int:
     tag = sys.argv[1] if len(sys.argv) > 1 else "r16"
@@ -53,9 +55,7 @@ def main() -> int:
             plan = f"<plan capture failed: {exc}>"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
-        spark.catalog.clearCache()
-        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            jrdd.unpersist(False)
+        clear_storage(spark)
         n_ok += 1
     print(f"captured {n_ok} plans into {out_dir} (*_{suffix}.txt)")
     return 0

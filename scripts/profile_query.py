@@ -18,11 +18,9 @@ import time
 
 sys.path.insert(0, ".")
 
+from bench import _cores, clear_storage, force  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> int:
@@ -35,9 +33,8 @@ def main() -> int:
 
     from distributed_mapreduce_spark.session import _BUILD_CONF, tune_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     b = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{_cores()}]")
         .appName(f"profile-{name}")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", evdir)
@@ -60,24 +57,19 @@ def main() -> int:
     warm = spark.range(n * 1000).repartition(n)
     force(warm.groupBy((F.col("id") % 7).alias("k")).count())
 
-    def clean():
-        spark.catalog.clearCache()
-        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            jrdd.unpersist(False)
-
     # warm executions, then the profiled one
     for _ in range(passes):
         t0 = time.perf_counter()
         force(fn(spark, SF_DIR))
         print(f"pass: {time.perf_counter() - t0:.3f}s", file=sys.stderr)
-        clean()
+        clear_storage(spark)
 
     spark.sparkContext.setJobDescription(f"profiled: {name}")
     marker = time.time() * 1000
     t0 = time.perf_counter()
     force(fn(spark, SF_DIR))
     total = time.perf_counter() - t0
-    clean()
+    clear_storage(spark)
     spark.stop()
 
     # parse the event log (two passes: TaskEnd precedes StageCompleted)
@@ -94,42 +86,38 @@ def main() -> int:
                     except ValueError:
                         continue
     for ev in events:
-        if True:
-            if True:
-                if ev.get("Event") == "SparkListenerStageCompleted":
-                    si = ev["Stage Info"]
-                    sub = si.get("Submission Time")
-                    if sub is None or sub < marker:
-                        continue
-                    key = (si["Stage ID"], si.get("Stage Attempt ID", si.get("Attempt ID", 0)))
-                    stages[key] = {
-                        "name": si["Stage Name"].split("\n")[0][:90],
-                        "tasks": si["Number of Tasks"],
-                        "wall_ms": si["Completion Time"] - sub,
-                        "sub": sub,
-                    }
+        if ev.get("Event") == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sub = si.get("Submission Time")
+            if sub is None or sub < marker:
+                continue
+            key = (si["Stage ID"], si.get("Stage Attempt ID", si.get("Attempt ID", 0)))
+            stages[key] = {
+                "name": si["Stage Name"].split("\n")[0][:90],
+                "tasks": si["Number of Tasks"],
+                "wall_ms": si["Completion Time"] - sub,
+                "sub": sub,
+            }
     for ev in events:
-        if True:
-            if True:
-                if ev.get("Event") == "SparkListenerTaskEnd":
-                    si = ev["Stage ID"], ev["Stage Attempt ID"]
-                    if si not in stages:
-                        continue
-                    m = ev.get("Task Metrics") or {}
-                    st = stages[si]
-                    st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
-                    st["gc_ms"] = st.get("gc_ms", 0) + m.get("JVM GC Time", 0)
-                    sr = (m.get("Shuffle Read Metrics") or {})
-                    sw = (m.get("Shuffle Write Metrics") or {})
-                    st["sh_read_mb"] = st.get("sh_read_mb", 0) + (
-                        sr.get("Local Bytes Read", 0) + sr.get("Remote Bytes Read", 0)
-                    ) / 1e6
-                    st["fetch_ms"] = st.get("fetch_ms", 0) + sr.get("Fetch Wait Time", 0)
-                    st["sh_write_mb"] = st.get("sh_write_mb", 0) + sw.get(
-                        "Shuffle Bytes Written", 0
-                    ) / 1e6
-                    inp = (m.get("Input Metrics") or {})
-                    st["input_mb"] = st.get("input_mb", 0) + inp.get("Bytes Read", 0) / 1e6
+        if ev.get("Event") == "SparkListenerTaskEnd":
+            si = ev["Stage ID"], ev["Stage Attempt ID"]
+            if si not in stages:
+                continue
+            m = ev.get("Task Metrics") or {}
+            st = stages[si]
+            st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
+            st["gc_ms"] = st.get("gc_ms", 0) + m.get("JVM GC Time", 0)
+            sr = (m.get("Shuffle Read Metrics") or {})
+            sw = (m.get("Shuffle Write Metrics") or {})
+            st["sh_read_mb"] = st.get("sh_read_mb", 0) + (
+                sr.get("Local Bytes Read", 0) + sr.get("Remote Bytes Read", 0)
+            ) / 1e6
+            st["fetch_ms"] = st.get("fetch_ms", 0) + sr.get("Fetch Wait Time", 0)
+            st["sh_write_mb"] = st.get("sh_write_mb", 0) + sw.get(
+                "Shuffle Bytes Written", 0
+            ) / 1e6
+            inp = (m.get("Input Metrics") or {})
+            st["input_mb"] = st.get("input_mb", 0) + inp.get("Bytes Read", 0) / 1e6
     # TaskEnd events precede StageCompleted; re-scan for task metrics
     # of stages discovered late is unnecessary because we buffered all.
     print(f"\ntotal: {total:.3f}s  stages: {len(stages)}")

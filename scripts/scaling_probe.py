@@ -33,6 +33,8 @@ import time
 
 sys.path.insert(0, ".")
 
+from bench import clear_storage, force  # noqa: E402
+
 SF01 = "/root/testdata/sf0.1"
 REPLICAS = 10
 CORES = (32, 8)
@@ -44,10 +46,6 @@ QUERIES = [
     "dedup_q7_clusters",
     "contam_q1_benchmark_overlap",
 ]
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def synth_sf1(workdir: str) -> None:
@@ -100,22 +98,14 @@ def main() -> int:
             times: dict[str, float] = {}
             for name in QUERIES:  # untimed warm pass
                 force(qs[name](spark, workdir))
-                spark.catalog.clearCache()
-                for jrdd in list(
-                    spark.sparkContext._jsc.getPersistentRDDs().values()
-                ):
-                    jrdd.unpersist(False)
+                clear_storage(spark)
             samples: dict[str, list[float]] = {n: [] for n in QUERIES}
             for _ in range(passes):
                 for name in QUERIES:
                     t0 = time.perf_counter()
                     force(qs[name](spark, workdir))
                     samples[name].append(time.perf_counter() - t0)
-                    spark.catalog.clearCache()
-                    for jrdd in list(
-                        spark.sparkContext._jsc.getPersistentRDDs().values()
-                    ):
-                        jrdd.unpersist(False)
+                    clear_storage(spark)
             for name in QUERIES:
                 times[name] = round(min(samples[name]), 2)
                 print(f"  c{cores} {name}: {times[name]}s", file=sys.stderr)
