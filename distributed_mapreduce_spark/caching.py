@@ -36,7 +36,10 @@ those objects alive for its own lifetime — by design, since the JVM
 cache they pin was already leaked without a release path.
 
 Streaming sinks don't need this: their per-batch persists are consumed
-inside the foreachBatch function and already unpersist in ``finally``.
+inside the foreachBatch function, and the ingest sinks' shared driver
+(``streaming/sinks._ingest_sink``) releases them in ``finally`` —
+every frame the batch persisted, plus the checkpoint blocks it created
+(a ``persistent_rdd_ids`` diff).
 """
 
 from __future__ import annotations
@@ -105,8 +108,8 @@ def persistent_rdd_ids(spark) -> frozenset:
     before a localCheckpoint, diff after, to learn which blocks a
     specific checkpoint created. The diff assumes no OTHER driver
     thread is creating persistent RDDs in the same window (true for
-    this repo's batch operators; streaming sinks manage their own
-    per-batch persists with try/finally and never checkpoint)."""
+    this repo's batch operators and for the ingest sinks' driver, which
+    diffs around each micro-batch on the stream's one batch thread)."""
     return frozenset(
         spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     )

@@ -736,7 +736,7 @@ def st_q14_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_decontam_ingest,
-        read_decontam_accepted,
+        read_ingest_accepted,
     )
 
     key = ("docs", sf_dir, DECONTAM_CHUNKS)
@@ -772,7 +772,7 @@ def st_q14_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         _shutil.rmtree(ckpt, ignore_errors=True)
-    return read_decontam_accepted(spark, f"{store}/t").select(
+    return read_ingest_accepted(spark, f"{store}/t").select(
         "doc_id", "source", "lang", "n_chars"
     )
 
@@ -826,7 +826,7 @@ def st_q15_clean_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_clean_ingest,
-        read_clean_accepted,
+        read_ingest_accepted,
     )
 
     key = ("docs", sf_dir, DECONTAM_CHUNKS)
@@ -873,7 +873,7 @@ def st_q15_clean_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         _shutil.rmtree(ckpt, ignore_errors=True)
-    return read_clean_accepted(spark, f"{store}/t").select(
+    return read_ingest_accepted(spark, f"{store}/t").select(
         "doc_id", "source", "lang", "n_chars"
     )
 

@@ -145,8 +145,9 @@ class ManifestStore:
         subdir: str | None = None,
         manifests: list[tuple[int, dict]] | None = None,
         touched_key: str = "touched",
+        leaf: str = "p",
     ) -> list[str]:
-        """Leaf dirs `batch=<id>[/subdir]/p=<k>` for k ∈ `buckets`,
+        """Leaf dirs `batch=<id>[/subdir]/<leaf>=<k>` for k ∈ `buckets`,
         committed batches only — the bucket-pruned read (VERDICT r9
         #1): a membership probe or keyed fetch lists ONLY the
         partitions its keys hash into, never the whole committed
@@ -160,7 +161,9 @@ class ManifestStore:
         already-listed chain. `touched_key` selects which manifest
         list prunes the walk — a sidecar bucketed on a DIFFERENT hash
         domain (the clean-ingest fingerprint sidecar) records its own
-        list under its own key."""
+        list under its own key; the SemDeDup member store prunes its
+        `cell=<c>` leaves by each manifest's `cells` list the same way
+        (`touched_key="cells", leaf="cell"`)."""
         want = set(buckets)
         out = []
         for b, payload in self.manifests() if manifests is None else manifests:
@@ -170,7 +173,7 @@ class ManifestStore:
                 continue
             base = self.batch_dir(b, subdir)
             for k in sorted(hit):
-                d = base / f"p={k}"
+                d = base / f"{leaf}={k}"
                 if d.exists():
                     out.append(str(d))
         return out

@@ -1,10 +1,14 @@
 #!/usr/bin/env python3
-"""A/B digest harness for the r16 compactor refactor (VERDICT r15 #4):
-build one fixed source store per ingest family, compact it, and print a
-CONTENT digest of the compacted store — row multisets per sidecar (file
-layout excluded: part-file names embed uuids), the seed manifest
-payload, and the history floor. Run before and after the refactor; the
-digests must be identical.
+"""A/B digest harness for refactors of the ingest sinks and their
+compactors: build one fixed source store per ingest family, compact it,
+and write a CONTENT digest of both stores — row multisets per data dir
+and sidecar (file layout excluded: part-file names embed uuids;
+partition values included), every committed source manifest with
+`elapsed_s` dropped (a wall-clock stamp), the seed manifest payload,
+and the history floor. Run before and after a refactor; the digests
+must be identical. The band-index tables live in a fresh warehouse
+under the run's temp dir, so a table left by an earlier run cannot
+answer the first batch's probe.
 
 Usage: python scripts/compactor_ab.py <out.json>
 """
@@ -13,6 +17,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import pathlib
 import sys
 import tempfile
@@ -27,7 +32,7 @@ def _rows_digest(spark, path) -> str | None:
     files = sorted(str(f) for f in p.rglob("*.parquet"))
     if not files:
         return None
-    df = spark.read.parquet(*files)
+    df = spark.read.option("basePath", str(p)).parquet(*files)
     rows = sorted(
         json.dumps(
             [None if v is None else str(v) for v in r],
@@ -40,6 +45,9 @@ def _rows_digest(spark, path) -> str | None:
 
 def main() -> int:
     out_path = sys.argv[1]
+    work = pathlib.Path(tempfile.mkdtemp(prefix="dmr_compab_"))
+    # read by the session module at import: set before importing it
+    os.environ["SPARK_GRAFT_WAREHOUSE"] = str(work / "warehouse")
     from pyspark.sql import functions as F
 
     from distributed_mapreduce_spark.session import get_spark
@@ -59,7 +67,6 @@ def main() -> int:
     spark = get_spark(app_name="compactor_ab")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     sf = "/root/testdata/sf0.001"
-    work = pathlib.Path(tempfile.mkdtemp(prefix="dmr_compab_"))
     (work / "docs").mkdir()
     (work / "embs").mkdir()
     doc_chunks = stage_document_chunks(sf, 3, str(work / "docs"))
@@ -84,16 +91,29 @@ def main() -> int:
         )
 
     digests: dict = {}
+    subdirs = ("accepted", "ids", "shingles", "hashes", None)
 
-    def digest(name, dst):
+    def digest_source(src) -> dict:
+        ms = ManifestStore(src)
         d = {}
-        for sub in ("accepted", "ids", "shingles", "hashes", ""):
-            key = sub or "rows"
-            base = pathlib.Path(dst)
-            p = base / sub if sub else base / "batch=-1"
-            if sub:
-                p = base / sub
-            d[key] = _rows_digest(spark, p)
+        for b, _ in ms.manifests():
+            for sub in subdirs:
+                d[f"{sub or 'rows'}/batch={b}"] = _rows_digest(
+                    spark, ms.batch_dir(b, sub)
+                )
+        d["manifests"] = [
+            (b, {k: v for k, v in sorted(payload.items()) if k != "elapsed_s"})
+            for b, payload in ms.manifests()
+        ]
+        return d
+
+    def digest(name, src, dst):
+        base = pathlib.Path(dst)
+        d = {"source": digest_source(src)}
+        for sub in subdirs:
+            d[sub or "rows"] = _rows_digest(
+                spark, base / sub if sub else base / "batch=-1"
+            )
         ms = ManifestStore(dst)
         d["seed"] = [
             (b, {k: v for k, v in sorted(payload.items())})
@@ -109,7 +129,7 @@ def main() -> int:
         doc_stream(), src, str(work / "dedup_ckpt"), "t_compab_dedup_bands"
     ).awaitTermination()
     S.compact_dedup_ingest_store(spark, src, dst)
-    digest("dedup", dst)
+    digest("dedup", src, dst)
 
     # ann / semdedup share frozen centroids
     from distributed_mapreduce_spark.operators.similarity import train_centroids
@@ -122,7 +142,7 @@ def main() -> int:
         emb_stream(), src, str(work / "ann_ckpt"), cents
     ).awaitTermination()
     S.compact_ann_ingest_store(spark, src, dst)
-    digest("ann", dst)
+    digest("ann", src, dst)
 
     # semdedup (kmeans_train centroid format, the dedup_q19 loop)
     from distributed_mapreduce_spark.operators.similarity import (
@@ -137,7 +157,7 @@ def main() -> int:
         emb_stream(), src, str(work / "sem_ckpt"), km_cents, 64
     ).awaitTermination()
     S.compact_semdedup_ingest_store(spark, src, dst)
-    digest("semdedup", dst)
+    digest("semdedup", src, dst)
 
     # decontam + clean share an index
     bench = widen(table(spark, sf, "documents")).where(
@@ -151,14 +171,14 @@ def main() -> int:
         doc_stream(), src, str(work / "dec_ckpt"), index
     ).awaitTermination()
     S.compact_decontam_ingest_store(spark, src, dst)
-    digest("decontam", dst)
+    digest("decontam", src, dst)
 
     src, dst = str(work / "clean_src"), str(work / "clean_dst")
     S.foreach_batch_clean_ingest(
         doc_stream(), src, str(work / "clean_ckpt"), "t_compab_clean_bands", index
     ).awaitTermination()
     S.compact_clean_ingest_store(spark, src, dst)
-    digest("clean", dst)
+    digest("clean", src, dst)
 
     pathlib.Path(out_path).write_text(json.dumps(digests, indent=1, sort_keys=True))
     print(f"wrote {out_path}")

@@ -25,6 +25,7 @@ from distributed_mapreduce_spark.streaming.commitlog import (
     read_json_tolerant,
 )
 from distributed_mapreduce_spark.streaming.sinks import (
+    _alias_map,
     _check_id_buckets,
     _pinned_id_buckets,
 )
@@ -166,6 +167,58 @@ def test_pruned_partition_dirs_missing_touched_means_unknown(tmp_path):
     ms.commit(0, {})  # no touched key at all
     d = _mk_leaf(ms, 0, "ids", 5)
     assert ms.pruned_partition_dirs({5, 6}, "ids") == [str(d)]
+
+
+def test_pruned_partition_dirs_cell_leaf_by_cells_list(tmp_path):
+    """The SemDeDup member probe: `batch=<id>/cell=<c>` leaves pruned
+    by each manifest's `cells` list. A batch that never wrote a wanted
+    cell is skipped; a manifest without the key stat-checks every
+    wanted cell."""
+    ms = ManifestStore(tmp_path / "store")
+
+    def cell_leaf(batch: int, cell: int) -> pathlib.Path:
+        d = ms.batch_dir(batch) / f"cell={cell}"
+        d.mkdir(parents=True)
+        return d
+
+    ms.commit(0, {"cells": [1, 2]})
+    ms.commit(1, {"cells": [3]})
+    ms.commit(2, {})  # no cells key: unknown, not empty
+    d01, d02 = cell_leaf(0, 1), cell_leaf(0, 2)
+    cell_leaf(1, 3)
+    # batch 1 holds a cell=1 dir its `cells` list does not name: the
+    # list prunes it without a stat
+    cell_leaf(1, 1)
+    d21, d23 = cell_leaf(2, 1), cell_leaf(2, 3)
+
+    def probe(cells):
+        return ms.pruned_partition_dirs(cells, touched_key="cells", leaf="cell")
+
+    assert probe([1, 2]) == [str(d01), str(d02), str(d21)]
+    assert probe([2]) == [str(d02)]
+    assert probe([1, 3, 4]) == [
+        str(d01), str(ms.batch_dir(1) / "cell=3"), str(d21), str(d23)
+    ]
+
+
+def test_alias_map_resolves_chains_and_respects_prefix():
+    """SemDeDup's merge-log fold: a multi-hop chain resolves every
+    label to the component's canonical (path-compressed map), labels
+    never merged stay out of the map (callers resolve `.get(c, c)`),
+    and a manifest prefix (as_of) does not see later merges."""
+    manifests = [
+        (0, {"merges": [[9, 5]]}),
+        (1, {}),  # a batch without merges
+        (2, {"merges": [[5, 3], [8, 7]]}),
+        (3, {"merges": [[3, 1]]}),
+    ]
+    resolved = _alias_map(manifests)
+    assert resolved == {9: 1, 5: 1, 3: 1, 8: 7}
+    assert resolved.get(4, 4) == 4 and 4 not in resolved
+    assert resolved.get(7, 7) == 7  # a canonical is never remapped
+    assert _alias_map(manifests[:3]) == {9: 3, 5: 3, 8: 7}
+    assert _alias_map(manifests[:1]) == {9: 5}
+    assert _alias_map([]) == {}
 
 
 def test_version_manifests_commit_fold_and_below(tmp_path):

@@ -181,7 +181,7 @@ def test_dedup_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         compact_dedup_ingest_store,
         foreach_batch_dedup_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     t_start = time.perf_counter()
@@ -248,7 +248,7 @@ def test_dedup_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
         _write_chunk(src, "c3.parquet", chunk_cols(rows[2 * third :]), base + 10)
         run()
 
-        got = sorted(r.doc_id for r in read_dedup_accepted(spark, store).collect())
+        got = sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
         want = sorted(
             r.doc_id
             for r in dedup_corpus_greedy(docs, 0.5, bands=16)
@@ -277,7 +277,7 @@ def test_dedup_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
         )
         run(store2, str(tmp_path / "ckpt2"))
         got2 = sorted(
-            r.doc_id for r in read_dedup_accepted(spark, store2).collect()
+            r.doc_id for r in read_ingest_accepted(spark, store2).collect()
         )
         assert [i for i in got2 if i < 1_000_000] == want, (
             "fresh-checkpoint replay changed the accepted set"
@@ -537,7 +537,7 @@ def test_clean_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
         build_decontam_index,
         compact_clean_ingest_store,
         foreach_batch_clean_ingest,
-        read_clean_accepted,
+        read_ingest_accepted,
     )
 
     t_start = time.perf_counter()
@@ -611,14 +611,14 @@ def test_clean_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
         run(store, str(tmp_path / "ckpt"), "lc_clean_idx")  # replay batch 1
         _write_chunk(src, "c3.parquet", chunk_cols(rows[2 * third :]), base + 10)
         run(store, str(tmp_path / "ckpt"), "lc_clean_idx")
-        got = sorted(r.doc_id for r in read_clean_accepted(spark, store).collect())
+        got = sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
         assert len(got) == len(set(got))
 
         # uncrashed reference run over the identical feed
         spark.sql("DROP TABLE IF EXISTS lc_clean_idx_ref")
         ref = str(tmp_path / "ref_store")
         run(ref, str(tmp_path / "ref_ckpt"), "lc_clean_idx_ref")
-        want = sorted(r.doc_id for r in read_clean_accepted(spark, ref).collect())
+        want = sorted(r.doc_id for r in read_ingest_accepted(spark, ref).collect())
         assert got == want, "torn-commit replay diverged from the clean run"
 
         # compaction + fresh-checkpoint full-feed resume converges
@@ -626,7 +626,7 @@ def test_clean_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
         assert compact_clean_ingest_store(spark, store, store2) == len(got)
         run(store2, str(tmp_path / "ckpt2"), "lc_clean_idx")
         got2 = sorted(
-            r.doc_id for r in read_clean_accepted(spark, store2).collect()
+            r.doc_id for r in read_ingest_accepted(spark, store2).collect()
         )
         assert got2 == want
         print(

@@ -602,7 +602,7 @@ def test_sf1_dedup_ingest_scaling(stress_spark, sf1_dir, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         _dir_bytes,
         foreach_batch_dedup_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     docs = pq.read_table(f"{sf1_dir}/documents.parquet", columns=["doc_id", "text"])
@@ -659,7 +659,7 @@ def test_sf1_dedup_ingest_scaling(stress_spark, sf1_dir, tmp_path):
             "gate bytes grow faster than the sidecar itself — superlinear "
             "re-reading of committed batches"
         )
-        n_acc = read_dedup_accepted(stress_spark, store).count()
+        n_acc = read_ingest_accepted(stress_spark, store).count()
         assert 0 < n_acc <= docs.num_rows
         print(f"  [sf1 stress] dedup_ingest accepted {n_acc}/{docs.num_rows}")
 
@@ -735,7 +735,7 @@ def test_sf1_dedup_ingest_scaling(stress_spark, sf1_dir, tmp_path):
         # convergence at stress scale: every originally-accepted doc
         # survives (the gate skipped it), nothing duplicates, and the
         # re-crawled duplicate chunks mostly reject
-        acc2 = read_dedup_accepted(stress_spark, store2).select("doc_id").collect()
+        acc2 = read_ingest_accepted(stress_spark, store2).select("doc_id").collect()
         ids2 = [r.doc_id for r in acc2]
         assert len(ids2) == len(set(ids2)), "replay duplicated accepted rows"
         n_new_acc = sum(1 for i in ids2 if i >= 10_000_000)
@@ -1034,7 +1034,7 @@ def test_sf1_decontam_ingest_scaling(stress_spark, sf1_dir, tmp_path):
         _dir_bytes,
         build_decontam_index,
         foreach_batch_decontam_ingest,
-        read_decontam_accepted,
+        read_ingest_accepted,
     )
 
     bench = stress_spark.read.parquet(f"{sf1_dir}/documents.parquet").where(
@@ -1084,7 +1084,7 @@ def test_sf1_decontam_ingest_scaling(stress_spark, sf1_dir, tmp_path):
             "sidecar — the decontam sink has no other store-side read "
             "to blame"
         )
-        n_acc = read_decontam_accepted(stress_spark, store).count()
+        n_acc = read_ingest_accepted(stress_spark, store).count()
         assert 0 < n_acc <= train.num_rows
         print(
             f"  [sf1 stress] decontam_ingest accepted {n_acc}/{train.num_rows}"
@@ -1111,7 +1111,7 @@ def test_sf1_clean_ingest_scaling(stress_spark, sf1_dir, tmp_path):
         _dir_bytes,
         build_decontam_index,
         foreach_batch_clean_ingest,
-        read_clean_accepted,
+        read_ingest_accepted,
     )
 
     bench = stress_spark.read.parquet(f"{sf1_dir}/documents.parquet").where(
@@ -1167,7 +1167,7 @@ def test_sf1_clean_ingest_scaling(stress_spark, sf1_dir, tmp_path):
             p["rejected_quality"] + p["rejected_exact_dup"] + p["rejected_near_dup"]
             for p in recs
         )
-        n_acc = read_clean_accepted(stress_spark, store).count()
+        n_acc = read_ingest_accepted(stress_spark, store).count()
         assert 0 < n_acc <= train.num_rows - tot_rej
         print(f"  [sf1 stress] clean_ingest accepted {n_acc}/{train.num_rows}")
     finally:

@@ -776,7 +776,7 @@ def test_streaming_dedup_ingest_matches_one_shot(spark, tmp_path):
     from distributed_mapreduce_spark.sources import table
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_dedup_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     docs = table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -825,7 +825,7 @@ def test_streaming_dedup_ingest_matches_one_shot(spark, tmp_path):
     try:
         run()
         got = sorted(
-            r.doc_id for r in read_dedup_accepted(spark, store).collect()
+            r.doc_id for r in read_ingest_accepted(spark, store).collect()
         )
         want = sorted(
             r.doc_id
@@ -838,7 +838,7 @@ def test_streaming_dedup_ingest_matches_one_shot(spark, tmp_path):
         n_manifests = len(list(pathlib.Path(store, "_manifests").glob("*.json")))
         run()
         assert (
-            sorted(r.doc_id for r in read_dedup_accepted(spark, store).collect())
+            sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
             == got
         )
         assert (
@@ -870,7 +870,7 @@ def test_streaming_dedup_ingest_matches_one_shot(spark, tmp_path):
             .select("doc_id")
             .collect()
         )
-        got4 = sorted(r.doc_id for r in read_dedup_accepted(spark, store).collect())
+        got4 = sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
         assert got4 == want4
         # the duplicate tail chunk must have been (mostly) rejected
         assert sum(1 for i in got4 if i >= 1000) < len(extra)
@@ -900,7 +900,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         compact_dedup_ingest_store,
         foreach_batch_dedup_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     docs = table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -946,7 +946,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
     s1 = str(tmp_path / "s1")
     try:
         run(s1, str(tmp_path / "ckpt1"))
-        got1 = sorted(r.doc_id for r in read_dedup_accepted(spark, s1).collect())
+        got1 = sorted(r.doc_id for r in read_ingest_accepted(spark, s1).collect())
 
         s2 = str(tmp_path / "s2")
         n = compact_dedup_ingest_store(spark, s1, s2)
@@ -956,7 +956,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
             len(list(pathlib.Path(s2, "_manifests").glob("*.json"))) == 1
         )
         assert sorted(
-            r.doc_id for r in read_dedup_accepted(spark, s2).collect()
+            r.doc_id for r in read_ingest_accepted(spark, s2).collect()
         ) == got1
 
         # fresh checkpoint against the compacted store: full replay of
@@ -964,7 +964,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
         extra = [(r.doc_id + 5000, r.text) for r in rows[:25]]
         write_chunk("c3.parquet", extra, base + 10)
         run(s2, str(tmp_path / "ckpt2"))
-        got2 = sorted(r.doc_id for r in read_dedup_accepted(spark, s2).collect())
+        got2 = sorted(r.doc_id for r in read_ingest_accepted(spark, s2).collect())
         assert len(got2) == len(set(got2)), "replay duplicated accepted rows"
 
         widened = docs.where(F.col("doc_id") < rows[-1].doc_id + 1).unionByName(
@@ -1123,7 +1123,7 @@ def test_dedup_ingest_torn_append_replay(spark, tmp_path):
     from distributed_mapreduce_spark.streaming import commitlog
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_dedup_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     docs = table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -1196,7 +1196,7 @@ def test_dedup_ingest_torn_append_replay(spark, tmp_path):
         write_chunk("c3.parquet", rows[2 * third :], base + 10)
         run()
 
-        got = sorted(r.doc_id for r in read_dedup_accepted(spark, store).collect())
+        got = sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
         assert len(got) == len(set(got)), "replay duplicated accepted rows"
         want = sorted(
             r.doc_id
@@ -1844,7 +1844,7 @@ def _cdc_to_changes_cols(df):
 @pytest.mark.full_tier
 def test_ingest_store_time_travel(spark, tmp_path):
     """VERSION AS OF on the ingest-store batch chains (VERDICT r13
-    #6): as_of=k on read_dedup_accepted / ann_ingest_members /
+    #6): as_of=k on read_ingest_accepted / ann_ingest_members /
     ann_ingest_topk reproduces the post-batch-k state exactly at every
     boundary (dedup: ≡ the one-shot keep-first policy over the id
     prefix; ann: ≡ a one-shot IVF store over the prefix), and below a
@@ -1868,7 +1868,7 @@ def test_ingest_store_time_travel(spark, tmp_path):
         compact_dedup_ingest_store,
         foreach_batch_dedup_ingest,
         foreach_batch_ann_ingest,
-        read_dedup_accepted,
+        read_ingest_accepted,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1922,18 +1922,18 @@ def test_ingest_store_time_travel(spark, tmp_path):
             )
             got = sorted(
                 r.doc_id
-                for r in read_dedup_accepted(spark, dstore, as_of=k).collect()
+                for r in read_ingest_accepted(spark, dstore, as_of=k).collect()
             )
             assert got == want, f"dedup as_of={k}"
         # compaction: below the floor the seed-including fold refuses
         dstore2 = str(tmp_path / "dstore2")
         compact_dedup_ingest_store(spark, dstore, dstore2)
         with pytest.raises(FileNotFoundError, match="history floor"):
-            read_dedup_accepted(spark, dstore2, as_of=1)
+            read_ingest_accepted(spark, dstore2, as_of=1)
         # at/above the floor (source head = batch 2): the seed answers
         assert sorted(
-            r.doc_id for r in read_dedup_accepted(spark, dstore2, as_of=2).collect()
-        ) == sorted(r.doc_id for r in read_dedup_accepted(spark, dstore).collect())
+            r.doc_id for r in read_ingest_accepted(spark, dstore2, as_of=2).collect()
+        ) == sorted(r.doc_id for r in read_ingest_accepted(spark, dstore).collect())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl_name}")
 
@@ -2456,7 +2456,7 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         build_decontam_index,
         foreach_batch_decontam_ingest,
-        read_decontam_accepted,
+        read_ingest_accepted,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -2478,7 +2478,7 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
             ckpt,
             index,
         ).awaitTermination()
-        return read_decontam_accepted(spark, store)
+        return read_ingest_accepted(spark, store)
 
     store = str(tmp_path / "store")
     got = run(store, str(tmp_path / "ckpt"))
@@ -2542,18 +2542,18 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
 
     ms = ManifestStore(store)
     batches = [b for b, _ in ms.manifests()]
-    pre = read_decontam_accepted(spark, store, as_of=batches[0])
+    pre = read_ingest_accepted(spark, store, as_of=batches[0])
     pre_ids = sorted(r.doc_id for r in pre.select("doc_id").collect())
     (ms.man_dir / f"{batches[-1]}.json").unlink()
     visible = sorted(
         r.doc_id
-        for r in read_decontam_accepted(spark, store).select("doc_id").collect()
+        for r in read_ingest_accepted(spark, store).select("doc_id").collect()
     )
     assert set(visible) < set(want)
     got4 = run(store, str(tmp_path / "ckpt4"))
     assert sorted(r.doc_id for r in got4.select("doc_id").collect()) == want
     # as_of prefix unchanged by the replay
-    pre2 = read_decontam_accepted(spark, store, as_of=batches[0])
+    pre2 = read_ingest_accepted(spark, store, as_of=batches[0])
     assert sorted(r.doc_id for r in pre2.select("doc_id").collect()) == pre_ids
 
 
@@ -2597,7 +2597,7 @@ def test_clean_ingest_streamed_equals_batch_composition(spark, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         build_decontam_index,
         foreach_batch_clean_ingest,
-        read_clean_accepted,
+        read_ingest_accepted,
     )
 
     # the zero-blocks assertion below is about THIS sink: start from a
@@ -2637,7 +2637,7 @@ def test_clean_ingest_streamed_equals_batch_composition(spark, tmp_path):
         ).awaitTermination()
         return sorted(
             r.doc_id
-            for r in read_clean_accepted(spark, store).select("doc_id").collect()
+            for r in read_ingest_accepted(spark, store).select("doc_id").collect()
         )
 
     store = str(tmp_path / "store")
@@ -2721,8 +2721,7 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         compact_decontam_ingest_store,
         foreach_batch_clean_ingest,
         foreach_batch_decontam_ingest,
-        read_clean_accepted,
-        read_decontam_accepted,
+        read_ingest_accepted,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -2751,22 +2750,22 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         stream(), store, str(tmp_path / "d_ckpt"), index
     ).awaitTermination()
     want = sorted(
-        r.doc_id for r in read_decontam_accepted(spark, store).collect()
+        r.doc_id for r in read_ingest_accepted(spark, store).collect()
     )
     n = compact_decontam_ingest_store(spark, store, dst)
     assert n == len(want)
     assert len(ManifestStore(dst).manifests()) == 1
-    got = sorted(r.doc_id for r in read_decontam_accepted(spark, dst).collect())
+    got = sorted(r.doc_id for r in read_ingest_accepted(spark, dst).collect())
     assert got == want
     # fresh-checkpoint full replay on the compacted store converges
     foreach_batch_decontam_ingest(
         stream(), dst, str(tmp_path / "d_ckpt2"), index
     ).awaitTermination()
-    got2 = sorted(r.doc_id for r in read_decontam_accepted(spark, dst).collect())
+    got2 = sorted(r.doc_id for r in read_ingest_accepted(spark, dst).collect())
     assert got2 == want
     # history floor: a fold that includes the seed refuses below it
     with _pytest.raises(FileNotFoundError, match="history floor"):
-        read_decontam_accepted(spark, dst, as_of=-1)
+        read_ingest_accepted(spark, dst, as_of=-1)
 
     # ── clean store ───────────────────────────────────────────────
     spark.sql("DROP TABLE IF EXISTS t_compact_corpus_bands")
@@ -2778,12 +2777,12 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         "t_compact_corpus_bands",
         index,
     ).awaitTermination()
-    want = sorted(r.doc_id for r in read_clean_accepted(spark, store).collect())
+    want = sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
     n = compact_clean_ingest_store(spark, store, dst)
     assert n == len(want)
     seed = ManifestStore(dst).manifests()
     assert len(seed) == 1 and seed[0][1]["touched_fp"], seed
-    got = sorted(r.doc_id for r in read_clean_accepted(spark, dst).collect())
+    got = sorted(r.doc_id for r in read_ingest_accepted(spark, dst).collect())
     assert got == want
     foreach_batch_clean_ingest(
         stream(),
@@ -2792,41 +2791,86 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         "t_compact_corpus_bands",
         index,
     ).awaitTermination()
-    got2 = sorted(r.doc_id for r in read_clean_accepted(spark, dst).collect())
+    got2 = sorted(r.doc_id for r in read_ingest_accepted(spark, dst).collect())
     assert got2 == want
 
 
-def test_near_dup_gate_refusal_unpersists_shingles(spark, tmp_path, monkeypatch):
-    """ADVICE r15: on the SUCCESS path the gate hands the persisted
-    batch-shingle frame to its caller (who writes the sidecar and
-    unpersists) — but on a refusal (GREEDY_MAX_PAIRS) or any verify
-    failure the caller's variable is still None, so the gate itself
-    must unpersist before raising; otherwise the cached blocks leak
-    and accumulate across redeliveries of a failing batch."""
-    import pytest
-
-    import distributed_mapreduce_spark.operators.dedup as dedup_mod
+def _refused_batch_leaves_nothing(spark, tmp_path, rows, schema, start, match):
+    """Run one micro-batch of `rows` through the sink `start(stream,
+    store, checkpoint)` builds, expect the batch to refuse with
+    `match`, and assert the refusal left no manifest and no persisted
+    RDD behind (the ingest driver's release path)."""
     from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-    from distributed_mapreduce_spark.streaming.sinks import _near_dup_gate
 
     def persistent():
         return set(
             spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
         )
 
+    src = tmp_path / "src"
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src))
+    store = str(tmp_path / "store")
     before = persistent()
-    txt = "the quick brown fox jumps over the lazy dog " * 4
-    batch = spark.createDataFrame(
-        [(1, txt), (2, txt)], "doc_id bigint, text string"
+    q = start(
+        spark.readStream.schema(schema).parquet(str(src)),
+        store,
+        str(tmp_path / "ckpt"),
     )
-    ms = ManifestStore(str(tmp_path / "store"))
-    monkeypatch.setattr(dedup_mod, "GREEDY_MAX_PAIRS", 0)
-    with pytest.raises(ValueError, match="GREEDY_MAX_PAIRS"):
-        _near_dup_gate(
-            spark, ms, [], batch, "no_such_band_table_r15", 0.5, 32, 16,
-            64, "doc_id", "text",
-        )
+    with pytest.raises(Exception, match=match):
+        q.awaitTermination()
+    assert ManifestStore(store).manifests() == []
     assert persistent() == before
+
+
+def test_near_dup_gate_refusal_unpersists_shingles(spark, tmp_path, monkeypatch):
+    """ADVICE r15: a GREEDY_MAX_PAIRS refusal (or any verify failure)
+    inside the near-dup gate must not leak the persisted batch
+    shingles — they would accumulate across redeliveries of a failing
+    batch. The refusal is driven through foreach_batch_dedup_ingest,
+    whose ingest driver releases every block the batch persisted."""
+    import distributed_mapreduce_spark.operators.dedup as dedup_mod
+    from distributed_mapreduce_spark.streaming.sinks import (
+        foreach_batch_dedup_ingest,
+    )
+
+    monkeypatch.setattr(dedup_mod, "GREEDY_MAX_PAIRS", 0)
+    txt = "the quick brown fox jumps over the lazy dog " * 4
+    _refused_batch_leaves_nothing(
+        spark,
+        tmp_path,
+        [(1, txt), (2, txt)],
+        "doc_id bigint, text string",
+        lambda stream, store, ckpt: foreach_batch_dedup_ingest(
+            stream, store, ckpt, "no_such_band_table_r15"
+        ),
+        "GREEDY_MAX_PAIRS",
+    )
+
+
+def test_semdedup_edge_refusal_unpersists_batch(spark, tmp_path):
+    """The SemDeDup twin: two identical vectors give one verified edge,
+    over `max_pairs=0` the batch refuses before its driver-side
+    collect, and the driver releases the batch's persisted frames
+    (source, assignment, normalized view, edge list)."""
+    from distributed_mapreduce_spark.streaming.sinks import (
+        foreach_batch_semdedup_ingest,
+    )
+
+    _refused_batch_leaves_nothing(
+        spark,
+        tmp_path,
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0])],
+        "vec_id bigint, embedding array<float>",
+        lambda stream, store, ckpt: foreach_batch_semdedup_ingest(
+            stream,
+            store,
+            ckpt,
+            [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]],
+            4,
+            max_pairs=0,
+        ),
+        "driver-side bound of 0",
+    )
 
 
 def test_decontam_id_collision_across_corpora(spark, tmp_path):
