@@ -169,9 +169,7 @@ def _warm_streaming(spark) -> None:
         ephemeral_dir,
         event_stream,
         run_available_now,
-    )
-    from distributed_mapreduce_spark.queries.streaming_queries import (
-        STREAM_SHUFFLE_PARTITIONS,
+        stream_conf,
     )
     from distributed_mapreduce_spark.streaming.stateful import kv_state_stream
     from distributed_mapreduce_spark.streaming.windows import tumbling_counts
@@ -200,24 +198,22 @@ def _warm_streaming(spark) -> None:
         pq.write_table(tbl.slice(c * n // 2, n // 2), path)
         os.utime(path, (now + c, now + c))
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        ev = lambda: event_stream(spark, wdir)  # noqa: E731
-        run_available_now(tumbling_counts(ev(), "1 hour"), "complete")
-        run_available_now(
-            interval_join(
-                ev().where(F.col("event_type") == "click"),
-                ev().where(F.col("event_type") == "purchase"),
-            ),
-            "append",
-        )
-        run_available_now(
-            kv_state_stream(ops_projection(ev()).where(F.col("op") != "get")),
-            "update",
-        )
+        with stream_conf(spark):
+            ev = lambda: event_stream(spark, wdir)  # noqa: E731
+            run_available_now(tumbling_counts(ev(), "1 hour"), "complete")
+            run_available_now(
+                interval_join(
+                    ev().where(F.col("event_type") == "click"),
+                    ev().where(F.col("event_type") == "purchase"),
+                ),
+                "append",
+            )
+            run_available_now(
+                kv_state_stream(ops_projection(ev()).where(F.col("op") != "get")),
+                "update",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(wdir, ignore_errors=True)
 
 

@@ -25,9 +25,11 @@ from distributed_mapreduce_spark.operators.kv import _FOLD_SQL, ops_projection
 from distributed_mapreduce_spark.queries.relational import dec, money
 from distributed_mapreduce_spark.sources import table
 from distributed_mapreduce_spark.streaming.replay import (
+    STREAM_SHUFFLE_PARTITIONS,  # noqa: F401 - re-exported for callers of this module
     event_stream,
     run_available_now,
     stage_event_chunks,
+    stream_conf,
 )
 from distributed_mapreduce_spark.streaming.stateful import (
     kv_state_stream,
@@ -49,14 +51,6 @@ import os
 # commits are the dominant fixture cost (VERDICT r2 item 4).
 N_CHUNKS = int(os.environ.get("DMR_STREAM_CHUNKS", "2"))
 SESSION_WATERMARK = "1 hour"
-
-# State-store count = shuffle partitions, fixed at a stream's first
-# checkpoint. Size it to micro-batch volume, not cluster width: these
-# replays carry ~50k rows/batch, where 32 state stores are pure
-# per-batch commit overhead (measured 3×; 8→4 another ~12% off the
-# family). A production deployment sets this per stream from expected
-# rows/sec before first start.
-STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("DMR_STREAM_SHUFFLE", "4"))
 
 
 # Staged-chunk cache: all five streaming queries replay the same
@@ -93,16 +87,9 @@ def _replayed(
     commit). A production continuous job keeps the default (true);
     this is a per-replay choice, not an engine default."""
     chunks = _staged(sf_dir)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nodata = spark.conf.get(nodata_key)
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
-    spark.conf.set(nodata_key, str(needs_watermark_flush).lower())
-    try:
+    nodata = str(needs_watermark_flush).lower()
+    with stream_conf(spark, **{"spark.sql.streaming.noDataMicroBatches.enabled": nodata}):
         return run_available_now(build(event_stream(spark, chunks)), output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        spark.conf.set(nodata_key, prev_nodata)
 
 
 def st_q1_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -332,23 +319,21 @@ def _cdc_maintained_snapshot(
     ckpt = ephemeral_dir(f"dmr_cdc_{tag}_ckpt_")
     _atexit.register(_shutil.rmtree, store, ignore_errors=True)
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        changes = event_stream(spark, chunks).select(
-            (F.col("user_id") + 1).alias("c_custkey"),
-            ord_expr.alias("ord"),
-            (F.col("event_type") == "error").cast("int").alias("is_delete"),
-            F.upper("event_type").alias("c_mktsegment"),
-            F.col("value").alias("c_acctbal"),
-        )
-        q = foreach_batch_cdc_merge_partitioned(
-            changes, f"{store}/t", ckpt, "c_custkey", n_buckets=8, init=init,
-            ordered=ordered,
-        )
-        q.awaitTermination()
+        with stream_conf(spark):
+            changes = event_stream(spark, chunks).select(
+                (F.col("user_id") + 1).alias("c_custkey"),
+                ord_expr.alias("ord"),
+                (F.col("event_type") == "error").cast("int").alias("is_delete"),
+                F.upper("event_type").alias("c_mktsegment"),
+                F.col("value").alias("c_acctbal"),
+            )
+            q = foreach_batch_cdc_merge_partitioned(
+                changes, f"{store}/t", ckpt, "c_custkey", n_buckets=8, init=init,
+                ordered=ordered,
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         _shutil.rmtree(ckpt, ignore_errors=True)
     if ordered:
         # the snapshot's persisted ord and delete tombstones are
@@ -528,24 +513,22 @@ def st_q12_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = ephemeral_dir("dmr_semdedup_store_")
     ckpt = ephemeral_dir("dmr_semdedup_ckpt_")
     _atexit.register(_shutil.rmtree, store, ignore_errors=True)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        q = foreach_batch_semdedup_ingest(
-            (
-                spark.readStream.schema("vec_id bigint, embedding array<float>")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(chunks)
-            ),
-            f"{store}/t",
-            ckpt,
-            cents,
-            DIM,
-            tau=SEMDEDUP_TAU,
-        )
-        q.awaitTermination()
+        with stream_conf(spark):
+            q = foreach_batch_semdedup_ingest(
+                (
+                    spark.readStream.schema("vec_id bigint, embedding array<float>")
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(chunks)
+                ),
+                f"{store}/t",
+                ckpt,
+                cents,
+                DIM,
+                tau=SEMDEDUP_TAU,
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         _shutil.rmtree(ckpt, ignore_errors=True)
     return read_semdedup_representatives(spark, f"{store}/t")
 
@@ -614,33 +597,31 @@ def st_q13_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.upper("event_type"), F.lit("#"), F.col("event_id").cast("string")
     ).alias("c_note")
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        for f in files[:EVO_SPLIT]:
-            _shutil.copy2(f, feed)
-        q = foreach_batch_cdc_merge_partitioned(
-            event_stream(spark, feed).select(*base_cols),
-            f"{store}/t",
-            ckpt,
-            "c_custkey",
-            n_buckets=8,
-            init=init,
-        )
-        q.awaitTermination()
-        for f in files[EVO_SPLIT:]:
-            _shutil.copy2(f, feed)
-        q = foreach_batch_cdc_merge_partitioned(
-            event_stream(spark, feed).select(*base_cols, note),
-            f"{store}/t",
-            ckpt,
-            "c_custkey",
-            n_buckets=8,
-            merge_schema=True,
-        )
-        q.awaitTermination()
+        with stream_conf(spark):
+            for f in files[:EVO_SPLIT]:
+                _shutil.copy2(f, feed)
+            q = foreach_batch_cdc_merge_partitioned(
+                event_stream(spark, feed).select(*base_cols),
+                f"{store}/t",
+                ckpt,
+                "c_custkey",
+                n_buckets=8,
+                init=init,
+            )
+            q.awaitTermination()
+            for f in files[EVO_SPLIT:]:
+                _shutil.copy2(f, feed)
+            q = foreach_batch_cdc_merge_partitioned(
+                event_stream(spark, feed).select(*base_cols, note),
+                f"{store}/t",
+                ckpt,
+                "c_custkey",
+                n_buckets=8,
+                merge_schema=True,
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         _shutil.rmtree(ckpt, ignore_errors=True)
         _shutil.rmtree(feed, ignore_errors=True)
     return read_current_partitioned(spark, f"{store}/t")
@@ -750,27 +731,25 @@ def st_q14_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = ephemeral_dir("dmr_decontam_store_")
     ckpt = ephemeral_dir("dmr_decontam_ckpt_")
     _atexit.register(_shutil.rmtree, store, ignore_errors=True)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        q = foreach_batch_decontam_ingest(
-            (
-                spark.readStream.schema(
-                    "doc_id bigint, text string, lang string, "
-                    "source string, n_chars bigint"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(chunks)
-            ),
-            f"{store}/t",
-            ckpt,
-            index,
-            min_overlap=CONTAM_MIN_OVERLAP,
-            min_jaccard=NEAR_DUP_JACCARD,
-        )
-        q.awaitTermination()
+        with stream_conf(spark):
+            q = foreach_batch_decontam_ingest(
+                (
+                    spark.readStream.schema(
+                        "doc_id bigint, text string, lang string, "
+                        "source string, n_chars bigint"
+                    )
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(chunks)
+                ),
+                f"{store}/t",
+                ckpt,
+                index,
+                min_overlap=CONTAM_MIN_OVERLAP,
+                min_jaccard=NEAR_DUP_JACCARD,
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         _shutil.rmtree(ckpt, ignore_errors=True)
     return read_ingest_accepted(spark, f"{store}/t").select(
         "doc_id", "source", "lang", "n_chars"
@@ -849,29 +828,27 @@ def st_q15_clean_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (stopword_ratio(toks, "en") >= QF_MIN_SW_RATIO)
         & avg_token_len(toks).between(QF_MIN_TOK_LEN, QF_MAX_TOK_LEN)
     )
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        q = foreach_batch_clean_ingest(
-            (
-                spark.readStream.schema(
-                    "doc_id bigint, text string, lang string, "
-                    "source string, n_chars bigint"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(chunks)
-            ),
-            f"{store}/t",
-            ckpt,
-            "st_q15_corpus_bands",
-            index,
-            quality_predicate=quality,
-            min_overlap=CONTAM_MIN_OVERLAP,
-            min_jaccard=NEAR_DUP_JACCARD,
-        )
-        q.awaitTermination()
+        with stream_conf(spark):
+            q = foreach_batch_clean_ingest(
+                (
+                    spark.readStream.schema(
+                        "doc_id bigint, text string, lang string, "
+                        "source string, n_chars bigint"
+                    )
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(chunks)
+                ),
+                f"{store}/t",
+                ckpt,
+                "st_q15_corpus_bands",
+                index,
+                quality_predicate=quality,
+                min_overlap=CONTAM_MIN_OVERLAP,
+                min_jaccard=NEAR_DUP_JACCARD,
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         _shutil.rmtree(ckpt, ignore_errors=True)
     return read_ingest_accepted(spark, f"{store}/t").select(
         "doc_id", "source", "lang", "n_chars"
@@ -924,15 +901,13 @@ def kv_q5_served_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = ephemeral_dir("dmr_kvserve_store_")
     ckpt = ephemeral_dir("dmr_kvserve_ckpt_")
     _atexit.register(_shutil.rmtree, store, ignore_errors=True)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
-        q = foreach_batch_kv_serving(
-            ops_projection(event_stream(spark, chunks)), f"{store}/t", ckpt
-        )
-        q.awaitTermination()
+        with stream_conf(spark):
+            q = foreach_batch_kv_serving(
+                ops_projection(event_stream(spark, chunks)), f"{store}/t", ckpt
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         _shutil.rmtree(ckpt, ignore_errors=True)
     head = kv_served_multi_get(spark, f"{store}/t", KV_SERVE_KEYS)
     asof = kv_served_multi_get(

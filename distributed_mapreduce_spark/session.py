@@ -7,10 +7,13 @@ scheduler operators O8-O12 of SURVEY.md §2.1 with zero custom code.
 
 Scale notes (100 TB design point):
 - AQE on: runtime partition coalescing, skew-join splitting, and
-  dynamic join-strategy switching replace any static plan choice.
-- shuffle partitions sized to cores locally; on a real cluster this is
-  governed by AQE advisory partition sizes, not a fixed N=10 like the
-  reference (src/main/mrmaster.go:25).
+  dynamic join-strategy switching replace any static plan choice —
+  including the final stage of the plans that fill `persist()`/`cache()`
+  blocks (`canChangeCachedPlanOutputPartitioning`), so a cache of a few
+  kB is not stored, and re-scanned, as 32 partitions.
+- shuffle partitions fixed at 32 (an upper bound that AQE coalesces
+  down at runtime), not a fixed N=10 like the reference
+  (src/main/mrmaster.go:25).
 - session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle and are cluster-invariant.
 """
@@ -25,7 +28,6 @@ from pyspark.sql import SparkSession
 _BUILD_CONF = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
-    "spark.sql.shuffle.partitions": "32",
     # Keep Python workers alive across tasks (Spark's default, pinned
     # explicitly): a torn-down pool re-pays fork + numpy/pandas import
     # per core on the next mapInPandas stage — measured as multi-second
@@ -57,6 +59,12 @@ _RUNTIME_CONF = {
     # driver-provided session would otherwise run 200 state stores.
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
+    # Off by default: Spark then fills every persist()/cache() block
+    # without AQE's final-stage shuffle optimizations, so each cache is
+    # stored, and every reader scans it, at the full shuffle width
+    # however small the data. A reader that relied on a cache's static
+    # hash partitioning may pay one more exchange.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # AQE coalesces shuffle reads by BYTE size; compute-heavy rows
     # (64-wide flat vectors, shingle explosions) are byte-tiny, so the
@@ -79,7 +87,6 @@ _RUNTIME_CONF = {
 def get_spark(
     app_name: str = "distributed-mapreduce-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a tuned local SparkSession.
 
@@ -91,8 +98,6 @@ def get_spark(
     builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in _BUILD_CONF.items():
         builder = builder.config(k, v)
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if not master.startswith("local["):

@@ -10,7 +10,8 @@ must be identical. The band-index tables live in a fresh warehouse
 under the run's temp dir, so a table left by an earlier run cannot
 answer the first batch's probe.
 
-Usage: python scripts/compactor_ab.py <out.json>
+Usage: python scripts/compactor_ab.py <out.json> <sf_dir>
+  e.g. python scripts/compactor_ab.py before.json <testdata>/sf0.001
 """
 
 from __future__ import annotations
@@ -44,7 +45,7 @@ def _rows_digest(spark, path) -> str | None:
 
 
 def main() -> int:
-    out_path = sys.argv[1]
+    out_path, sf = sys.argv[1], sys.argv[2]
     work = pathlib.Path(tempfile.mkdtemp(prefix="dmr_compab_"))
     # read by the session module at import: set before importing it
     os.environ["SPARK_GRAFT_WAREHOUSE"] = str(work / "warehouse")
@@ -66,7 +67,6 @@ def main() -> int:
 
     spark = get_spark(app_name="compactor_ab")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-    sf = "/root/testdata/sf0.001"
     (work / "docs").mkdir()
     (work / "embs").mkdir()
     doc_chunks = stage_document_chunks(sf, 3, str(work / "docs"))

@@ -50,7 +50,7 @@ def spark():
     # test (test_mapreduce.py::test_crash_retry_matches_golden) kill
     # first task attempts and still converge; no effect on tests that
     # never fail a task.
-    spark = get_spark(app_name="dmr-tests", master="local[4, 2]", shuffle_partitions=8)
+    spark = get_spark(app_name="dmr-tests", master="local[4, 2]")
     yield spark
     spark.stop()
 

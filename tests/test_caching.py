@@ -157,6 +157,27 @@ def test_similarity_and_sampling_release(spark):
     _assert_released(spark, global_shuffle_index(_docs(spark), "doc_id"))
 
 
+def test_cached_aggregate_is_planned_adaptively(spark, sf_dir):
+    """A persisted aggregate's fill runs AQE through its final stage:
+    the final shuffle read is coalesced, so a few-row cache is not
+    stored, and re-scanned, at the full shuffle width. The cached rows
+    are the uncached rows."""
+    from pyspark.sql import functions as F
+
+    from distributed_mapreduce_spark.sources import table
+
+    def agg():
+        return table(spark, sf_dir, "events").groupBy("event_type").agg(
+            F.count("*").alias("n"), F.sum("user_id").alias("s")
+        )
+
+    expected = sorted(agg().collect())
+    cached = agg().persist()
+    cached.count()
+    assert cached.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert sorted(cached.collect()) == expected
+
+
 def test_query_builders_release(spark):
     from distributed_mapreduce_spark.queries.simops import (
         label_centroid_profile,

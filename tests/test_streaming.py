@@ -173,3 +173,19 @@ def test_interval_join_stream_equals_batch(spark, sf_dir, chunks):
     )
     assert rows_set(streamed) == rows_set(batch)
     assert len(rows_set(streamed)) > 0
+
+
+def test_replay_leaves_no_temp_view(spark, sf_dir):
+    """A replayed query's memory-sink view is dropped on return: the
+    frame keeps the sink's rows alive only as long as the frame itself,
+    so repeated runs do not pile views (and their rows) up on the
+    driver."""
+    from distributed_mapreduce_spark.queries.streaming_queries import st_q1_tumbling
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    rows = st_q1_tumbling(spark, sf_dir).collect()
+    assert rows
+    assert not temp_views() - before
