@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.sources.catalog import local_frame
+
 MAX_ITERS = 25
 
 # Edge-count bound for the driver-side union-find shortcut. Measured
@@ -118,7 +120,7 @@ def connected_components(
         # driver-built and independent of it — free the blocks now
         # (VERDICT r13 #5: no net persisted blocks after the operator)
         unpersist_rdd_ids(spark, one_ids)
-        return spark.createDataFrame(rows, "id bigint, component bigint")
+        return local_frame(spark, rows, "id bigint, component bigint")
     # ── distributed branch: alternating large-star/small-star ──────
     # Invariants maintained on `cur` (the working edge list): distinct
     # (a, b) rows with a < b (self-loops handled at the end — they only

@@ -36,6 +36,7 @@ from distributed_mapreduce_spark.functions.text import (
     shingles,
     tokens,
 )
+from distributed_mapreduce_spark.sources.catalog import local_frame
 
 DEFAULT_NUM_HASHES = 32
 DEFAULT_BANDS = 8  # rows-per-band r = k/b = 4 → s-curve threshold ≈ (1/8)^(1/4) ≈ 0.6
@@ -1133,8 +1134,8 @@ def dedup_corpus_greedy(
     if not rejected:
         return docs
     spark = docs.sparkSession
-    rej_df = spark.createDataFrame(
-        [(int(x),) for x in sorted(rejected)], f"{id_col} bigint"
+    rej_df = local_frame(
+        spark, [(int(x),) for x in sorted(rejected)], f"{id_col} bigint"
     )
     return docs.join(F.broadcast(rej_df), id_col, "left_anti")
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.sources.catalog import local_frame
+
 NSHARDS = 10  # /root/reference/src/shardmaster/common.go:21
 
 
@@ -199,8 +201,7 @@ def kv_get(state: DataFrame, spark: SparkSession, key: str) -> DataFrame:
     frame's plan scans; a serving deployment materializes the fold
     with write_kv_state and probes with kv_get_point, which prunes the
     read to one shard directory (VERDICT r14 #6)."""
-    # JVM-only 1-row probe (createDataFrame would spin a Python RDD job)
-    probe = spark.range(1).select(F.lit(key).alias("key"))
+    probe = local_frame(spark, [(key,)], "key string")
     return probe.join(state, "key", "left").select(
         "key", F.coalesce("value", F.lit("")).alias("value")
     )
@@ -231,7 +232,7 @@ def kv_get_point(spark: SparkSession, path: str, key: str) -> DataFrame:
     row = spark.read.parquet(path).where(
         (F.col("shard") == key2shard(F.lit(key))) & (F.col("key") == key)
     )
-    probe = spark.range(1).select(F.lit(key).alias("key"))
+    probe = local_frame(spark, [(key,)], "key string")
     return probe.join(row.select("key", "value"), "key", "left").select(
         "key", F.coalesce("value", F.lit("")).alias("value")
     )
@@ -251,7 +252,7 @@ def kv_multi_get(spark: SparkSession, path: str, keys: list[str]) -> DataFrame:
     rows = spark.read.parquet(path).where(
         F.col("shard").isin(shards) & F.col("key").isin(list(keys))
     )
-    probe = spark.createDataFrame([(k,) for k in keys], "key string")
+    probe = local_frame(spark, [(k,) for k in keys], "key string")
     return probe.join(
         F.broadcast(rows.select("key", "value")), "key", "left"
     ).select("key", F.coalesce("value", F.lit("")).alias("value"))

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.sources.catalog import local_frame
+
 BUCKETS = 100
 
 
@@ -64,7 +66,7 @@ def stratified_sample(
     it from a config store."""
     spark = df.sparkSession
     rate_rows = [(k, float(v)) for k, v in rates.items()]
-    dim = spark.createDataFrame(rate_rows, f"{strata_col} string, __rate double")
+    dim = local_frame(spark, rate_rows, f"{strata_col} string, __rate double")
     joined = df.join(F.broadcast(dim), strata_col, "left")
     rate = F.coalesce(F.col("__rate"), F.lit(float(default_rate)))
     return joined.where(hash_bucket(key_col, buckets) < rate * buckets).drop("__rate")

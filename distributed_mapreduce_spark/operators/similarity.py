@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.functions.vectors import cosine
+from distributed_mapreduce_spark.sources.catalog import local_frame
 
 DEFAULT_NUM_CELLS = 16
 DEFAULT_NPROBE = 4
@@ -262,8 +263,8 @@ def assign_cells(
     from distributed_mapreduce_spark.sources import widen
 
     spark = emb.sparkSession
-    cent_df = spark.createDataFrame(
-        [(cid, vec) for cid, vec in centroids], "cell int, cvec array<double>"
+    cent_df = local_frame(
+        spark, [(cid, vec) for cid, vec in centroids], "cell int, cvec array<double>"
     )
     best = (
         widen(emb.select(id_col, vec_col))
@@ -336,7 +337,8 @@ def pq_encode(
     cb_size = len(codebooks[0])
     sub = len(codebooks[0][0])
     spark = emb.sparkSession
-    cb = spark.createDataFrame(
+    cb = local_frame(
+        spark,
         [(j, c, codebooks[j][c]) for j in range(m) for c in range(cb_size)],
         "sub int, code int, cvec array<double>",
     )
@@ -1038,8 +1040,8 @@ def assign_probe_cells(
 
     spark = queries.sparkSession
     dim = len(centroids[0][1])
-    cent_df = spark.createDataFrame(
-        [(int(c), v) for c, v in centroids], "cell int, cvec array<double>"
+    cent_df = local_frame(
+        spark, [(int(c), v) for c, v in centroids], "cell int, cvec array<double>"
     )
     w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc("cell"))
     return (
@@ -1157,7 +1159,7 @@ def _adc_probe_frame(
     rows = queries.select(qid_col, qvec_col).collect()
     schema = f"{qid_col} {qid_type}, cell int, lut array<double>"
     if not rows:
-        return spark.createDataFrame([], schema), []
+        return local_frame(spark, [], schema), []
     qvecs = [[float(x) for x in r[qvec_col]] for r in rows]
     luts = _adc_luts(qvecs, codebooks)
     probe_rows, cells = [], set()
@@ -1165,7 +1167,7 @@ def _adc_probe_frame(
         qcells = _probe_cells(centroids, qv, nprobe)
         cells.update(qcells)
         probe_rows.extend((r[qid_col], c, lut) for c in qcells)
-    probe_df = spark.createDataFrame(probe_rows, schema)
+    probe_df = local_frame(spark, probe_rows, schema)
     return probe_df, sorted(cells)
 
 
@@ -1370,8 +1372,8 @@ def knn_join_ivf(
         # wide flat-column plan's Catalyst+codegen, fixed w.r.t. N).
         # Persisted: both sides read it.
         spark = emb.sparkSession
-        cent_df = spark.createDataFrame(
-            [(int(c), v) for c, v in centroids], "cell int, cvec array<double>"
+        cent_df = local_frame(
+            spark, [(int(c), v) for c, v in centroids], "cell int, cvec array<double>"
         )
         wr = Window.partitionBy("__id").orderBy(F.desc("__score"), F.asc("cell"))
         ranked = (

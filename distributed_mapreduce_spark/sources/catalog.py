@@ -18,9 +18,13 @@ input splitting (the reference's dead O11 code, master.go:153-208).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, LongType, StructType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -91,6 +95,33 @@ def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over rows the driver already holds, as a JVM local
+    relation: the plan scans a `LocalTableScan` and collecting it runs
+    no Spark job.
+
+    `spark.createDataFrame(<list>, schema)` pickles the rows into a
+    Python RDD, so every action over it runs one Python-worker task per
+    core to hand back rows the driver had. An Arrow table built from
+    the same rows, typed from `schema` (DDL string or StructType),
+    goes to the JVM in one call and becomes a `LocalRelation` below
+    `spark.sql.execution.arrow.localRelationThreshold` (48 MB by
+    default; above it, a JVM-side RDD of the Arrow batches, still no
+    Python worker). The rows are tuples in schema order; timestamps
+    are read as UTC."""
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        ),
+        struct,
+    )
 
 
 def load(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

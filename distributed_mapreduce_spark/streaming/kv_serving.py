@@ -34,6 +34,11 @@ before the manifest lands (the CDC sink's argument); a row REPLAYED in
 a later batch (fresh checkpoint, overlapping files) is dropped by the
 per-key `last_seq` watermark apply_kv_ops persists — the analog of
 the reference's per-client dedup seq.
+
+Driver-held rows (a get's key probe, the empty base of a fresh store,
+an empty pruned read) enter plans as local relations
+(`sources.catalog.local_frame`): a get or a first batch runs no
+Python-worker task. Python-worker tasks are for UDF lanes only.
 """
 
 from __future__ import annotations
@@ -48,6 +53,7 @@ from distributed_mapreduce_spark.operators.kv import (
     key2shard,
     key2shard_py,
 )
+from distributed_mapreduce_spark.sources.catalog import local_frame
 from distributed_mapreduce_spark.streaming.commitlog import (
     VersionManifests,
     partition_versions,
@@ -124,8 +130,8 @@ def foreach_batch_kv_serving(
                     "key string, value string, last_seq bigint"
                 ).parquet(*base_paths)
             else:
-                base = spark.createDataFrame(
-                    [], "key string, value string, last_seq bigint"
+                base = local_frame(
+                    spark, [], "key string, value string, last_seq bigint"
                 )
             merged = apply_kv_ops(base, df)
             merged.withColumn("p", key2shard(F.col("key"))).repartition(
@@ -184,7 +190,7 @@ def kv_served_multi_get(
         spark, store_path, as_of=as_of, partitions=shards
     )
     rows = rows.where(F.col("key").isin(list(keys))).select("key", "value")
-    probe = spark.createDataFrame([(k,) for k in keys], "key string")
+    probe = local_frame(spark, [(k,) for k in keys], "key string")
     return probe.join(F.broadcast(rows), "key", "left").select(
         "key", F.coalesce("value", F.lit("")).alias("value")
     )

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from distributed_mapreduce_spark.caching import persistent_rdd_ids, unpersist_rdd_ids
+from distributed_mapreduce_spark.sources.catalog import local_frame
 from distributed_mapreduce_spark.streaming.commitlog import (
     ManifestStore,
     VersionManifests,
@@ -277,8 +278,8 @@ def foreach_batch_cdc_merge_partitioned(
         # ADVICE r14 #4's construction-time-death class).
         shared = [c for c in init.columns if c in changes.columns]
         tgt = (
-            spark.createDataFrame([], init.select(*shared).schema)
-            .unionByName(spark.createDataFrame([], changes.select(*shared).schema))
+            local_frame(spark, [], init.select(*shared).schema)
+            .unionByName(local_frame(spark, [], changes.select(*shared).schema))
             .schema
         )
         coerced = {f.name: f.dataType for f in tgt.fields}
@@ -458,7 +459,7 @@ def foreach_batch_cdc_merge_partitioned(
                         "the key requires an explicit table rewrite"
                     )
             else:
-                base = spark.createDataFrame([], df.select(*snapshot_cols).schema)
+                base = local_frame(spark, [], df.select(*snapshot_cols).schema)
             merged = merge(base, df, key, ord_col, delete_col)
             merged.withColumn("p", bucket(F.col(key))).write.mode(
                 "overwrite"
@@ -638,7 +639,7 @@ def read_current_partitioned(
         # (all kv_serving and schema-recording CDC stores have one)
         target = _newest_recorded_schema(manifests)
         if target is not None:
-            empty = spark.createDataFrame([], _schema_ddl(target))
+            empty = local_frame(spark, [], _schema_ddl(target))
             if live_only:
                 empty = empty.where(
                     F.coalesce(F.col(delete_col).cast("int"), F.lit(0)) == 0
@@ -1200,8 +1201,8 @@ def _near_dup_gate(
 
     accepted = batch_df
     if rejected:
-        rej = spark.createDataFrame(
-            [(int(x),) for x in sorted(rejected)], f"{id_col} bigint"
+        rej = local_frame(
+            spark, [(int(x),) for x in sorted(rejected)], f"{id_col} bigint"
         )
         accepted = batch_df.join(F.broadcast(rej), id_col, "left_anti")
     return accepted, sh_b, len(rejected)
@@ -1799,9 +1800,7 @@ def _canonical_labels(spark, ids: DataFrame, manifests) -> DataFrame:
     resolved = _alias_map(manifests)
     if not resolved:
         return ids
-    adf = spark.createDataFrame(
-        list(resolved.items()), "comp bigint, __canon bigint"
-    )
+    adf = local_frame(spark, resolved.items(), "comp bigint, __canon bigint")
     return ids.join(F.broadcast(adf), "comp", "left").select(
         "id", F.coalesce("__canon", "comp").alias("comp"), "cell"
     )
@@ -1946,7 +1945,7 @@ def foreach_batch_semdedup_ingest(
         sids = sorted({int(r["y"]) for r in edge_rows if r["y_stored"]})
         label_of: dict = {}
         if sids:
-            sid_df = spark.createDataFrame([(s,) for s in sids], "id bigint")
+            sid_df = local_frame(spark, [(s,) for s in sids], "id bigint")
             lab_dirs = b.ms.pruned_partition_dirs(
                 _probe_buckets(sid_df, "id", id_buckets), "ids",
                 manifests=b.manifests,
@@ -2004,7 +2003,8 @@ def foreach_batch_semdedup_ingest(
         coded.write.mode("overwrite").partitionBy("cell").parquet(b.dir())
         ids_out = coded.select(id_col, "cell")
         if comp_map:
-            comp_df = spark.createDataFrame(
+            comp_df = local_frame(
+                spark,
                 [(int(k), int(v)) for k, v in comp_map.items()],
                 f"{id_col} bigint, __comp bigint",
             )

@@ -6,9 +6,12 @@ and sidecar (file layout excluded: part-file names embed uuids;
 partition values included), every committed source manifest with
 `elapsed_s` dropped (a wall-clock stamp), the seed manifest payload,
 and the history floor. Run before and after a refactor; the digests
-must be identical. The band-index tables live in a fresh warehouse
-under the run's temp dir, so a table left by an earlier run cannot
-answer the first batch's probe.
+must be identical. The SemDeDup feed arrives in descending vec_id
+order, so a later batch holds smaller ids than the stored members it
+near-duplicates and the union by min id commits alias (merge)
+records; the run fails if no manifest carries one. The band-index
+tables live in a fresh warehouse under the run's temp dir, so a table
+left by an earlier run cannot answer the first batch's probe.
 
 Usage: python scripts/compactor_ab.py <out.json> <sf_dir>
   e.g. python scripts/compactor_ab.py before.json <testdata>/sf0.001
@@ -83,11 +86,20 @@ def main() -> int:
             .parquet(doc_chunks)
         )
 
-    def emb_stream():
+    (work / "sem_embs").mkdir()
+    sem_dir = stage_embedding_chunks(sf, 3, str(work / "sem_embs"))
+    # the file source reads oldest first: swap the mtimes so the
+    # highest-id chunk is read first
+    sem_chunks = sorted(pathlib.Path(sem_dir).glob("*.parquet"))
+    stamps = [c.stat().st_mtime for c in sem_chunks]
+    for c, t in zip(sem_chunks, reversed(stamps)):
+        os.utime(c, (t, t))
+
+    def emb_stream(chunks=emb_chunks):
         return (
             spark.readStream.schema(emb_schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(emb_chunks)
+            .parquet(chunks)
         )
 
     digests: dict = {}
@@ -154,8 +166,10 @@ def main() -> int:
     km_cents = kmeans_train(emb.select("vec_id", "embedding"), 64, KM_K, KM_ITERS)
     src, dst = str(work / "sem_src"), str(work / "sem_dst")
     S.foreach_batch_semdedup_ingest(
-        emb_stream(), src, str(work / "sem_ckpt"), km_cents, 64
+        emb_stream(sem_dir), src, str(work / "sem_ckpt"), km_cents, 64
     ).awaitTermination()
+    if not any(m.get("merges") for _, m in ManifestStore(src).manifests()):
+        raise SystemExit("semdedup feed committed no merge record")
     S.compact_semdedup_ingest_store(spark, src, dst)
     digest("semdedup", src, dst)
 

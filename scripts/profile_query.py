@@ -2,8 +2,14 @@
 """Stage-level profile of one registered/shadow query (dev tool).
 
 Runs the query with the Spark event log enabled and prints per-stage
-wall/task time, shuffle bytes, and the dominant RDD scopes — the
-empirical half of guide §1.1 on a box with the UI disabled.
+wall time, task CPU (`cpu=`, the event log's `Executor CPU Time`), task
+run time (`run=`, `Executor Run Time`: task wall time, waits included),
+shuffle bytes, and the dominant RDD scopes — the empirical half of
+guide §1.1 on a box with the UI disabled.
+
+Python-worker CPU is not in the event log at all: a Python-lane stage
+(PythonRDD, mapInPandas, pandas UDFs) shows its worker time only in
+`run=`, with `cpu=` counting just the JVM side.
 
 Usage: python scripts/profile_query.py <query> [passes]
 """
@@ -105,7 +111,8 @@ def main() -> int:
                 continue
             m = ev.get("Task Metrics") or {}
             st = stages[si]
-            st["task_ms"] = st.get("task_ms", 0) + m.get("Executor Run Time", 0)
+            st["run_ms"] = st.get("run_ms", 0) + m.get("Executor Run Time", 0)
+            st["cpu_ns"] = st.get("cpu_ns", 0) + m.get("Executor CPU Time", 0)
             st["gc_ms"] = st.get("gc_ms", 0) + m.get("JVM GC Time", 0)
             sr = (m.get("Shuffle Read Metrics") or {})
             sw = (m.get("Shuffle Write Metrics") or {})
@@ -126,7 +133,8 @@ def main() -> int:
         s = stages[key]
         print(
             f"  +{(s['sub']-t_min)/1000:6.2f}s wall={s['wall_ms']/1000:6.2f}s "
-            f"tasks={s['tasks']:3d} cpu={s.get('task_ms',0)/1000:7.2f}s "
+            f"tasks={s['tasks']:3d} cpu={s.get('cpu_ns',0)/1e9:7.2f}s "
+            f"run={s.get('run_ms',0)/1000:7.2f}s "
             f"gc={s.get('gc_ms',0)/1000:5.2f}s in={s.get('input_mb',0):6.1f}MB "
             f"sr={s.get('sh_read_mb',0):6.1f}MB sw={s.get('sh_write_mb',0):6.1f}MB "
             f"fw={s.get('fetch_ms',0)/1000:5.2f}s  {s['name']}"

@@ -276,6 +276,14 @@ def test_kv_served_get_empty_shard_and_gets_ignored(spark, tmp_path):
     # key "1" routes to an untouched shard: served as absent
     assert kv_served_get(spark, store, "1").collect() == [("1", "")]
 
+    # the probe and the empty-shard frame are local relations: a get
+    # runs no Python-worker scan of rows the driver already held
+    for k in ("0", "1"):
+        df = kv_served_get(spark, store, k)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+
 
 def test_kv_store_maintenance_lifecycle(spark, tmp_path):
     """The serving store composes with the partitioned layout's
