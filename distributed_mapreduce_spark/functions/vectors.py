@@ -185,32 +185,15 @@ def cosine_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def round12_decimal_mean(c: Column) -> Column:
-    """The certified engine-parity MEAN staging (one definition — the
-    kmeans/linreg discipline, extracted by the r13 self-review when a
-    third literal copy appeared): inputs round to 12 decimals into
-    DECIMAL(22,12) so the sum is exact and accumulation-order-free,
-    then divide out as double and round to 12 — bit-identical to the
-    round12_decimal_mean_sql mirror on any row order."""
-    return F.round(
-        F.sum(F.round(c, 12).cast("decimal(22,12)")).cast("double") / F.count("*"),
-        12,
-    )
-
-
 def round12_decimal_mean_sql(expr: str) -> str:
-    """DuckDB mirror of round12_decimal_mean — same staging, same
-    rounds, one definition per engine."""
+    """Per-coordinate mean staged exactly: round each value to 12
+    places, sum as DECIMAL(22,12) (exact and order-independent), then
+    divide and round — the same SQL text on Spark and DuckDB, so both
+    engines produce the same double."""
     return (
         f"round(CAST(sum(CAST(round({expr}, 12) AS DECIMAL(22,12)))"
         f" AS DOUBLE) / count(*), 12)"
     )
-
-
-def round12_decimal_sum(c: Column) -> Column:
-    """round12_decimal_mean without the division — the exact
-    order-free SUM staging (power iteration's s-accumulation)."""
-    return F.round(F.sum(F.round(c, 12).cast("decimal(22,12)")).cast("double"), 12)
 
 
 def round12_decimal_sum_sql(expr: str) -> str:

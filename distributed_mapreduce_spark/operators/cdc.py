@@ -32,7 +32,7 @@ exists to avoid; asserted base-unshuffled in tests/test_plans.py).
 The only shuffle anywhere is the batch's own max_by agg (partial-agg
 friendly, ∝ batch keys). Combine with
 sources/files.write_partitioned(dynamic=True) to rewrite only the
-partitions the batch touches (the operators/incremental.py pattern).
+partitions the batch touches (as the partitioned CDC sink does).
 """
 
 from __future__ import annotations

@@ -77,34 +77,6 @@ def fold_kv_log(ops: DataFrame) -> DataFrame:
     return live.groupBy("key").agg(ordered_concat.alias("value"))
 
 
-def compact_kv_log(ops: DataFrame, upto_seq: int) -> DataFrame:
-    """Log compaction — the reference's kvraft snapshot concept
-    (maxraftstate bound + SnapshotSize checks,
-    /root/reference/src/kvraft/config.go:54,94-97) re-expressed for an
-    op-log table: replace the prefix `seq <= upto_seq` with its folded
-    state as synthetic `put` ops AT the boundary seq, keep the tail
-    verbatim. Folding the compacted log equals folding the full log
-    (✓test, multiple cut points): a put at the boundary supersedes
-    every earlier op for its key by the last-put-wins rule, and every
-    tail op sorts after it. Retried-op duplicates share one seq, so a
-    duplicate pair can never straddle the boundary — the exactly-once
-    dedup is unaffected.
-
-    Scale: the prefix fold is one keyed shuffle; the compacted log is
-    |state| + |tail| rows — the maxraftstate log-bytes bound becomes a
-    storage bound. Run on a cadence (like raft snapshots) to keep
-    replay cost ∝ live keys + recent ops instead of history length."""
-    prefix = ops.where(F.col("seq") <= upto_seq)
-    tail = ops.where(F.col("seq") > upto_seq).select("key", "seq", "op", "value")
-    snap = fold_kv_log(prefix).select(
-        "key",
-        F.lit(upto_seq).cast("bigint").alias("seq"),
-        F.lit("put").alias("op"),
-        "value",
-    )
-    return snap.unionByName(tail)
-
-
 def apply_kv_ops(base: DataFrame, ops: DataFrame) -> DataFrame:
     """Fold ONE op-log batch onto an existing state snapshot — the
     incremental twin of fold_kv_log, and the merge step of the
@@ -198,64 +170,13 @@ def kv_get(state: DataFrame, spark: SparkSession, key: str) -> DataFrame:
     (/root/reference/src/kvraft/client.go:27-31).
 
     Against an UNMATERIALIZED state frame this scans whatever the
-    frame's plan scans; a serving deployment materializes the fold
-    with write_kv_state and probes with kv_get_point, which prunes the
-    read to one shard directory (VERDICT r14 #6)."""
+    frame's plan scans; the served store (streaming/kv_serving.py)
+    keeps the fold materialized per shard and `kv_served_get` prunes
+    the read to one shard directory."""
     probe = local_frame(spark, [(key,)], "key string")
     return probe.join(state, "key", "left").select(
         "key", F.coalesce("value", F.lit("")).alias("value")
     )
-
-
-def write_kv_state(state: DataFrame, path: str) -> None:
-    """Materialize a folded KV state as the SERVING layout: partitioned
-    on `shard = key2shard(key)` — the reference's own routing function
-    (/root/reference/src/shardkv/client.go:22-29) as the directory
-    layout, so a point Get reads one shard directory, never the table
-    (the shardkv data-plane shape: a get touches one replica group).
-    repartition("shard") first ⇒ one file per shard per write."""
-    state.withColumn("shard", key2shard(F.col("key"))).repartition(
-        "shard"
-    ).write.mode("overwrite").partitionBy("shard").parquet(path)
-
-
-def kv_get_point(spark: SparkSession, path: str, key: str) -> DataFrame:
-    """K1 Get against a write_kv_state store, PARTITION-PRUNED: the
-    shard predicate is `shard = key2shard(lit(key))` — foldable, so
-    Catalyst constant-folds it into the scan's PartitionFilters and
-    the read lists ONE `shard=<k>` directory (plan-asserted in
-    tests/test_kv.py); the key equality pushes to the parquet reader
-    within it. Absent key reads as "" (kv_get's contract). At 100 TB
-    this is the difference between a point lookup and a table scan —
-    with NSHARDS sized like a real keyspace (thousands), cost is
-    ∝ one shard's bytes."""
-    row = spark.read.parquet(path).where(
-        (F.col("shard") == key2shard(F.lit(key))) & (F.col("key") == key)
-    )
-    probe = local_frame(spark, [(key,)], "key string")
-    return probe.join(row.select("key", "value"), "key", "left").select(
-        "key", F.coalesce("value", F.lit("")).alias("value")
-    )
-
-
-def kv_multi_get(spark: SparkSession, path: str, keys: list[str]) -> DataFrame:
-    """Batched K1 Get against a write_kv_state store: one row per
-    requested key (absent ⇒ ""), reading ONLY the ≤len(keys) shard
-    directories the keys route to — the shard IN-list is literal, so
-    it folds into the scan's PartitionFilters like kv_get_point's
-    equality (plan-asserted). This is the multi-get a serving layer
-    batches client reads into: cost ∝ probed shards' bytes, never the
-    table, and the probe side is a broadcast-sized literal relation."""
-    if not keys:
-        raise ValueError("kv_multi_get: empty key list")
-    shards = sorted({key2shard_py(k) for k in keys})
-    rows = spark.read.parquet(path).where(
-        F.col("shard").isin(shards) & F.col("key").isin(list(keys))
-    )
-    probe = local_frame(spark, [(k,) for k in keys], "key string")
-    return probe.join(
-        F.broadcast(rows.select("key", "value")), "key", "left"
-    ).select("key", F.coalesce("value", F.lit("")).alias("value"))
 
 
 # ---------------------------------------------------------------------------
@@ -272,10 +193,9 @@ def key2shard(key: Column) -> Column:
 
 def key2shard_py(key: str) -> int:
     """THE driver-side twin of key2shard — the one place the routing
-    expression exists in Python (ADVICE r15: kv_multi_get used to
-    inline its own copy; a silent divergence between the pair would
-    make a pruned serving read miss a PRESENT key and return "" — the
-    worst failure mode of a serving path). Spark's ascii() returns the
+    expression exists in Python (a silent divergence between the pair
+    would make a pruned serving read miss a PRESENT key and return ""
+    — the worst failure mode of a serving path). Spark's ascii() returns the
     first character's codepoint (multibyte included) and 0 for the
     empty string, which is exactly `ord(key[0])` / 0 — the equivalence
     is pinned by a hypothesis property test over ASCII, empty, and

@@ -2,18 +2,12 @@
 opaque binary columns with typed metadata, processed through
 Arrow-batched mapInPandas.
 
-This container has no media libraries, so the graded *decode* step is
-a STUB: `decode_stub` produces a deterministic fake feature vector
-from the raw bytes. `decode_real` carries a Pillow-backed image decode
-gated on import (grayscale → nearest resize → normalized intensity
-strip), a stdlib-`wave` PCM audio decode, and a stdlib-`struct`
-uncompressed RIFF/AVI video decode (both always available; compressed
-video codecs stay honestly unsupported — that genuinely needs pyav);
-`decode_any` dispatches real-then-stub, warning on parse failures.
-Everything around the decoders — schema, binary payload handling,
-Arrow batch shape, partitioning — is identical and tested in both
-environments; graded queries pin decode_stub so results never depend
-on which libs are installed.
+The graded *decode* step is a STUB: `decode_stub` produces a
+deterministic fake feature vector from the raw bytes, so results never
+depend on which media libraries are installed. Everything around the
+decoder — schema, binary payload handling, Arrow batch shape,
+partitioning — is the real operator shape; a real decoder (Pillow,
+pyav) drops into the mapInPandas body unchanged.
 
 Scale notes: payloads ride in the same parquet row group as their
 metadata (fine ≤ a few MB each; bigger media belongs in object storage
@@ -63,259 +57,6 @@ def multimodal_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pil_image():
-    """Import hook for Pillow — None when the lib isn't installed."""
-    try:
-        from PIL import Image
-
-        return Image
-    except ImportError:
-        return None
-
-
-def decode_real(payload: bytes, modality: str) -> list[float]:
-    """Real decode where the libs exist; raises NotImplementedError
-    otherwise (callers that must run anywhere use `decode_any`).
-
-    image: Pillow-backed — decode, grayscale, nearest-neighbor resize
-    to a FEATURE_DIM×1 strip, L1-normalized intensities (same output
-    shape and normalization contract as decode_stub, so downstream
-    operators are decoder-agnostic).
-
-    audio: stdlib `wave` — parse the WAV container (8/16/24/32-bit
-    PCM), mix channels to mono, then FEATURE_DIM contiguous-bucket mean
-    absolute amplitudes, L1-normalized (same shape/normalization
-    contract). No external lib needed, so real audio decode runs in
-    this container.
-
-    video: stdlib `struct` RIFF/AVI walk — uncompressed (BI_RGB) DIB
-    frames only; per-frame mean intensity bucketed like the audio
-    path. Compressed codecs raise UnsupportedMediaError (pyav would be
-    needed; decode_any falls back visibly)."""
-    if modality == "image":
-        Image = _pil_image()
-        if Image is not None:
-            import io
-
-            import numpy as np
-
-            with Image.open(io.BytesIO(payload)) as im:
-                strip = im.convert("L").resize((FEATURE_DIM, 1), Image.NEAREST)
-                arr = np.asarray(strip, dtype=np.float64).reshape(-1)
-            total = arr.sum()
-            return (arr / total).tolist() if total else [0.0] * FEATURE_DIM
-    if modality == "audio":
-        return _decode_wav(payload)
-    if modality == "video":
-        return _decode_avi(payload)
-    if modality == "image":  # reached only when Pillow is absent
-        raise NotImplementedError(
-            "real image decoding requires PIL; "
-            "use decode_any/decode_stub (deterministic fake) in this environment"
-        )
-    raise UnsupportedMediaError(f"no real decoder for modality {modality!r}")
-
-
-def _decode_wav(payload: bytes) -> list[float]:
-    """WAV → FEATURE_DIM L1-normalized mean-|amplitude| buckets, pure
-    stdlib (`wave`) + numpy. Raises wave.Error/EOFError on non-WAV
-    bytes — decode_any turns those into the stub fallback."""
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        sampwidth = w.getsampwidth()
-        nch = w.getnchannels()
-        raw = w.readframes(w.getnframes())
-    if not raw:
-        return [0.0] * FEATURE_DIM
-    if sampwidth == 1:  # 8-bit WAV is unsigned; center at 0
-        samples = np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0
-    elif sampwidth == 2:
-        samples = np.frombuffer(raw, dtype="<i2").astype(np.float64)
-    elif sampwidth == 4:
-        samples = np.frombuffer(raw, dtype="<i4").astype(np.float64)
-    elif sampwidth == 3:  # 24-bit: sign-extend each 3-byte LE sample
-        a = np.frombuffer(raw, dtype=np.uint8)[: len(raw) - len(raw) % 3]
-        a = a.reshape(-1, 3)
-        ext = np.where(a[:, 2] >= 128, 255, 0).astype(np.uint8)
-        samples = (
-            np.ascontiguousarray(np.column_stack([a, ext]))
-            .view("<i4")
-            .reshape(-1)
-            .astype(np.float64)
-        )
-    else:
-        raise UnsupportedMediaError(f"unsupported WAV sample width {sampwidth}")
-    if nch > 1:
-        samples = samples[: len(samples) - len(samples) % nch]
-        samples = samples.reshape(-1, nch).mean(axis=1)
-    return _bucket_l1(np.abs(samples))
-
-
-def _bucket_l1(mag) -> list[float]:
-    """Shared decode tail: a non-negative 1-D series → FEATURE_DIM
-    contiguous-bucket means, L1-normalized (zero-padded up to
-    FEATURE_DIM when the series is shorter) — the common output
-    contract of the audio (|amplitude| over samples) and video (frame
-    intensity over frames) real decoders."""
-    import numpy as np
-
-    if len(mag) < FEATURE_DIM:
-        mag = np.pad(mag, (0, FEATURE_DIM - len(mag)))
-    bounds = np.arange(FEATURE_DIM) * len(mag) // FEATURE_DIM
-    sums = np.add.reduceat(mag, bounds)
-    counts = np.diff(np.append(bounds, len(mag)))
-    feats = sums / counts
-    total = feats.sum()
-    return (feats / total).tolist() if total else [0.0] * FEATURE_DIM
-
-
-def _decode_avi(payload: bytes) -> list[float]:
-    """Uncompressed RIFF/AVI → FEATURE_DIM L1-normalized mean-frame-
-    intensity buckets, pure stdlib (`struct`) + numpy — the video twin
-    of _decode_wav: the per-frame mean byte intensity forms a time
-    series that goes through the same _bucket_l1 tail.
-
-    Container handling: walks the RIFF chunk tree (word-aligned chunk
-    sizes, LIST recursion, `rec ` groupings inside `movi`), takes the
-    FIRST `vids` stream declared in `hdrl`, and requires its `strf`
-    BITMAPINFOHEADER to declare biCompression == 0 (BI_RGB, raw DIB
-    frames — the only codec decodable without a media library). Any
-    other codec, a malformed tree, or a missing video stream raises
-    UnsupportedMediaError, which decode_any converts into the visible
-    stub fallback. Zero video frames → all-zero features (same
-    degenerate contract as an empty WAV)."""
-    import struct
-
-    import numpy as np
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise UnsupportedMediaError("not a RIFF/AVI container")
-
-    def u32(off: int) -> int:
-        return struct.unpack_from("<I", payload, off)[0]
-
-    video_stream: int | None = None
-    compression: int | None = None
-    stream_idx = -1
-    frames: list[tuple[int, int]] = []
-
-    # A well-formed AVI nests LISTs a handful deep (hdrl→strl,
-    # movi→rec); bound the recursion so an adversarial tower of nested
-    # LIST chunks surfaces as the fallback-eligible parse error the
-    # module contract promises, not a RecursionError.
-    MAX_LIST_DEPTH = 32
-
-    def walk(start: int, stop: int, ltype: bytes, depth: int = 0) -> None:
-        nonlocal video_stream, compression, stream_idx
-        if depth > MAX_LIST_DEPTH:
-            raise UnsupportedMediaError("AVI LIST nesting exceeds sane depth")
-        off = start
-        while off + 8 <= stop:
-            cid = payload[off : off + 4]
-            size = u32(off + 4)
-            body = off + 8
-            bend = min(body + size, stop)
-            if cid == b"LIST" and bend >= body + 4:
-                walk(body + 4, bend, payload[body : body + 4], depth + 1)
-            elif cid == b"strh" and ltype == b"strl":
-                stream_idx += 1
-                if payload[body : body + 4] == b"vids" and video_stream is None:
-                    video_stream = stream_idx
-            elif (
-                cid == b"strf"
-                and ltype == b"strl"
-                and video_stream == stream_idx
-                and compression is None
-                and bend >= body + 20
-            ):
-                compression = u32(body + 16)  # BITMAPINFOHEADER.biCompression
-            elif (
-                ltype in (b"movi", b"rec ")
-                and cid[2:4] in (b"db", b"dc")
-                and cid[:2].isdigit()
-                and int(cid[:2]) == video_stream
-            ):
-                frames.append((body, bend))
-            off = body + size + (size & 1)
-
-    walk(12, min(len(payload), 8 + u32(4)), b"AVI ")
-    if video_stream is None:
-        raise UnsupportedMediaError("AVI has no video (vids) stream")
-    if compression != 0:
-        raise UnsupportedMediaError(
-            f"AVI video compression {compression} unsupported (BI_RGB raw "
-            "DIB only without a media library)"
-        )
-    if not frames:
-        return [0.0] * FEATURE_DIM
-    intensity = np.array(
-        [
-            np.frombuffer(payload[a:b], dtype=np.uint8).mean() if b > a else 0.0
-            for a, b in frames
-        ]
-    )
-    return _bucket_l1(intensity)
-
-
-class UnsupportedMediaError(ValueError):
-    """A payload the real decoder understands enough to reject (e.g. a
-    valid WAV container with an exotic sample width) — fallback-eligible,
-    unlike an arbitrary ValueError from a decoder bug."""
-
-
-def _fallback_exceptions() -> tuple[type[BaseException], ...]:
-    """The exact set of 'payload is not decodable by the real decoder'
-    errors decode_any converts into the stub fallback: parse errors
-    from PIL (UnidentifiedImageError and truncated-file errors ⊂
-    OSError; DecompressionBombError ⊂ Exception directly), parse errors
-    from wave (wave.Error, EOFError), this module's own
-    UnsupportedMediaError, and NotImplementedError for absent-lib
-    modalities. Deliberately NOT a bare ValueError: an unexpected
-    ValueError from inside a decoder (a numpy reshape bug, say) is a
-    genuine defect and propagates instead of shipping silently-wrong
-    stub features."""
-    import wave
-
-    excs: list[type[BaseException]] = [
-        NotImplementedError,
-        OSError,
-        EOFError,
-        wave.Error,
-        UnsupportedMediaError,
-    ]
-    Image = _pil_image()
-    if Image is not None:
-        excs.append(Image.DecompressionBombError)
-    return tuple(excs)
-
-
-def decode_any(payload: bytes, modality: str) -> list[float]:
-    """Dispatch: the real decoder when its lib is importable for the
-    modality, else the deterministic stub. Also falls back on payloads
-    the real decoder cannot parse — with a RuntimeWarning naming the
-    error, so a genuinely corrupt input is visible and not silently
-    indistinguishable from a decoded one (the expected
-    NotImplementedError no-lib path stays silent). Graded queries pin
-    decode_stub directly so results stay environment-invariant."""
-    try:
-        return decode_real(payload, modality)
-    except _fallback_exceptions() as exc:
-        if not isinstance(exc, NotImplementedError):
-            import warnings
-
-            warnings.warn(
-                f"real {modality} decode failed ({type(exc).__name__}: {exc}); "
-                "falling back to decode_stub",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return decode_stub(payload, modality)
-
-
 def decode_stub(payload: bytes, modality: str) -> list[float]:
     """Deterministic fake 'decode': an FEATURE_DIM-bucket byte histogram,
     normalized — stable across runs/partitions, shaped like a real
@@ -359,9 +100,6 @@ FRAME_STRIDE = 4
 
 FRAMES_SCHEMA = "doc_id bigint, frame_idx bigint, frame binary"
 
-RESIZED_SCHEMA = "doc_id bigint, modality string, n_bytes_in bigint, payload binary"
-
-
 def frame_sample(
     mm: DataFrame, frame_bytes: int = FRAME_BYTES, stride: int = FRAME_STRIDE
 ) -> DataFrame:
@@ -369,7 +107,7 @@ def frame_sample(
     fixed-size frames and keep every `stride`-th one — the
     mapInPandas fan-out shape (one input row → many frame rows) a real
     video pipeline uses, with byte-slicing standing in for pyav frame
-    extraction (see decode_real).
+    extraction.
 
     Scale notes: fan-out happens inside the Arrow batch, so output
     volume never lands on the driver; a frame row carries only its
@@ -394,35 +132,3 @@ def frame_sample(
     return mm.select("doc_id", "payload").mapInPandas(run, schema=FRAMES_SCHEMA)
 
 
-def resize_stub(mm: DataFrame, target_bytes: int) -> DataFrame:
-    """Deterministic 'resize': nearest-neighbor resample of the payload
-    byte stream to `target_bytes` — the image-resize integration point
-    (swap the inner numpy indexing for PIL `Image.resize` when the
-    decode libs exist; schema, Arrow batching, and partitioning are the
-    real thing). Empty payloads stay empty."""
-    import numpy as np
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for p in pdf["payload"]:
-                b = bytes(p)
-                if not b:
-                    out.append(b"")
-                    continue
-                arr = np.frombuffer(b, dtype=np.uint8)
-                idx = (np.arange(target_bytes) * len(arr) // target_bytes).astype(np.int64)
-                out.append(arr[idx].tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes_in": [len(bytes(p)) for p in pdf["payload"]],
-                    "payload": out,
-                }
-            )
-
-    return mm.select("doc_id", "modality", "payload").mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )

@@ -24,7 +24,7 @@ BroadcastHashJoin + filter at any corpus size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.sources.catalog import local_frame
@@ -80,18 +80,6 @@ def split_train_holdout(
     layout-independence argument as stratified_sample)."""
     b = hash_bucket(key_col, buckets)
     return df.where(b >= holdout_pct), df.where(b < holdout_pct)
-
-
-def kfold(df: DataFrame, key_col: str, k: int) -> list[tuple[DataFrame, DataFrame]]:
-    """Deterministic k-fold cross-validation splits by content hash:
-    fold i's validation set is the keys with hash_bucket % k == i,
-    train is the rest — disjoint, exhaustive, layout-independent, and
-    leakage-safe (a key is in exactly one validation fold regardless
-    of how the data is partitioned or re-sharded). Returns
-    [(train_i, val_i)] for i in 0..k-1; each pair is a pure filter
-    over df, so nothing materializes until used."""
-    b = hash_bucket(key_col, BUCKETS) % k
-    return [(df.where(b != i), df.where(b == i)) for i in range(k)]
 
 
 # 12 md5 hex digits: 48 bits of uniformity, exact in a double (< 2^53)

@@ -23,7 +23,7 @@ friendly, no Window sort, no UDF.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.functions.vectors import cosine
@@ -97,112 +97,6 @@ def topk_cosine_literal(
     return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
 
 
-def topk_cosine_blas(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Tier 1 via Arrow-batched numpy: per batch, one matrix-vector
-    product scores every row (BLAS), vs one codegen'd expression per
-    row in `topk_cosine`. The trade: JVM expressions win on cheap
-    per-row math (no serialization); the Pandas path wins when the
-    per-batch work amortizes into big BLAS calls (high dim, many
-    queries at once — score a whole QUERY MATRIX per batch). Scores are
-    rounded to 6dp like the JVM tier; agreement is asserted in tests.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    def score(batches):
-        for pdf in batches:
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(m, axis=1) * qn
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(norms > 0, (m @ q) / norms, 0.0)
-            yield pd.DataFrame({id_col: pdf[id_col], "cos_sim": np.round(cos, 6)})
-
-    scored = emb.mapInPandas(score, schema=f"{id_col} bigint, cos_sim double")
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
-
-
-def topk_cosine_blas_batch(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The promise in topk_cosine_blas's docstring made literal: score
-    a whole QUERY MATRIX per Arrow batch — the brute-force serving
-    shape for a batch of |Q| requests. ONE scan of the corpus answers
-    every query: the query batch is collected to a driver matrix (it
-    is the request payload — the bounded collect every literal-query
-    tier already implies), each Arrow batch is scored per query with
-    the SAME matrix-vector product and rounding as the single-query
-    tier (a gemv loop over query columns, not one gemm — deliberately,
-    so per-query scores are bit-identical to a topk_cosine_blas loop:
-    BLAS gemm may re-order accumulation vs gemv), and each batch emits
-    only its per-query top-k under the global (cos desc, id asc) order
-    — a map-side combine for top-k, k×|Q| rows per batch instead of
-    n×|Q|, which is what bounds the shuffle at 100 TB. The final
-    per-query window over those candidates reproduces each query's
-    orderBy().limit(k) exactly (✓tested equal to the per-query loop).
-
-    IVF composes in front: pre-filter `emb` to the union of probed
-    cells (ivf_store_topk_batch's scan) and feed it here when the
-    per-row JVM expression tier loses to Arrow+BLAS (high dim, big
-    |Q|)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
-
-    qrows = queries.select(qid_col, qvec_col).collect()
-    qids = [int(r[qid_col]) for r in qrows]
-    qmat = [np.asarray([float(x) for x in r[qvec_col]], dtype=np.float64) for r in qrows]
-    qnorms = [np.linalg.norm(q) for q in qmat]
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            ids = pdf[id_col].to_numpy()
-            rnorm = np.linalg.norm(m, axis=1)
-            out_q, out_i, out_c = [], [], []
-            for qid, q, qn in zip(qids, qmat, qnorms):
-                norms = rnorm * qn
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.round(np.where(norms > 0, (m @ q) / norms, 0.0), 6)
-                # batch-local top-k under the GLOBAL order (cos desc,
-                # id asc): lexsort's last key is primary
-                top = np.lexsort((ids, -cos))[:k]
-                out_q.extend([qid] * len(top))
-                out_i.extend(ids[top])
-                out_c.extend(cos[top])
-            yield pd.DataFrame(
-                {qid_col: out_q, id_col: out_i, "cos_sim": out_c}
-            )
-
-    cand = emb.mapInPandas(
-        score, schema=f"{qid_col} bigint, {id_col} bigint, cos_sim double"
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        cand.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select(qid_col, id_col, "cos_sim")
-        .orderBy(qid_col, F.desc("cos_sim"), F.asc(id_col))
-    )
-
-
 def train_centroids(
     emb: DataFrame,
     num_cells: int = DEFAULT_NUM_CELLS,
@@ -213,31 +107,6 @@ def train_centroids(
     (Swap for KMeans at production scale; same return shape.)"""
     rows = emb.orderBy(id_col).limit(num_cells).select(vec_col).collect()
     return [(i, [float(x) for x in r[0]]) for i, r in enumerate(rows)]
-
-
-def train_centroids_kmeans(
-    emb: DataFrame,
-    num_cells: int = DEFAULT_NUM_CELLS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 20,
-) -> list[tuple[int, list[float]]]:
-    """KMeans-trained centroid table (pyspark.ml.clustering.KMeans,
-    seeded kmeans|| init) — same return shape as train_centroids, so it
-    drops into assign_cells/ivf_topk unchanged. This is the
-    production-quality build: centroids adapt to the data distribution,
-    which tightens cells and raises recall at equal nprobe. The graded
-    queries keep the deterministic sampling build (bit-reproducible for
-    the oracle); the recall test certifies this variant ≥ it."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = emb.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=num_cells, seed=seed, maxIter=max_iter).fit(feats)
-    return [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
 
 
 def assign_cells(
@@ -484,9 +353,9 @@ def kmeans_lloyd(
     (cell, pos, x) and runs ONE generic round-12→DECIMAL(22,12)
     sum/count — the same per-coordinate formula as the 64 per-column
     aggregates, exact and order-independent by decimal addition.
-    (pyspark.ml KMeans remains the production trainer —
-    train_centroids_kmeans; this operator exists for *graded*
-    iterative clustering and small-k refinement.)"""
+    (This operator exists for *graded* iterative clustering and
+    small-k refinement; pyspark.ml KMeans drops in for production
+    training without changing the assignment shape.)"""
 
     # persist: the array training set is read once per iteration plus
     # the final assignment — the standard cache-the-training-set idiom
@@ -850,14 +719,11 @@ def ivf_topk(
     nprobe: int = DEFAULT_NPROBE,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    trainer=train_centroids,
 ) -> DataFrame:
     """Tier 2: probe the nprobe cells nearest the query, exact-rank
     inside them. Driver-side centroid ranking (num_cells floats — tiny);
-    executor-side work touches only the probed cells. `trainer` picks
-    the centroid build (deterministic sampling by default; pass
-    train_centroids_kmeans for the adaptive build)."""
-    centroids = trainer(emb, num_cells, id_col, vec_col)
+    executor-side work touches only the probed cells."""
+    centroids = train_centroids(emb, num_cells, id_col, vec_col)
     indexed = assign_cells(emb, centroids, id_col, vec_col)
 
     probe = _probe_cells(centroids, query_vec, nprobe)
@@ -1099,114 +965,6 @@ def _batch_exact_topk(
     )
 
 
-def _adc_luts(qvecs: list[list[float]], codebooks: list[list[list[float]]]):
-    """Flattened per-query ADC LUTs, vectorized across the QUERY axis
-    (VERDICT r11 #4): lut[q][j*cb_size + c] = round(dot(qvec_q[j-th
-    subvector], codebooks[j][c]), 12), bit-identical to the original
-    pure-Python triple loop. The i-accumulation ORDER is the exactness
-    contract (it must match pq_adc_topk's literal left-associative
-    chain), and it survives vectorization because only the query/
-    codeword axes are vectorized: `acc = acc + Q[:, col, None] *
-    CW[:, i]` performs, elementwise, the exact same IEEE-double
-    multiply-then-add sequence `0.0 + q0*c0 + q1*c1 + …` the scalar
-    loop did — NumPy float64 ops are C double ops, the same arithmetic
-    CPython floats use. The final round(…, 12) stays CPython's
-    correctly-rounded decimal rounding (np.round is a scale-rint-
-    unscale approximation that can differ in the last bit); it is
-    |Q|·m·cb_size calls instead of the loop's |Q|·m·cb_size·sub body
-    iterations — the measured ~sub× win (SCALE.md)."""
-    import numpy as np
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    cb_size = len(codebooks[0])
-    Q = np.asarray(qvecs, dtype=np.float64)  # |Q| × dim
-    flat = np.empty((len(qvecs), m * cb_size), dtype=np.float64)
-    for j in range(m):
-        CW = np.asarray(codebooks[j], dtype=np.float64)  # cb_size × sub
-        acc = np.zeros((len(qvecs), cb_size), dtype=np.float64)
-        for i in range(sub):
-            acc = acc + Q[:, j * sub + i, None] * CW[:, i]
-        flat[:, j * cb_size : (j + 1) * cb_size] = acc
-    # tolist() (bulk C conversion to CPython floats), then CPython
-    # round — round(np.float64, n) would dispatch to NumPy's own
-    # __round__, which is the scale-rint approximation we must avoid
-    return [[round(v, 12) for v in row] for row in flat.tolist()]
-
-
-def _adc_probe_frame(
-    spark,
-    queries: DataFrame,
-    centroids: list,
-    codebooks: list[list[list[float]]],
-    nprobe: int,
-    qid_col: str,
-    qvec_col: str,
-):
-    """Driver-side half of the batched ADC probe: collect the query
-    batch (it is the REQUEST PAYLOAD — the same bounded-by-construction
-    collect the single-query pq_adc_topk leans on for its literal LUT)
-    and compute, bit-identically to the single-query code paths, each
-    query's probe cells (_probe_cells) and flattened LUT row
-    (_adc_luts — accumulation vectorized across queries, r11 #4).
-    Returns (probe_df, sorted distinct cell list): probe_df rows are
-    (qid, cell, lut array<double>) — nprobe rows per query, each
-    carrying the query's m×cb_size LUT doubles (KBs) for the broadcast
-    join. The Spark side casts each looked-up double to
-    DECIMAL(22,12), exactly like pq_adc_topk's literal staging, so the
-    batched sum is the same exact decimal chain."""
-    qid_type = dict(queries.dtypes)[qid_col]  # keep the caller's id type
-    rows = queries.select(qid_col, qvec_col).collect()
-    schema = f"{qid_col} {qid_type}, cell int, lut array<double>"
-    if not rows:
-        return local_frame(spark, [], schema), []
-    qvecs = [[float(x) for x in r[qvec_col]] for r in rows]
-    luts = _adc_luts(qvecs, codebooks)
-    probe_rows, cells = [], set()
-    for r, qv, lut in zip(rows, qvecs, luts):
-        qcells = _probe_cells(centroids, qv, nprobe)
-        cells.update(qcells)
-        probe_rows.extend((r[qid_col], c, lut) for c in qcells)
-    probe_df = local_frame(spark, probe_rows, schema)
-    return probe_df, sorted(cells)
-
-
-def _batch_adc_topk(
-    cand: DataFrame,
-    probe_df: DataFrame,
-    m: int,
-    cb_size: int,
-    k: int,
-    qid_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Shared ADC-ranking tail of the batched IVFPQ probes: join the
-    cell-pruned CODES with the broadcast (qid, cell, lut) probe table,
-    score each (code row, query) pair as m LUT lookups staged through
-    DECIMAL(22,12) — the pq_adc_topk exactness contract, so batched
-    scores equal the per-query literal chain bit-for-bit — and keep
-    the per-query top-k."""
-    from pyspark.sql import Window
-
-    score = F.expr(
-        " + ".join(
-            f"CAST(element_at(lut, {j * cb_size} + c{j} + 1) AS DECIMAL(22,12))"
-            for j in range(m)
-        )
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("approx_dot"), F.asc(id_col))
-    return (
-        cand.join(F.broadcast(probe_df), "cell")
-        .select(
-            qid_col, id_col, F.round(score, 6).cast("double").alias("approx_dot")
-        )
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select(qid_col, id_col, "approx_dot")
-        .orderBy(qid_col, F.desc("approx_dot"), F.asc(id_col))
-    )
-
-
 def ivf_store_topk_batch(
     spark,
     path: str,
@@ -1244,34 +1002,6 @@ def ivf_store_topk_batch(
     dim = len(centroids[0][1])
     return _batch_exact_topk(
         cand, qcells, dim, k, qid_col, qvec_col, id_col, vec_col
-    )
-
-
-def ivfpq_store_topk_batch(
-    spark,
-    path: str,
-    centroids: list,
-    codebooks: list[list[list[float]]],
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = DEFAULT_NPROBE,
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Batched ADC probe of a write_ivfpq_store layout: one
-    partition-pruned scan of the union of all queries' probe cells,
-    one broadcast join against the per-query LUT table, per-query
-    decimal-exact ADC top-k. Results identical to an ivfpq_store_topk
-    loop (✓tested). The query batch is collected driver-side to build
-    the LUTs — it is the request payload, the same bounded collect the
-    single-query form's literal LUT already implies."""
-    probe_df, cells = _adc_probe_frame(
-        spark, queries, centroids, codebooks, nprobe, qid_col, qvec_col
-    )
-    cand = spark.read.parquet(path).where(F.col("cell").isin(cells))
-    return _batch_adc_topk(
-        cand, probe_df, len(codebooks), len(codebooks[0]), k, qid_col, id_col
     )
 
 

@@ -446,8 +446,8 @@ def rel_q16_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one shuffle+sort on the segment key for the window,
     then a group-cardinality agg. At 100 TB the exact per-partition
-    sort is the cost; an approx_percentile cut-point pass (see
-    operators/sketches.py) replaces ntile at the same output shape."""
+    sort is the cost; an approx_percentile cut-point pass replaces
+    ntile at the same output shape."""
     cust = table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("c_acctbal").asc(), F.col("c_custkey").asc()

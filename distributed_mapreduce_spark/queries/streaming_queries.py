@@ -28,7 +28,7 @@ from distributed_mapreduce_spark.streaming.replay import (
     STREAM_SHUFFLE_PARTITIONS,  # noqa: F401 - re-exported for callers of this module
     event_stream,
     run_available_now,
-    stage_event_chunks,
+    stage_chunks,
     stream_conf,
 )
 from distributed_mapreduce_spark.streaming.stateful import (
@@ -63,7 +63,7 @@ _CHUNK_CACHE: dict[tuple[str, int], str] = {}
 def _staged(sf_dir: str) -> str:
     key = (sf_dir, N_CHUNKS)
     if key not in _CHUNK_CACHE:
-        _CHUNK_CACHE[key] = stage_event_chunks(sf_dir, N_CHUNKS)
+        _CHUNK_CACHE[key] = stage_chunks(sf_dir, "events", N_CHUNKS)
         atexit.register(shutil.rmtree, _CHUNK_CACHE[key], ignore_errors=True)
     return _CHUNK_CACHE[key]
 
@@ -427,7 +427,7 @@ def st_q11_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     later versions have already committed on top.
 
     Oracle soundness: chunks are event_id-ordered count-slices
-    (streaming/replay.stage_event_chunks), so the change set batch v
+    (streaming/replay.stage_chunks), so the change set batch v
     had seen is the exact rank prefix `rk·K ≤ n·(v+1)` of events —
     the oracle is rel_q18's one-shot MERGE SQL with `ch` restricted to
     that prefix (integer arithmetic only; no float boundary). This
@@ -493,7 +493,7 @@ def st_q12_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_spark.queries.simops import DIM, SEMDEDUP_TAU
     from distributed_mapreduce_spark.streaming.replay import (
         ephemeral_dir,
-        stage_embedding_chunks,
+        stage_chunks,
     )
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_semdedup_ingest,
@@ -502,7 +502,7 @@ def st_q12_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = ("emb", sf_dir, SEMDEDUP_CHUNKS)
     if key not in _CHUNK_CACHE:
-        _CHUNK_CACHE[key] = stage_embedding_chunks(sf_dir, SEMDEDUP_CHUNKS)
+        _CHUNK_CACHE[key] = stage_chunks(sf_dir, "embeddings", SEMDEDUP_CHUNKS)
         _atexit.register(_shutil.rmtree, _CHUNK_CACHE[key], ignore_errors=True)
     chunks = _CHUNK_CACHE[key]
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -713,7 +713,7 @@ def st_q14_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_spark.queries.textops import NEAR_DUP_JACCARD
     from distributed_mapreduce_spark.streaming.replay import (
         ephemeral_dir,
-        stage_document_chunks,
+        stage_chunks,
     )
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_decontam_ingest,
@@ -722,8 +722,8 @@ def st_q14_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = ("docs", sf_dir, DECONTAM_CHUNKS)
     if key not in _CHUNK_CACHE:
-        _CHUNK_CACHE[key] = stage_document_chunks(
-            sf_dir, DECONTAM_CHUNKS, exclude_source=BENCH_SOURCE
+        _CHUNK_CACHE[key] = stage_chunks(
+            sf_dir, "documents", DECONTAM_CHUNKS, exclude_source=BENCH_SOURCE
         )
         atexit.register(shutil.rmtree, _CHUNK_CACHE[key], ignore_errors=True)
     chunks = _CHUNK_CACHE[key]
@@ -801,7 +801,7 @@ def st_q15_clean_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from distributed_mapreduce_spark.streaming.replay import (
         ephemeral_dir,
-        stage_document_chunks,
+        stage_chunks,
     )
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_clean_ingest,
@@ -810,8 +810,8 @@ def st_q15_clean_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = ("docs", sf_dir, DECONTAM_CHUNKS)
     if key not in _CHUNK_CACHE:
-        _CHUNK_CACHE[key] = stage_document_chunks(
-            sf_dir, DECONTAM_CHUNKS, exclude_source=BENCH_SOURCE
+        _CHUNK_CACHE[key] = stage_chunks(
+            sf_dir, "documents", DECONTAM_CHUNKS, exclude_source=BENCH_SOURCE
         )
         atexit.register(shutil.rmtree, _CHUNK_CACHE[key], ignore_errors=True)
     chunks = _CHUNK_CACHE[key]

@@ -1110,8 +1110,8 @@ def text_q13_dynamic_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the entropy pass (explode → keyed aggs) dominates;
     the threshold is a 1-row global aggregate (AQE broadcasts it back)
-    — at 100 TB swap exact percentile for approx_percentile
-    (operators/sketches.py), same query shape."""
+    — at 100 TB swap exact percentile for approx_percentile, same
+    query shape."""
     ent = unigram_entropy(widen(table(spark, sf_dir, "documents"))).select(
         F.col("id").alias("doc_id"), "entropy"
     )
@@ -1447,7 +1447,7 @@ def text_q17_per_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the entropy pass dominates (explode → keyed aggs);
     the rank is one per-stratum window (same sort serves rank, count,
     and the realized-threshold min) — at 100 TB swap the exact rank
-    for the KLL sketch (operators/sketches.py), same query shape."""
+    for an approx_percentile (KLL-style) cut point, same query shape."""
     from pyspark.sql import Window
 
     docs = widen(table(spark, sf_dir, "documents"))

@@ -1,7 +1,6 @@
 from distributed_mapreduce_spark.sources.catalog import (  # noqa: F401
     TABLES,
     load,
-    register_views,
     table,
     whole_documents,
     widen,

@@ -129,12 +129,6 @@ def load(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     return {n: table(spark, sf_dir, n) for n in (names or TABLES)}
 
 
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register fixture tables as temp views for the SQL API."""
-    for n, df in load(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)
-
-
 def whole_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole-file scan shape: (filename, contents).
 

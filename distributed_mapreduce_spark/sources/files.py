@@ -2,7 +2,8 @@
 
 The reference's only IO surfaces (SURVEY.md §1.2) are:
 - whole text files in, one map task per file
-  (/root/reference/src/mr/worker.go:91-102) — `read_whole_files`;
+  (/root/reference/src/mr/worker.go:91-102) — catalog.whole_documents
+  serves that (filename, contents) contract from the documents table;
 - JSON-lines KeyValue intermediates `mr-<map>-<reduce>`
   (/root/reference/src/mr/worker.go:123-131) — `write_jsonl_kv` /
   `read_jsonl_kv` for when a pipeline wants that materialization
@@ -10,13 +11,11 @@ The reference's only IO surfaces (SURVEY.md §1.2) are:
 - `"key value"` text output `mr-out-<r>`
   (/root/reference/src/mr/worker.go:217-218) — catalog.write_kv_text.
 
-Plus line-oriented text and CSV, the formats any Spark deployment
-feeds on.
+Plus generic JSON-lines and the Hive-layout partitioned parquet sink
+with its in-place small-file maintenance.
 
-Scale notes: `wholetext` makes one row (and so one task) per file —
-correct for the reference's per-file map contract, but at 100 TB you
-want line-rows (`read_text_lines`) so `maxPartitionBytes` splits the
-scan; JSON-lines reads are schema-provided (no inference job).
+Scale notes: JSON-lines reads are schema-provided (no inference job)
+and line-oriented, so `maxPartitionBytes` splits the scan.
 """
 
 from __future__ import annotations
@@ -25,23 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 KV_SCHEMA = "Key string, Value string"
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Line-rows with their source file: (filename, line). The
-    scalable text scan — input splitting is byte-range, not per-file."""
-    return spark.read.text(path).select(
-        F.input_file_name().alias("filename"), F.col("value").alias("line")
-    )
-
-
-def read_whole_files(spark: SparkSession, path: str) -> DataFrame:
-    """Whole-file rows (filename, contents) — the exact Map-UDF input
-    contract of the reference (key = file name, value = entire body;
-    /root/reference/src/mr/worker.go:25)."""
-    return spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("filename"), F.col("value").alias("contents")
-    )
 
 
 def write_jsonl_kv(df: DataFrame, path: str, key: str = "key", value: str = "value") -> None:
@@ -75,28 +57,6 @@ def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     a full extra pass over the data at scale), byte-range input
     splitting exactly like a text scan."""
     return spark.read.schema(schema).json(path)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", header).csv(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema: str, header: bool = True) -> DataFrame:
-    """Schema-provided CSV read (inference is a full extra pass at scale)."""
-    return spark.read.schema(schema).option("header", header).csv(path)
-
-
-def write_orc(df: DataFrame, path: str) -> None:
-    """Columnar ORC sink (zlib-compressed, built-in): the
-    parquet-alternative lake format — same committer atomicity, same
-    predicate-pushdown/column-pruning story on read."""
-    df.write.mode("overwrite").orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan; filters and projected columns push into the reader
-    exactly as with parquet (assert via PushedFilters in .explain)."""
-    return spark.read.orc(path)
 
 
 def write_partitioned(
@@ -150,38 +110,6 @@ def write_partitioned(
     writer.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Read a Hive-layout partitioned dataset back; partition columns
-    are reconstructed from directory names and filters on them become
-    planning-time PartitionFilters (assert via .explain — pruned
-    partitions are never listed, opened, or scanned)."""
-    return spark.read.parquet(path)
-
-
-def compact_dataset(
-    spark: SparkSession, path: str, out_path: str, target_file_bytes: int = 128 << 20
-) -> int:
-    """Small-file compaction: rewrite a parquet dataset into
-    ⌈total_bytes / target⌉ files — the maintenance job every
-    long-lived 100 TB dataset needs (streaming sinks and incremental
-    ingests accrete small files; scan task count and file-listing cost
-    grow with file count, not data size). Returns the file count
-    written. Partition-preserving compaction of a Hive-layout dataset
-    is this per partition directory; this helper is the flat-dataset
-    core. Sizing reads the FILESYSTEM footprint (compressed bytes),
-    the quantity the target is denominated in."""
-    import pathlib
-
-    total = sum(
-        p.stat().st_size for p in pathlib.Path(path).rglob("*.parquet")
-    )
-    n_files = max(1, -(-total // target_file_bytes))
-    spark.read.parquet(path).repartition(n_files).write.mode("overwrite").parquet(
-        out_path
-    )
-    return n_files
-
-
 def compact_partitioned(
     spark: SparkSession,
     path: str,
@@ -218,7 +146,7 @@ def compact_partitioned(
     import pathlib
 
     if not partition_cols:
-        raise ValueError("partition_cols must be non-empty; use compact_dataset")
+        raise ValueError("partition_cols must be non-empty")
     base = pathlib.Path(path)
     # group leaf files by partition directory (relative to base)
     by_dir: dict[str, list] = {}
@@ -232,8 +160,7 @@ def compact_partitioned(
             # is corrupt for dynamic partition overwrite (ADVICE r7).
             raise ValueError(
                 f"compact_partitioned: {p} sits at the dataset root — "
-                f"{path} is not a pure partitioned layout; use "
-                "compact_dataset for flat datasets"
+                f"{path} is not a pure partitioned layout"
             )
         by_dir.setdefault(str(p.parent.relative_to(base)), []).append(p)
     plans: dict[str, int] = {}
@@ -254,9 +181,10 @@ def compact_partitioned(
     # (lazy execution would race file deletes), and staging to disk —
     # unlike a localCheckpoint — bounds nothing by executor memory.
     # The 2× write of AFFECTED data only is the price of in-place
-    # maintenance; the fresh-store swap (operators/incremental.py's
-    # compactors) is the alternative when a manifest protocol needs
-    # crash-exactness beyond the committer's per-partition atomicity.
+    # maintenance; the fresh-store swap (the ingest stores' compact_*
+    # folds in streaming/sinks.py) is the alternative when a manifest
+    # protocol needs crash-exactness beyond the committer's
+    # per-partition atomicity.
     import shutil
     import tempfile
     from collections import defaultdict

@@ -9,8 +9,8 @@ Iceberg sort-order z-curve) interleaves the bits of per-column rank
 buckets into a single space-filling-curve key and range-partitions the
 write on that key, so every file covers a small HYPER-RECTANGLE of the
 value space: a range predicate on ANY of the z-columns — or a
-conjunction across them — skips most files (`manifest.read_pruned` /
-`read_pruned_multi`).
+conjunction across them — skips most files
+(`manifest.read_pruned_multi`).
 
 Pipeline shape at 100 TB (all distributed, no driver data path):
 1. one `approxQuantile` sampling job per layout computes 2^bits − 1
@@ -26,7 +26,7 @@ Pipeline shape at 100 TB (all distributed, no driver data path):
 4. `repartitionByRange(n_files, z)` + sort-within-partitions on z —
    the only shuffle in the job, and exactly the shuffle a compaction
    rewrite pays anyway (this op IS a compaction policy: run it where
-   `compact_dataset` would run);
+   a small-file compaction would run);
 5. zone manifest from the parquet footers of the files just written.
 
 Rank-bucketing (not raw values) is what makes the curve robust: the
@@ -52,7 +52,7 @@ row lands in so readers touch few files".
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.sources import manifest as zone_manifest
@@ -197,7 +197,7 @@ def write_zordered(
 
     The explicit `n_files` on repartitionByRange is load-bearing: it
     is the file-count ↔ hyper-rectangle-granularity knob (size it as
-    total_bytes / target_file_bytes, exactly like compact_dataset),
+    total_bytes / target_file_bytes, as any compaction does),
     and an unpinned range partition count would let AQE coalesce the
     carefully-spread ranges back together at small volume.
     """

@@ -140,51 +140,23 @@ def write_manifest(dataset_path: str, cols: list[str]) -> dict:
     return manifest
 
 
-def read_pruned(
-    spark: SparkSession, dataset_path: str, col: str, lo, hi
-) -> tuple[DataFrame, int, int]:
-    """Range-read `col BETWEEN lo AND hi` skipping files whose zone
-    [min, max] cannot intersect. Returns (df, files_read, files_total);
-    the residual filter is still applied (zones are conservative).
-    A file with no recorded zone for `col` is always read (soundness
-    over skipping). Reads pass option("basePath") so Hive partition
-    columns survive a pruned file-list read with the same schema the
-    empty-selection (base-dir) branch produces."""
-    from pyspark.sql import functions as F
-
-    base = pathlib.Path(dataset_path)
-    manifest = json.loads((base / MANIFEST_NAME).read_text())
-    keep = []
-    for rel, stats in manifest.items():
-        z = stats.get(col)
-        if z is not None:
-            z = [_decode(z[0]), _decode(z[1])]
-        if z is None or not (z[1] < lo or z[0] > hi):
-            keep.append(str(base / rel))
-    total = len(manifest)
-    if not keep:
-        # degenerate: empty selection — read nothing but preserve schema
-        df = spark.read.parquet(str(base)).where(F.lit(False))
-        return df.where(F.col(col).between(lo, hi)), 0, total
-    df = (
-        spark.read.option("basePath", str(base))
-        .parquet(*keep)
-        .where(F.col(col).between(lo, hi))
-    )
-    return df, len(keep), total
-
-
 def read_pruned_multi(
     spark: SparkSession, dataset_path: str, preds: dict[str, tuple]
 ) -> tuple[DataFrame, int, int]:
     """Conjunctive zone pruning: `AND` of `col BETWEEN lo AND hi` over
-    several columns; a file is skipped if ANY predicate's range misses
-    its zone (soundness per column as in read_pruned, so the
-    conjunction is sound too). This is the reader that makes a
-    Z-ORDERED layout (sources/layout.write_zordered) pay off: each
-    file covers a hyper-rectangle, so a multi-column predicate skips
-    multiplicatively more files than any single column alone. Missing
-    zones always read; residual filters always applied."""
+    one or more columns; a file is skipped if ANY predicate's range
+    cannot intersect its zone [min, max] (each column's skip is sound,
+    so the conjunction is sound too). Returns (df, files_read,
+    files_total). This is the reader that makes a Z-ORDERED layout
+    (sources/layout.write_zordered) pay off: each file covers a
+    hyper-rectangle, so a multi-column predicate skips multiplicatively
+    more files than any single column alone.
+
+    A file with no recorded zone for a column is always read
+    (soundness over skipping), and the residual filter is always
+    applied (zones are conservative). Reads pass option("basePath") so
+    Hive partition columns survive a pruned file-list read with the
+    same schema the empty-selection (base-dir) branch produces."""
     from pyspark.sql import functions as F
 
     if not preds:

@@ -15,9 +15,8 @@ pieces that already existed separately:
   exactly-once protocol: per-batch version dirs, touched-partition
   manifests written LAST, torn writes invisible);
 - point/multi-get serve from the maintained snapshot reading ONLY the
-  probed keys' shard directories (the kv_get_point/kv_multi_get
-  contract, VERDICT r15 #2), with `as_of` time travel on the version
-  chain = the kvraft snapshot concept
+  probed keys' shard directories (VERDICT r15 #2), with `as_of` time
+  travel on the version chain = the kvraft snapshot concept
   (/root/reference/src/kvraft/config.go:54: state at a bounded raft
   index).
 

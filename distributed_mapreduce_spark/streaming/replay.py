@@ -2,8 +2,8 @@
 source ([EXT] — the reference has no stream surface, SURVEY.md §2.4).
 
 The fixture is one parquet file; a stream needs an unbounded-looking
-source. `stage_event_chunks` splits the table into K seq-ordered chunk
-files and `event_stream` reads them back with the file source at one
+source. `stage_chunks` splits a table into K key-ordered chunk files
+and `event_stream` reads the events chunks back with the file source at one
 file per micro-batch (`maxFilesPerTrigger=1` + `Trigger.AvailableNow`),
 giving a deterministic K-batch replay that terminates — the standard
 fixture-replay pattern for Structured Streaming tests.
@@ -72,75 +72,47 @@ def ephemeral_dir(prefix: str, need_bytes: int = 0) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
-def stage_event_chunks(sf_dir: str, n_chunks: int = 4, workdir: str | None = None) -> str:
-    """Split the events fixture into `n_chunks` seq-ordered parquet
-    files with strictly increasing mtimes (the file source replays in
-    mtime order). Returns the chunk directory; caller owns cleanup.
-
-    ts is cast ns→µs at staging (Spark has no ns timestamp; this is the
-    same truncation sources/catalog.py applies on the batch path).
-    """
-    src = f"{sf_dir}/events.parquet"
-    # Staged chunks ≈ source size; ask for 2× to cover re-encoding slack.
-    workdir = workdir or ephemeral_dir("dmr_stream_", need_bytes=2 * os.path.getsize(src))
-    tbl = pq.read_table(src).sort_by("event_id")
-    i = tbl.schema.get_field_index("ts")
-    us = pa.compute.floor_temporal(tbl.column("ts"), unit="microsecond").cast(
-        pa.timestamp("us")
-    )
-    tbl = tbl.set_column(i, "ts", us)
-    n = tbl.num_rows
-    base = time.time()
-    for c in range(n_chunks):
-        lo, hi = c * n // n_chunks, (c + 1) * n // n_chunks
-        path = os.path.join(workdir, f"chunk_{c:04d}.parquet")
-        pq.write_table(tbl.slice(lo, hi - lo), path)
-        os.utime(path, (base + c, base + c))
-    return workdir
+# table -> (sort key, projected columns; None = all). Each staged
+# table replays in key order.
+CHUNK_TABLES = {
+    "events": ("event_id", None),
+    "embeddings": ("vec_id", ["vec_id", "embedding"]),
+    "documents": ("doc_id", None),
+}
 
 
-def stage_embedding_chunks(
-    sf_dir: str, n_chunks: int = 3, workdir: str | None = None
-) -> str:
-    """Split the embeddings fixture into `n_chunks` vec_id-ordered
-    parquet files with strictly increasing mtimes — the vector-feed
-    twin of stage_event_chunks, staged for the streaming SemDeDup /
-    ANN ingest sinks. Returns the chunk directory; caller owns
-    cleanup."""
-    src = f"{sf_dir}/embeddings.parquet"
-    workdir = workdir or ephemeral_dir(
-        "dmr_embstream_", need_bytes=2 * os.path.getsize(src)
-    )
-    tbl = pq.read_table(src, columns=["vec_id", "embedding"]).sort_by("vec_id")
-    n = tbl.num_rows
-    base = time.time()
-    for c in range(n_chunks):
-        lo, hi = c * n // n_chunks, (c + 1) * n // n_chunks
-        path = os.path.join(workdir, f"chunk_{c:04d}.parquet")
-        pq.write_table(tbl.slice(lo, hi - lo), path)
-        os.utime(path, (base + c, base + c))
-    return workdir
-
-
-def stage_document_chunks(
+def stage_chunks(
     sf_dir: str,
-    n_chunks: int = 3,
+    table: str,
+    n_chunks: int,
     workdir: str | None = None,
     exclude_source: str | None = None,
 ) -> str:
-    """Split the documents fixture into `n_chunks` doc_id-ordered
-    parquet files with strictly increasing mtimes — the crawl-feed twin
-    of stage_event_chunks, staged for the streaming decontamination
-    ingest sink. `exclude_source` drops one source before chunking
-    (the benchmark corpus is the static index side, not feed)."""
-    src = f"{sf_dir}/documents.parquet"
+    """Split a fixture table (a CHUNK_TABLES key) into `n_chunks`
+    key-ordered parquet files with strictly increasing mtimes (the
+    file source replays in mtime order). Returns the chunk directory;
+    caller owns cleanup.
+
+    `exclude_source` drops one documents source before chunking (the
+    benchmark corpus is the static index side of decontamination, not
+    feed). The events `ts` is cast ns→µs at staging (Spark has no ns
+    timestamp; this is the same truncation sources/catalog.py applies
+    on the batch path)."""
+    key, columns = CHUNK_TABLES[table]
+    src = f"{sf_dir}/{table}.parquet"
+    # Staged chunks ≈ source size; ask for 2× to cover re-encoding slack.
     workdir = workdir or ephemeral_dir(
-        "dmr_docstream_", need_bytes=2 * os.path.getsize(src)
+        f"dmr_{table}_stream_", need_bytes=2 * os.path.getsize(src)
     )
-    tbl = pq.read_table(src)
+    tbl = pq.read_table(src, columns=columns)
     if exclude_source is not None:
         tbl = tbl.filter(pa.compute.field("source") != exclude_source)
-    tbl = tbl.sort_by("doc_id")
+    tbl = tbl.sort_by(key)
+    if table == "events":
+        us = pa.compute.floor_temporal(tbl.column("ts"), unit="microsecond")
+        tbl = tbl.set_column(
+            tbl.schema.get_field_index("ts"), "ts", us.cast(pa.timestamp("us"))
+        )
     n = tbl.num_rows
     base = time.time()
     for c in range(n_chunks):
@@ -149,6 +121,12 @@ def stage_document_chunks(
         pq.write_table(tbl.slice(lo, hi - lo), path)
         os.utime(path, (base + c, base + c))
     return workdir
+
+
+def stage_event_chunks(sf_dir: str, n_chunks: int = 4, workdir: str | None = None) -> str:
+    """stage_chunks over the events fixture, under the name and
+    defaults perfbench/workloads.py stages its feed with."""
+    return stage_chunks(sf_dir, "events", n_chunks, workdir)
 
 
 def event_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:

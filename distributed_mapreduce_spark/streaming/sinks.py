@@ -1,25 +1,16 @@
 """Streaming sinks with exactly-once semantics.
 
-Two commit patterns a production pipeline uses:
-
-1. `parquet_stream_sink` — Spark's transactional file sink: committed
-   files are recorded in the checkpoint's sink log, so a restarted or
-   replayed query never duplicates output (the engine-level version of
-   the reference's temp-file+rename atomic commit, worker.go:184-198,
-   extended across restarts).
-
-2. Manifest-committed foreachBatch stores, for sinks without a
-   transaction log: each micro-batch writes its own `batch=<id>` or
-   `v=<id>` directory with overwrite — redelivery after a crash
-   rewrites the same directory instead of appending twice — and one
-   atomic manifest rename makes it visible (streaming/commitlog). The
-   CDC table store (`foreach_batch_cdc_merge_partitioned`) and the
-   dedup/ANN/SemDeDup/decontam/clean ingest stores all commit this way;
-   the five ingest sinks share one driver, `_ingest_sink`, which owns
-   the redelivery skip, the known-id gate, the manifest-last commit and
-   the per-batch release, and each sink passes only its own gates and
-   writes. `foreach_batch_rollup_partials` writes per-batch directories
-   the same way, without a manifest.
+Manifest-committed foreachBatch stores, for sinks without a transaction
+log: each micro-batch writes its own `batch=<id>` or `v=<id>` directory
+with overwrite — redelivery after a crash rewrites the same directory
+instead of appending twice — and one atomic manifest rename makes it
+visible (streaming/commitlog; the reference's temp-file+rename atomic
+commit, worker.go:184-198, extended across restarts). The CDC table
+store (`foreach_batch_cdc_merge_partitioned`) and the
+dedup/ANN/SemDeDup/decontam/clean ingest stores all commit this way;
+the five ingest sinks share one driver, `_ingest_sink`, which owns the
+redelivery skip, the known-id gate, the manifest-last commit and the
+per-batch release, and each sink passes only its own gates and writes.
 
 Scale notes: every sink writes one file per shuffle partition per
 batch; at real scale compact small files downstream (the compact_*
@@ -43,60 +34,6 @@ from distributed_mapreduce_spark.streaming.commitlog import (
     partition_versions,
     read_json_tolerant,
 )
-
-
-def parquet_stream_sink(
-    result: DataFrame, path: str, checkpoint: str, available_now: bool = True
-) -> StreamingQuery:
-    """Append-mode transactional parquet sink; resuming from the same
-    checkpoint is exactly-once."""
-    w = (
-        result.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def foreach_batch_rollup_partials(
-    stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    keys: list[str],
-    measures,
-) -> StreamingQuery:
-    """Streaming incremental-rollup ingest, exactly-once without a
-    transactional store: each micro-batch writes its PARTIAL aggregate
-    (operators/incremental.rollup) into its own `batch=<id>` directory
-    with overwrite — redelivery after a crash rewrites the same bytes
-    instead of double-merging. Readers fold the partials with
-    operators/incremental.merge_partials; the fold is associative and
-    commutative per measure kind, so read-time results equal the
-    one-shot batch rollup bit-for-bit (decimal/HLL measures — ✓test).
-
-    This is the composition a 100 TB metrics pipeline runs
-    continuously: partial-agg in the stream (tiny per-batch output),
-    merge-at-read, compact partials into a base on a maintenance
-    cadence (the same merge, written back). Merging IN the stream
-    (refresh_rollup per batch) would be smaller at read time but is
-    not idempotent under foreachBatch redelivery — the partials
-    pattern is the exactly-once-safe default."""
-    from distributed_mapreduce_spark.operators.incremental import rollup
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        rollup(df, keys, measures).write.mode("overwrite").parquet(
-            f"{path}/batch={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def foreach_batch_cdc_merge_partitioned(
@@ -378,8 +315,8 @@ def foreach_batch_cdc_merge_partitioned(
         df = df.persist()
         try:
             # Partitions this batch touches: distinct buckets of the
-            # change keys — a bounded (≤ n_buckets) driver list, the
-            # operators/incremental.py affected-partition pattern.
+            # change keys — a bounded (≤ n_buckets) driver list, so
+            # only the affected partitions are rewritten.
             touched = [
                 r.p
                 for r in df.select(bucket(F.col(key)).alias("p")).distinct().collect()
@@ -1687,53 +1624,6 @@ def ann_ingest_topk(
     if codebooks is not None:
         return pq_adc_topk(cand, codebooks, query_vec, k, id_col)
     return topk_cosine_literal(cand, query_vec, k, id_col, vec_col)
-
-
-def ann_ingest_topk_batch(
-    spark,
-    store_path: str,
-    centroids: list,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    codebooks: list | None = None,
-    qid_col: str = "query_id",
-    qvec_col: str = "qvec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    as_of: int | None = None,
-) -> DataFrame:
-    """Batched serving probe of a foreach_batch_ann_ingest store
-    (VERDICT r8 #6 applied to the ingest layout): one manifest-gated,
-    partition-pruned scan of the UNION of all queries' probe cells
-    across the committed batch dirs, then the same broadcast-join +
-    per-query-window ranking as the write_ivf_store batch probe —
-    per-query results identical to an ann_ingest_topk loop (✓tested;
-    exact cosine, or ADC when `codebooks` is given). Cell pruning
-    survives the query join because the query side is broadcast — the
-    store rows are never exchanged (plan-asserted)."""
-    from distributed_mapreduce_spark.operators.similarity import (
-        _adc_probe_frame,
-        _batch_adc_topk,
-        _batch_exact_topk,
-        assign_probe_cells,
-    )
-
-    members = ann_ingest_members(spark, store_path, as_of=as_of)
-    if codebooks is not None:
-        probe_df, cells = _adc_probe_frame(
-            spark, queries, centroids, codebooks, nprobe, qid_col, qvec_col
-        )
-        cand = members.where(F.col("cell").isin(cells))
-        return _batch_adc_topk(
-            cand, probe_df, len(codebooks), len(codebooks[0]), k, qid_col, id_col
-        )
-    qcells = assign_probe_cells(queries, centroids, nprobe, qid_col, qvec_col)
-    cells = sorted(r["cell"] for r in qcells.select("cell").distinct().collect())
-    cand = members.where(F.col("cell").isin(cells))
-    return _batch_exact_topk(
-        cand, qcells, len(centroids[0][1]), k, qid_col, qvec_col, id_col, vec_col
-    )
 
 
 def compact_ann_ingest_store(spark, src_path: str, dst_path: str) -> int:

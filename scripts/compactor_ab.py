@@ -58,10 +58,7 @@ def main() -> int:
     from distributed_mapreduce_spark.sources import widen
     from distributed_mapreduce_spark.sources.catalog import table
     from distributed_mapreduce_spark.queries.pipeline_queries import BENCH_SOURCE
-    from distributed_mapreduce_spark.streaming.replay import (
-        stage_document_chunks,
-        stage_embedding_chunks,
-    )
+    from distributed_mapreduce_spark.streaming.replay import stage_chunks
     from distributed_mapreduce_spark.streaming import sinks as S
     from distributed_mapreduce_spark.streaming.commitlog import (
         ManifestStore,
@@ -72,8 +69,8 @@ def main() -> int:
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     (work / "docs").mkdir()
     (work / "embs").mkdir()
-    doc_chunks = stage_document_chunks(sf, 3, str(work / "docs"))
-    emb_chunks = stage_embedding_chunks(sf, 3, str(work / "embs"))
+    doc_chunks = stage_chunks(sf, "documents", 3, str(work / "docs"))
+    emb_chunks = stage_chunks(sf, "embeddings", 3, str(work / "embs"))
     doc_schema = (
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
     )
@@ -87,7 +84,7 @@ def main() -> int:
         )
 
     (work / "sem_embs").mkdir()
-    sem_dir = stage_embedding_chunks(sf, 3, str(work / "sem_embs"))
+    sem_dir = stage_chunks(sf, "embeddings", 3, str(work / "sem_embs"))
     # the file source reads oldest first: swap the mtimes so the
     # highest-id chunk is read first
     sem_chunks = sorted(pathlib.Path(sem_dir).glob("*.parquet"))

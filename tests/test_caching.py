@@ -148,11 +148,11 @@ def test_similarity_and_sampling_release(spark):
     )
     from distributed_mapreduce_spark.operators.similarity import (
         knn_join_ivf,
-        train_centroids_kmeans,
+        train_centroids,
     )
 
     emb = _emb(spark)
-    cents = train_centroids_kmeans(emb, num_cells=3)
+    cents = train_centroids(emb, num_cells=3)
     _assert_released(spark, knn_join_ivf(emb, cents, k=2, nprobe=2))
     _assert_released(spark, global_shuffle_index(_docs(spark), "doc_id"))
 

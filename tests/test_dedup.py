@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.operators.dedup import (
     doc_shingles,
-    exact_dedup,
     jaccard_pairs,
     lsh_candidate_pairs,
     minhash_near_dup_pairs,
@@ -22,18 +21,6 @@ from distributed_mapreduce_spark.sources import table
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return table(spark, sf_dir, "documents")
-
-
-def test_exact_dedup_keeps_min_id(spark):
-    rows = [
-        (1, "hello world  foo"),
-        (2, "Hello   world foo"),  # same after normalization
-        (3, "entirely different text"),
-        (4, "hello world foo"),  # same again
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = sorted(r.doc_id for r in exact_dedup(df).collect())
-    assert kept == [1, 3]
 
 
 def test_exact_jaccard_finds_planted_near_dups(spark, docs):

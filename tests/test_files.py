@@ -1,57 +1,14 @@
 """File source/sink round-trips (reference IO formats, SURVEY.md §1.2)
-and the reference's whole-file→wordcount workflow end-to-end."""
+and the partitioned parquet layout with its small-file maintenance."""
 
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.sources.files import (
-    read_csv,
-    read_jsonl_kv,
-    read_text_lines,
-    read_whole_files,
-    write_csv,
-    write_jsonl_kv,
-)
+from distributed_mapreduce_spark.sources.files import read_jsonl_kv, write_jsonl_kv
 from distributed_mapreduce_spark.sources.catalog import write_kv_text
-
-
-def write_corpus(tmp_path):
-    d = tmp_path / "corpus"
-    d.mkdir()
-    (d / "pg-a.txt").write_text("the quick fox\nthe lazy dog\n")
-    (d / "pg-b.txt").write_text("quick quick fox\n")
-    return str(d)
-
-
-def test_whole_files_is_per_file(spark, tmp_path):
-    corpus = write_corpus(tmp_path)
-    rows = read_whole_files(spark, corpus).collect()
-    by_name = {os.path.basename(r["filename"]): r["contents"] for r in rows}
-    assert set(by_name) == {"pg-a.txt", "pg-b.txt"}
-    assert by_name["pg-a.txt"] == "the quick fox\nthe lazy dog\n"
-
-
-def test_text_lines_and_wordcount_parity(spark, tmp_path):
-    """Line-scan wordcount == whole-file wordcount — the reference's
-    pg-*.txt workflow on both scan shapes."""
-    corpus = write_corpus(tmp_path)
-
-    def wc(df, col):
-        return (
-            df.select(F.explode(F.split(F.lower(col), "[^a-z]+")).alias("w"))
-            .where(F.col("w") != "")
-            .groupBy("w")
-            .count()
-        )
-
-    lines = wc(read_text_lines(spark, corpus), F.col("line")).collect()
-    whole = wc(read_whole_files(spark, corpus), F.col("contents")).collect()
-    assert {(r["w"], r["count"]) for r in lines} == {(r["w"], r["count"]) for r in whole}
-    assert dict((r["w"], r["count"]) for r in lines)["quick"] == 3
 
 
 def test_jsonl_kv_roundtrip_matches_reference_format(spark, tmp_path):
@@ -80,32 +37,6 @@ def test_kv_text_matches_reference_format(spark, tmp_path):
             lines |= {line for line in p.read_text().splitlines() if line}
     # "<key> <value>" lines (/root/reference/src/mr/worker.go:217-218)
     assert lines == {"a 9", "b 10"}
-
-
-def test_csv_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([(1, "x"), (2, "y")], "id int, name string")
-    out = str(tmp_path / "csv")
-    write_csv(df, out)
-    back = read_csv(spark, out, "id int, name string")
-    assert sorted(map(tuple, back.collect())) == [(1, "x"), (2, "y")]
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    """ORC sink/source roundtrip preserves rows + schema, and a filter
-    on the read side reaches the ORC scan (PushedFilters)."""
-    from distributed_mapreduce_spark.sources import table
-    from distributed_mapreduce_spark.sources.files import read_orc, write_orc
-
-    docs = table(spark, sf_dir, "documents")
-    path = str(tmp_path / "docs_orc")
-    write_orc(docs, path)
-    back = read_orc(spark, path)
-    assert back.schema == docs.schema
-    assert back.count() == docs.count()
-    filtered = back.where("doc_id = 7").select("doc_id", "lang")
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "doc_id" in plan
-    assert filtered.count() == 1
 
 
 def test_events_ts_normalizes_to_session_timestamp(spark, sf_dir, tmp_path):
@@ -152,17 +83,14 @@ def test_partitioned_write_prunes_and_roundtrips(spark, tmp_path):
     names, and a filter on the partition column prunes at PLANNING
     time — the pruned partitions' files are never even listed as scan
     inputs (the property that makes a 100 TB dataset readable)."""
-    from distributed_mapreduce_spark.sources.files import (
-        read_partitioned,
-        write_partitioned,
-    )
+    from distributed_mapreduce_spark.sources.files import write_partitioned
 
     rows = [(i, ["en", "de", "fr"][i % 3], f"doc {i}") for i in range(60)]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
     path = str(tmp_path / "part_ds")
     write_partitioned(df, path, ["lang"])
 
-    back = read_partitioned(spark, path)
+    back = spark.read.parquet(path)
     assert sorted((r.doc_id, r.lang, r.text) for r in back.collect()) == sorted(rows)
 
     filtered = back.where(F.col("lang") == "en")
@@ -182,10 +110,7 @@ def test_partitioned_dynamic_overwrite_touches_only_written_partitions(spark, tm
     """partitionOverwriteMode=dynamic: rewriting one partition's data
     replaces that directory only — the idempotent daily-ingest
     pattern. Static overwrite would drop the other partitions."""
-    from distributed_mapreduce_spark.sources.files import (
-        read_partitioned,
-        write_partitioned,
-    )
+    from distributed_mapreduce_spark.sources.files import write_partitioned
 
     schema = "doc_id long, lang string, text string"
     full = spark.createDataFrame(
@@ -197,7 +122,7 @@ def test_partitioned_dynamic_overwrite_touches_only_written_partitions(spark, tm
     patch = spark.createDataFrame([(2, "de", "zwei NEU"), (4, "de", "vier")], schema)
     write_partitioned(patch, path, ["lang"], dynamic=True)
 
-    back = {(r.doc_id, r.lang): r.text for r in read_partitioned(spark, path).collect()}
+    back = {(r.doc_id, r.lang): r.text for r in spark.read.parquet(path).collect()}
     assert back == {
         (1, "en"): "one",          # untouched partition survives
         (3, "fr"): "trois",        # untouched partition survives
@@ -215,10 +140,7 @@ def test_partitioned_write_spread_key_and_guards(spark, tmp_path):
 
     import pytest as _pytest
 
-    from distributed_mapreduce_spark.sources.files import (
-        read_partitioned,
-        write_partitioned,
-    )
+    from distributed_mapreduce_spark.sources.files import write_partitioned
 
     schema = "doc_id long, lang string, text string"
     rows = [(i, "en", f"doc {i}") for i in range(40)]  # one hot partition
@@ -226,7 +148,7 @@ def test_partitioned_write_spread_key_and_guards(spark, tmp_path):
     path = str(tmp_path / "spread_ds")
     write_partitioned(df, path, ["lang"], files_per_partition=4)
 
-    back = read_partitioned(spark, path)
+    back = spark.read.parquet(path)
     assert sorted((r.doc_id, r.lang, r.text) for r in back.collect()) == sorted(rows)
     files = list((pathlib.Path(path) / "lang=en").glob("part-*.parquet"))
     assert len(files) > 1, "hot partition should split across writer files"
@@ -245,33 +167,10 @@ def test_partitioned_write_spread_key_and_guards(spark, tmp_path):
         write_partitioned(full, p2, ["lang"])
         only_fr = spark.createDataFrame([(3, "fr", "trois")], schema)
         write_partitioned(only_fr, p2, ["lang"])  # static: replaces all
-        left = [(r.doc_id, r.lang) for r in read_partitioned(spark, p2).collect()]
+        left = [(r.doc_id, r.lang) for r in spark.read.parquet(p2).collect()]
         assert left == [(3, "fr")]
     finally:
         spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-
-
-def test_compact_dataset_reduces_files_preserves_rows(spark, tmp_path):
-    """Compaction: a fragmented dataset (one file per input partition)
-    rewrites into the computed file count with identical rows."""
-    from distributed_mapreduce_spark.sources.files import compact_dataset
-
-    df = spark.createDataFrame(
-        [(i, f"row {i}") for i in range(1000)], "id long, s string"
-    ).repartition(37)
-    frag = str(tmp_path / "frag")
-    df.write.parquet(frag)
-    import pathlib
-
-    assert len(list(pathlib.Path(frag).rglob("*.parquet"))) == 37
-
-    out = str(tmp_path / "compact")
-    n = compact_dataset(spark, frag, out, target_file_bytes=1 << 30)
-    assert n == 1
-    written = list(pathlib.Path(out).rglob("*.parquet"))
-    assert len(written) == 1
-    back = spark.read.parquet(out)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_compact_partitioned_rewrites_only_fragmented_dirs(spark, tmp_path):

@@ -4,7 +4,6 @@ fold-order tests replace porcupine)."""
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -283,167 +282,6 @@ def test_shardmaster_join_leave_move_query():
     # Query(num) returns historical configs; Query(-1) the latest.
     assert sm.query(0)["shards"] == [0] * NSHARDS
     assert sm.query(-1) == sm.configs[-1]
-
-
-def test_compaction_preserves_fold(spark):
-    """Log compaction (kvraft snapshot analog): folding the compacted
-    log equals folding the full log at every interesting cut point —
-    before any op, mid-append-run, on a put boundary, after the end —
-    and the compacted log is |state| + |tail| rows. Includes a
-    duplicate (retried) op to confirm dedup survives compaction."""
-    from distributed_mapreduce_spark.operators.kv import compact_kv_log
-
-    ops = [
-        ("a", 1, "put", "x"),
-        ("a", 2, "append", "1"),
-        ("a", 3, "append", "2"),
-        ("a", 3, "append", "2"),  # retried delivery, same seq
-        ("b", 4, "append", "B"),
-        ("a", 5, "put", "y"),
-        ("b", 6, "get", ""),
-        ("a", 7, "append", "3"),
-        ("b", 8, "put", "Z"),
-        ("b", 9, "append", "!"),
-    ]
-    df = spark.createDataFrame(ops, OPS_SCHEMA)
-    want = python_fold(ops)
-    assert {r.key: r.value for r in fold_kv_log(df).collect()} == want
-    for cut in [0, 2, 3, 5, 8, 9, 100]:
-        compacted = compact_kv_log(df, cut)
-        got = {r.key: r.value for r in fold_kv_log(compacted).collect()}
-        assert got == want, f"cut={cut}: {got} != {want}"
-        n_state = len(python_fold([o for o in ops if o[1] <= cut]))
-        n_tail = len({(k, s) for k, s, op, v in ops if s > cut})
-        # tail keeps gets and duplicates collapse only in the fold, so
-        # row count is n_state + raw-tail rows (dup rows included once
-        # per distinct physical row here — ops list has one dup pair)
-        raw_tail = sum(1 for o in ops if o[1] > cut)
-        assert compacted.count() == n_state + raw_tail
-
-
-@given(
-    ops=st.lists(
-        st.tuples(
-            st.sampled_from(["k1", "k2", "k3"]),
-            st.integers(min_value=1, max_value=40),
-        ),
-        max_size=25,
-    ),
-    cut=st.integers(min_value=0, max_value=41),
-)
-@settings(max_examples=15, deadline=None)
-@pytest.mark.full_tier
-def test_compaction_preserves_fold_property(spark, ops, cut):
-    """Property form: arbitrary op soup + arbitrary cut. The retry
-    model requires a redelivered (key, seq) to be byte-identical (same
-    op, same value) — the reference resends the SAME request — so op
-    and value derive deterministically from (key, seq); duplicate
-    tuples in the generated list are then exactly redeliveries."""
-    from distributed_mapreduce_spark.operators.kv import compact_kv_log
-
-    kinds = ["put", "append", "get"]
-    ops = [(k, s, kinds[(s + ord(k[1])) % 3], f"v{k}{s}") for k, s in ops]
-    df = spark.createDataFrame(ops, OPS_SCHEMA) if ops else None
-    if df is None:
-        return
-    want = {r.key: r.value for r in fold_kv_log(df).collect()}
-    got = {
-        r.key: r.value
-        for r in fold_kv_log(compact_kv_log(df, cut)).collect()
-    }
-    assert got == want
-
-
-def test_kv_point_get_prunes_to_one_shard(spark, tmp_path):
-    """VERDICT r14 #6: the materialized serving layout
-    (write_kv_state, partitioned on key2shard) makes K1 a true point
-    lookup — the probe plan's PartitionFilters carry the folded shard
-    equality (ONE directory listed, not the table), values match the
-    full-scan kv_get on present keys and read "" on absent ones."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.operators.kv import (
-        NSHARDS,
-        fold_kv_log,
-        key2shard,
-        kv_get,
-        kv_get_point,
-        write_kv_state,
-    )
-
-    ops = [
-        (k, s, op, f"v{k}.{s}")
-        for k in [str(i) for i in range(25)]
-        for s, op in [(1, "put"), (2, "append"), (3, "append")]
-    ]
-    log = spark.createDataFrame(ops, "key string, seq long, op string, value string")
-    state = fold_kv_log(log)
-    path = str(tmp_path / "kvstate")
-    write_kv_state(state, path)
-
-    # every shard directory exists (25 keys cover all 10 shards)
-    import pathlib
-
-    dirs = {p.name for p in pathlib.Path(path).glob("shard=*")}
-    assert len(dirs) == NSHARDS
-
-    for key in ["7", "19", "no-such-key"]:
-        got = kv_get_point(spark, path, key)
-        want = kv_get(state, spark, key)
-        assert got.collect() == want.collect()
-        # plan: shard equality folded into PartitionFilters
-        fmt = got._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        pf = [l for l in fmt.splitlines() if "PartitionFilters" in l]
-        assert pf, fmt
-        shard = (ord(key[0]) % NSHARDS) if key else 0
-        assert any(f"shard#" in l and f"= {shard})" in l for l in pf), pf
-
-
-def test_kv_multi_get_prunes_and_pads(spark, tmp_path):
-    """Batched point lookup: one row per requested key (absent ⇒ ""),
-    the literal shard IN-list folded into the scan's PartitionFilters
-    — ≤len(keys) shard directories listed, never the table."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.operators.kv import (
-        NSHARDS,
-        fold_kv_log,
-        kv_get,
-        kv_multi_get,
-        write_kv_state,
-    )
-
-    ops = [
-        (k, s, op, f"v{k}.{s}")
-        for k in [str(i) for i in range(25)]
-        for s, op in [(1, "put"), (2, "append")]
-    ]
-    log = spark.createDataFrame(ops, "key string, seq long, op string, value string")
-    state = fold_kv_log(log)
-    path = str(tmp_path / "kvstate")
-    write_kv_state(state, path)
-
-    keys = ["3", "13", "7", "absent-key"]
-    got = {r.key: r.value for r in kv_multi_get(spark, path, keys).collect()}
-    assert set(got) == set(keys)
-    for k in keys:
-        assert got[k] == kv_get(state, spark, k).collect()[0].value
-    assert got["absent-key"] == ""
-
-    df = kv_multi_get(spark, path, keys)
-    fmt = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    pf = [l for l in fmt.splitlines() if "PartitionFilters" in l]
-    assert pf and any("shard" in l and " IN " in l for l in pf), pf
-
-    with pytest.raises(ValueError, match="empty key list"):
-        kv_multi_get(spark, path, [])
 
 
 @given(

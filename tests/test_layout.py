@@ -17,10 +17,7 @@ from distributed_mapreduce_spark.sources.layout import (
     write_zordered,
     zorder_boundaries,
 )
-from distributed_mapreduce_spark.sources.manifest import (
-    read_pruned,
-    read_pruned_multi,
-)
+from distributed_mapreduce_spark.sources.manifest import read_pruned_multi
 
 N_FILES = 16
 
@@ -66,7 +63,7 @@ def test_zorder_write_preserves_rows_and_prunes_both_axes(spark, tmp_path):
     assert _ids(back) == _ids(df), "layout rewrite must be row-preserving"
 
     for col in ("x", "y"):
-        pruned, read, total = read_pruned(spark, path, col, 100, 199)
+        pruned, read, total = read_pruned_multi(spark, path, {col: (100, 199)})
         full = back.where(F.col(col).between(100, 199))
         assert _ids(pruned) == _ids(full)
         assert total == N_FILES
@@ -89,9 +86,9 @@ def test_linear_sort_cannot_prune_the_other_axis(spark, tmp_path):
 
     write_manifest(path, ["x", "y"])
 
-    _, read_x, total = read_pruned(spark, path, "x", 100, 199)
+    _, read_x, total = read_pruned_multi(spark, path, {"x": (100, 199)})
     assert read_x <= 3, "linear layout prunes its own sort column tightly"
-    _, read_y, _ = read_pruned(spark, path, "y", 100, 199)
+    _, read_y, _ = read_pruned_multi(spark, path, {"y": (100, 199)})
     assert read_y >= total - 1, "y spans every x-sorted file"
 
 
@@ -107,8 +104,8 @@ def test_conjunctive_pruning_is_multiplicative(spark, tmp_path):
     full = back.where(F.col("x").between(100, 199) & F.col("y").between(100, 199))
     assert _ids(pruned) == _ids(full)
 
-    _, read_x, _ = read_pruned(spark, path, "x", 100, 199)
-    _, read_y, _ = read_pruned(spark, path, "y", 100, 199)
+    _, read_x, _ = read_pruned_multi(spark, path, {"x": (100, 199)})
+    _, read_y, _ = read_pruned_multi(spark, path, {"y": (100, 199)})
     assert read_both <= min(read_x, read_y), "conjunction can only tighten"
     # 10% x 10% of the plane: a z-layout should confine that to a
     # small minority of the 16 hyper-rectangles
@@ -154,7 +151,7 @@ def test_skewed_column_buckets_stay_balanced(spark, tmp_path):
 
     path = str(tmp_path / "skew")
     write_zordered(df, path, ["v", "u"], bits=5, n_files=8)
-    pruned, read, total = read_pruned(spark, path, "v", 0, 10)
+    pruned, read, total = read_pruned_multi(spark, path, {"v": (0, 10)})
     full = spark.read.parquet(path).where(F.col("v").between(0, 10))
     assert _ids(pruned) == _ids(full)
 
@@ -174,12 +171,12 @@ def test_string_zcol_clusters_and_prunes(spark, tmp_path):
     back = spark.read.parquet(path)
     assert _ids(back) == _ids(df)
 
-    pruned, read_s, total = read_pruned(spark, path, "s", "k0100", "k0199")
+    pruned, read_s, total = read_pruned_multi(spark, path, {"s": ("k0100", "k0199")})
     full = back.where(F.col("s").between("k0100", "k0199"))
     assert _ids(pruned) == _ids(full)
     assert read_s <= (3 * total) // 4, f"string axis should prune, read {read_s}/{total}"
 
-    pruned, read_y, _ = read_pruned(spark, path, "y", 100, 199)
+    pruned, read_y, _ = read_pruned_multi(spark, path, {"y": (100, 199)})
     assert _ids(pruned) == _ids(back.where(F.col("y").between(100, 199)))
     assert read_y <= (3 * total) // 4, f"numeric axis should prune, read {read_y}/{total}"
 

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.sources import table
 from distributed_mapreduce_spark.sources.manifest import (
-    read_pruned,
+    read_pruned_multi,
     write_manifest,
 )
 
@@ -26,7 +26,7 @@ def test_pruned_read_equals_full_on_clustered_layout(spark, sf_dir, tmp_path):
     write_manifest(path, ["value"])
 
     lo, hi = 3.0, 6.0
-    pruned, read, total = read_pruned(spark, path, "value", lo, hi)
+    pruned, read, total = read_pruned_multi(spark, path, {"value": (lo, hi)})
     full = spark.read.parquet(path).where(F.col("value").between(lo, hi))
     assert _rows(pruned) == _rows(full)
     assert total == 8
@@ -39,7 +39,7 @@ def test_pruned_read_sound_on_uncorrelated_layout(spark, sf_dir, tmp_path):
     ev.repartition(8, "event_id").write.parquet(path)  # value spans every file
     write_manifest(path, ["value"])
 
-    pruned, read, total = read_pruned(spark, path, "value", 3.0, 6.0)
+    pruned, read, total = read_pruned_multi(spark, path, {"value": (3.0, 6.0)})
     full = spark.read.parquet(path).where(F.col("value").between(3.0, 6.0))
     assert _rows(pruned) == _rows(full)
     assert read == total, "no correlation -> nothing skippable"
@@ -64,7 +64,7 @@ def test_typed_stats_prune_date_column(spark, sf_dir, tmp_path):
 
     days = sorted(r.day for r in ev.select("day").distinct().collect())
     lo, hi = days[0], days[min(1, len(days) - 1)]
-    pruned, read, total = read_pruned(spark, path, "day", lo, hi)
+    pruned, read, total = read_pruned_multi(spark, path, {"day": (lo, hi)})
     full = spark.read.parquet(path).where(F.col("day").between(lo, hi))
     assert sorted(r.event_id for r in pruned.collect()) == sorted(
         r.event_id for r in full.collect()
@@ -98,7 +98,7 @@ def test_pruned_read_keeps_partition_columns(spark, sf_dir, tmp_path):
     )
     write_manifest(path, ["value"])
 
-    pruned, read, total = read_pruned(spark, path, "value", 3.0, 6.0)
+    pruned, read, total = read_pruned_multi(spark, path, {"value": (3.0, 6.0)})
     full = spark.read.parquet(path).where(F.col("value").between(3.0, 6.0))
     assert "event_type" in pruned.columns
     assert sorted(pruned.columns) == sorted(full.columns)
@@ -106,7 +106,7 @@ def test_pruned_read_keeps_partition_columns(spark, sf_dir, tmp_path):
         (r.event_id, r.event_type) for r in pruned.collect()
     ) == sorted((r.event_id, r.event_type) for r in full.collect())
 
-    empty, read0, _ = read_pruned(spark, path, "value", 1e9, 2e9)
+    empty, read0, _ = read_pruned_multi(spark, path, {"value": (1e9, 2e9)})
     assert read0 == 0
     assert sorted(empty.columns) == sorted(pruned.columns)
 
@@ -116,7 +116,7 @@ def test_pruned_read_empty_range(spark, sf_dir, tmp_path):
     path = str(tmp_path / "c2")
     ev.repartitionByRange(4, "value").write.parquet(path)
     write_manifest(path, ["value"])
-    pruned, read, total = read_pruned(spark, path, "value", 1e9, 2e9)
+    pruned, read, total = read_pruned_multi(spark, path, {"value": (1e9, 2e9)})
     assert pruned.count() == 0
     assert read == 0 and total == 4
 
@@ -148,7 +148,7 @@ def test_typed_stats_prune_timestamp_and_decimal(spark, sf_dir, tmp_path):
     z = next(s["ts"] for s in m.values() if "ts" in s)
     assert isinstance(z[0], datetime.datetime)
     lo, hi = z[0], z[1]  # one file's span: must skip the others
-    pruned, read, total = read_pruned(spark, p1, "ts", lo, hi)
+    pruned, read, total = read_pruned_multi(spark, p1, {"ts": (lo, hi)})
     full = spark.read.parquet(p1).where(F.col("ts").between(lo, hi))
     assert sorted(r.event_id for r in pruned.collect()) == sorted(
         r.event_id for r in full.collect()
@@ -164,7 +164,7 @@ def test_typed_stats_prune_timestamp_and_decimal(spark, sf_dir, tmp_path):
     m2 = write_manifest(p2, ["d"])
     assert all("d" not in s for s in m2.values())
     dlo, dhi = decimal.Decimal("3.0"), decimal.Decimal("6.0")
-    pruned2, read2, total2 = read_pruned(spark, p2, "d", dlo, dhi)
+    pruned2, read2, total2 = read_pruned_multi(spark, p2, {"d": (dlo, dhi)})
     full2 = spark.read.parquet(p2).where(F.col("d").between(dlo, dhi))
     assert sorted(r.event_id for r in pruned2.collect()) == sorted(
         r.event_id for r in full2.collect()

@@ -441,28 +441,6 @@ def test_ewma_closed_forms(spark):
     assert sgot["b"] == (2, EWMA_ALPHA * 1.0 + (1.0 - EWMA_ALPHA) * 0.0)
 
 
-def test_kfold_disjoint_exhaustive_deterministic(spark, sf_dir):
-    from distributed_mapreduce_spark.operators.sampling import kfold
-    from distributed_mapreduce_spark.sources import table
-
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()
-    folds = kfold(docs, "doc_id", 4)
-    val_sets = [set(r.doc_id for r in v.collect()) for _, v in folds]
-    # exhaustive + disjoint validation cover
-    assert sum(len(s) for s in val_sets) == n
-    assert len(set().union(*val_sets)) == n
-    for i, (tr, _) in enumerate(folds):
-        tr_set = set(r.doc_id for r in tr.collect())
-        assert tr_set == set().union(*val_sets) - val_sets[i]
-    # deterministic under re-shard
-    val2 = [
-        set(r.doc_id for r in v.collect())
-        for _, v in kfold(docs.repartition(7), "doc_id", 4)
-    ]
-    assert val2 == val_sets
-
-
 def test_ewma_crash_retry_matches_unkilled(spark, sf_dir):
     """Fault injection on the Arrow/applyInPandas path: kill every
     FIRST task attempt inside the per-group fold — Spark must rerun

@@ -1,4 +1,4 @@
-"""The SQL entry surface: registered fixture views + spark.sql must
+"""The SQL entry surface: fixture tables as temp views + spark.sql must
 produce the same results as the DataFrame API (the reference has no
 query language at all — SURVEY.md §2.4; here SQL is a free second
 front-end to the identical Catalyst plans)."""
@@ -7,13 +7,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.sources import register_views, table
+from distributed_mapreduce_spark.sources import table
 
 SF = "/root/testdata/sf0.01"
 
 
 def test_sql_equals_dataframe_agg(spark):
-    register_views(spark, SF, "lineitem")
+    table(spark, SF, "lineitem").createOrReplaceTempView("lineitem")
     got = spark.sql(
         """
         SELECT l_returnflag, count(*) AS n, round(sum(l_quantity), 2) AS qty
@@ -30,7 +30,8 @@ def test_sql_equals_dataframe_agg(spark):
 
 
 def test_sql_join_and_exists(spark):
-    register_views(spark, SF, "customer", "orders", "nation")
+    for name in ("customer", "orders", "nation"):
+        table(spark, SF, name).createOrReplaceTempView(name)
     got = spark.sql(
         """
         SELECT n_name, count(*) AS n_cust

@@ -1,5 +1,6 @@
-"""Exactly-once sink semantics: resuming a file-sink stream from its
-checkpoint must not duplicate rows; new data appends incrementally."""
+"""Exactly-once sink semantics of the manifest-committed stores:
+resuming a stream from its checkpoint must not duplicate rows; new
+data folds in incrementally."""
 
 from __future__ import annotations
 
@@ -8,9 +9,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import os
 import time
-
-from distributed_mapreduce_spark.streaming import event_stream
-from distributed_mapreduce_spark.streaming.sinks import parquet_stream_sink
 
 
 def chunk(path, ids, mtime):
@@ -26,214 +24,6 @@ def chunk(path, ids, mtime):
     )
     pq.write_table(tbl, path)
     os.utime(path, (mtime, mtime))
-
-
-def read_ids(spark, out):
-    return sorted(r["event_id"] for r in spark.read.parquet(out).collect())
-
-
-def test_file_sink_exactly_once_on_resume(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    base = time.time()
-    chunk(str(src / "c1.parquet"), [1, 2, 3], base)
-
-    def run():
-        q = parquet_stream_sink(event_stream(spark, str(src)), out, ckpt)
-        q.awaitTermination()
-
-    run()
-    assert read_ids(spark, out) == [1, 2, 3]
-
-    # resume with NO new data: nothing duplicated
-    run()
-    assert read_ids(spark, out) == [1, 2, 3]
-
-    # new chunk arrives: only the delta is appended
-    chunk(str(src / "c2.parquet"), [4, 5], base + 5)
-    run()
-    assert read_ids(spark, out) == [1, 2, 3, 4, 5]
-
-
-def test_streaming_rollup_partials_equal_batch_rollup(spark, tmp_path):
-    """Streaming incremental-rollup ingest: per-batch partials folded
-    at read time must equal the one-shot batch rollup bit-for-bit
-    (decimal measure), resume with no data changes nothing, a new
-    chunk folds in incrementally, and redelivering a batch's write is
-    byte-idempotent."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.operators.incremental import (
-        merge_partials,
-        rollup,
-    )
-    from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_rollup_partials,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    base = time.time()
-    chunk(str(src / "c1.parquet"), [1, 2, 3, 10, 11], base)
-
-    keys = ["user_id", "event_type"]
-    measures = {"n": ("count", None), "total": ("sum", "v")}
-
-    def prep(df):
-        return df.withColumn("v", F.col("value").cast("decimal(18,4)"))
-
-    def run():
-        q = foreach_batch_rollup_partials(
-            prep(event_stream(spark, str(src))), store, ckpt, keys, measures
-        )
-        q.awaitTermination()
-
-    def merged():
-        return {
-            (r.user_id, r.event_type): (r.n, r.total)
-            for r in merge_partials(
-                spark.read.parquet(store), keys, measures
-            ).collect()
-        }
-
-    def full():
-        return {
-            (r.user_id, r.event_type): (r.n, r.total)
-            for r in rollup(
-                prep(spark.read.parquet(str(src))), keys, measures
-            ).collect()
-        }
-
-    run()
-    assert merged() == full()
-
-    run()  # resume, no new data
-    assert merged() == full()
-
-    chunk(str(src / "c2.parquet"), [4, 5], base + 5)
-    run()  # new chunk arrives as its own batch partial
-    assert merged() == full()
-
-    # redelivery: rewriting an existing batch partial with the same
-    # data replaces, never duplicates
-    import pathlib
-
-    batches = sorted(
-        p.name for p in pathlib.Path(store).iterdir() if p.name.startswith("batch=")
-    )
-    assert len(batches) >= 2
-    first = spark.read.parquet(f"{store}/{batches[0]}")
-    redelivered = spark.createDataFrame(first.collect(), first.schema)
-    before = merged()
-    redelivered.write.mode("overwrite").parquet(f"{store}/{batches[0]}")
-    assert merged() == before
-
-
-def test_compact_partials_preserves_fold_and_redelivery_window(spark, tmp_path):
-    """compact_partials: fold all-but-the-newest-keep batch partials
-    into one base dir in a FRESH store. merge-at-read over the
-    compacted store equals the original bit-for-bit (decimal measure);
-    the kept directories are byte-verbatim copies, so a redelivery of
-    a still-in-window batch rewrites its own dir exactly as before
-    compaction (the double-count hazard of folding an
-    outside-the-window batch cannot arise)."""
-    import hashlib
-    import pathlib
-
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.operators.incremental import (
-        compact_partials,
-        merge_partials,
-    )
-    from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_rollup_partials,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    store = str(tmp_path / "store")
-    base = time.time()
-    # 4 chunks -> 4 batch partials: 2 folded + keep=2 kept
-    for i, ids in enumerate([[1, 2, 3], [10, 11], [4, 5], [2, 10]]):
-        chunk(str(src / f"c{i}.parquet"), ids, base + 5 * i)
-
-    keys = ["user_id", "event_type"]
-    measures = {"n": ("count", None), "total": ("sum", "v")}
-
-    def prep(df):
-        return df.withColumn("v", F.col("value").cast("decimal(18,4)"))
-
-    q = foreach_batch_rollup_partials(
-        prep(event_stream(spark, str(src))), store, str(tmp_path / "ckpt"), keys, measures
-    )
-    q.awaitTermination()
-    assert len(list(pathlib.Path(store).glob("batch=*"))) == 4
-
-    def merged(path):
-        return {
-            (r.user_id, r.event_type): (r.n, r.total)
-            for r in merge_partials(
-                spark.read.parquet(path), keys, measures
-            ).collect()
-        }
-
-    dst = str(tmp_path / "compacted")
-    folded = compact_partials(spark, store, dst, keys, measures, keep=2)
-    assert folded == [0, 1]
-    dirs = sorted(p.name for p in pathlib.Path(dst).glob("batch=*"))
-    assert dirs == ["batch=0", "batch=2", "batch=3"]
-    assert merged(dst) == merged(store)
-
-    # kept dirs are byte-verbatim (the redelivery window is intact)
-    def md5s(root, name):
-        return {
-            p.name: hashlib.md5(p.read_bytes()).hexdigest()
-            for p in (pathlib.Path(root) / name).glob("*.parquet")
-        }
-
-    for name in ("batch=2", "batch=3"):
-        assert md5s(dst, name) == md5s(store, name)
-
-    # the folded base carries the STORED schema, not sum's widened
-    # decimal — a heterogeneous store hard-fails at read whenever the
-    # narrow dir is inferred first (review-reproduced)
-    assert (
-        spark.read.parquet(f"{dst}/batch=0").schema
-        == spark.read.parquet(f"{dst}/batch=2").schema
-    )
-
-    # nothing to fold (<= keep batches): pure copy, no batch=<id> merge
-    dst2 = str(tmp_path / "compacted2")
-    assert compact_partials(spark, dst, dst2, keys, measures, keep=3) == []
-    assert merged(dst2) == merged(store)
-
-    # re-runnable after a mid-compaction crash: a partially-copied
-    # kept dir is replaced, never mixed
-    (pathlib.Path(dst2) / "batch=3").joinpath("junk.parquet").unlink(missing_ok=True)
-    assert compact_partials(spark, dst, dst2, keys, measures, keep=3) == []
-    assert merged(dst2) == merged(store)
-
-    # a fold whose sum genuinely overflows the stored decimal refuses
-    # instead of writing NULLs into the base
-    tiny = tmp_path / "tiny"
-    for b, vals in enumerate([[("a", "99.99")], [("a", "99.99")], [("a", "1.00")], [("a", "1.00")]]):
-        spark.createDataFrame(
-            vals, "k string, total string"
-        ).selectExpr("k", "CAST(total AS DECIMAL(4,2)) AS total").write.mode(
-            "overwrite"
-        ).parquet(str(tiny / f"batch={b}"))
-    import pytest
-
-    with pytest.raises(ValueError, match="overflow"):
-        compact_partials(
-            spark, str(tiny), str(tmp_path / "tiny_c"), ["k"],
-            {"total": ("sum", "total")}, keep=2,
-        )
 
 
 def test_streaming_cdc_merge_maintains_table(spark, tmp_path):
@@ -1209,116 +999,6 @@ def test_dedup_ingest_torn_append_replay(spark, tmp_path):
 
 
 @pytest.mark.full_tier
-def test_ann_ingest_batch_probe_equals_per_query_loop(spark, tmp_path):
-    """ann_ingest_topk_batch (VERDICT r8 #6 on the ingest layout): a
-    multi-query serving batch probed in one manifest-gated,
-    partition-pruned scan equals the single-query ann_ingest_topk
-    loop per query — exact-cosine AND ADC forms — and cell pruning
-    survives the broadcast query join (plan-asserted)."""
-    from distributed_mapreduce_spark import plans
-    from distributed_mapreduce_spark.operators.similarity import (
-        train_centroids,
-        train_pq_codebooks,
-    )
-    from distributed_mapreduce_spark.sources import table
-    from distributed_mapreduce_spark.streaming.sinks import (
-        ann_ingest_topk,
-        ann_ingest_topk_batch,
-        foreach_batch_ann_ingest,
-    )
-
-    emb = table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = train_centroids(emb, 16)
-    cbs = train_pq_codebooks(emb, 64)
-    rows = emb.collect()
-
-    src = tmp_path / "feed"
-    src.mkdir()
-    base = time.time()
-    half = len(rows) // 2
-    for i, chunk_rows in enumerate([rows[:half], rows[half:]]):
-        tbl = pa.table(
-            {
-                "vec_id": pa.array([r.vec_id for r in chunk_rows], pa.int64()),
-                "embedding": pa.array(
-                    [list(map(float, r.embedding)) for r in chunk_rows],
-                    pa.list_(pa.float32()),
-                ),
-            }
-        )
-        p = str(src / f"c{i}.parquet")
-        pq.write_table(tbl, p)
-        os.utime(p, (base + 5 * i, base + 5 * i))
-
-    def run(st, ckpt, codebooks=None):
-        q = foreach_batch_ann_ingest(
-            (
-                spark.readStream.schema("vec_id bigint, embedding array<float>")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src))
-            ),
-            st,
-            ckpt,
-            cents,
-            codebooks=codebooks,
-        )
-        q.awaitTermination()
-
-    qids = [7, 42, 99]
-    qvecs = {
-        int(r.vec_id): [float(x) for x in r.embedding]
-        for r in rows
-        if r.vec_id in qids
-    }
-    queries = spark.createDataFrame(
-        [(i, qvecs[i]) for i in qids], "query_id bigint, qvec array<float>"
-    )
-
-    store = str(tmp_path / "store")
-    run(store, str(tmp_path / "ckpt1"))
-    batch = ann_ingest_topk_batch(spark, store, cents, queries, 10, nprobe=4)
-    got = {}
-    for r in batch.collect():
-        got.setdefault(r.query_id, []).append((r.vec_id, r.cos_sim))
-    for qid in qids:
-        want = [
-            (r.vec_id, r.cos_sim)
-            for r in ann_ingest_topk(
-                spark, store, cents, qvecs[qid], 10, nprobe=4
-            ).collect()
-        ]
-        assert got[qid] == want, f"query {qid} diverged from the per-query loop"
-
-    fmt = plans.physical_plan(batch, "formatted")
-    pf = [l for l in fmt.splitlines() if "PartitionFilters" in l]
-    assert pf and "cell" in pf[0], fmt
-    assert "BroadcastHashJoin" in fmt and "SortMergeJoin" not in fmt, fmt
-
-    # ADC form over an IVFADC ingest store
-    store2 = str(tmp_path / "store2")
-    run(store2, str(tmp_path / "ckpt2"), codebooks=cbs)
-    batch2 = ann_ingest_topk_batch(
-        spark, store2, cents, queries, 10, nprobe=4, codebooks=cbs
-    )
-    got2 = {}
-    for r in batch2.collect():
-        got2.setdefault(r.query_id, []).append((r.vec_id, r.approx_dot))
-    for qid in qids:
-        want2 = [
-            (r.vec_id, r.approx_dot)
-            for r in ann_ingest_topk(
-                spark, store2, cents, qvecs[qid], 10, nprobe=4, codebooks=cbs
-            ).collect()
-        ]
-        assert got2[qid] == want2, f"ADC query {qid} diverged"
-    # ADC form too: cell pruning survives the broadcast LUT join
-    fmt2 = plans.physical_plan(batch2, "formatted")
-    pf2 = [l for l in fmt2.splitlines() if "PartitionFilters" in l]
-    assert pf2 and "cell" in pf2[0], fmt2
-    assert "BroadcastHashJoin" in fmt2 and "SortMergeJoin" not in fmt2, fmt2
-
-
-@pytest.mark.full_tier
 def test_knn_join_over_maintained_ann_ingest_store(spark, tmp_path):
     """The all-rows kNN join composed with the MAINTAINED index
     (VERDICT r11 #2's 100 TB shape end-to-end): knn_join_ivf with
@@ -1993,33 +1673,6 @@ def test_ingest_store_time_travel(spark, tmp_path):
         assert [(r.vec_id, r.cos_sim) for r in got] == [
             (r.vec_id, r.cos_sim) for r in want
         ], f"ann probe as_of={k}"
-    # the batched probe takes the same as_of (per-query ≡ the single
-    # probe at the same boundary — its standing contract)
-    from distributed_mapreduce_spark.streaming.sinks import ann_ingest_topk_batch
-
-    queries = spark.createDataFrame(
-        [(1, [float(x) for x in erows[7].embedding]),
-         (2, [float(x) for x in erows[11].embedding])],
-        "query_id bigint, qvec array<double>",
-    )
-    batched = ann_ingest_topk_batch(
-        spark, estore, cents, queries, 10, nprobe=4, as_of=0
-    ).collect()
-    singles = {
-        qid: [
-            (r.vec_id, r.cos_sim)
-            for r in ann_ingest_topk(
-                spark, estore, cents, qv, 10, nprobe=4, as_of=0
-            ).collect()
-        ]
-        for qid, qv in [(1, [float(x) for x in erows[7].embedding]),
-                        (2, [float(x) for x in erows[11].embedding])]
-    }
-    got_b: dict = {}
-    for r in batched:
-        got_b.setdefault(r.query_id, []).append((r.vec_id, r.cos_sim))
-    assert got_b == singles
-
     estore2 = str(tmp_path / "estore2")
     compact_ann_ingest_store(spark, estore, estore2)
     with pytest.raises(FileNotFoundError, match="history floor"):
@@ -2452,7 +2105,7 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
     from distributed_mapreduce_spark.queries.pipeline_queries import BENCH_SOURCE
     from distributed_mapreduce_spark.sources import widen
     from distributed_mapreduce_spark.sources.catalog import table
-    from distributed_mapreduce_spark.streaming.replay import stage_document_chunks
+    from distributed_mapreduce_spark.streaming.replay import stage_chunks
     from distributed_mapreduce_spark.streaming.sinks import (
         build_decontam_index,
         foreach_batch_decontam_ingest,
@@ -2466,7 +2119,7 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
     build_decontam_index(bench, index, "t_decontam_bands", max_bench_df=50)
 
     (tmp_path / "chunks").mkdir()
-    chunks = stage_document_chunks(sf, 3, str(tmp_path / "chunks"), BENCH_SOURCE)
+    chunks = stage_chunks(sf, "documents", 3, str(tmp_path / "chunks"), BENCH_SOURCE)
     schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
     def run(store, ckpt, max_files=1):
@@ -2593,7 +2246,7 @@ def test_clean_ingest_streamed_equals_batch_composition(spark, tmp_path):
     )
     from distributed_mapreduce_spark.sources import widen
     from distributed_mapreduce_spark.sources.catalog import table
-    from distributed_mapreduce_spark.streaming.replay import stage_document_chunks
+    from distributed_mapreduce_spark.streaming.replay import stage_chunks
     from distributed_mapreduce_spark.streaming.sinks import (
         build_decontam_index,
         foreach_batch_clean_ingest,
@@ -2615,7 +2268,7 @@ def test_clean_ingest_streamed_equals_batch_composition(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS t_clean_corpus_bands")
 
     (tmp_path / "chunks").mkdir()
-    chunks = stage_document_chunks(sf, 3, str(tmp_path / "chunks"), BENCH_SOURCE)
+    chunks = stage_chunks(sf, "documents", 3, str(tmp_path / "chunks"), BENCH_SOURCE)
     schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
     toks = tokens("text")
     quality = (
@@ -2714,7 +2367,7 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
     from distributed_mapreduce_spark.sources import widen
     from distributed_mapreduce_spark.sources.catalog import table
     from distributed_mapreduce_spark.streaming.commitlog import ManifestStore
-    from distributed_mapreduce_spark.streaming.replay import stage_document_chunks
+    from distributed_mapreduce_spark.streaming.replay import stage_chunks
     from distributed_mapreduce_spark.streaming.sinks import (
         build_decontam_index,
         compact_clean_ingest_store,
@@ -2734,7 +2387,7 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         max_bench_df=50,
     )
     (tmp_path / "chunks").mkdir()
-    chunks = stage_document_chunks(sf, 2, str(tmp_path / "chunks"), BENCH_SOURCE)
+    chunks = stage_chunks(sf, "documents", 2, str(tmp_path / "chunks"), BENCH_SOURCE)
     schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
     def stream():

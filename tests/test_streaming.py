@@ -18,7 +18,7 @@ from distributed_mapreduce_spark.sources import table
 from distributed_mapreduce_spark.streaming import (
     event_stream,
     run_available_now,
-    stage_event_chunks,
+    stage_chunks,
 )
 from distributed_mapreduce_spark.streaming.stateful import kv_state_stream, latest_state
 from distributed_mapreduce_spark.streaming.windows import (
@@ -34,7 +34,7 @@ def rows_set(df):
 
 @pytest.fixture(scope="module")
 def chunks(sf_dir):
-    d = stage_event_chunks(sf_dir, n_chunks=3)
+    d = stage_chunks(sf_dir, "events", 3)
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -189,3 +189,64 @@ def test_replay_leaves_no_temp_view(spark, sf_dir):
     rows = st_q1_tumbling(spark, sf_dir).collect()
     assert rows
     assert not temp_views() - before
+
+
+@pytest.mark.parametrize(
+    "table, n_chunks, exclude",
+    [("events", 4, None), ("embeddings", 3, None), ("documents", 3, "src3")],
+)
+def test_stage_chunks_splits_the_fixture_in_key_order(sf_dir, tmp_path, table, n_chunks, exclude):
+    """Spark-free: the staged chunks are `n_chunks` files whose rows
+    are the source table (minus the excluded source, projected to the
+    staged columns), key-ordered within and across chunks, with
+    strictly increasing mtimes so the file source replays them in that
+    order."""
+    from distributed_mapreduce_spark.streaming.replay import CHUNK_TABLES
+
+    key, columns = CHUNK_TABLES[table]
+    out = stage_chunks(sf_dir, table, n_chunks, str(tmp_path), exclude_source=exclude)
+    files = sorted(p for p in os.listdir(out) if p.endswith(".parquet"))
+    assert len(files) == n_chunks
+    mtimes = [os.stat(os.path.join(out, f)).st_mtime for f in files]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
+
+    parts = [pq.read_table(os.path.join(out, f)) for f in files]
+    keys = [k for t in parts for k in t.column(key).to_pylist()]
+    assert keys == sorted(keys) and len(keys) == len(set(keys))
+
+    src = pq.read_table(f"{sf_dir}/{table}.parquet", columns=columns)
+    if exclude is not None:
+        assert exclude in src.column("source").to_pylist()
+        src = src.filter(pa.compute.field("source") != exclude)
+    staged = pa.concat_tables(parts)
+    assert staged.column_names == src.column_names
+    assert staged.to_pylist() == src.sort_by(key).to_pylist()
+
+
+def test_stage_chunks_truncates_event_ts_to_micros(tmp_path):
+    """A nanosecond `ts` is floored to microseconds at staging (Spark
+    has no ns timestamp); the other columns pass through."""
+    ns = [1_000_000_001_999, 1_000_000_002_001, 7]
+    src = pa.table(
+        {
+            "event_id": pa.array([3, 1, 2], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "user_id": pa.array([1, 1, 2], pa.int64()),
+            "event_type": pa.array(["a", "b", "c"]),
+            "value": pa.array([1.0, 2.0, 3.0]),
+            "props": pa.array(["{}"] * 3),
+        }
+    )
+    (tmp_path / "sf").mkdir()
+    (tmp_path / "out").mkdir()
+    pq.write_table(src, str(tmp_path / "sf" / "events.parquet"))
+    out = stage_chunks(str(tmp_path / "sf"), "events", 2, str(tmp_path / "out"))
+    staged = pa.concat_tables(
+        pq.read_table(os.path.join(out, f)) for f in sorted(os.listdir(out))
+    )
+    assert staged.schema.field("ts").type == pa.timestamp("us")
+    assert staged.column("event_id").to_pylist() == [1, 2, 3]
+    by_id = dict(zip([3, 1, 2], ns))
+    assert staged.column("ts").cast(pa.int64()).to_pylist() == [
+        by_id[i] // 1000 for i in (1, 2, 3)
+    ]
