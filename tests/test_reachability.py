@@ -53,6 +53,14 @@ ALLOWLIST = {
     "cell-partitioned IVF, ANN and SemDeDup stores",
     "streaming/sinks.py:ann_ingest_topk": "the only reader of the ANN ingest "
     "store",
+    "operators/bpe.py": "BPE merge training: iterative and not "
+    "SQL-expressible, graded by its tests against the sequential "
+    "pure-Python fold; kept until it is registered as an eager query "
+    "(ROADMAP direction 4) or deleted with its tests in a change of its own",
+    "operators/sketches.py": "mergeable HLL/KLL/theta/count-min sketches: "
+    "no cross-engine oracle, gated by error-bound tests; kept until a query "
+    "or sink uses them or they are deleted with their tests in a change of "
+    "their own",
 }
 
 
