@@ -49,15 +49,23 @@ def shingles(toks: Column, n: int = 3) -> Column:
     """Word n-gram shingles of a token array (space-joined), the
     near-dup unit: distinctive even over a tiny vocabulary where
     unigram sets saturate. Empty array when fewer than n tokens
-    (guarded: Spark's sequence() would run *backwards* on a negative
-    range)."""
-    make = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + off) for off in range(n)]
-        ),
+    (guarded: slice() would fail on the negative length).
+
+    Rule for every higher-order function here: a lambda body runs once
+    per array element, interpreted, and Spark never eliminates common
+    subexpressions inside it — so a body references only its lambda
+    variables. Indexing `toks` from the body would re-evaluate the
+    whole token expression (lower + regex split + filter) n times per
+    shingle, quadratic in document length. Instead the n offset slices
+    are built once per row and zipped, and the body only joins the
+    zipped fields. concat_ws over the n fields keeps the exact strings
+    of element-wise indexing, null elements included."""
+    n_grams = F.size(toks) - (n - 1)
+    grams = F.transform(
+        F.arrays_zip(*[F.slice(toks, 1 + off, n_grams) for off in range(n)]),
+        lambda z: F.concat_ws(" ", *[z[str(off)] for off in range(n)]),
     )
-    return F.when(F.size(toks) >= n, make).otherwise(
+    return F.when(F.size(toks) >= n, grams).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -132,9 +140,9 @@ def rolling_hash(col: Column | str) -> Column:
 
 def langid_guess(toks: Column, threshold: float = 0.04) -> Column:
     """Heuristic language ID: the language whose stopword hit-ratio is
-    highest, if above threshold, else 'unknown'. Pure expression — a
-    greatest-of-struct argmax, deterministic tie-break by language
-    order."""
+    highest, if at or above threshold, else 'unknown'. Pure
+    expression — a greatest-of-struct argmax, deterministic tie-break
+    by language order."""
     size = F.size(toks)
     ratios = [
         (
@@ -146,13 +154,20 @@ def langid_guess(toks: Column, threshold: float = 0.04) -> Column:
         )
         for lang, words in STOPWORDS.items()
     ]
-    best_lang, best_ratio = ratios[0]
-    best_lang = F.lit(best_lang)
-    for lang, ratio in ratios[1:]:
-        better = ratio > best_ratio
-        best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
-        best_ratio = F.when(better, ratio).otherwise(best_ratio)
-    return F.when(best_ratio >= F.lit(threshold), best_lang).otherwise(F.lit("unknown"))
+    # Argmax as greatest over (ratio, rank, lang) structs: each ratio
+    # is evaluated once, and equal ratios go to the higher rank, i.e.
+    # the earlier language. The threshold rides along as the lowest
+    # ranked candidate, so a language wins only at or above it.
+    cands = ratios + [("unknown", F.lit(float(threshold)))]
+    best = F.greatest(
+        *[
+            F.struct(
+                ratio.alias("ratio"), F.lit(-rank).alias("rank"), F.lit(lang).alias("lang")
+            )
+            for rank, (lang, ratio) in enumerate(cands)
+        ]
+    )
+    return best["lang"]
 
 
 def unigram_entropy(

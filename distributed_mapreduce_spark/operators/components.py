@@ -138,6 +138,10 @@ def connected_components(
     cur = one.where(F.col("a") != F.col("b")).distinct().localCheckpoint()
     cur_ids = persistent_rdd_ids(spark) - before
     n_cur = cur.count()
+    # `nodes` and `cur` are materialized checkpoints (lineage
+    # truncated), so nothing reads `one` any more — free it before the
+    # star rounds instead of holding the raw edge list through them
+    unpersist_rdd_ids(spark, one_ids)
     for _ in range(max_iters):
         if n_cur == 0:
             break
@@ -206,7 +210,7 @@ def connected_components(
     # the final label checkpoint is self-contained (lineage truncated):
     # the edge/node checkpoints are dead once it materializes — free now
     labels.count()
-    unpersist_rdd_ids(spark, one_ids | cur_ids | node_ids)
+    unpersist_rdd_ids(spark, cur_ids | node_ids)
     # survivor: the final label checkpoint — the returned frame IS its
     # blocks; release via caching.release_caches once consumed.
     return attach_rdd_ids(labels, spark, label_ids)

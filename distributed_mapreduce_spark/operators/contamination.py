@@ -46,8 +46,12 @@ def contamination_report_tagged(
          corpus-sized train side (the flag agg shuffles the same rows
          once, and partial aggregation collapses duplicates map-side);
       2. the bench rows (small by construction: eval sets are
-         ~10^3..10^5 docs) BROADCAST onto the flag table — the train
-         side never reshuffles on shingle;
+         ~10^3..10^5 docs) joined onto the flag table with no join
+         hint: the planner broadcasts whichever side its size stats
+         put under autoBroadcastJoinThreshold (at fixture scale the
+         flag table, BuildLeft) and falls back to a shuffle join when
+         neither is — a forced broadcast of a 10^7..10^8-row bench
+         expansion would bypass that threshold;
       3. one groupBy(id) computes n_shingles and n_hit together —
          replaces the separate sizes agg + hits agg + outer join.
 
@@ -62,7 +66,7 @@ def contamination_report_tagged(
         F.max(F.when(~F.col(is_bench_col), 1).otherwise(0)).alias("hit")
     )
     bench_sh = sh.where(F.col(is_bench_col)).select("id", "shingle")
-    per = flags.join(F.broadcast(bench_sh), "shingle")
+    per = flags.join(bench_sh, "shingle")
     overlap = F.round(F.col("n_hit") / F.col("n_shingles"), 6)
     return (
         per.groupBy("id")

@@ -115,8 +115,11 @@ def doc_shingles(
         # tokenizes+explodes+distinct-shuffles the corpus TWICE — the
         # two ~22 s-CPU stages that dominated every guarded dedup
         # query's profile (Generate appeared at nodes 5 AND 8 of the
-        # graded dedup_q4 plan). One expansion pass + one exchange
-        # replaces two of each; the guard itself reads the cache. At
+        # graded dedup_q4 plan; the ~22 s were measured while
+        # shingles() re-tokenized the document once per shingle
+        # element, quadratic in document length, which it no longer
+        # does). One expansion pass + one exchange replaces two of
+        # each; the guard itself reads the cache. At
         # 100 TB this intermediate is the stage a pipeline checkpoints
         # (same argument as the post-guard persist in jaccard_pairs).
         # Cache lifetime: attached to the returned frame (caching.py
@@ -151,7 +154,11 @@ def jaccard_pairs(sh: DataFrame, min_jaccard: float) -> DataFrame:
     arrays, which outgrows the shuffle saving as data scales. The join
     form stays because the 10× fixture is the better predictor of
     cluster behavior; revisit only with a real-network shuffle, where
-    halved shuffle volume is worth more than local spill.
+    halved shuffle volume is worth more than local spill. (Both timings
+    were measured while shingles() re-tokenized the document per
+    shingle element; the expansion both shapes share is now far
+    cheaper, so the margin should be measured again before it is
+    relied on.)
 
     The shingle table feeds three subtrees (both join sides + sizes);
     persist() materializes the expansion once instead of re-tokenizing

@@ -18,6 +18,7 @@ input splitting (the reference's dead O11 code, master.go:153-208).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterable
 
 import pyarrow as pa
@@ -44,12 +45,44 @@ TABLES = (
 # bounded dims — broadcast kills the shuffle on the probe side.
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
+# Session conf that changes the schema Spark infers from a parquet footer.
+# The memo below is process-wide: its key holds every input that decides
+# the inferred schema, so one session or test cannot see another's entry
+# as stale.
+_SCHEMA_CONF = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table as a DataFrame (parquet, pushdown-capable)."""
+    """Read one fixture table as a DataFrame (parquet, pushdown-capable).
+
+    Parquet schema inference runs a one-task Spark job per read, so the
+    inferred schema is memoized per (path, size, mtime, schema conf)
+    and later reads of the unchanged file pass it to `.schema()`: no
+    job. A rewritten file (or a dataset directory whose entries change)
+    has a new stat key and is inferred again; a path the driver cannot
+    stat (a remote store) is inferred on every read."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        key = None
+    else:
+        key = (path, st.st_size, st.st_mtime_ns)
+        key += tuple(spark.conf.get(k) for k in _SCHEMA_CONF)
+    if key in _SCHEMAS:
+        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[key] = df.schema
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):

@@ -88,3 +88,32 @@ def test_components_boundary_picks_each_path(spark):
              for r in connected_components(edges, driver_max_edges=2).collect()}
     assert at == expect
     assert above == expect
+
+
+def test_components_frees_raw_edges_before_first_round_ends(spark, monkeypatch):
+    """The raw edge checkpoint (`one`) has no reader once `nodes` and
+    the first `cur` are materialized, so the distributed branch frees
+    it before the first star round ends instead of holding it through
+    every round."""
+    from distributed_mapreduce_spark import caching
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], "id_i bigint, id_j bigint"
+    )
+    before = caching.persistent_rdd_ids(spark)
+    calls = []
+    real = caching.unpersist_rdd_ids
+
+    def spy(sp, ids, blocking=False):
+        calls.append((frozenset(ids), caching.persistent_rdd_ids(sp)))
+        real(sp, ids, blocking)
+
+    monkeypatch.setattr(caching, "unpersist_rdd_ids", spy)
+    out = connected_components(edges, driver_max_edges=0)
+    # RDD ids are allocated in creation order and `one` is the first
+    # checkpoint the operator makes
+    one_id = min(set().union(*(live for _, live in calls)) - before)
+    # the first star round ends by releasing the first `cur` generation
+    round_one_end = next(live for ids, live in calls if one_id not in ids)
+    assert one_id not in round_one_end
+    caching.release_caches(out)

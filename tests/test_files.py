@@ -77,6 +77,34 @@ def test_events_ts_normalizes_to_session_timestamp(spark, sf_dir, tmp_path):
     assert got == [base, base + datetime.timedelta(hours=1)]
 
 
+def test_table_rereads_run_no_schema_job(spark, tmp_path):
+    """Parquet schema inference runs a Spark job; catalog.table infers
+    once per file version and re-reads with the memoized schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from distributed_mapreduce_spark.sources import table
+
+    def next_job_id():
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), path)
+    first = table(spark, str(tmp_path), "documents")
+    jobs = next_job_id()
+    again = table(spark, str(tmp_path), "documents")
+    assert next_job_id() == jobs
+    assert again.schema == first.schema
+
+    # a rewritten file is inferred again
+    pq.write_table(pa.table({"doc_id": [3], "text": ["c"], "source": ["s"]}), path)
+    jobs = next_job_id()
+    rewritten = table(spark, str(tmp_path), "documents")
+    assert next_job_id() > jobs
+    assert rewritten.columns == ["doc_id", "text", "source"]
+    assert [tuple(r) for r in rewritten.collect()] == [(3, "c", "s")]
+
+
 def test_partitioned_write_prunes_and_roundtrips(spark, tmp_path):
     """Hive-layout partitioned parquet (sources/files.py): the dataset
     round-trips with the partition column reconstructed from directory

@@ -139,9 +139,10 @@ def test_stratified_sample_broadcasts_rates_and_pushes_scan(spark, sf_dir):
 def test_contamination_probe_is_flag_agg_plus_broadcast(spark, sf_dir):
     """The train-side membership probe must never plan as a pair-space
     join. Since r17 the one-pass form replaces the semi join outright:
-    a per-shingle hit-flag aggregation plus a BROADCAST of the small
-    bench side — the corpus-sized train expansion appears under no
-    shuffle-keyed join at all."""
+    a per-shingle hit-flag aggregation joined to the bench side — the
+    corpus-sized train expansion appears under no shuffle-keyed join
+    at all. No hint forces the broadcast: at fixture scale the size
+    stats put the flag table under autoBroadcastJoinThreshold."""
     from distributed_mapreduce_spark.queries.pipeline_queries import (
         contam_q1_benchmark_overlap,
     )

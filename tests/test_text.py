@@ -41,6 +41,65 @@ def test_shingles(spark):
     assert _one(spark, "", shingles(tokens("text"), 3)) == []
 
 
+def _shingles_ref(toks, n):
+    """Pure-Python shingles: space-join each window of n tokens,
+    skipping null elements the way concat_ws does; [] below n."""
+    return [
+        " ".join(t for t in toks[i : i + n] if t is not None)
+        for i in range(len(toks) - n + 1)
+    ]
+
+
+def test_shingles_matches_python_reference(spark):
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
+    ns = (1, 2, 3, 5)
+    # token counts 0..max(n)+1, run through the tokenizer
+    texts = [" ".join(w.title() + "," for w in words[:c]) for c in range(max(ns) + 2)]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    rows = df.select(
+        "text", *[shingles(tokens("text"), n).alias(f"n{n}") for n in ns]
+    ).collect()
+    for r in rows:
+        toks = [w.strip(",").lower() for w in r.text.split()]
+        for n in ns:
+            assert r[f"n{n}"] == _shingles_ref(toks, n), (r.text, n)
+    # arrays with null elements keep concat_ws's skip-null strings
+    arrs = [["a", None, "c", "d"], [None, None, "x"], [None], []]
+    df = spark.createDataFrame([(a,) for a in arrs], "t array<string>")
+    rows = df.select(
+        "t", *[shingles(F.col("t"), n).alias(f"n{n}") for n in ns]
+    ).collect()
+    for r in rows:
+        for n in ns:
+            assert r[f"n{n}"] == _shingles_ref(r.t, n), (r.t, n)
+
+
+def _lambda_bodies(jexpr):
+    """The body of every LambdaFunction in a JVM expression tree."""
+    bodies, stack = [], [jexpr]
+    while stack:
+        e = stack.pop()
+        if e.getClass().getSimpleName() == "LambdaFunction":
+            bodies.append(e.function().toString())
+        kids = e.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return bodies
+
+
+def test_shingles_lambda_bodies_never_tokenize(spark):
+    """A lambda body runs once per element and is never CSE'd: a
+    tokenizer inside one re-tokenizes the document per shingle."""
+    df = spark.createDataFrame([("a b c d",)], "text string")
+    plan = df.select(shingles(tokens("text"), 3).alias("v"))._jdf.queryExecution()
+    exprs = plan.analyzed().expressions()
+    bodies = [
+        b for i in range(exprs.size()) for b in _lambda_bodies(exprs.apply(i))
+    ]
+    assert bodies
+    for b in bodies:
+        assert "split(" not in b and "lower(" not in b, b
+
+
 def test_normalize_and_fingerprint(spark):
     assert _one(spark, "  Hello   WORLD ", normalize_text("text")) == "hello world"
     fp1 = _one(spark, "Hello  World", fingerprint("text"))
@@ -62,6 +121,11 @@ def test_langid_guess(spark):
     assert _one(spark, "the cat is on the mat", langid_guess(tokens("text"))) == "en"
     assert _one(spark, "der hund ist ein tier und das", langid_guess(tokens("text"))) == "de"
     assert _one(spark, "zzz qqq xxx www", langid_guess(tokens("text"))) == "unknown"
+    # ties go to the earlier STOPWORDS language ("la" is fr and es,
+    # "de" is fr and es too); a ratio equal to the threshold passes
+    assert _one(spark, "la de", langid_guess(tokens("text"))) == "fr"
+    assert _one(spark, "the x", langid_guess(tokens("text"), 0.5)) == "en"
+    assert _one(spark, "the x y", langid_guess(tokens("text"), 0.5)) == "unknown"
 
 
 def test_bpe_ish_tokens(spark):
