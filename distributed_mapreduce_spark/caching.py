@@ -36,10 +36,10 @@ those objects alive for its own lifetime — by design, since the JVM
 cache they pin was already leaked without a release path.
 
 Streaming sinks don't need this: their per-batch persists are consumed
-inside the foreachBatch function, and the ingest sinks' shared driver
-(``streaming/sinks._ingest_sink``) releases them in ``finally`` —
-every frame the batch persisted, plus the checkpoint blocks it created
-(a ``persistent_rdd_ids`` diff).
+inside the foreachBatch function, and the two sink drivers in
+``streaming/sinks`` release them in ``finally`` — ``_versioned_sink``
+the batch frame, ``_ingest_sink`` every frame the batch persisted plus
+the checkpoint blocks it created (a ``persistent_rdd_ids`` diff).
 """
 
 from __future__ import annotations

@@ -42,14 +42,12 @@ from distributed_mapreduce_spark.streaming.windows import (
     tumbling_counts,
 )
 
-import os
-
 # Replay granularity. Correctness is chunk-count-independent (state
 # carries across batches; the AvailableNow final watermark flush closes
 # the same sessions), so tests pin ≥2 to keep real cross-batch
 # semantics while the default stays small: per-batch state-store
 # commits are the dominant fixture cost (VERDICT r2 item 4).
-N_CHUNKS = int(os.environ.get("DMR_STREAM_CHUNKS", "2"))
+N_CHUNKS = 2
 SESSION_WATERMARK = "1 hour"
 
 

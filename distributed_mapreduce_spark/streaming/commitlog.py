@@ -15,8 +15,9 @@ Two physical layouts share the idiom:
 
 * `ManifestStore` — a CENTRAL manifest directory
   (`store/_manifests/<batch>.json`) gating per-batch data dirs
-  (`store[/subdir]/batch=<id>/...`). Used by the dedup- and
-  ANN-ingest sinks; batch ids are the stream checkpoint's batch ids,
+  (`store[/subdir]/batch=<id>/...`). Used by the five ingest sinks
+  (dedup, ANN, SemDeDup, decontam, clean); batch ids are the stream
+  checkpoint's batch ids,
   and `SEED = -1` is the one id no stream batch ever gets — the slot
   a compactor's fold seeds a FRESH store with (see
   compact_dedup_ingest_store for why in-place compaction can never
@@ -24,9 +25,9 @@ Two physical layouts share the idiom:
 
 * `VersionManifests` — a PER-VERSION manifest (`v=<id>/_touched.json`)
   carrying the partition set that version rewrote plus pinned store
-  invariants. Used by the partition-scoped CDC sink, where the
-  manifest payload (the touched-partition list) is itself the
-  read-time routing table.
+  invariants. Used by the two versioned stores, the partition-scoped
+  CDC table store and the KV serving store, where the manifest payload
+  (the touched-partition list) is itself the read-time routing table.
 
 Commit visibility contract (both layouts): a manifest that EXISTS and
 PARSES is a committed batch; anything else — absent, half-written by a
@@ -62,6 +63,23 @@ def read_json_tolerant(path) -> dict | None:
         return json.loads(pathlib.Path(path).read_text())
     except (OSError, ValueError):
         return None
+
+
+HISTORY_FLOOR = "_history_floor.json"
+
+
+def write_history_floor(store, floor: int) -> None:
+    """Record a compacted store's history floor: the newest batch or
+    version of the source chain its seed folds. Write it BEFORE the
+    seed manifest: a crash in between leaves a store with no committed
+    seed (unreadable), never a readable store missing its floor."""
+    atomic_write_json(pathlib.Path(store) / HISTORY_FLOOR, {"floor": floor})
+
+
+def read_history_floor(store) -> int | None:
+    """The store's history floor, or None for a store never compacted."""
+    rec = read_json_tolerant(pathlib.Path(store) / HISTORY_FLOOR)
+    return None if rec is None else rec["floor"]
 
 
 class ManifestStore:

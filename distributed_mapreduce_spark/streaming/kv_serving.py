@@ -10,10 +10,11 @@ pieces that already existed separately:
 - the maintained snapshot is hash-partitioned on `key2shard(key)` —
   the reference's OWN routing function
   (/root/reference/src/shardkv/client.go:22-29) as the partition
-  domain of the versioned, manifest-committed store layout the CDC
-  sink established (streaming/sinks.foreach_batch_cdc_merge_partitioned's
-  exactly-once protocol: per-batch version dirs, touched-partition
-  manifests written LAST, torn writes invisible);
+  domain of the versioned, manifest-committed store layout it shares
+  with the CDC table store: both sinks run on ONE driver,
+  streaming/sinks._versioned_sink (per-batch version dirs,
+  touched-partition manifests written LAST, torn writes invisible),
+  and pass it only their merge step;
 - point/multi-get serve from the maintained snapshot reading ONLY the
   probed keys' shard directories (VERDICT r15 #2), with `as_of` time
   travel on the version chain = the kvraft snapshot concept
@@ -53,18 +54,22 @@ from distributed_mapreduce_spark.operators.kv import (
     key2shard_py,
 )
 from distributed_mapreduce_spark.sources.catalog import local_frame
-from distributed_mapreduce_spark.streaming.commitlog import (
-    VersionManifests,
-    partition_versions,
-)
+from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
 from distributed_mapreduce_spark.streaming.sinks import (
+    _check_pins,
     _newest_recorded_schema,
+    _versioned_sink,
     read_current_partitioned,
 )
 
 # the snapshot schema every kv_serving store carries (recorded in each
 # version manifest; also the construction-time store-kind pin)
 _KV_SCHEMA = [("key", "string"), ("value", "string"), ("last_seq", "bigint")]
+_KV_DDL = ", ".join(f"{name} {ddl}" for name, ddl in _KV_SCHEMA)
+# the routing invariants every kv_serving manifest pins
+_KV_PINS = {
+    "n_buckets": NSHARDS, "ordered": False, "key": "key", "bucket_expr": "key2shard",
+}
 
 
 def foreach_batch_kv_serving(
@@ -79,78 +84,33 @@ def foreach_batch_kv_serving(
     The feed must deliver each key's ops at nondecreasing seq across
     batches (a CDC/op log read in offset order); within a batch any
     order is fine, and redelivered rows are dropped by the persisted
-    last_seq watermark (apply_kv_ops). Gets in the feed are ignored
-    (reads are served from the store, not folded through it)."""
+    last_seq watermark (apply_kv_ops). Gets are filtered out of the
+    feed (reads are served from the store, not folded through it)."""
     vm = VersionManifests(store_path)
-    committed = vm.committed()
-    if committed:
-        pin = committed[0][1]
-        rec = _newest_recorded_schema(committed)
-        if (
-            pin.get("n_buckets") != NSHARDS
-            or pin.get("key") != "key"
-            or pin.get("ordered", False)
-            or pin.get("bucket_expr") != "key2shard"
-            or rec != [list(t) for t in _KV_SCHEMA]
-        ):
-            raise ValueError(
-                f"store {store_path} is not a kv_serving store (pinned "
-                f"n_buckets={pin.get('n_buckets')}, key={pin.get('key')!r}, "
-                f"schema={rec}) — shard routing and the snapshot schema "
-                "must stay stable for the store's lifetime"
-            )
+    committed = _check_pins(vm, "kv_serving", _KV_PINS)
+    rec = _newest_recorded_schema(committed)
+    if committed and rec != [list(t) for t in _KV_SCHEMA]:
+        raise ValueError(
+            f"store {store_path} is not a kv_serving store (recorded "
+            f"schema={rec}) — the snapshot schema must stay stable for "
+            "the store's lifetime"
+        )
 
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        # ops feed two actions (touched-shard probe + merge write)
-        df = df.select("key", "seq", "op", "value").persist()
-        try:
-            touched = [
-                r.p
-                for r in df.where(F.col("op") != F.lit("get"))
-                .select(key2shard(F.col("key")).alias("p"))
-                .distinct()
-                .collect()
-            ]
-            if not touched:
-                # dense version chain, same rationale as the CDC sink
-                vm.commit(
-                    batch_id, [], NSHARDS, False, "key",
-                    schema=_KV_SCHEMA, bucket_expr="key2shard",
-                )
-                return
-            base_paths = vm.leaf_dirs(
-                partition_versions(vm.committed(below=batch_id)), touched
-            )
-            if base_paths:
-                # explicit leaf paths: untouched shards are never
-                # listed, opened, or scanned
-                base = spark.read.schema(
-                    "key string, value string, last_seq bigint"
-                ).parquet(*base_paths)
-            else:
-                base = local_frame(
-                    spark, [], "key string, value string, last_seq bigint"
-                )
-            merged = apply_kv_ops(base, df)
-            merged.withColumn("p", key2shard(F.col("key"))).repartition(
-                "p"
-            ).write.mode("overwrite").partitionBy("p").parquet(
-                str(vm.version_dir(batch_id))
-            )
-            vm.commit(
-                batch_id, touched, NSHARDS, False, "key",
-                schema=_KV_SCHEMA, bucket_expr="key2shard",
-            )
-        finally:
-            df.unpersist()
+    def merge(ops: DataFrame, base_paths: list[str], _manifests) -> DataFrame:
+        spark = ops.sparkSession
+        if base_paths:
+            # explicit leaf paths: untouched shards are never listed,
+            # opened, or scanned
+            base = spark.read.schema(_KV_DDL).parquet(*base_paths)
+        else:
+            base = local_frame(spark, [], _KV_DDL)
+        # one file per shard
+        return apply_kv_ops(base, ops).repartition(key2shard(F.col("key")))
 
-    return (
-        ops_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    ops = ops_stream.select("key", "seq", "op", "value").where(
+        F.col("op") != F.lit("get")
     )
+    return _versioned_sink(ops, vm, checkpoint, _KV_PINS, _KV_SCHEMA, merge)
 
 
 def read_kv_state(

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 # per-batch commit overhead (measured 3×; 8→4 another ~12% off the
 # family). A production deployment sets this per stream from expected
 # rows/sec before first start.
-STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("DMR_STREAM_SHUFFLE", "4"))
+STREAM_SHUFFLE_PARTITIONS = 4
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, "

@@ -5,12 +5,20 @@ log: each micro-batch writes its own `batch=<id>` or `v=<id>` directory
 with overwrite — redelivery after a crash rewrites the same directory
 instead of appending twice — and one atomic manifest rename makes it
 visible (streaming/commitlog; the reference's temp-file+rename atomic
-commit, worker.go:184-198, extended across restarts). The CDC table
-store (`foreach_batch_cdc_merge_partitioned`) and the
-dedup/ANN/SemDeDup/decontam/clean ingest stores all commit this way;
-the five ingest sinks share one driver, `_ingest_sink`, which owns the
-redelivery skip, the known-id gate, the manifest-last commit and the
-per-batch release, and each sink passes only its own gates and writes.
+commit, worker.go:184-198, extended across restarts). Two drivers
+carry every sink, and each sink passes only its own step:
+
+- `_versioned_sink` drives the two versioned `v=<batch>/p=<partition>`
+  stores, the CDC table store (`foreach_batch_cdc_merge_partitioned`)
+  and the KV serving store (streaming/kv_serving). It owns the
+  touched-partition probe, the base fold, the write and the
+  manifest-last commit; the sink passes its merge. Each store kind's
+  routing expression sits in `_ROUTES` under the name its manifests
+  pin, and `_check_pins` refuses a store pinned differently.
+- `_ingest_sink` drives the five dedup/ANN/SemDeDup/decontam/clean
+  ingest stores. It owns the redelivery skip, the known-id gate, the
+  manifest-last commit and the per-batch release; the sink passes its
+  own gates and writes.
 
 Scale notes: every sink writes one file per shuffle partition per
 batch; at real scale compact small files downstream (the compact_*
@@ -26,13 +34,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from distributed_mapreduce_spark.caching import persistent_rdd_ids, unpersist_rdd_ids
+from distributed_mapreduce_spark.operators.kv import key2shard
 from distributed_mapreduce_spark.sources.catalog import local_frame
 from distributed_mapreduce_spark.streaming.commitlog import (
     ManifestStore,
     VersionManifests,
     atomic_write_json,
     partition_versions,
+    read_history_floor,
     read_json_tolerant,
+    write_history_floor,
 )
 
 
@@ -143,39 +154,12 @@ def foreach_batch_cdc_merge_partitioned(
     if reap_tombstones_below is not None and not ordered:
         raise ValueError("reap_tombstones_below requires ordered=True")
 
-    def bucket(col):
-        return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-
-    committed = vm.committed()
+    pins = {
+        "n_buckets": n_buckets, "ordered": ordered, "key": key,
+        "bucket_expr": "xxhash64",
+    }
+    committed = _check_pins(vm, "CDC table", pins)
     if committed:
-        have = committed[0][1]["n_buckets"]
-        if have != n_buckets:
-            raise ValueError(
-                f"store {store_path} was built with n_buckets={have}; "
-                f"hash routing must stay stable (got {n_buckets})"
-            )
-        have_ordered = committed[0][1].get("ordered", False)
-        if have_ordered != ordered:
-            raise ValueError(
-                f"store {store_path} was built with ordered={have_ordered}; "
-                f"the snapshot schema must stay stable (got ordered={ordered})"
-            )
-        have_key = committed[0][1].get("key")
-        if have_key is not None and have_key != key:
-            raise ValueError(
-                f"store {store_path} routes on key={have_key!r}; hash "
-                f"routing must stay stable (got key={key!r})"
-            )
-        have_expr = committed[0][1].get("bucket_expr", "xxhash64")
-        if have_expr != "xxhash64":
-            raise ValueError(
-                f"store {store_path} routes partitions with "
-                f"bucket_expr={have_expr!r}, not this sink's "
-                "pmod(xxhash64(key), n) — merging here would write "
-                "buckets the store's own readers never probe (r16: the "
-                "KV serving store pins 'key2shard'; maintain it with "
-                "streaming/kv_serving.foreach_batch_kv_serving)"
-            )
         # The key's TYPE is a routing invariant like n_buckets (ADVICE
         # r15): xxhash64 hashes int and bigint differently, so even the
         # LOSSLESS widenings _evolve_base accepts on the key would move
@@ -233,19 +217,10 @@ def foreach_batch_cdc_merge_partitioned(
             seed = seed.withColumn(
                 ord_col, F.lit(None).cast(changes.schema[ord_col].dataType)
             ).withColumn(delete_col, F.lit(0))
-        seed.withColumn("p", bucket(F.col(key))).write.mode(
+        seed.withColumn("p", _route(pins)).write.mode(
             "overwrite"
         ).partitionBy("p").parquet(str(vm.version_dir(-1)))
-        vm.commit(
-            -1,
-            list(range(n_buckets)),
-            n_buckets,
-            ordered,
-            key,
-            schema=[
-                (f.name, f.dataType.simpleString()) for f in seed.schema.fields
-            ],
-        )
+        _commit_version(vm, pins, -1, list(range(n_buckets)), seed.schema)
 
     payload_cols = (
         init.columns
@@ -292,7 +267,76 @@ def foreach_batch_cdc_merge_partitioned(
         for c in [key] + [c for c in snapshot_cols if c != key]
     ]
 
-    def merge(base, df, key, ord_col, delete_col):
+    def read_base(df, base_paths, manifests):
+        # Explicit leaf paths: partitions NOT in `base_paths` are never
+        # listed, opened, or scanned — the pruning that makes the batch
+        # cost ∝ touched bytes.
+        reader = df.sparkSession.read
+        recorded = _newest_recorded_schema(manifests)
+        if merge_schema and recorded is not None:
+            # pre- and post-evolution versions coexist in the fold:
+            # read under the store's NEWEST recorded schema — absent
+            # columns pad as typed NULLs and pre-widening file types
+            # promote losslessly (footer mergeSchema would refuse a
+            # float file next to a post-widening double one); the merge
+            # operator then evolves from the recorded schema to the
+            # feed's.
+            reader = reader.schema(_schema_ddl(recorded))
+        elif merge_schema:
+            # pre-schema-recording store: footer merge is the only
+            # source of truth for what the files hold
+            reader = reader.option("mergeSchema", "true")
+        base = reader.parquet(*base_paths)
+        missing = [c for c in snapshot_cols if c not in base.columns]
+        if missing and not merge_schema:
+            raise ValueError(
+                f"store {store_path} lacks column(s) {missing} "
+                "present in the change feed — schema evolution "
+                "requires merge_schema=True (Delta mergeSchema); "
+                "refusing to guess"
+            )
+        # Reverse guard: stored columns ABSENT from this sink's
+        # snapshot schema would be silently dropped from every touched
+        # partition on rewrite — the rename/drop data loss _evolve_base
+        # refuses, bypassed before it could see it (e.g. resuming an
+        # evolved store with a pre-evolution feed). Loss only occurs
+        # when the stored data actually carries the column, so the
+        # data read — not the manifest chain — is the precise thing to
+        # check.
+        extra = [c for c in base.columns if c not in snapshot_cols]
+        if extra:
+            raise ValueError(
+                f"store {store_path} stores column(s) {extra} "
+                "absent from this sink's change feed — rewriting "
+                "touched partitions would silently drop them "
+                "(a drop is not an addition; Delta mergeSchema "
+                "refuses it); resume with a feed carrying every "
+                "stored column, or rewrite the table explicitly"
+            )
+        base = base.select(*[c for c in snapshot_cols if c in base.columns])
+        # Belt for stores whose manifests predate schema recording (the
+        # construction-time pin can't see them): the key type the
+        # files actually hold must match the feed's, or bucket routing
+        # diverges (ADVICE r15).
+        stored_key_t = base.schema[key].dataType
+        feed_key_t = df.schema[key].dataType
+        if stored_key_t != feed_key_t:
+            raise ValueError(
+                f"store {store_path} hash-routes partitions on "
+                f"{key!r} as {stored_key_t.simpleString()}; the "
+                f"change feed carries it as "
+                f"{feed_key_t.simpleString()} — xxhash64 hashes "
+                "the two types differently, so stored rows would "
+                "sit in buckets the merge never reads; retyping "
+                "the key requires an explicit table rewrite"
+            )
+        return base
+
+    def merge(df, base_paths, manifests):
+        if base_paths:
+            base = read_base(df, base_paths, manifests)
+        else:
+            base = local_frame(df.sparkSession, [], df.select(*snapshot_cols).schema)
         if ordered:
             return merge_changes_ordered(
                 base,
@@ -307,116 +351,123 @@ def foreach_batch_cdc_merge_partitioned(
             base, df, key, ord_col, delete_col, merge_schema=merge_schema
         )
 
+    return _versioned_sink(changes, vm, checkpoint, pins, snap_ddl, merge)
+
+
+def _id_bucket(col, id_buckets: int):
+    """The xxhash64 routing hash: bucket = pmod(xxhash64(col),
+    id_buckets) — the CDC table store's partitions and the ingest
+    stores' id buckets. One definition — the gate's probe buckets and
+    the sidecar's write partitions must agree or pruning silently reads
+    the wrong dirs."""
+    return F.pmod(F.xxhash64(col), F.lit(id_buckets)).cast("int")
+
+
+# The versioned stores' partition-routing expressions, by the name a
+# manifest pins as `bucket_expr` (absent = "xxhash64"): the CDC table
+# store hashes its key, the KV serving store routes with the
+# reference's own key2shard (its n_buckets is pinned to NSHARDS).
+_ROUTES = {
+    "xxhash64": _id_bucket,
+    "key2shard": lambda col, n_buckets: key2shard(col),
+}
+
+
+def _route(pins: dict):
+    """The partition column `p` of a versioned store's rows."""
+    return _ROUTES[pins["bucket_expr"]](F.col(pins["key"]), pins["n_buckets"])
+
+
+def _commit_version(vm: VersionManifests, pins: dict, version: int, touched, schema):
+    """Commit a versioned-store manifest carrying the store's pins;
+    `schema` is the snapshot's StructType or [(name, ddl)]. Only a
+    non-default routing name is recorded, so CDC manifests keep their
+    pre-`bucket_expr` shape."""
+    if not isinstance(schema, list):
+        schema = [(f.name, f.dataType.simpleString()) for f in schema.fields]
+    vm.commit(
+        version, touched, pins["n_buckets"], pins["ordered"], pins["key"],
+        schema=schema,
+        bucket_expr=None if pins["bucket_expr"] == "xxhash64" else pins["bucket_expr"],
+    )
+
+
+def _check_pins(vm: VersionManifests, kind: str, pins: dict) -> list:
+    """Refuse a store whose first manifest pins different routing or
+    snapshot invariants than `pins` (n_buckets, ordered, key,
+    bucket_expr): hash routing and the snapshot schema must stay stable
+    for the store's lifetime, or merges rewrite buckets the store's own
+    readers never probe. A manifest without a key predates key pinning
+    and passes on the other fields. Returns the committed chain."""
+    committed = vm.committed()
+    if not committed:
+        return committed
+    first = committed[0][1]
+    have = {
+        "n_buckets": first.get("n_buckets"),
+        "ordered": first.get("ordered", False),
+        "key": first.get("key") or pins["key"],
+        "bucket_expr": first.get("bucket_expr", "xxhash64"),
+    }
+    bad = [f for f in pins if have[f] != pins[f]]
+    if bad:
+        raise ValueError(
+            f"store {vm.store} is not a {kind} store: it pins "
+            + ", ".join(f"{f}={have[f]!r} (got {pins[f]!r})" for f in bad)
+            + " — hash routing and the snapshot schema must stay stable "
+            "for the store's lifetime"
+        )
+    return committed
+
+
+def _versioned_sink(
+    stream: DataFrame, vm: VersionManifests, checkpoint: str, pins: dict,
+    schema: list, merge,
+) -> StreamingQuery:
+    """The exactly-once driver of the two versioned stores, the CDC
+    table store and the KV serving store (`v=<batch>/p=<partition>`
+    dirs under commitlog.VersionManifests — the reference's
+    worker.go:184-198 temp-file+rename, lifted to the batch). Per
+    micro-batch:
+
+      1. persist the batch (it feeds the probe and the merge write);
+      2. collect its distinct routed partitions, a ≤n_buckets list;
+      3. an empty batch still commits (empty touched set, `schema` as
+         the recorded snapshot schema) so the version chain stays
+         dense;
+      4. fold the manifests committed below the batch to the touched
+         partitions' current leaf dirs;
+      5. `merge(df, base_paths, manifests)` — the sink's own base read
+         and merge — and write its result `partitionBy("p")` into
+         `v=<batch>` (overwrite: a redelivery rewrites its own dir);
+      6. commit the manifest LAST, then unpersist in `finally`.
+
+    Only the touched partitions are read and rewritten, so a batch
+    costs its own size plus those partitions' bytes, never the table.
+    The write keeps the merge's partitioning: a sink that wants one
+    file per partition repartitions inside its merge."""
+
     def write_batch(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        # The batch feeds two actions (the touched-bucket probe below
-        # and the merge write) — persist so the change source is read
-        # once per micro-batch, not once per action (code-review r7).
         df = df.persist()
         try:
-            # Partitions this batch touches: distinct buckets of the
-            # change keys — a bounded (≤ n_buckets) driver list, so
-            # only the affected partitions are rewritten.
             touched = [
-                r.p
-                for r in df.select(bucket(F.col(key)).alias("p")).distinct().collect()
+                r.p for r in df.select(_route(pins).alias("p")).distinct().collect()
             ]
             if not touched:
-                # an all-filtered batch still commits (empty touched
-                # set) so the version sequence stays dense for
-                # debugging; readers and redelivery are indifferent.
-                vm.commit(batch_id, [], n_buckets, ordered, key, schema=snap_ddl)
+                _commit_version(vm, pins, batch_id, [], schema)
                 return
             manifests = vm.committed(below=batch_id)
             base_paths = vm.leaf_dirs(partition_versions(manifests), touched)
-            if base_paths:
-                # Explicit leaf paths: partitions NOT in `base_paths`
-                # are never listed, opened, or scanned — the pruning
-                # that makes the batch cost ∝ touched bytes.
-                reader = spark.read
-                recorded = _newest_recorded_schema(manifests)
-                if merge_schema and recorded is not None:
-                    # pre- and post-evolution versions coexist in the
-                    # fold: read under the store's NEWEST recorded
-                    # schema — absent columns pad as typed NULLs and
-                    # pre-widening file types promote losslessly
-                    # (footer mergeSchema would refuse a float file
-                    # next to a post-widening double one); the merge
-                    # operator then evolves from the recorded schema
-                    # to the feed's.
-                    reader = reader.schema(_schema_ddl(recorded))
-                elif merge_schema:
-                    # pre-schema-recording store: footer merge is the
-                    # only source of truth for what the files hold
-                    reader = reader.option("mergeSchema", "true")
-                base = reader.parquet(*base_paths)
-                missing = [c for c in snapshot_cols if c not in base.columns]
-                if missing and not merge_schema:
-                    raise ValueError(
-                        f"store {store_path} lacks column(s) {missing} "
-                        "present in the change feed — schema evolution "
-                        "requires merge_schema=True (Delta mergeSchema); "
-                        "refusing to guess"
-                    )
-                # Reverse guard: stored columns ABSENT from this sink's
-                # snapshot schema would be silently dropped from every
-                # touched partition on rewrite — the rename/drop data
-                # loss _evolve_base refuses, bypassed before it could see it
-                # (e.g. resuming an evolved store with a pre-evolution
-                # feed). Loss only occurs when the stored data actually
-                # carries the column, so the data read — not the
-                # manifest chain — is the precise thing to check.
-                extra = [c for c in base.columns if c not in snapshot_cols]
-                if extra:
-                    raise ValueError(
-                        f"store {store_path} stores column(s) {extra} "
-                        "absent from this sink's change feed — rewriting "
-                        "touched partitions would silently drop them "
-                        "(a drop is not an addition; Delta mergeSchema "
-                        "refuses it); resume with a feed carrying every "
-                        "stored column, or rewrite the table explicitly"
-                    )
-                base = base.select(
-                    *[c for c in snapshot_cols if c in base.columns]
-                )
-                # Belt for stores whose manifests predate schema
-                # recording (the construction-time pin can't see them):
-                # the key type the files actually hold must match the
-                # feed's, or bucket routing diverges (ADVICE r15).
-                stored_key_t = base.schema[key].dataType
-                feed_key_t = df.schema[key].dataType
-                if stored_key_t != feed_key_t:
-                    raise ValueError(
-                        f"store {store_path} hash-routes partitions on "
-                        f"{key!r} as {stored_key_t.simpleString()}; the "
-                        f"change feed carries it as "
-                        f"{feed_key_t.simpleString()} — xxhash64 hashes "
-                        "the two types differently, so stored rows would "
-                        "sit in buckets the merge never reads; retyping "
-                        "the key requires an explicit table rewrite"
-                    )
-            else:
-                base = local_frame(spark, [], df.select(*snapshot_cols).schema)
-            merged = merge(base, df, key, ord_col, delete_col)
-            merged.withColumn("p", bucket(F.col(key))).write.mode(
+            merged = merge(df, base_paths, manifests)
+            merged.withColumn("p", _route(pins)).write.mode(
                 "overwrite"
             ).partitionBy("p").parquet(str(vm.version_dir(batch_id)))
-            vm.commit(
-                batch_id,
-                touched,
-                n_buckets,
-                ordered,
-                key,
-                schema=[
-                    (f.name, f.dataType.simpleString())
-                    for f in merged.schema.fields
-                ],
-            )
+            _commit_version(vm, pins, batch_id, touched, merged.schema)
         finally:
             df.unpersist()
 
     return (
-        changes.writeStream.foreachBatch(write_batch)
+        stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -512,10 +563,10 @@ def read_current_partitioned(
         # history floor (compact_store_partitioned writes it — the
         # Delta-checkpoint retention contract) marks where seed
         # content stops being readable as history.
-        floor_rec = read_json_tolerant(store / "_history_floor.json")
+        floor = read_history_floor(store)
         if (
-            floor_rec is not None
-            and as_of < floor_rec["floor"]
+            floor is not None
+            and as_of < floor
             and any(
                 v == -1 and (store / "v=-1" / f"p={p}").exists()
                 for p, v in current.items()
@@ -536,7 +587,7 @@ def read_current_partitioned(
             # content and is the unambiguous new-chain state.
             raise FileNotFoundError(
                 f"as_of={as_of} sits below this store's compaction "
-                f"boundary (history floor {floor_rec['floor']}) and the "
+                f"boundary (history floor {floor}) and the "
                 f"fold still resolves some partition to the v=-1 seed — "
                 f"pre-compaction history is gone and surfacing the "
                 f"seed's head state here would fabricate it"
@@ -648,13 +699,12 @@ def compact_store_partitioned(
         raise FileNotFoundError(f"no committed version under {src_path}")
     meta = manifests[0][1]
     n_buckets = meta["n_buckets"]
-    ordered = meta.get("ordered", False)
     # The routing EXPRESSION is pinned like the key (r16): rewriting
     # a key2shard-routed store (the KV serving layout) with this
     # function's xxhash64 default would scatter every row into shards
     # its readers never probe — present keys would silently serve "".
     bucket_expr = meta.get("bucket_expr", "xxhash64")
-    if bucket_expr not in ("xxhash64", "key2shard"):
+    if bucket_expr not in _ROUTES:
         raise ValueError(
             f"store {src_path} pins unknown bucket_expr={bucket_expr!r}; "
             "refusing to re-bucket with a guessed expression"
@@ -680,13 +730,12 @@ def compact_store_partitioned(
         )
     snap = _read_with_recorded_schema(spark, paths, manifests)
     dst = VersionManifests(dst_path)
-    if bucket_expr == "key2shard":
-        from distributed_mapreduce_spark.operators.kv import key2shard
-
-        p_col = key2shard(F.col(key))
-    else:
-        p_col = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    snap.withColumn("p", p_col).write.mode("overwrite").partitionBy(
+    # the routing pin survives the chain reset
+    pins = {
+        "n_buckets": n_buckets, "ordered": meta.get("ordered", False),
+        "key": key, "bucket_expr": bucket_expr,
+    }
+    snap.withColumn("p", _route(pins)).write.mode("overwrite").partitionBy(
         "p"
     ).parquet(str(dst.version_dir(-1)))
     # History floor (code-review r13; scope refined per ADVICE r13):
@@ -701,22 +750,8 @@ def compact_store_partitioned(
     # Written BEFORE the seed manifest: a crash in between leaves a
     # store with no committed version (unreadable), never a readable
     # store missing its floor.
-    atomic_write_json(dst.store / "_history_floor.json", {"floor": manifests[-1][0]})
-    dst.commit(
-        -1,
-        list(range(n_buckets)),
-        n_buckets,
-        ordered,
-        key,
-        schema=[
-            (f.name, f.dataType.simpleString())
-            for f in snap.schema.fields
-            if f.name != "p"
-        ],
-        # the routing pin survives the chain reset (None keeps the
-        # xxhash64-default payload shape for CDC stores)
-        bucket_expr=None if bucket_expr == "xxhash64" else bucket_expr,
-    )
+    write_history_floor(dst.store, manifests[-1][0])
+    _commit_version(dst, pins, -1, list(range(n_buckets)), snap.drop("p").schema)
     return n_buckets
 
 
@@ -786,14 +821,6 @@ def vacuum_versions_partitioned(store_path: str, keep: int = 2) -> list[int]:
         shutil.rmtree(p)
         deleted.append(v)
     return sorted(deleted)
-
-
-def _id_bucket(col, id_buckets: int):
-    """The ingest stores' id-routing hash: bucket = pmod(xxhash64(id),
-    id_buckets). One definition — the gate's probe buckets and the
-    sidecar's write partitions must agree or pruning silently reads
-    the wrong dirs."""
-    return F.pmod(F.xxhash64(col), F.lit(id_buckets)).cast("int")
 
 
 def _evidence_enabled() -> bool:
@@ -1301,8 +1328,6 @@ def _ingest_manifests_as_of(ms, store_path: str, as_of: int | None):
     0 after the documented fresh-checkpoint resume) whose folds merely
     extend the seed at-or-above the floor stay reachable, as does any
     as_of on an uncompacted store."""
-    import pathlib
-
     manifests = [
         (b, p) for b, p in ms.manifests() if as_of is None or b <= as_of
     ]
@@ -1312,17 +1337,15 @@ def _ingest_manifests_as_of(ms, store_path: str, as_of: int | None):
             + (f" at or below as_of={as_of}" if as_of is not None else "")
         )
     if as_of is not None:
-        floor_rec = read_json_tolerant(
-            pathlib.Path(store_path) / "_history_floor.json"
-        )
+        floor = read_history_floor(store_path)
         if (
-            floor_rec is not None
-            and as_of < floor_rec["floor"]
+            floor is not None
+            and as_of < floor
             and any(b == ms.SEED for b, _ in manifests)
         ):
             raise FileNotFoundError(
                 f"as_of={as_of} sits below this store's compaction "
-                f"boundary (history floor {floor_rec['floor']}) and the "
+                f"boundary (history floor {floor}) and the "
                 "truncated chain still includes the batch=-1 seed — "
                 "pre-compaction history is gone and the seed's folded "
                 "state would fabricate it"
@@ -1455,12 +1478,7 @@ class _ChainReset:
     def commit_seed(self, payload: dict) -> None:
         """Crash-ordered finish: history floor (write-ahead), then the
         seed manifest that makes the destination readable."""
-        import pathlib
-
-        atomic_write_json(
-            pathlib.Path(self.dst_path) / "_history_floor.json",
-            {"floor": self.manifests[-1][0]},
-        )
+        write_history_floor(self.dst_path, self.manifests[-1][0])
         self.dst_ms.seed(payload)
 
 

@@ -1,17 +1,22 @@
 #!/usr/bin/env python3
-"""A/B digest harness for refactors of the ingest sinks and their
-compactors: build one fixed source store per ingest family, compact it,
-and write a CONTENT digest of both stores — row multisets per data dir
-and sidecar (file layout excluded: part-file names embed uuids;
-partition values included), every committed source manifest with
-`elapsed_s` dropped (a wall-clock stamp), the seed manifest payload,
-and the history floor. Run before and after a refactor; the digests
-must be identical. The SemDeDup feed arrives in descending vec_id
-order, so a later batch holds smaller ids than the stored members it
-near-duplicates and the union by min id commits alias (merge)
-records; the run fails if no manifest carries one. The band-index
-tables live in a fresh warehouse under the run's temp dir, so a table
-left by an earlier run cannot answer the first batch's probe.
+"""A/B digest harness for refactors of the manifest-committed sinks and
+their compactors: build one fixed source store per ingest family,
+compact it, and write a CONTENT digest of both stores — row multisets
+per data dir and sidecar (file layout excluded: part-file names embed
+uuids; partition values included), every committed source manifest
+with `elapsed_s` dropped (a wall-clock stamp), the seed manifest
+payload, and the history floor. The versioned stores are digested the
+same way: a CDC table store in the st_q9 configuration, an
+`ordered=True` CDC store with an `init` seed (st_q10's), and a KV
+serving store fed in two batches — every `v=<id>/p=<k>` leaf's sorted
+rows and every `_touched.json` byte for byte. Run before and after a
+refactor; the digests must be identical. The SemDeDup feed arrives in
+descending vec_id order, so a later batch holds smaller ids than the
+stored members it near-duplicates and the union by min id commits
+alias (merge) records; the run fails if no manifest carries one. The
+band-index tables live in a fresh warehouse under the run's temp dir,
+so a table left by an earlier run cannot answer the first batch's
+probe.
 
 Usage: python scripts/compactor_ab.py <out.json> <sf_dir>
   e.g. python scripts/compactor_ab.py before.json <testdata>/sf0.001
@@ -190,6 +195,62 @@ def main() -> int:
     ).awaitTermination()
     S.compact_clean_ingest_store(spark, src, dst)
     digest("clean", src, dst)
+
+    # the versioned stores: CDC (st_q9 and st_q10 configurations) and
+    # KV serving, each over the same two-chunk event feed
+    from distributed_mapreduce_spark.operators.kv import ops_projection
+    from distributed_mapreduce_spark.streaming.kv_serving import (
+        foreach_batch_kv_serving,
+    )
+    from distributed_mapreduce_spark.streaming.replay import event_stream
+
+    (work / "events").mkdir()
+    ev_chunks = stage_chunks(sf, "events", 2, str(work / "events"))
+
+    def digest_versioned(store) -> dict:
+        d = {}
+        for v in pathlib.Path(store).glob("v=*"):
+            d[f"{v.name}/_touched.json"] = (v / "_touched.json").read_text()
+            for leaf in v.glob("p=*"):
+                d[f"{v.name}/{leaf.name}"] = _rows_digest(spark, leaf)
+        return d
+
+    def versioned(name, start):
+        src = work / f"{name}_src"
+        start(str(src), str(work / f"{name}_ckpt")).awaitTermination()
+        digests[name] = digest_versioned(src)
+
+    init = table(spark, sf, "customer").select(
+        "c_custkey", "c_mktsegment", "c_acctbal"
+    )
+    for name, ord_expr, ordered in (
+        ("cdc_st_q9", F.col("event_id"), False),
+        ("cdc_ordered", -F.col("event_id"), True),
+    ):
+        changes = event_stream(spark, ev_chunks).select(
+            (F.col("user_id") + 1).alias("c_custkey"),
+            ord_expr.alias("ord"),
+            (F.col("event_type") == "error").cast("int").alias("is_delete"),
+            F.upper("event_type").alias("c_mktsegment"),
+            F.col("value").alias("c_acctbal"),
+        )
+        versioned(
+            name,
+            lambda src, ckpt, changes=changes, ordered=ordered: (
+                S.foreach_batch_cdc_merge_partitioned(
+                    changes, src, ckpt, "c_custkey", n_buckets=8, init=init,
+                    ordered=ordered,
+                )
+            ),
+        )
+    versioned(
+        "kv_serving",
+        lambda src, ckpt: foreach_batch_kv_serving(
+            ops_projection(event_stream(spark, ev_chunks)), src, ckpt
+        ),
+    )
+    if len(list((work / "kv_serving_src").glob("v=*"))) != 2:
+        raise SystemExit("KV serving feed did not commit two batches")
 
     pathlib.Path(out_path).write_text(json.dumps(digests, indent=1, sort_keys=True))
     print(f"wrote {out_path}")
