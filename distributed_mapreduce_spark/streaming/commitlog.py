@@ -20,7 +20,7 @@ Two physical layouts share the idiom:
   checkpoint's batch ids,
   and `SEED = -1` is the one id no stream batch ever gets — the slot
   a compactor's fold seeds a FRESH store with (see
-  compact_dedup_ingest_store for why in-place compaction can never
+  sinks.compact_ingest_store for why in-place compaction can never
   pick a safe id).
 
 * `VersionManifests` — a PER-VERSION manifest (`v=<id>/_touched.json`)

@@ -20,9 +20,12 @@ carry every sink, and each sink passes only its own step:
   manifest-last commit and the per-batch release; the sink passes its
   own gates and writes.
 
-Scale notes: every sink writes one file per shuffle partition per
-batch; at real scale compact small files downstream (the compact_*
-maintenance functions) or raise the per-batch trigger size.
+Maintenance: `compact_store_partitioned` and
+`vacuum_versions_partitioned` serve both versioned stores;
+`compact_ingest_store` folds any ingest store's batch chain into a fresh
+store's seed, reading the store kind from the store itself. Every sink
+writes one file per shuffle partition per batch; at real scale compact
+or raise the per-batch trigger size.
 """
 
 from __future__ import annotations
@@ -913,22 +916,36 @@ def _probe_buckets(df: DataFrame, col: str, id_buckets: int) -> set:
     }
 
 
-def _write_bucketed(
-    df: DataFrame, bucket_col: str, id_buckets: int, path, want_touched: bool = True
-) -> list[int]:
-    """Write a bucketed sidecar: `df` plus `p = _id_bucket(bucket_col)`,
-    repartitioned on p first so each bucket lands as one file, written
-    `partitionBy("p")` under `path`. Returns the sorted touched-bucket
-    list (the manifest's pruning key), or [] with `want_touched=False`
-    (a sidecar whose probes prune on another sidecar's list — the
-    collect is an extra job)."""
-    out = df.withColumn("p", _id_bucket(F.col(bucket_col), id_buckets))
+# The bucketed sidecars of the ingest stores, each declared once: its
+# subdir -> (the column its bucket is derived from, the manifest key
+# listing its non-empty buckets). `ids` feeds the known-id gate (and
+# SemDeDup's labels), `shingles` the near-dup verify fetch, whose probes
+# prune on the `ids` list, and `hashes` the clean sink's fingerprint
+# gate in its own hash domain. The sinks write and the compactor folds
+# through this table alone.
+_SIDECARS = {
+    "ids": ("id", "touched"),
+    "shingles": ("id", None),
+    "hashes": ("fp", "touched_fp"),
+}
+
+
+def _write_sidecar(
+    ms: ManifestStore, batch_id: int, name: str, df: DataFrame, id_buckets: int
+) -> list[int] | None:
+    """Write `df` as sidecar `name` of batch `batch_id`: `p =
+    _id_bucket(<its bucket column>)`, repartitioned on p so each bucket
+    lands as one file, written `partitionBy("p")`. Returns the sorted
+    list of buckets written (the manifest's pruning key) when the
+    sidecar declares a key, else None (the collect is an extra job)."""
+    col, key = _SIDECARS[name]
+    out = df.withColumn("p", _id_bucket(F.col(col), id_buckets))
     touched = (
-        sorted(r["p"] for r in out.select("p").distinct().collect())
-        if want_touched
-        else []
+        sorted(r["p"] for r in out.select("p").distinct().collect()) if key else None
     )
-    out.repartition("p").write.mode("overwrite").partitionBy("p").parquet(str(path))
+    out.repartition("p").write.mode("overwrite").partitionBy("p").parquet(
+        str(ms.batch_dir(batch_id, name))
+    )
     return touched
 
 
@@ -1194,11 +1211,10 @@ def _append_dedup_state(
     )
 
     acc_id = accepted.select(F.col(id_col).alias("id"))
-    touched_acc = _write_bucketed(acc_id, "id", id_buckets, b.dir("ids"))
+    touched_acc = _write_sidecar(b.ms, b.batch_id, "ids", acc_id, id_buckets)
     acc_sh = sh_b.join(acc_id, "id", "left_semi")
-    _write_bucketed(
-        acc_sh.select("id", "shingle"), "id", id_buckets, b.dir("shingles"),
-        want_touched=False,
+    _write_sidecar(
+        b.ms, b.batch_id, "shingles", acc_sh.select("id", "shingle"), id_buckets
     )
     acc_sig = minhash_signatures(acc_sh, num_hashes)
     if b.spark.catalog.tableExists(table_name):
@@ -1259,8 +1275,8 @@ def foreach_batch_dedup_ingest(
     why the keep-first step below normalizes both-in-batch pairs to
     (min, max) before the greedy pass (ADVICE r9;
     ✓tests/test_stream_sinks.py::test_dedup_ingest_torn_append_replay). compact_lsh_band_index bounds the index's append chain;
-    compact_dedup_ingest_store folds the batch chain into a fresh
-    store's seed.
+    compact_ingest_store folds the batch chain into a fresh store's
+    seed.
 
     Per-batch cost model (VERDICT r9 #1 — every store-side term is
     bucket-pruned, none scans the committed store):
@@ -1316,8 +1332,10 @@ def foreach_batch_dedup_ingest(
     return _ingest_sink(docs_stream, store_path, checkpoint, id_buckets, id_col, step)
 
 
-def _ingest_manifests_as_of(ms, store_path: str, as_of: int | None):
-    """Committed (batch, payload) chain of an ingest store, optionally
+def _ingest_dirs_as_of(store_path: str, as_of: int | None, subdir: str | None = None):
+    """(manifests, dirs) of an ingest store: its committed (batch,
+    payload) chain and that chain's existing `[subdir/]batch=<id>` data
+    dirs, raising when there are none. The chain is optionally
     truncated to batch ids ≤ `as_of` — VERSION AS OF on the batch
     chain (VERDICT r13 #6), with the compaction seed-semantics guard
     the CDC layouts established (ADVICE r13): the `batch=-1` seed of a
@@ -1328,6 +1346,7 @@ def _ingest_manifests_as_of(ms, store_path: str, as_of: int | None):
     0 after the documented fresh-checkpoint resume) whose folds merely
     extend the seed at-or-above the floor stay reachable, as does any
     as_of on an uncompacted store."""
+    ms = ManifestStore(store_path)
     manifests = [
         (b, p) for b, p in ms.manifests() if as_of is None or b <= as_of
     ]
@@ -1350,7 +1369,10 @@ def _ingest_manifests_as_of(ms, store_path: str, as_of: int | None):
                 "pre-compaction history is gone and the seed's folded "
                 "state would fabricate it"
             )
-    return manifests
+    dirs = ms.batch_dirs(subdir, manifests=manifests)
+    if not dirs:
+        raise ValueError(f"no committed batches under {store_path}")
+    return manifests, dirs
 
 
 def read_ingest_accepted(spark, store_path: str, as_of: int | None = None) -> DataFrame:
@@ -1364,159 +1386,9 @@ def read_ingest_accepted(spark, store_path: str, as_of: int | None = None) -> Da
     k committed (the keep-first policy only ever APPENDS survivors, so
     the prefix union IS the historical state). Refuses below a
     compacted store's history floor when the fold would surface the
-    seed — see _ingest_manifests_as_of."""
-    ms = ManifestStore(store_path)
-    manifests = _ingest_manifests_as_of(ms, store_path, as_of)
-    dirs = ms.batch_dirs("accepted", manifests=manifests)
-    if not dirs:
-        raise ValueError(f"no committed batches under {store_path}")
+    seed — see _ingest_dirs_as_of."""
+    _, dirs = _ingest_dirs_as_of(store_path, as_of, "accepted")
     return spark.read.parquet(*dirs)
-
-
-def _sidecar_leaf_dirs(ms, subdir: str, manifests=None) -> list[str]:
-    """Existing `batch=<id>/p=<k>` leaf dirs of a bucketed sidecar
-    across committed batches (a zero-accepted batch writes no leaf
-    dirs, so its dir contributes nothing rather than breaking schema
-    inference). Pass `manifests` so a compactor derives these from the
-    SAME committed-batch snapshot as its data dirs — re-listing could
-    catch a batch a live stream committed in between, folding its ids
-    without its vectors (ADVICE r10)."""
-    import pathlib
-
-    return [
-        str(p)
-        for b in ms.batch_dirs(subdir, manifests=manifests)
-        for p in sorted(pathlib.Path(b).glob("p=*"))
-    ]
-
-
-class _ChainReset:
-    """The shared skeleton of the five ingest-store compactors
-    (VERDICT r15 #4): ONE committed-batch snapshot taken up front
-    (ADVICE r10 — every dir set derives from it, so a live stream
-    committing mid-compaction cannot desync data from sidecars), the
-    pinned id_buckets recovered, per-family folds, then the
-    crash-ordered finish — `_history_floor.json` written AHEAD of the
-    batch=-1 seed manifest (a crash in between leaves a store with no
-    committed batch, never a readable store missing its floor; the
-    compact_store_partitioned discipline). Each compactor composes
-    the folds it needs; family-specific state (SemDeDup's alias
-    resolution, the clean sink's fp domain) stays in the caller."""
-
-    def __init__(self, spark, src_path: str, dst_path: str):
-        self.spark = spark
-        self.src_path, self.dst_path = src_path, dst_path
-        self.src_ms, self.dst_ms = ManifestStore(src_path), ManifestStore(dst_path)
-        self.manifests = self.src_ms.manifests()
-        if not self.manifests:
-            raise ValueError(f"no committed batches under {src_path}")
-        self.id_buckets = _pinned_id_buckets(self.manifests, src_path)
-
-    def fold_accepted(self) -> int:
-        """Union the committed accepted/batch=<id> partitions into the
-        destination's batch=-1 seed; returns the row count (the value
-        every compactor returns)."""
-        dirs = self.src_ms.batch_dirs("accepted", manifests=self.manifests)
-        if not dirs:
-            raise ValueError(f"no committed batches under {self.src_path}")
-        acc = self.spark.read.parquet(*dirs)
-        n = acc.count()
-        acc.write.mode("overwrite").parquet(
-            str(self.dst_ms.batch_dir(-1, "accepted"))
-        )
-        return n
-
-    def fold_rows_cell_partitioned(self):
-        """The vector-store data fold (ANN/SemDeDup): committed batch
-        trees read under basePath (cell stays a column), batch dropped,
-        written cell-partitioned into the seed. Returns the folded
-        frame LAZILY — callers count / collect cells / rewrite labels
-        on it before or instead of this helper's write, so it only
-        reads here."""
-        dirs = self.src_ms.batch_dirs(manifests=self.manifests)
-        if not dirs:
-            raise ValueError(f"no committed batches under {self.src_path}")
-        return (
-            self.spark.read.option("basePath", self.src_path)
-            .parquet(*dirs)
-            .drop("batch")
-        )
-
-    def write_rows_cell_partitioned(self, rows) -> None:
-        rows.write.mode("overwrite").partitionBy("cell").parquet(
-            str(self.dst_ms.batch_dir(-1))
-        )
-
-    def fold_ids(self) -> list[int]:
-        """The known-id-gate sidecar fold into `ids/batch=-1/p=<bucket>`;
-        returns the seed's `touched` list. Losing the sidecar would
-        silently disarm the known-id gate and a fresh-checkpoint replay
-        would duplicate every row (regression-tested per sink)."""
-        return self.fold_bucketed_sidecar("ids", ["id"], "id", want_touched=True)
-
-    def fold_bucketed_sidecar(
-        self, subdir: str, cols: list[str], bucket_col: str,
-        want_touched: bool = False,
-    ) -> list[int]:
-        """Fold a bucketed sidecar (`ids`, `shingles`, `hashes`) into the
-        seed, re-deriving each bucket from `bucket_col` with the pinned
-        id_buckets (routing stays stable ⇒ post-compaction gate probes
-        prune identically). `want_touched=True` additionally collects
-        the seed's touched-bucket list (the fp domain records its own
-        `touched_fp`; the shingle fold never needed one)."""
-        dirs = _sidecar_leaf_dirs(self.src_ms, subdir, manifests=self.manifests)
-        if not dirs:
-            return []
-        return _write_bucketed(
-            self.spark.read.parquet(*dirs).select(*cols),
-            bucket_col,
-            self.id_buckets,
-            self.dst_ms.batch_dir(-1, subdir),
-            want_touched,
-        )
-
-    def commit_seed(self, payload: dict) -> None:
-        """Crash-ordered finish: history floor (write-ahead), then the
-        seed manifest that makes the destination readable."""
-        write_history_floor(self.dst_path, self.manifests[-1][0])
-        self.dst_ms.seed(payload)
-
-
-def compact_dedup_ingest_store(spark, src_path: str, dst_path: str) -> int:
-    """Consolidate a foreach_batch_dedup_ingest store: all committed
-    accepted batch partitions and the id/shingle sidecars fold into a
-    FRESH store's single `batch=-1` seed (one manifest instead of one
-    per micro-batch — the same chain-reset contract as
-    compact_store_partitioned, and for the same reason a fresh store:
-    batch ids are checkpoint ids, so no in-place number is
-    collision-safe; -1 is the one id no stream batch ever gets). The
-    sidecars keep their id-bucket partitioning (re-derived from the id
-    with the pinned id_buckets, so routing is stable) — after
-    compaction a gate probe reads at most ONE dir per touched bucket.
-    Compact the band-index TABLE separately with
-    compact_lsh_band_index — it is keyed by content, not batch, so it
-    needs no seed trick.
-
-    Resume contract: point the stream at dst_path with a FRESH
-    checkpoint. The full-feed replay CONVERGES on the compacted store
-    (tested): every previously-accepted id is skipped by the sink's
-    known-id gate, every previously-rejected doc re-rejects
-    deterministically against the identical surviving store, so the
-    surviving set — and the one-shot-batch equality — is unchanged.
-    Returns the number of accepted docs seeded."""
-    cr = _ChainReset(spark, src_path, dst_path)
-    n = cr.fold_accepted()
-    touched = cr.fold_ids()
-    cr.fold_bucketed_sidecar("shingles", ["id", "shingle"], "id")
-    cr.commit_seed(
-        {
-            "accepted": n,
-            "compacted_from": len(cr.manifests),
-            "id_buckets": cr.id_buckets,
-            "touched": touched,
-        }
-    )
-    return n
 
 
 def foreach_batch_ann_ingest(
@@ -1541,7 +1413,7 @@ def foreach_batch_ann_ingest(
     (invisible to readers until the manifest lands). A known-id gate
     (anti-join against committed ids) makes a FRESH-CHECKPOINT
     full-feed replay converge — the property that lets a compacted
-    store (compact_ann_ingest_store) resume cleanly, and that
+    store (compact_ingest_store) resume cleanly, and that
     append_ivf_store alone cannot give (a replayed append would
     duplicate vectors, and duplicated ids DO corrupt top-k, unlike the
     dedup sink's duplicate-tolerant band rows — which is exactly why
@@ -1557,7 +1429,7 @@ def foreach_batch_ann_ingest(
     Probes (ann_ingest_topk) read only committed batch dirs and prune
     to the nprobe nearest cells at the PARTITION level — per-probe IO
     is ~nprobe/num_cells of the committed store, same as the
-    write_ivf_store layout; compact_ann_ingest_store folds the batch
+    write_ivf_store layout; compact_ingest_store folds the batch
     chain back into that single-tree layout when the per-batch dir
     count grows."""
     from distributed_mapreduce_spark.operators.similarity import (
@@ -1572,8 +1444,8 @@ def foreach_batch_ann_ingest(
         coded = b.persist(coded)  # feeds count + data write + sidecar
         n = coded.count()
         coded.write.mode("overwrite").partitionBy("cell").parquet(b.dir())
-        touched_acc = _write_bucketed(
-            coded.select(F.col(id_col).alias("id")), "id", id_buckets, b.dir("ids")
+        touched_acc = _write_sidecar(
+            b.ms, b.batch_id, "ids", coded.select(F.col(id_col).alias("id")), id_buckets
         )
         return {"vectors": n, "touched": touched_acc}
 
@@ -1595,16 +1467,11 @@ def ann_ingest_members(
     i.e. the index exactly as it stood after batch k committed (the
     sink only ever appends whole batches). Refuses below a compacted
     store's history floor when the fold would surface the seed — see
-    _ingest_manifests_as_of."""
+    _ingest_dirs_as_of."""
     import pathlib
 
-    store = pathlib.Path(store_path)
-    ms = ManifestStore(store)
-    manifests = _ingest_manifests_as_of(ms, store_path, as_of)
-    dirs = ms.batch_dirs(manifests=manifests)
-    if not dirs:
-        raise ValueError(f"no committed batches under {store_path}")
-    return spark.read.option("basePath", str(store)).parquet(*dirs)
+    _, dirs = _ingest_dirs_as_of(store_path, as_of)
+    return spark.read.option("basePath", str(pathlib.Path(store_path))).parquet(*dirs)
 
 
 def ann_ingest_topk(
@@ -1642,35 +1509,6 @@ def ann_ingest_topk(
     if codebooks is not None:
         return pq_adc_topk(cand, codebooks, query_vec, k, id_col)
     return topk_cosine_literal(cand, query_vec, k, id_col, vec_col)
-
-
-def compact_ann_ingest_store(spark, src_path: str, dst_path: str) -> int:
-    """Fold an ANN ingest store's batch chain into a fresh store's
-    single `batch=-1` seed (same -1-seed contract as
-    compact_dedup_ingest_store; the known-id gate makes a
-    fresh-checkpoint resume against the compacted store converge).
-    Returns the vector count seeded. The seed keeps the
-    `batch=-1/cell=<k>/` shape so ann_ingest_topk's partition pruning
-    is unchanged; cell-level small files within the seed are bounded
-    by compact_partitioned(dst/batch=-1, ["cell"]). The id sidecar
-    folds into `ids/batch=-1/p=<bucket>` with the SOURCE's pinned
-    id_buckets — losing it would silently disarm the known-id gate and
-    a fresh-checkpoint replay would duplicate every vector (duplicate
-    ids corrupt top-k; regression-tested)."""
-    cr = _ChainReset(spark, src_path, dst_path)
-    rows = cr.fold_rows_cell_partitioned()
-    n = rows.count()
-    cr.write_rows_cell_partitioned(rows)
-    touched = cr.fold_ids()
-    cr.commit_seed(
-        {
-            "vectors": n,
-            "compacted_from": len(cr.manifests),
-            "id_buckets": cr.id_buckets,
-            "touched": touched,
-        }
-    )
-    return n
 
 
 # --- streaming SemDeDup ingest (VERDICT r13 #2) -----------------------------
@@ -1919,15 +1757,16 @@ def foreach_batch_semdedup_ingest(
             ids_out = ids_out.join(F.broadcast(comp_df), id_col, "left")
         else:
             ids_out = ids_out.withColumn("__comp", F.lit(None).cast("bigint"))
-        touched_acc = _write_bucketed(
+        touched_acc = _write_sidecar(
+            b.ms,
+            b.batch_id,
+            "ids",
             ids_out.select(
                 F.col(id_col).alias("id"),
                 F.coalesce("__comp", F.col(id_col)).alias("comp"),
                 "cell",
             ),
-            "id",
             id_buckets,
-            b.dir("ids"),
         )
         return {
             "vectors": n,
@@ -1954,10 +1793,11 @@ def read_semdedup_representatives(
     only manifests with batch id ≤ k — labels AND merge records — so
     the read reproduces the surviving set exactly as it stood after
     batch k committed. Raises if no batch ≤ k is committed."""
-    ms = ManifestStore(store_path)
-    manifests = _ingest_manifests_as_of(ms, store_path, as_of)
-    ids = spark.read.option("basePath", str(ms.root / "ids")).parquet(
-        *ms.batch_dirs("ids", manifests=manifests)
+    import pathlib
+
+    manifests, dirs = _ingest_dirs_as_of(store_path, as_of, "ids")
+    ids = spark.read.option("basePath", str(pathlib.Path(store_path) / "ids")).parquet(
+        *dirs
     )
     return (
         _canonical_labels(spark, ids, manifests)
@@ -1968,56 +1808,6 @@ def read_semdedup_representatives(
         )
         .select(F.col("comp").alias("rep_id"), "cell", "n_members")
     )
-
-
-def compact_semdedup_ingest_store(spark, src_path: str, dst_path: str) -> int:
-    """Consolidate a foreach_batch_semdedup_ingest store: members fold
-    into a fresh store's `batch=-1` seed (cell partitioning kept, so
-    probe pruning is unchanged), and the id sidecar folds with every
-    label RESOLVED through the source's alias log — the seed starts
-    with canonical labels and an EMPTY merge log, so the read-time
-    alias fold resets from O(#merges-ever) back to zero alongside the
-    manifest chain resetting to one (the compact_ann_ingest_store
-    chain-reset contract; -1 is the one id no stream batch gets).
-
-    Contract: maintenance window (stream stopped), then resume against
-    `dst_path` with a FRESH checkpoint — the known-id gate makes the
-    full-feed replay converge (replayed docs contribute no rows and no
-    merges; ✓tested). A `_history_floor.json` is written AHEAD of the
-    seed manifest, so time travel below the source's newest batch
-    refuses on the compacted store instead of surfacing the seed's
-    folded state as history (the shared _ingest_manifests_as_of
-    guard). Returns the number of member vectors seeded."""
-    cr = _ChainReset(spark, src_path, dst_path)
-    rows = cr.fold_rows_cell_partitioned()
-    n = rows.count()
-    cr.write_rows_cell_partitioned(rows)
-    cells = sorted(
-        r["cell"] for r in rows.select("cell").distinct().collect()
-    )
-    # bake the alias resolution into the seeded labels — the id
-    # sidecar therefore folds HERE (labels rewritten), not through
-    # fold_ids
-    id_dirs = _sidecar_leaf_dirs(cr.src_ms, "ids", manifests=cr.manifests)
-    ids = spark.read.parquet(*id_dirs).select("id", "comp", "cell")
-    _write_bucketed(
-        _canonical_labels(spark, ids, cr.manifests),
-        "id",
-        cr.id_buckets,
-        cr.dst_ms.batch_dir(-1, "ids"),
-        want_touched=False,
-    )
-    cr.commit_seed(
-        {
-            "vectors": n,
-            "compacted_from": len(cr.manifests),
-            "id_buckets": cr.id_buckets,
-            "touched": list(range(cr.id_buckets)),
-            "cells": cells,
-            "merges": [],
-        }
-    )
-    return n
 
 
 # ── streaming decontamination ingest (VERDICT r14 #2) ────────────────
@@ -2283,8 +2073,12 @@ def foreach_batch_decontam_ingest(
         )
         n_acc = accepted.count()
         accepted.write.mode("overwrite").parquet(b.dir("accepted"))
-        touched_acc = _write_bucketed(
-            accepted.select(F.col(id_col).alias("id")), "id", id_buckets, b.dir("ids")
+        touched_acc = _write_sidecar(
+            b.ms,
+            b.batch_id,
+            "ids",
+            accepted.select(F.col(id_col).alias("id")),
+            id_buckets,
         )
         # gate_bytes stays the known-id gate's alone: it is the ONLY
         # accepted-store-dependent read (the dedup-ingest residual);
@@ -2466,8 +2260,12 @@ def foreach_batch_clean_ingest(
         # carried from stage 4, NOT recomputed (md5 is
         # deterministic, so the value is identical; the saved work
         # is the second full-text scan)
-        touched_fp = _write_bucketed(
-            accepted.select(F.col("_fp").alias("fp")), "fp", id_buckets, b.dir("hashes")
+        touched_fp = _write_sidecar(
+            b.ms,
+            b.batch_id,
+            "hashes",
+            accepted.select(F.col("_fp").alias("fp")),
+            id_buckets,
         )
 
         why = {
@@ -2492,57 +2290,87 @@ def foreach_batch_clean_ingest(
     return _ingest_sink(docs_stream, store_path, checkpoint, id_buckets, id_col, step)
 
 
-def compact_decontam_ingest_store(spark, src_path: str, dst_path: str) -> int:
-    """Consolidate a foreach_batch_decontam_ingest store: accepted
-    batches + the id sidecar fold into a FRESH store's `batch=-1` seed
-    (the compact_dedup_ingest_store chain-reset contract — manifests
-    K → 1, gate probes read ≤ one dir per bucket). Resume against
-    dst_path with a FRESH checkpoint: the full-feed replay converges —
-    accepted ids skip via the known-id gate, rejected docs re-reject
-    deterministically against the STATIC benchmark index (stronger
-    than the dedup case: no store-shape argument needed at all).
-    Returns the number of accepted docs seeded."""
-    cr = _ChainReset(spark, src_path, dst_path)
-    n = cr.fold_accepted()
-    touched = cr.fold_ids()
-    cr.commit_seed(
-        {
-            "accepted": n,
-            "compacted_from": len(cr.manifests),
-            "id_buckets": cr.id_buckets,
-            "touched": touched,
-        }
-    )
-    return n
+def compact_ingest_store(spark, src_path: str, dst_path: str) -> int:
+    """Fold the batch chain of any ingest store (dedup, ANN, SemDeDup,
+    decontam, clean) into a FRESH store's single `batch=-1` seed: one
+    manifest instead of one per micro-batch. A fresh store because
+    batch ids are checkpoint ids, so no in-place number is
+    collision-safe; -1 is the one id no stream batch ever gets (the
+    compact_store_partitioned chain-reset contract). What to fold is
+    read from the source, every dir set from ONE committed-manifest
+    snapshot (a stream committing mid-compaction cannot desync data
+    from sidecars, ADVICE r10):
 
+      * rows: `accepted/` when the store has it (count key `accepted`),
+        else the cell-partitioned batch trees (`vectors`), seeded as
+        `batch=-1/cell=<k>/` so probe pruning is unchanged;
+      * every `_SIDECARS` entry the store holds, each bucket re-derived
+        with the source's pinned id_buckets (routing stays stable, so a
+        gate probe reads at most one dir per bucket) and its manifest
+        key listing the buckets written. Losing `ids` would silently
+        disarm the known-id gate. When the source carries SemDeDup
+        `merges`, the labels are resolved through the alias log, so
+        the seed starts with canonical labels and an empty merge log;
+      * `cells` is recorded when the source manifests carry it.
 
-def compact_clean_ingest_store(spark, src_path: str, dst_path: str) -> int:
-    """Consolidate a foreach_batch_clean_ingest store: accepted
-    batches + the id, FINGERPRINT and shingle sidecars fold into a
-    FRESH store's `batch=-1` seed. The fp sidecar keeps its own hash
-    domain (bucket re-derived from fp; `touched_fp` recorded in the
-    seed manifest so the fp gate's pruned read stays manifest-driven).
-    Compact the near-dup band-index TABLE separately with
-    compact_lsh_band_index (content-keyed, no seed trick needed).
-    Resume with a FRESH checkpoint converges: accepted ids skip via
-    the known-id gate; re-fed rejects re-reject deterministically
-    (pure gates against the static index; exact dups against the
-    seeded fp sidecar; near-dups against the identical surviving
-    state). Returns the number of accepted docs seeded."""
-    cr = _ChainReset(spark, src_path, dst_path)
-    n = cr.fold_accepted()
-    touched = cr.fold_ids()
-    cr.fold_bucketed_sidecar("shingles", ["id", "shingle"], "id")
-    touched_fp = cr.fold_bucketed_sidecar(
-        "hashes", ["fp"], "fp", want_touched=True
-    )
-    cr.commit_seed(
-        {
-            "accepted": n,
-            "compacted_from": len(cr.manifests),
-            "id_buckets": cr.id_buckets,
-            "touched": touched,
-            "touched_fp": touched_fp,
-        }
-    )
+    Crash order: `_history_floor.json` (the newest source batch) is
+    written AHEAD of the seed manifest — a crash in between leaves a
+    store with no committed batch, never a readable store missing its
+    floor — and time travel below the floor refuses
+    (_ingest_dirs_as_of).
+
+    Resume contract: stop the stream, compact, then point it at
+    dst_path with a FRESH checkpoint. The full-feed replay converges:
+    accepted ids skip via the known-id gate, and rejected docs
+    re-reject deterministically against the identical surviving state
+    (tested per sink). The dedup and clean sinks' band-index TABLE is
+    content-keyed and compacts separately (compact_lsh_band_index);
+    cell-level small files within a vector seed compact with
+    compact_partitioned(dst/batch=-1, ["cell"]). Returns the number of
+    rows seeded."""
+    import pathlib
+
+    src, dst = ManifestStore(src_path), ManifestStore(dst_path)
+    manifests = src.manifests()
+    if not manifests:
+        raise ValueError(f"no committed batches under {src_path}")
+    id_buckets = _pinned_id_buckets(manifests, src_path)
+    carries = {k for _, m in manifests for k in m}
+    acc_dirs = src.batch_dirs("accepted", manifests=manifests)
+    dirs = acc_dirs or src.batch_dirs(manifests=manifests)
+    if not dirs:
+        raise ValueError(f"no committed batches under {src_path}")
+    if acc_dirs:
+        count_key, rows = "accepted", spark.read.parquet(*dirs)
+        out, seed_dir = rows.write, dst.batch_dir(dst.SEED, "accepted")
+    else:
+        count_key = "vectors"
+        rows = spark.read.option("basePath", str(src.root)).parquet(*dirs)
+        rows = rows.drop("batch")
+        out, seed_dir = rows.write.partitionBy("cell"), dst.batch_dir(dst.SEED)
+    n = rows.count()
+    out.mode("overwrite").parquet(str(seed_dir))
+    payload = {count_key: n, "compacted_from": len(manifests), "id_buckets": id_buckets}
+    if "cells" in carries:
+        payload["cells"] = sorted(
+            r["cell"] for r in rows.select("cell").distinct().collect()
+        )
+    for name, (_, key) in _SIDECARS.items():
+        leaves = [
+            str(leaf)
+            for d in src.batch_dirs(name, manifests=manifests)
+            for leaf in sorted(pathlib.Path(d).glob("p=*"))
+        ]
+        touched = []  # a zero-row batch writes no leaf dirs
+        if leaves:
+            side = spark.read.parquet(*leaves)
+            if name == "ids" and "merges" in carries:
+                side = _canonical_labels(spark, side, manifests)
+            touched = _write_sidecar(dst, dst.SEED, name, side, id_buckets)
+        if key and (leaves or key in carries):
+            payload[key] = touched
+    if "merges" in carries:
+        payload["merges"] = []
+    write_history_floor(dst_path, manifests[-1][0])
+    dst.seed(payload)
     return n

@@ -57,6 +57,9 @@ def main() -> int:
     work = pathlib.Path(tempfile.mkdtemp(prefix="dmr_compab_"))
     # read by the session module at import: set before importing it
     os.environ["SPARK_GRAFT_WAREHOUSE"] = str(work / "warehouse")
+    # the session's 8g default lets the driver heap grow to ~5 GB RSS
+    # before the GC reclaims it; this fixture-scale run needs far less
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     from pyspark.sql import functions as F
 
     from distributed_mapreduce_spark.session import get_spark
@@ -142,7 +145,7 @@ def main() -> int:
     S.foreach_batch_dedup_ingest(
         doc_stream(), src, str(work / "dedup_ckpt"), "t_compab_dedup_bands"
     ).awaitTermination()
-    S.compact_dedup_ingest_store(spark, src, dst)
+    S.compact_ingest_store(spark, src, dst)
     digest("dedup", src, dst)
 
     # ann / semdedup share frozen centroids
@@ -155,7 +158,7 @@ def main() -> int:
     S.foreach_batch_ann_ingest(
         emb_stream(), src, str(work / "ann_ckpt"), cents
     ).awaitTermination()
-    S.compact_ann_ingest_store(spark, src, dst)
+    S.compact_ingest_store(spark, src, dst)
     digest("ann", src, dst)
 
     # semdedup (kmeans_train centroid format, the dedup_q19 loop)
@@ -172,7 +175,7 @@ def main() -> int:
     ).awaitTermination()
     if not any(m.get("merges") for _, m in ManifestStore(src).manifests()):
         raise SystemExit("semdedup feed committed no merge record")
-    S.compact_semdedup_ingest_store(spark, src, dst)
+    S.compact_ingest_store(spark, src, dst)
     digest("semdedup", src, dst)
 
     # decontam + clean share an index
@@ -186,14 +189,14 @@ def main() -> int:
     S.foreach_batch_decontam_ingest(
         doc_stream(), src, str(work / "dec_ckpt"), index
     ).awaitTermination()
-    S.compact_decontam_ingest_store(spark, src, dst)
+    S.compact_ingest_store(spark, src, dst)
     digest("decontam", src, dst)
 
     src, dst = str(work / "clean_src"), str(work / "clean_dst")
     S.foreach_batch_clean_ingest(
         doc_stream(), src, str(work / "clean_ckpt"), "t_compab_clean_bands", index
     ).awaitTermination()
-    S.compact_clean_ingest_store(spark, src, dst)
+    S.compact_ingest_store(spark, src, dst)
     digest("clean", src, dst)
 
     # the versioned stores: CDC (st_q9 and st_q10 configurations) and

@@ -179,7 +179,7 @@ def test_dedup_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
     from distributed_mapreduce_spark.sources import table
     from distributed_mapreduce_spark.streaming import commitlog
     from distributed_mapreduce_spark.streaming.sinks import (
-        compact_dedup_ingest_store,
+        compact_ingest_store,
         foreach_batch_dedup_ingest,
         read_ingest_accepted,
     )
@@ -261,7 +261,7 @@ def test_dedup_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
         # full-feed replay converges via the known-id gate, and a
         # re-crawled chunk (duplicate text, fresh ids) mostly rejects
         store2 = str(tmp_path / "store2")
-        assert compact_dedup_ingest_store(spark, store, store2) == len(got)
+        assert compact_ingest_store(spark, store, store2) == len(got)
         compact_lsh_band_index(spark, tbl_name)
         recrawl = [(r.doc_id + 1_000_000, r.text) for r in rows[:third]]
         import pyarrow as pa
@@ -310,7 +310,7 @@ def test_ann_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
     from distributed_mapreduce_spark.streaming import commitlog
     from distributed_mapreduce_spark.streaming.sinks import (
         ann_ingest_topk,
-        compact_ann_ingest_store,
+        compact_ingest_store,
         foreach_batch_ann_ingest,
     )
 
@@ -389,7 +389,7 @@ def test_ann_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
 
         # compact → fresh-checkpoint resume converges, probe unchanged
         store2 = str(tmp_path / "store2")
-        assert compact_ann_ingest_store(spark, store, store2) == len(rows)
+        assert compact_ingest_store(spark, store, store2) == len(rows)
         run(store2, str(tmp_path / "ckpt2"))
         back = spark.read.option("basePath", store2).parquet(
             *[str(p) for p in pathlib.Path(store2).glob("batch=*")]
@@ -535,7 +535,7 @@ def test_clean_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
     from distributed_mapreduce_spark.streaming import commitlog
     from distributed_mapreduce_spark.streaming.sinks import (
         build_decontam_index,
-        compact_clean_ingest_store,
+        compact_ingest_store,
         foreach_batch_clean_ingest,
         read_ingest_accepted,
     )
@@ -623,7 +623,7 @@ def test_clean_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
 
         # compaction + fresh-checkpoint full-feed resume converges
         store2 = str(tmp_path / "store2")
-        assert compact_clean_ingest_store(spark, store, store2) == len(got)
+        assert compact_ingest_store(spark, store, store2) == len(got)
         run(store2, str(tmp_path / "ckpt2"), "lc_clean_idx")
         got2 = sorted(
             r.doc_id for r in read_ingest_accepted(spark, store2).collect()

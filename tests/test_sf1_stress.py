@@ -675,11 +675,11 @@ def test_sf1_dedup_ingest_scaling(stress_spark, sf1_dir, tmp_path):
             compact_lsh_band_index,
         )
         from distributed_mapreduce_spark.streaming.sinks import (
-            compact_dedup_ingest_store,
+            compact_ingest_store,
         )
 
         store2 = str(tmp_path / "store2")
-        assert compact_dedup_ingest_store(stress_spark, store, store2) == n_acc
+        assert compact_ingest_store(stress_spark, store, store2) == n_acc
         compact_lsh_band_index(stress_spark, tbl_name)
 
         base2 = time.time()
@@ -806,15 +806,15 @@ def test_sf1_ann_ingest_scaling(stress_spark, sf1_dir, tmp_path):
     # ── compaction resets the chain-growth term ──────────────────────
     # The mild s/batch upward trend above is Spark FILE LISTING over
     # the growing batch×bucket dir count — the cost
-    # compact_ann_ingest_store exists to fold away. Demonstrate it:
+    # compact_ingest_store exists to fold away. Demonstrate it:
     # fold the 16-dir chain into one batch=-1 seed, resume with a
     # fresh checkpoint (full-feed replay converges via the known-id
     # gate), feed 4 genuinely NEW chunks, and require the new batches'
     # s/batch back at the original early-window level.
-    from distributed_mapreduce_spark.streaming.sinks import compact_ann_ingest_store
+    from distributed_mapreduce_spark.streaming.sinks import compact_ingest_store
 
     store2 = str(tmp_path / "store2")
-    n = compact_ann_ingest_store(stress_spark, store, store2)
+    n = compact_ingest_store(stress_spark, store, store2)
     assert n == vecs.num_rows
 
     import pyarrow.compute as pc

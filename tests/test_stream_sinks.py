@@ -670,7 +670,7 @@ def test_streaming_dedup_ingest_matches_one_shot(spark, tmp_path):
 
 @pytest.mark.full_tier
 def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
-    """compact_dedup_ingest_store + the known-id gate: the batch
+    """compact_ingest_store + the known-id gate: the batch
     chain folds into a fresh store's batch=-1 seed (manifest chain
     K → 1), a FRESH-checkpoint resume replays the whole feed onto the
     compacted store and CONVERGES — no survivor is re-accepted, no
@@ -688,7 +688,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
     )
     from distributed_mapreduce_spark.sources import table
     from distributed_mapreduce_spark.streaming.sinks import (
-        compact_dedup_ingest_store,
+        compact_ingest_store,
         foreach_batch_dedup_ingest,
         read_ingest_accepted,
     )
@@ -739,7 +739,7 @@ def test_dedup_ingest_compaction_and_fresh_checkpoint_replay(spark, tmp_path):
         got1 = sorted(r.doc_id for r in read_ingest_accepted(spark, s1).collect())
 
         s2 = str(tmp_path / "s2")
-        n = compact_dedup_ingest_store(spark, s1, s2)
+        n = compact_ingest_store(spark, s1, s2)
         assert n == len(got1)
         compact_lsh_band_index(spark, tbl_name, n_buckets=32)
         assert (
@@ -798,7 +798,7 @@ def test_streaming_ann_ingest_matches_one_shot_store(spark, tmp_path):
     from distributed_mapreduce_spark.sources import table
     from distributed_mapreduce_spark.streaming.sinks import (
         ann_ingest_topk,
-        compact_ann_ingest_store,
+        compact_ingest_store,
         foreach_batch_ann_ingest,
     )
 
@@ -865,7 +865,7 @@ def test_streaming_ann_ingest_matches_one_shot_store(spark, tmp_path):
 
     # compact -> fresh checkpoint replay converges (known-id gate)
     store2 = str(tmp_path / "store2")
-    n = compact_ann_ingest_store(spark, store, store2)
+    n = compact_ingest_store(spark, store, store2)
     assert n == len(rows)
     run(store2, str(tmp_path / "ckpt2"))
     back = spark.read.option("basePath", store2).parquet(
@@ -1544,8 +1544,7 @@ def test_ingest_store_time_travel(spark, tmp_path):
     from distributed_mapreduce_spark.streaming.sinks import (
         ann_ingest_members,
         ann_ingest_topk,
-        compact_ann_ingest_store,
-        compact_dedup_ingest_store,
+        compact_ingest_store,
         foreach_batch_dedup_ingest,
         foreach_batch_ann_ingest,
         read_ingest_accepted,
@@ -1607,7 +1606,7 @@ def test_ingest_store_time_travel(spark, tmp_path):
             assert got == want, f"dedup as_of={k}"
         # compaction: below the floor the seed-including fold refuses
         dstore2 = str(tmp_path / "dstore2")
-        compact_dedup_ingest_store(spark, dstore, dstore2)
+        compact_ingest_store(spark, dstore, dstore2)
         with pytest.raises(FileNotFoundError, match="history floor"):
             read_ingest_accepted(spark, dstore2, as_of=1)
         # at/above the floor (source head = batch 2): the seed answers
@@ -1674,7 +1673,7 @@ def test_ingest_store_time_travel(spark, tmp_path):
             (r.vec_id, r.cos_sim) for r in want
         ], f"ann probe as_of={k}"
     estore2 = str(tmp_path / "estore2")
-    compact_ann_ingest_store(spark, estore, estore2)
+    compact_ingest_store(spark, estore, estore2)
     with pytest.raises(FileNotFoundError, match="history floor"):
         ann_ingest_members(spark, estore2, as_of=0)
     assert ann_ingest_members(spark, estore2, as_of=2).count() == len(erows)
@@ -1682,7 +1681,7 @@ def test_ingest_store_time_travel(spark, tmp_path):
 
 @pytest.mark.full_tier
 def test_semdedup_ingest_compaction_and_resume(spark, tmp_path):
-    """compact_semdedup_ingest_store: the batch chain folds into a
+    """compact_ingest_store: the batch chain folds into a
     batch=-1 seed with RESOLVED labels and an empty alias log; the
     representative set is unchanged; as_of below the recorded floor
     refuses on the compacted store; a FRESH-checkpoint full replay
@@ -1701,7 +1700,7 @@ def test_semdedup_ingest_compaction_and_resume(spark, tmp_path):
         semdedup_representatives,
     )
     from distributed_mapreduce_spark.streaming.sinks import (
-        compact_semdedup_ingest_store,
+        compact_ingest_store,
         foreach_batch_semdedup_ingest,
         read_semdedup_representatives,
     )
@@ -1731,7 +1730,7 @@ def test_semdedup_ingest_compaction_and_resume(spark, tmp_path):
     )
 
     store2 = str(tmp_path / "store2")
-    n = compact_semdedup_ingest_store(spark, store, store2)
+    n = compact_ingest_store(spark, store, store2)
     assert n == emb.count()
     got = sorted(
         (r.rep_id, r.cell, r.n_members)
@@ -2370,8 +2369,7 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
     from distributed_mapreduce_spark.streaming.replay import stage_chunks
     from distributed_mapreduce_spark.streaming.sinks import (
         build_decontam_index,
-        compact_clean_ingest_store,
-        compact_decontam_ingest_store,
+        compact_ingest_store,
         foreach_batch_clean_ingest,
         foreach_batch_decontam_ingest,
         read_ingest_accepted,
@@ -2405,7 +2403,7 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
     want = sorted(
         r.doc_id for r in read_ingest_accepted(spark, store).collect()
     )
-    n = compact_decontam_ingest_store(spark, store, dst)
+    n = compact_ingest_store(spark, store, dst)
     assert n == len(want)
     assert len(ManifestStore(dst).manifests()) == 1
     got = sorted(r.doc_id for r in read_ingest_accepted(spark, dst).collect())
@@ -2431,7 +2429,7 @@ def test_decontam_and_clean_store_compaction(spark, tmp_path):
         index,
     ).awaitTermination()
     want = sorted(r.doc_id for r in read_ingest_accepted(spark, store).collect())
-    n = compact_clean_ingest_store(spark, store, dst)
+    n = compact_ingest_store(spark, store, dst)
     assert n == len(want)
     seed = ManifestStore(dst).manifests()
     assert len(seed) == 1 and seed[0][1]["touched_fp"], seed
