@@ -172,7 +172,7 @@ def jaccard_pairs(sh: DataFrame, min_jaccard: float) -> DataFrame:
     DataFrame (caching.attach_caches), so after the action a caller
     releases the blocks with caching.release_caches(result) — VERDICT
     r13 #5. Callers that run many queries in one session (bench.py
-    between passes, scripts/parity.py between queries) may instead
+    between passes, scripts/strict_parity.py between queries) may instead
     call `spark.catalog.clearCache()`."""
     sh = sh.persist()
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))

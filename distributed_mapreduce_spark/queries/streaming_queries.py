@@ -1,21 +1,28 @@
-"""Structured Streaming queries over the replayed `events` fixture
+"""Structured Streaming queries over replayed fixture tables
 ([EXT] — SURVEY.md §7.1 step 5).
 
-Each entry stages the fixture into seq-ordered chunks, replays them as
-a K-micro-batch stream (Trigger.AvailableNow), and returns the sink
+Each entry stages a fixture table into key-ordered chunks, replays them
+as a K-micro-batch stream (Trigger.AvailableNow), and returns the sink
 table — so the driver's DuckDB oracle checks *streaming* results
-against batch SQL. st_q1/st_q2 run complete-mode window aggregations
+against batch SQL. Most entries replay `events`; st_q12 replays
+`embeddings` and st_q14/st_q15 replay `documents`.
+
+st_q1/st_q2 run complete-mode window aggregations
 (exact batch equivalence). st_q3 runs session windows in append mode
 under a 1-hour watermark: only sessions the watermark has closed are
 emitted, and the oracle carries the same cutoff — watermark semantics
 are part of the checked contract, not just a test. st_q4 folds KV state
 incrementally with applyInPandasWithState and must equal the one-shot
-batch fold (operators/kv.py), i.e. the DuckDB state-fold SQL.
+batch fold (operators/kv.py), i.e. the DuckDB state-fold SQL. The
+sink-graded shadow entries (st_q9–st_q15, kv_q5) instead maintain a
+store through a foreachBatch sink, run by `_maintain`, and return what
+they read back from it.
 """
 
 from __future__ import annotations
 
 import atexit
+import glob
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +33,8 @@ from distributed_mapreduce_spark.queries.relational import dec, money
 from distributed_mapreduce_spark.sources import table
 from distributed_mapreduce_spark.streaming.replay import (
     STREAM_SHUFFLE_PARTITIONS,  # noqa: F401 - re-exported for callers of this module
+    chunk_stream,
+    ephemeral_dir,
     event_stream,
     run_available_now,
     stage_chunks,
@@ -51,19 +60,45 @@ N_CHUNKS = 2
 SESSION_WATERMARK = "1 hour"
 
 
-# Staged-chunk cache: all five streaming queries replay the same
-# fixture, so stage it once per (sf_dir, N_CHUNKS) and clean up at
+# Staged-chunk cache: every query here replays staged chunks, so each
+# (sf_dir, table, n, exclude_source) is staged once and removed at
 # process exit. Chunk mtimes (replay order) are baked in at staging, so
 # reuse is deterministic.
-_CHUNK_CACHE: dict[tuple[str, int], str] = {}
+_CHUNK_CACHE: dict[tuple[str, str, int, str | None], str] = {}
 
 
-def _staged(sf_dir: str) -> str:
-    key = (sf_dir, N_CHUNKS)
+def _staged(
+    sf_dir: str,
+    table: str = "events",
+    n: int = N_CHUNKS,
+    exclude_source: str | None = None,
+) -> str:
+    key = (sf_dir, table, n, exclude_source)
     if key not in _CHUNK_CACHE:
-        _CHUNK_CACHE[key] = stage_chunks(sf_dir, "events", N_CHUNKS)
+        _CHUNK_CACHE[key] = stage_chunks(sf_dir, table, n, exclude_source=exclude_source)
         atexit.register(shutil.rmtree, _CHUNK_CACHE[key], ignore_errors=True)
     return _CHUNK_CACHE[key]
+
+
+def _maintain(spark: SparkSession, tag: str, *starts) -> str:
+    """Run the sink-graded replays over a fresh ephemeral store and
+    checkpoint; return the store path. Each `start(store, ckpt)` starts
+    one streaming query, which runs to termination under stream_conf
+    before the next start is called, so a later run resumes the same
+    checkpoint (st_q13). The store is fresh per call (bench passes must
+    not resume each other's state) and kept until process exit, because
+    the returned DataFrames read it lazily; the checkpoint is removed on
+    return."""
+    store = ephemeral_dir(f"dmr_{tag}_store_")
+    ckpt = ephemeral_dir(f"dmr_{tag}_ckpt_")
+    atexit.register(shutil.rmtree, store, ignore_errors=True)
+    try:
+        with stream_conf(spark):
+            for start in starts:
+                start(f"{store}/t", ckpt).awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return f"{store}/t"
 
 
 def _replayed(
@@ -282,6 +317,27 @@ def st_q8_click_purchase_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The customer snapshot's payload: the init base's projection and the
+# graded columns of every CDC-maintained query.
+CDC_COLUMNS = ("c_custkey", "c_mktsegment", "c_acctbal")
+
+
+def cdc_change_feed(events: DataFrame, ord_expr, *extra) -> DataFrame:
+    """rel_q18's change feed over an event frame: events as upserts
+    keyed on user_id→custkey, `error` events as delete tombstones,
+    ordered by `ord_expr`, with any `extra` columns appended. The column
+    mapping lives HERE, once — it must stay in lock-step with rel_q18's
+    oracle SQL, which grades st_q9–st_q11 and st_q13."""
+    return events.select(
+        (F.col("user_id") + 1).alias("c_custkey"),
+        ord_expr.alias("ord"),
+        (F.col("event_type") == "error").cast("int").alias("is_delete"),
+        F.upper("event_type").alias("c_mktsegment"),
+        F.col("value").alias("c_acctbal"),
+        *extra,
+    )
+
+
 def _cdc_maintained_snapshot(
     spark: SparkSession,
     sf_dir: str,
@@ -290,59 +346,35 @@ def _cdc_maintained_snapshot(
     tag: str,
     as_of: int | None = None,
 ) -> DataFrame:
-    """Shared replay body of st_q9/st_q10 (the _replayed analog for the
-    CDC maintenance sinks): stage the fixture chunks, derive the
-    rel_q18 change feed with the caller's ord expression, run the
-    partition-scoped MERGE sink over a fresh ephemeral store, and
-    return the final committed snapshot. The feed's column mapping
-    lives HERE, once — it must stay in lock-step with rel_q18's oracle
-    SQL, which grades both queries."""
-    import atexit as _atexit
-    import shutil as _shutil
-
-    from distributed_mapreduce_spark.streaming.replay import ephemeral_dir
+    """Shared replay body of st_q9–st_q11: the rel_q18 change feed with
+    the caller's ord expression maintains a customer snapshot through
+    the partition-scoped MERGE sink; return the final (or as_of)
+    committed snapshot."""
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
     )
 
     chunks = _staged(sf_dir)
-    init = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_acctbal"
+    init = table(spark, sf_dir, "customer").select(*CDC_COLUMNS)
+    store = _maintain(
+        spark,
+        f"cdc_{tag}",
+        lambda store, ckpt: foreach_batch_cdc_merge_partitioned(
+            cdc_change_feed(event_stream(spark, chunks), ord_expr),
+            store, ckpt, "c_custkey", n_buckets=8, init=init, ordered=ordered,
+        ),
     )
-    # fresh store+checkpoint per call (bench passes must not resume
-    # each other's state); kept on disk until process exit because the
-    # returned DataFrame reads the store lazily
-    store = ephemeral_dir(f"dmr_cdc_{tag}_store_")
-    ckpt = ephemeral_dir(f"dmr_cdc_{tag}_ckpt_")
-    _atexit.register(_shutil.rmtree, store, ignore_errors=True)
-
-    try:
-        with stream_conf(spark):
-            changes = event_stream(spark, chunks).select(
-                (F.col("user_id") + 1).alias("c_custkey"),
-                ord_expr.alias("ord"),
-                (F.col("event_type") == "error").cast("int").alias("is_delete"),
-                F.upper("event_type").alias("c_mktsegment"),
-                F.col("value").alias("c_acctbal"),
-            )
-            q = foreach_batch_cdc_merge_partitioned(
-                changes, f"{store}/t", ckpt, "c_custkey", n_buckets=8, init=init,
-                ordered=ordered,
-            )
-            q.awaitTermination()
-    finally:
-        _shutil.rmtree(ckpt, ignore_errors=True)
     if ordered:
         # the snapshot's persisted ord and delete tombstones are
         # maintenance state, not payload: live_only filters the
         # tombstones (they exist to stop stale-upsert resurrection of
         # deleted keys — see merge_changes_ordered); the ord watermark
         # is then dropped
-        return read_current_partitioned(spark, f"{store}/t", live_only=True).select(
-            "c_custkey", "c_mktsegment", "c_acctbal"
+        return read_current_partitioned(spark, store, live_only=True).select(
+            *CDC_COLUMNS
         )
-    return read_current_partitioned(spark, f"{store}/t", as_of=as_of)
+    return read_current_partitioned(spark, store, as_of=as_of)
 
 
 def st_q9_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -480,55 +512,29 @@ def st_q12_semdedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     GREEDY_MAX_PAIRS, counted before any collect); store size enters
     only through collisions within probed cells — the SemDeDup
     Σ|cell|² bound, incrementalized."""
-    import atexit as _atexit
-    import shutil as _shutil
-
     from distributed_mapreduce_spark.operators.similarity import (
         KM_ITERS,
         KM_K,
         kmeans_train,
     )
     from distributed_mapreduce_spark.queries.simops import DIM, SEMDEDUP_TAU
-    from distributed_mapreduce_spark.streaming.replay import (
-        ephemeral_dir,
-        stage_chunks,
-    )
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_semdedup_ingest,
         read_semdedup_representatives,
     )
 
-    key = ("emb", sf_dir, SEMDEDUP_CHUNKS)
-    if key not in _CHUNK_CACHE:
-        _CHUNK_CACHE[key] = stage_chunks(sf_dir, "embeddings", SEMDEDUP_CHUNKS)
-        _atexit.register(_shutil.rmtree, _CHUNK_CACHE[key], ignore_errors=True)
-    chunks = _CHUNK_CACHE[key]
+    chunks = _staged(sf_dir, "embeddings", SEMDEDUP_CHUNKS)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = kmeans_train(emb, DIM, KM_K, KM_ITERS)
-    # fresh store+checkpoint per call (bench passes must not resume
-    # each other's state); store kept until process exit — the
-    # returned DataFrame reads it lazily
-    store = ephemeral_dir("dmr_semdedup_store_")
-    ckpt = ephemeral_dir("dmr_semdedup_ckpt_")
-    _atexit.register(_shutil.rmtree, store, ignore_errors=True)
-    try:
-        with stream_conf(spark):
-            q = foreach_batch_semdedup_ingest(
-                (
-                    spark.readStream.schema("vec_id bigint, embedding array<float>")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(chunks)
-                ),
-                f"{store}/t",
-                ckpt,
-                cents,
-                DIM,
-                tau=SEMDEDUP_TAU,
-            )
-            q.awaitTermination()
-    finally:
-        _shutil.rmtree(ckpt, ignore_errors=True)
-    return read_semdedup_representatives(spark, f"{store}/t")
+    store = _maintain(
+        spark,
+        "semdedup",
+        lambda store, ckpt: foreach_batch_semdedup_ingest(
+            chunk_stream(spark, "embeddings", chunks),
+            store, ckpt, cents, DIM, tau=SEMDEDUP_TAU,
+        ),
+    )
+    return read_semdedup_representatives(spark, store)
 
 
 # First EVO_SPLIT of the N_CHUNKS staged chunks run under the original
@@ -565,64 +571,39 @@ def st_q13_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     record is manifest metadata; nothing rewrites pre-addition
     versions (the Delta add-column contract: old files are never
     touched)."""
-    import atexit as _atexit
-    import glob as _glob
-    import shutil as _shutil
-
-    from distributed_mapreduce_spark.streaming.replay import ephemeral_dir
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
     )
 
-    chunks = _staged(sf_dir)
-    files = sorted(_glob.glob(chunks + "/*.parquet"))
-    init = table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_acctbal"
-    )
-    feed = ephemeral_dir("dmr_evo_feed_")
-    store = ephemeral_dir("dmr_evo_store_")
-    ckpt = ephemeral_dir("dmr_evo_ckpt_")
-    _atexit.register(_shutil.rmtree, store, ignore_errors=True)
-    base_cols = [
-        (F.col("user_id") + 1).alias("c_custkey"),
-        F.col("event_id").alias("ord"),
-        (F.col("event_type") == "error").cast("int").alias("is_delete"),
-        F.upper("event_type").alias("c_mktsegment"),
-        F.col("value").alias("c_acctbal"),
-    ]
+    files = sorted(glob.glob(_staged(sf_dir) + "/*.parquet"))
+    init = table(spark, sf_dir, "customer").select(*CDC_COLUMNS)
     note = F.concat(
         F.upper("event_type"), F.lit("#"), F.col("event_id").cast("string")
     ).alias("c_note")
+    feed = ephemeral_dir("dmr_evo_feed_")
+
+    def run(chunk_files, *extra, **sink_kw):
+        def start(store, ckpt):
+            for f in chunk_files:
+                shutil.copy2(f, feed)
+            return foreach_batch_cdc_merge_partitioned(
+                cdc_change_feed(event_stream(spark, feed), F.col("event_id"), *extra),
+                store, ckpt, "c_custkey", n_buckets=8, **sink_kw,
+            )
+
+        return start
 
     try:
-        with stream_conf(spark):
-            for f in files[:EVO_SPLIT]:
-                _shutil.copy2(f, feed)
-            q = foreach_batch_cdc_merge_partitioned(
-                event_stream(spark, feed).select(*base_cols),
-                f"{store}/t",
-                ckpt,
-                "c_custkey",
-                n_buckets=8,
-                init=init,
-            )
-            q.awaitTermination()
-            for f in files[EVO_SPLIT:]:
-                _shutil.copy2(f, feed)
-            q = foreach_batch_cdc_merge_partitioned(
-                event_stream(spark, feed).select(*base_cols, note),
-                f"{store}/t",
-                ckpt,
-                "c_custkey",
-                n_buckets=8,
-                merge_schema=True,
-            )
-            q.awaitTermination()
+        store = _maintain(
+            spark,
+            "evo",
+            run(files[:EVO_SPLIT], init=init),
+            run(files[EVO_SPLIT:], note, merge_schema=True),
+        )
     finally:
-        _shutil.rmtree(ckpt, ignore_errors=True)
-        _shutil.rmtree(feed, ignore_errors=True)
-    return read_current_partitioned(spark, f"{store}/t")
+        shutil.rmtree(feed, ignore_errors=True)
+    return read_current_partitioned(spark, store)
 
 
 DECONTAM_CHUNKS = 3
@@ -637,15 +618,12 @@ _DECONTAM_INDEX: dict[str, str] = {}
 
 
 def _shared_decontam_index(spark: SparkSession, sf_dir: str) -> str:
-    from pyspark.sql import functions as F2
-
     from distributed_mapreduce_spark.queries.pipeline_queries import BENCH_SOURCE
     from distributed_mapreduce_spark.queries.textops import (
         MAX_SHINGLE_DF,
         MINHASH_BANDS,
     )
     from distributed_mapreduce_spark.sources import widen
-    from distributed_mapreduce_spark.streaming.replay import ephemeral_dir
     from distributed_mapreduce_spark.streaming.sinks import build_decontam_index
 
     tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_").replace("-", "_")
@@ -657,7 +635,7 @@ def _shared_decontam_index(spark: SparkSession, sf_dir: str) -> str:
         index = _DECONTAM_INDEX.get(sf_dir) or ephemeral_dir("dmr_decontam_index_")
         build_decontam_index(
             widen(table(spark, sf_dir, "documents")).where(
-                F2.col("source") == BENCH_SOURCE
+                F.col("source") == BENCH_SOURCE
             ),
             index,
             tbl,
@@ -669,6 +647,37 @@ def _shared_decontam_index(spark: SparkSession, sf_dir: str) -> str:
             _DECONTAM_INDEX[sf_dir] = index
             atexit.register(shutil.rmtree, index, ignore_errors=True)
     return _DECONTAM_INDEX[sf_dir]
+
+
+def _docs_ingest(spark: SparkSession, sf_dir: str, tag: str, sink, *args, **kw) -> DataFrame:
+    """Shared replay body of st_q14/st_q15: the non-benchmark documents,
+    as DECONTAM_CHUNKS doc_id-ordered micro-batches, run through
+    `sink(docs, store, ckpt, *args, index, ...)` against the shared
+    benchmark index; return the surviving training manifest."""
+    from distributed_mapreduce_spark.queries.pipeline_queries import (
+        BENCH_SOURCE,
+        CONTAM_MIN_OVERLAP,
+    )
+    from distributed_mapreduce_spark.queries.textops import NEAR_DUP_JACCARD
+    from distributed_mapreduce_spark.streaming.sinks import read_ingest_accepted
+
+    chunks = _staged(sf_dir, "documents", DECONTAM_CHUNKS, BENCH_SOURCE)
+    index = _shared_decontam_index(spark, sf_dir)
+    store = _maintain(
+        spark,
+        tag,
+        lambda store, ckpt: sink(
+            chunk_stream(spark, "documents", chunks),
+            store,
+            ckpt,
+            *args,
+            index,
+            min_overlap=CONTAM_MIN_OVERLAP,
+            min_jaccard=NEAR_DUP_JACCARD,
+            **kw,
+        ),
+    )
+    return read_ingest_accepted(spark, store).select("doc_id", "source", "lang", "n_chars")
 
 
 def st_q14_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -701,57 +710,11 @@ def st_q14_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIXED-SIZE benchmark index (broadcast/bucket-join sides) + the
     id-bucket-pruned known-id gate — per-batch cost independent of
     the accepted store's growth."""
-    import atexit as _atexit
-    import shutil as _shutil
-
-    from distributed_mapreduce_spark.queries.pipeline_queries import (
-        BENCH_SOURCE,
-        CONTAM_MIN_OVERLAP,
-    )
-    from distributed_mapreduce_spark.queries.textops import NEAR_DUP_JACCARD
-    from distributed_mapreduce_spark.streaming.replay import (
-        ephemeral_dir,
-        stage_chunks,
-    )
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_decontam_ingest,
-        read_ingest_accepted,
     )
 
-    key = ("docs", sf_dir, DECONTAM_CHUNKS)
-    if key not in _CHUNK_CACHE:
-        _CHUNK_CACHE[key] = stage_chunks(
-            sf_dir, "documents", DECONTAM_CHUNKS, exclude_source=BENCH_SOURCE
-        )
-        atexit.register(shutil.rmtree, _CHUNK_CACHE[key], ignore_errors=True)
-    chunks = _CHUNK_CACHE[key]
-    index = _shared_decontam_index(spark, sf_dir)
-    store = ephemeral_dir("dmr_decontam_store_")
-    ckpt = ephemeral_dir("dmr_decontam_ckpt_")
-    _atexit.register(_shutil.rmtree, store, ignore_errors=True)
-    try:
-        with stream_conf(spark):
-            q = foreach_batch_decontam_ingest(
-                (
-                    spark.readStream.schema(
-                        "doc_id bigint, text string, lang string, "
-                        "source string, n_chars bigint"
-                    )
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(chunks)
-                ),
-                f"{store}/t",
-                ckpt,
-                index,
-                min_overlap=CONTAM_MIN_OVERLAP,
-                min_jaccard=NEAR_DUP_JACCARD,
-            )
-            q.awaitTermination()
-    finally:
-        _shutil.rmtree(ckpt, ignore_errors=True)
-    return read_ingest_accepted(spark, f"{store}/t").select(
-        "doc_id", "source", "lang", "n_chars"
-    )
+    return _docs_ingest(spark, sf_dir, "decontam", foreach_batch_decontam_ingest)
 
 
 def st_q15_clean_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -776,47 +739,21 @@ def st_q15_clean_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     store reads are id/fp-bucket-pruned; the benchmark index is fixed
     size — the dedup-ingest cost model with two map-shaped filters in
     front, and ONE sink instead of four re-reading the feed."""
-    import atexit as _atexit
-    import shutil as _shutil
-
     from distributed_mapreduce_spark.functions.text import (
         avg_token_len,
         stopword_ratio,
         token_count,
         tokens,
     )
-    from distributed_mapreduce_spark.queries.pipeline_queries import (
-        BENCH_SOURCE,
-        CONTAM_MIN_OVERLAP,
-    )
     from distributed_mapreduce_spark.queries.textops import (
-        NEAR_DUP_JACCARD,
         QF_MAX_TOK_LEN,
         QF_MAX_TOKENS,
         QF_MIN_SW_RATIO,
         QF_MIN_TOK_LEN,
         QF_MIN_TOKENS,
     )
-    from distributed_mapreduce_spark.streaming.replay import (
-        ephemeral_dir,
-        stage_chunks,
-    )
-    from distributed_mapreduce_spark.streaming.sinks import (
-        foreach_batch_clean_ingest,
-        read_ingest_accepted,
-    )
+    from distributed_mapreduce_spark.streaming.sinks import foreach_batch_clean_ingest
 
-    key = ("docs", sf_dir, DECONTAM_CHUNKS)
-    if key not in _CHUNK_CACHE:
-        _CHUNK_CACHE[key] = stage_chunks(
-            sf_dir, "documents", DECONTAM_CHUNKS, exclude_source=BENCH_SOURCE
-        )
-        atexit.register(shutil.rmtree, _CHUNK_CACHE[key], ignore_errors=True)
-    chunks = _CHUNK_CACHE[key]
-    index = _shared_decontam_index(spark, sf_dir)
-    store = ephemeral_dir("dmr_clean_store_")
-    ckpt = ephemeral_dir("dmr_clean_ckpt_")
-    _atexit.register(_shutil.rmtree, store, ignore_errors=True)
     # the near-dup index is per-run state: a table surviving from an
     # earlier call would pre-reject this run's first copies
     spark.sql("DROP TABLE IF EXISTS st_q15_corpus_bands")
@@ -826,30 +763,13 @@ def st_q15_clean_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (stopword_ratio(toks, "en") >= QF_MIN_SW_RATIO)
         & avg_token_len(toks).between(QF_MIN_TOK_LEN, QF_MAX_TOK_LEN)
     )
-    try:
-        with stream_conf(spark):
-            q = foreach_batch_clean_ingest(
-                (
-                    spark.readStream.schema(
-                        "doc_id bigint, text string, lang string, "
-                        "source string, n_chars bigint"
-                    )
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(chunks)
-                ),
-                f"{store}/t",
-                ckpt,
-                "st_q15_corpus_bands",
-                index,
-                quality_predicate=quality,
-                min_overlap=CONTAM_MIN_OVERLAP,
-                min_jaccard=NEAR_DUP_JACCARD,
-            )
-            q.awaitTermination()
-    finally:
-        _shutil.rmtree(ckpt, ignore_errors=True)
-    return read_ingest_accepted(spark, f"{store}/t").select(
-        "doc_id", "source", "lang", "n_chars"
+    return _docs_ingest(
+        spark,
+        sf_dir,
+        "clean",
+        foreach_batch_clean_ingest,
+        "st_q15_corpus_bands",
+        quality_predicate=quality,
     )
 
 
@@ -886,31 +806,21 @@ def kv_q5_served_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-probe + anti, touched shards only rewritten); each served
     multi-get lists ≤|probe shards| directories from driver-side
     manifest metadata, never the table."""
-    import atexit as _atexit
-    import shutil as _shutil
-
     from distributed_mapreduce_spark.streaming.kv_serving import (
         foreach_batch_kv_serving,
         kv_served_multi_get,
     )
-    from distributed_mapreduce_spark.streaming.replay import ephemeral_dir
 
     chunks = _staged(sf_dir)
-    store = ephemeral_dir("dmr_kvserve_store_")
-    ckpt = ephemeral_dir("dmr_kvserve_ckpt_")
-    _atexit.register(_shutil.rmtree, store, ignore_errors=True)
-    try:
-        with stream_conf(spark):
-            q = foreach_batch_kv_serving(
-                ops_projection(event_stream(spark, chunks)), f"{store}/t", ckpt
-            )
-            q.awaitTermination()
-    finally:
-        _shutil.rmtree(ckpt, ignore_errors=True)
-    head = kv_served_multi_get(spark, f"{store}/t", KV_SERVE_KEYS)
-    asof = kv_served_multi_get(
-        spark, f"{store}/t", KV_SERVE_KEYS, as_of=AS_OF_BATCH
+    store = _maintain(
+        spark,
+        "kvserve",
+        lambda store, ckpt: foreach_batch_kv_serving(
+            ops_projection(event_stream(spark, chunks)), store, ckpt
+        ),
     )
+    head = kv_served_multi_get(spark, store, KV_SERVE_KEYS)
+    asof = kv_served_multi_get(spark, store, KV_SERVE_KEYS, as_of=AS_OF_BATCH)
     return head.select(
         F.lit("head").alias("snap"), "key", "value"
     ).unionByName(asof.select(F.lit("asof").alias("snap"), "key", "value"))

@@ -14,7 +14,7 @@ Two tiers:
 - shadow (SHADOW_QUERIES/SHADOW_ORACLES): implemented variants that
   would overflow the cap (near-twin queries: rollup/cube singles behind
   the merged grouping query, sliding behind tumbling, …). They get the
-  same DuckDB parity check in pytest/scripts/parity.py, just no driver
+  same DuckDB parity check in pytest/scripts/strict_parity.py, just no driver
   row — coverage without cap overflow.
 """
 
@@ -86,7 +86,7 @@ def check_declared_counts(coverage_path=None) -> tuple[int, int]:
     """Refuse silently-undocumented registrations (VERDICT r7 #3: a
     query entered the registry inside a snapshot commit with no
     COVERAGE row, bench sample, or floors entry). COVERAGE.md's header
-    declares the tier sizes; this check — run by scripts/parity.py AND
+    declares the tier sizes; this check — run by scripts/strict_parity.py AND
     the pytest suite — fails the moment the registry and the declared
     counts disagree, so a registration can't land without its evidence
     chain. Returns (registered, shadow) on success."""

@@ -1,9 +1,9 @@
-"""Bounded replay of the `events` fixture as a Structured Streaming
-source ([EXT] — the reference has no stream surface, SURVEY.md §2.4).
+"""Bounded replay of the fixture tables as Structured Streaming
+sources ([EXT] — the reference has no stream surface, SURVEY.md §2.4).
 
-The fixture is one parquet file; a stream needs an unbounded-looking
+Each fixture table is one parquet file; a stream needs an unbounded-looking
 source. `stage_chunks` splits a table into K key-ordered chunk files
-and `event_stream` reads the events chunks back with the file source at one
+and `chunk_stream` reads them back with the file source at one
 file per micro-batch (`maxFilesPerTrigger=1` + `Trigger.AvailableNow`),
 giving a deterministic K-batch replay that terminates — the standard
 fixture-replay pattern for Structured Streaming tests.
@@ -72,12 +72,18 @@ def ephemeral_dir(prefix: str, need_bytes: int = 0) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
-# table -> (sort key, projected columns; None = all). Each staged
-# table replays in key order.
+# table -> (sort key, projected columns; None = all, stream schema).
+# Each staged table replays in key order under its declared schema.
 CHUNK_TABLES = {
-    "events": ("event_id", None),
-    "embeddings": ("vec_id", ["vec_id", "embedding"]),
-    "documents": ("doc_id", None),
+    "events": ("event_id", None, EVENT_SCHEMA),
+    "embeddings": (
+        "vec_id", ["vec_id", "embedding"], "vec_id bigint, embedding array<float>"
+    ),
+    "documents": (
+        "doc_id",
+        None,
+        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    ),
 }
 
 
@@ -98,7 +104,7 @@ def stage_chunks(
     feed). The events `ts` is cast ns→µs at staging (Spark has no ns
     timestamp; this is the same truncation sources/catalog.py applies
     on the batch path)."""
-    key, columns = CHUNK_TABLES[table]
+    key, columns, _ = CHUNK_TABLES[table]
     src = f"{sf_dir}/{table}.parquet"
     # Staged chunks ≈ source size; ask for 2× to cover re-encoding slack.
     workdir = workdir or ephemeral_dir(
@@ -129,13 +135,19 @@ def stage_event_chunks(sf_dir: str, n_chunks: int = 4, workdir: str | None = Non
     return stage_chunks(sf_dir, "events", n_chunks, workdir)
 
 
-def event_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:
-    """File-source stream over staged chunks, one chunk per micro-batch."""
+def chunk_stream(spark: SparkSession, table: str, chunk_dir: str) -> DataFrame:
+    """File-source stream over a CHUNK_TABLES table's staged chunks, one
+    chunk per micro-batch, under the table's declared schema."""
     return (
-        spark.readStream.schema(EVENT_SCHEMA)
+        spark.readStream.schema(CHUNK_TABLES[table][2])
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
+
+
+def event_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:
+    """chunk_stream over staged events chunks."""
+    return chunk_stream(spark, "events", chunk_dir)
 
 
 @contextlib.contextmanager

@@ -16,7 +16,9 @@ stored members it near-duplicates and the union by min id commits
 alias (merge) records; the run fails if no manifest carries one. The
 band-index tables live in a fresh warehouse under the run's temp dir,
 so a table left by an earlier run cannot answer the first batch's
-probe.
+probe. The feeds are built by the graded queries' own code
+(`replay.chunk_stream`, `streaming_queries.cdc_change_feed`). The
+session is stopped and the temp dir removed when the run ends.
 
 Usage: python scripts/compactor_ab.py <out.json> <sf_dir>
   e.g. python scripts/compactor_ab.py before.json <testdata>/sf0.001
@@ -28,6 +30,7 @@ import hashlib
 import json
 import os
 import pathlib
+import shutil
 import sys
 import tempfile
 
@@ -55,41 +58,48 @@ def _rows_digest(spark, path) -> str | None:
 def main() -> int:
     out_path, sf = sys.argv[1], sys.argv[2]
     work = pathlib.Path(tempfile.mkdtemp(prefix="dmr_compab_"))
-    # read by the session module at import: set before importing it
-    os.environ["SPARK_GRAFT_WAREHOUSE"] = str(work / "warehouse")
-    # the session's 8g default lets the driver heap grow to ~5 GB RSS
-    # before the GC reclaims it; this fixture-scale run needs far less
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    spark = None
+    try:
+        # read by the session module at import: set before importing it
+        os.environ["SPARK_GRAFT_WAREHOUSE"] = str(work / "warehouse")
+        # the session's 8g default lets the driver heap grow to ~5 GB RSS
+        # before the GC reclaims it; this fixture-scale run needs far less
+        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+        from distributed_mapreduce_spark.session import get_spark
+
+        spark = get_spark(app_name="compactor_ab")
+        digests = _digests(spark, work, sf)
+        pathlib.Path(out_path).write_text(json.dumps(digests, indent=1, sort_keys=True))
+        print(f"wrote {out_path}")
+    finally:
+        if spark is not None:
+            spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+    return 0
+
+
+def _digests(spark, work: pathlib.Path, sf: str) -> dict:
     from pyspark.sql import functions as F
 
-    from distributed_mapreduce_spark.session import get_spark
     from distributed_mapreduce_spark.sources import widen
     from distributed_mapreduce_spark.sources.catalog import table
     from distributed_mapreduce_spark.queries.pipeline_queries import BENCH_SOURCE
-    from distributed_mapreduce_spark.streaming.replay import stage_chunks
+    from distributed_mapreduce_spark.queries.streaming_queries import (
+        CDC_COLUMNS,
+        cdc_change_feed,
+    )
+    from distributed_mapreduce_spark.streaming.replay import chunk_stream, stage_chunks
     from distributed_mapreduce_spark.streaming import sinks as S
     from distributed_mapreduce_spark.streaming.commitlog import (
         ManifestStore,
         read_json_tolerant,
     )
 
-    spark = get_spark(app_name="compactor_ab")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     (work / "docs").mkdir()
     (work / "embs").mkdir()
     doc_chunks = stage_chunks(sf, "documents", 3, str(work / "docs"))
     emb_chunks = stage_chunks(sf, "embeddings", 3, str(work / "embs"))
-    doc_schema = (
-        "doc_id bigint, text string, lang string, source string, n_chars bigint"
-    )
-    emb_schema = "vec_id bigint, embedding array<float>"
-
-    def doc_stream():
-        return (
-            spark.readStream.schema(doc_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(doc_chunks)
-        )
 
     (work / "sem_embs").mkdir()
     sem_dir = stage_chunks(sf, "embeddings", 3, str(work / "sem_embs"))
@@ -99,13 +109,6 @@ def main() -> int:
     stamps = [c.stat().st_mtime for c in sem_chunks]
     for c, t in zip(sem_chunks, reversed(stamps)):
         os.utime(c, (t, t))
-
-    def emb_stream(chunks=emb_chunks):
-        return (
-            spark.readStream.schema(emb_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks)
-        )
 
     digests: dict = {}
     subdirs = ("accepted", "ids", "shingles", "hashes", None)
@@ -143,7 +146,10 @@ def main() -> int:
     # dedup
     src, dst = str(work / "dedup_src"), str(work / "dedup_dst")
     S.foreach_batch_dedup_ingest(
-        doc_stream(), src, str(work / "dedup_ckpt"), "t_compab_dedup_bands"
+        chunk_stream(spark, "documents", doc_chunks),
+        src,
+        str(work / "dedup_ckpt"),
+        "t_compab_dedup_bands",
     ).awaitTermination()
     S.compact_ingest_store(spark, src, dst)
     digest("dedup", src, dst)
@@ -156,7 +162,7 @@ def main() -> int:
 
     src, dst = str(work / "ann_src"), str(work / "ann_dst")
     S.foreach_batch_ann_ingest(
-        emb_stream(), src, str(work / "ann_ckpt"), cents
+        chunk_stream(spark, "embeddings", emb_chunks), src, str(work / "ann_ckpt"), cents
     ).awaitTermination()
     S.compact_ingest_store(spark, src, dst)
     digest("ann", src, dst)
@@ -171,7 +177,11 @@ def main() -> int:
     km_cents = kmeans_train(emb.select("vec_id", "embedding"), 64, KM_K, KM_ITERS)
     src, dst = str(work / "sem_src"), str(work / "sem_dst")
     S.foreach_batch_semdedup_ingest(
-        emb_stream(sem_dir), src, str(work / "sem_ckpt"), km_cents, 64
+        chunk_stream(spark, "embeddings", sem_dir),
+        src,
+        str(work / "sem_ckpt"),
+        km_cents,
+        64,
     ).awaitTermination()
     if not any(m.get("merges") for _, m in ManifestStore(src).manifests()):
         raise SystemExit("semdedup feed committed no merge record")
@@ -187,14 +197,18 @@ def main() -> int:
 
     src, dst = str(work / "dec_src"), str(work / "dec_dst")
     S.foreach_batch_decontam_ingest(
-        doc_stream(), src, str(work / "dec_ckpt"), index
+        chunk_stream(spark, "documents", doc_chunks), src, str(work / "dec_ckpt"), index
     ).awaitTermination()
     S.compact_ingest_store(spark, src, dst)
     digest("decontam", src, dst)
 
     src, dst = str(work / "clean_src"), str(work / "clean_dst")
     S.foreach_batch_clean_ingest(
-        doc_stream(), src, str(work / "clean_ckpt"), "t_compab_clean_bands", index
+        chunk_stream(spark, "documents", doc_chunks),
+        src,
+        str(work / "clean_ckpt"),
+        "t_compab_clean_bands",
+        index,
     ).awaitTermination()
     S.compact_ingest_store(spark, src, dst)
     digest("clean", src, dst)
@@ -205,8 +219,6 @@ def main() -> int:
     from distributed_mapreduce_spark.streaming.kv_serving import (
         foreach_batch_kv_serving,
     )
-    from distributed_mapreduce_spark.streaming.replay import event_stream
-
     (work / "events").mkdir()
     ev_chunks = stage_chunks(sf, "events", 2, str(work / "events"))
 
@@ -223,20 +235,12 @@ def main() -> int:
         start(str(src), str(work / f"{name}_ckpt")).awaitTermination()
         digests[name] = digest_versioned(src)
 
-    init = table(spark, sf, "customer").select(
-        "c_custkey", "c_mktsegment", "c_acctbal"
-    )
+    init = table(spark, sf, "customer").select(*CDC_COLUMNS)
     for name, ord_expr, ordered in (
         ("cdc_st_q9", F.col("event_id"), False),
         ("cdc_ordered", -F.col("event_id"), True),
     ):
-        changes = event_stream(spark, ev_chunks).select(
-            (F.col("user_id") + 1).alias("c_custkey"),
-            ord_expr.alias("ord"),
-            (F.col("event_type") == "error").cast("int").alias("is_delete"),
-            F.upper("event_type").alias("c_mktsegment"),
-            F.col("value").alias("c_acctbal"),
-        )
+        changes = cdc_change_feed(chunk_stream(spark, "events", ev_chunks), ord_expr)
         versioned(
             name,
             lambda src, ckpt, changes=changes, ordered=ordered: (
@@ -249,15 +253,13 @@ def main() -> int:
     versioned(
         "kv_serving",
         lambda src, ckpt: foreach_batch_kv_serving(
-            ops_projection(event_stream(spark, ev_chunks)), src, ckpt
+            ops_projection(chunk_stream(spark, "events", ev_chunks)), src, ckpt
         ),
     )
     if len(list((work / "kv_serving_src").glob("v=*"))) != 2:
         raise SystemExit("KV serving feed did not commit two batches")
 
-    pathlib.Path(out_path).write_text(json.dumps(digests, indent=1, sort_keys=True))
-    print(f"wrote {out_path}")
-    return 0
+    return digests
 
 
 if __name__ == "__main__":

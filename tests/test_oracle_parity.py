@@ -2,10 +2,12 @@
 
 This emulates the driver's CORRECTNESS gate so mismatches are caught
 locally before a round ends. (The driver runs the same comparison at
-sf0.01; tests/README: run scripts/parity.py for the full-scale check.)
+sf0.01; run scripts/strict_parity.py for the full-scale check.)
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -37,6 +39,35 @@ def test_shadow_oracle_parity(spark, sf_dir, name):
     grading window, registry.py) get the same DuckDB parity check."""
     res = check_query(spark, name, _SHADOW_Q[name], _SHADOW_O[name], sf_dir)
     assert res.ok, f"{name}: {res.detail}"
+
+
+@pytest.mark.parametrize("name", ["kv_q5_served_get", "st_q9_cdc_upsert"])
+def test_sink_graded_shadow_parity(spark, sf_dir, monkeypatch, name):
+    """Default-tier representatives of the store-maintaining shadow
+    queries (the full tier runs all eight): the builder matches its
+    shadow oracle, its checkpoint is gone when it returns, and the store
+    its frame reads stays on disk and readable."""
+    from distributed_mapreduce_spark.queries import streaming_queries as sq
+
+    real_ephemeral_dir, made, on_return = sq.ephemeral_dir, [], {}
+
+    def ephemeral_dir(prefix, *args, **kwargs):
+        made.append(real_ephemeral_dir(prefix, *args, **kwargs))
+        return made[-1]
+
+    def builder(spark, sf):
+        df = _SHADOW_Q[name](spark, sf)
+        on_return.update({d: os.path.exists(d) for d in made})
+        return df
+
+    monkeypatch.setattr(sq, "ephemeral_dir", ephemeral_dir)
+    res = check_query(spark, name, builder, _SHADOW_O[name], sf_dir)
+    assert res.ok, f"{name}: {res.detail}"
+    ckpts = [d for d in made if "_ckpt_" in os.path.basename(d)]
+    stores = [d for d in made if "_store_" in os.path.basename(d)]
+    assert len(made) == 2 and len(ckpts) == len(stores) == 1, made
+    assert not on_return[ckpts[0]], "the checkpoint outlived the builder"
+    assert on_return[stores[0]] and os.path.exists(stores[0]), "the store was removed"
 
 
 def test_registry_within_grading_cap():

@@ -254,7 +254,7 @@ def test_no_global_window_in_any_query(spark, sf_dir):
 def test_registry_matches_declared_counts():
     """COVERAGE.md's declared tier sizes must equal the registry's —
     the no-undocumented-registration gate (VERDICT r7 #3), enforced in
-    the suite AND scripts/parity.py."""
+    the suite AND scripts/strict_parity.py."""
     from distributed_mapreduce_spark.registry import check_declared_counts
 
     reg, sh = check_declared_counts()

@@ -203,7 +203,7 @@ def test_stage_chunks_splits_the_fixture_in_key_order(sf_dir, tmp_path, table, n
     order."""
     from distributed_mapreduce_spark.streaming.replay import CHUNK_TABLES
 
-    key, columns = CHUNK_TABLES[table]
+    key, columns, _ = CHUNK_TABLES[table]
     out = stage_chunks(sf_dir, table, n_chunks, str(tmp_path), exclude_source=exclude)
     files = sorted(p for p in os.listdir(out) if p.endswith(".parquet"))
     assert len(files) == n_chunks
@@ -221,6 +221,33 @@ def test_stage_chunks_splits_the_fixture_in_key_order(sf_dir, tmp_path, table, n
     staged = pa.concat_tables(parts)
     assert staged.column_names == src.column_names
     assert staged.to_pylist() == src.sort_by(key).to_pylist()
+
+
+@pytest.mark.parametrize("table", ["documents", "embeddings", "events"])
+def test_chunk_tables_declare_the_staged_schema(spark, sf_dir, tmp_path, table):
+    """Each CHUNK_TABLES entry's stream schema, which chunk_stream reads
+    under, has the column names and types of the chunks stage_chunks
+    writes for that table — so the one declaration cannot drift from
+    staging. The staged events `ts` is a parquet TIMESTAMP(µs) without
+    a zone, which Spark infers as timestamp_ntz by default; the stream
+    declares it `timestamp` in the UTC-pinned session (the mapping
+    catalog.table applies on the batch path), so the footer is read here
+    with that inference off."""
+    from distributed_mapreduce_spark.streaming.replay import CHUNK_TABLES, chunk_stream
+
+    out = stage_chunks(sf_dir, table, 2, str(tmp_path))
+    ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(ntz)
+    spark.conf.set(ntz, "false")
+    try:
+        staged = spark.read.parquet(out).schema
+    finally:
+        spark.conf.set(ntz, prev)
+    declared = chunk_stream(spark, table, out).schema
+    assert sorted(CHUNK_TABLES) == ["documents", "embeddings", "events"]
+    assert [(f.name, f.dataType.simpleString()) for f in staged] == [
+        (f.name, f.dataType.simpleString()) for f in declared
+    ]
 
 
 def test_stage_chunks_truncates_event_ts_to_micros(tmp_path):
