@@ -1,13 +1,19 @@
 """Similarity search over an embedding column ([EXT] north star).
 
 Two tiers:
-  1. Brute-force cosine top-k — the exact baseline: broadcast the
-     query vector, map-side cosine, TakeOrdered(k). Linear scan; at
-     100 TB this is the *verifier*, not the serving path.
+  1. Brute-force cosine top-k (topk_cosine_literal) — the exact
+     baseline: map-side cosine against the driver-held query vector,
+     TakeOrdered(k). Linear scan; at 100 TB this is the *verifier*,
+     not the serving path.
   2. IVF (inverted-file) top-k — the scale path: partition vectors
-     into cells by nearest centroid, search only the `nprobe` cells
-     whose centroids best match the query. Candidate set shrinks
-     ~nprobe/num_cells; recall is tested against tier 1.
+     into cells by nearest centroid (ivf_cells), search only the
+     `nprobe` cells whose centroids best match the query. Candidate
+     set shrinks ~nprobe/num_cells; recall is tested against tier 1.
+     One single-query probe (ivf_topk) serves every layout of the
+     index — the in-memory assignment, the `partitionBy("cell")`
+     store (write_ivf_store/append_ivf_store) and the ANN ingest
+     store (streaming.sinks.ann_ingest_members) — exact-ranked, or
+     ADC-ranked over PQ codes when codebooks are given.
 
 Centroid "training" here is deterministic sampling (the first
 `num_cells` vectors by id) — a kmeans stand-in that keeps the fixture
@@ -33,32 +39,6 @@ DEFAULT_NUM_CELLS = 16
 DEFAULT_NPROBE = 4
 
 
-def topk_cosine(
-    emb: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Tier 1: exact top-k by cosine against a 1-row query DataFrame
-    (column `qv`). Broadcast + map + TakeOrderedAndProject — no shuffle.
-    Ordering is on the *rounded* score with id tiebreak, so results are
-    engine-stable under fp ties. Pass `dim` when statically known to
-    use the unrolled codegen'd cosine (see functions.vectors)."""
-    from distributed_mapreduce_spark.functions.vectors import cosine_unrolled
-
-    score = (
-        cosine_unrolled(vec_col, "qv", dim)
-        if dim
-        else cosine(F.col(vec_col), F.col("qv"))
-    )
-    scored = emb.crossJoin(F.broadcast(query)).select(
-        F.col(id_col), F.round(score, 6).alias("cos_sim")
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
-
-
 def topk_cosine_literal(
     emb: DataFrame,
     query_vec: list[float],
@@ -68,17 +48,20 @@ def topk_cosine_literal(
 ) -> DataFrame:
     """Tier 1 exact top-k against a DRIVER-HELD query vector — the
     serving-path shape where the query arrives as request payload, not
-    as a table row (sim_q3's ivf probe already uses this pattern; the
-    1-row collect feeding it is the bounded-by-construction kind).
+    as a table row (the 1-row collect feeding it is the
+    bounded-by-construction kind). Also the exact ranker inside every
+    ivf_topk probe.
 
-    Same ordering/rounding contract as `topk_cosine`, bit-identical
-    scores (verified raw-bit r5): dot terms multiply by literals in the
-    same left-associative order, and the query's self-dot folds to ONE
-    literal computed driver-side with the identical IEEE-double op
-    order. The expression tree drops from three unrolled dots (~1000
-    analyzer nodes) to two, and the broadcast crossJoin disappears —
-    measured −40% on fresh construct+execute at sf0.1, where Catalyst
-    analysis was 4× the execution cost."""
+    Ordering is on the *rounded* score with id tiebreak, so results
+    are engine-stable under fp ties. Scores are bit-identical to the
+    oracle's cosine (verified raw-bit r5): dot terms multiply by
+    literals in the same left-associative order, and the query's
+    self-dot folds to ONE literal computed driver-side with the
+    identical IEEE-double op order. Against the former broadcast
+    crossJoin of a 1-row query frame, the expression tree drops from
+    three unrolled dots (~1000 analyzer nodes) to two and the join
+    disappears — measured −40% on fresh construct+execute at sf0.1,
+    where Catalyst analysis was 4× the execution cost."""
     import math
 
     from distributed_mapreduce_spark.functions.vectors import (
@@ -710,136 +693,105 @@ def ivfpq_topk(
     return pq_adc_topk(codes, codebooks, query_vec, k, id_col)
 
 
-def ivf_topk(
+def ivf_cells(
     emb: DataFrame,
-    query: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    num_cells: int = DEFAULT_NUM_CELLS,
-    nprobe: int = DEFAULT_NPROBE,
+    centroids: list,
+    codebooks: list[list[list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Tier 2: probe the nprobe cells nearest the query, exact-rank
-    inside them. Driver-side centroid ranking (num_cells floats — tiny);
-    executor-side work touches only the probed cells."""
-    centroids = train_centroids(emb, num_cells, id_col, vec_col)
-    indexed = assign_cells(emb, centroids, id_col, vec_col)
+    """The IVF index rows of `emb` against FROZEN index metadata:
+    every vector tagged with its nearest-centroid cell (assign_cells)
+    and, when `codebooks` is given, PQ-encoded with the cell riding
+    through pq_encode's carry contract (no rebuild join) — the IVFADC
+    form, m small ints per vector instead of dim floats. The one cell
+    encoder behind write_ivf_store, append_ivf_store and the streaming
+    ANN ingest sink, so every stored layout holds exactly the rows a
+    fresh in-memory assignment would."""
+    cells = assign_cells(emb, centroids, id_col, vec_col)
+    if codebooks is None:
+        return cells
+    return pq_encode(cells, codebooks, id_col, vec_col, carry=("cell",))
 
+
+def ivf_topk(
+    cells: DataFrame,
+    centroids: list,
+    query_vec: list[float],
+    k: int = 10,
+    nprobe: int = DEFAULT_NPROBE,
+    codebooks: list[list[list[float]]] | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Tier 2, the single-query IVF probe for every layout: rank the
+    centroids driver-side (num_cells floats — tiny), keep only the
+    nprobe nearest cells of `cells`, and rank inside them — exact
+    cosine (topk_cosine_literal, map-side, no join), or ADC
+    (pq_adc_topk, never touching a float vector) when `codebooks` is
+    given and `cells` carries PQ codes.
+
+    `cells` is any cell-tagged frame: the in-memory assignment
+    (assign_cells / ivf_cells), a write_ivf_store layout read back
+    (`spark.read.parquet(path)`), or a streaming ANN ingest store
+    (sinks.ann_ingest_members, whose `as_of` probes the index as it
+    stood after batch k). On a `partitionBy("cell")` layout the
+    `cell IN (probe)` predicate is a partition filter: the scan's file
+    listing itself shrinks to ~nprobe/num_cells of the store
+    (✓plan-asserted), which is what makes a single ANN probe against
+    a 100 TB corpus an interactive-scale read. Frozen metadata makes
+    every layout a pure re-bucketing of the same rows, so all of them
+    return identical results (✓tested)."""
     probe = _probe_cells(centroids, query_vec, nprobe)
-    return topk_cosine(indexed.where(F.col("cell").isin(probe)), query, k, id_col, vec_col)
+    cand = cells.where(F.col("cell").isin(probe))
+    if codebooks is not None:
+        return pq_adc_topk(cand, codebooks, query_vec, k, id_col)
+    return topk_cosine_literal(cand, query_vec, k, id_col, vec_col)
 
 
 def write_ivf_store(
     emb: DataFrame,
     centroids: list,
     path: str,
+    codebooks: list[list[list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
     """Materialize the IVF serving layout the in-memory tiers only
-    DESCRIBE: vectors assigned to their nearest centroid (assign_cells)
-    and written `partitionBy("cell")` — one directory per inverted
-    list. This is the write-time half of the 100 TB serving story: the
-    probe below prunes at the PARTITION level, so unprobed cells'
-    files are never listed, opened, or scanned (✓plan-asserted:
-    `cell IN (...)` appears under PartitionFilters, not as a data
-    filter). Store the centroid table alongside (it is num_cells rows
-    — the index metadata)."""
-    assign_cells(emb, centroids, id_col, vec_col).write.mode(
+    DESCRIBE: the ivf_cells rows written `partitionBy("cell")` — one
+    directory per inverted list. This is the write-time half of the
+    100 TB serving story: ivf_topk over the read-back store prunes at
+    the PARTITION level, so unprobed cells' files are never listed,
+    opened, or scanned (✓plan-asserted: `cell IN (...)` appears under
+    PartitionFilters, not as a data filter).
+
+    With `codebooks` the store holds PQ CODES instead of vectors (the
+    IVFADC layout, the sim_q5 claim made literal): m small ints per
+    vector instead of dim floats, so a probe shrinks on BOTH the
+    search axis (partition pruning) and the storage axis (PQ
+    compression). Keep the centroid list (and codebooks) alongside as
+    index metadata (num_cells·dim + m·cb_size·subdim floats — KBs)."""
+    ivf_cells(emb, centroids, codebooks, id_col, vec_col).write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(path)
-
-
-def ivf_store_topk(
-    spark,
-    path: str,
-    centroids: list,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = DEFAULT_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a write_ivf_store layout: rank centroids driver-side
-    (num_cells floats — tiny), then read ONLY the nprobe nearest
-    cells' partitions and exact-rank inside them (topk_cosine_literal,
-    map-side, no join). The `cell IN (probe)` predicate is a partition
-    filter against the store's directory layout — the scan's file
-    listing itself shrinks to ~nprobe/num_cells of the store, which is
-    what makes a single ANN probe against a 100 TB corpus an
-    interactive-scale read. Results are bit-identical to ivf_topk on
-    the same centroids (same assignment, same scoring contract)."""
-
-    probe = _probe_cells(centroids, query_vec, nprobe)
-    store = spark.read.parquet(path).where(F.col("cell").isin(probe))
-    return topk_cosine_literal(store, query_vec, k, id_col, vec_col)
-
-
-def write_ivfpq_store(
-    emb: DataFrame,
-    centroids: list,
-    codebooks: list[list[list[float]]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVFADC serving layout (the sim_q5 claim, made
-    literal): PQ CODES — not vectors — assigned to their IVF cell and
-    written `partitionBy("cell")`. The store holds m small ints per
-    vector instead of dim floats, and a probe reads ~nprobe/num_cells
-    of the partition directories: the only layout that shrinks on BOTH
-    the search axis (partition pruning) and the storage axis (PQ
-    compression). The cell rides through pq_encode via its carry
-    contract — no rebuild join. Keep the centroid list and codebooks
-    alongside as index metadata (num_cells·dim + m·cb_size·subdim
-    floats — KBs)."""
-    coded = pq_encode(
-        assign_cells(emb, centroids, id_col, vec_col),
-        codebooks,
-        id_col,
-        vec_col,
-        carry=("cell",),
-    )
-    coded.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-
-def ivfpq_store_topk(
-    spark,
-    path: str,
-    centroids: list,
-    codebooks: list[list[list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = DEFAULT_NPROBE,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe a write_ivfpq_store layout: rank centroids driver-side,
-    partition-pruned read of the nprobe nearest cells' CODES, then ADC
-    ranking (pq_adc_topk) — the probe never touches a float vector and
-    never lists an unprobed cell's files. Results are identical to the
-    in-memory ivfpq_topk on the same index metadata (same assignment,
-    same decimal-staged ADC contract)."""
-
-    probe = _probe_cells(centroids, query_vec, nprobe)
-    codes = spark.read.parquet(path).where(F.col("cell").isin(probe))
-    return pq_adc_topk(codes, codebooks, query_vec, k, id_col)
 
 
 def append_ivf_store(
     emb_batch: DataFrame,
     centroids: list,
     path: str,
+    codebooks: list[list[list[float]]] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
     """Incremental maintenance for write_ivf_store (VERDICT r7 #1 —
     the last full-rebuild-only artifact): encode an ingest batch
-    against the FROZEN centroid table and `mode("append")` it into the
-    existing `cell=` layout. New files land only in the batch's cells'
-    directories; every pre-existing file stays byte-identical (append
-    never rewrites — tested), so per-batch write cost ∝ batch size,
-    never store size.
+    against the FROZEN centroid table (and codebooks, for a code
+    store — pq_encode is a deterministic argmin given them) and
+    `mode("append")` it into the existing `cell=` layout. New files
+    land only in the batch's cells' directories; every pre-existing
+    file stays byte-identical (append never rewrites — tested), so
+    per-batch write cost ∝ batch size, never store size.
 
     Freezing the index metadata is the standard IVF add contract
     (FAISS `add_with_ids`): assignment is deterministic given the
@@ -850,36 +802,11 @@ def append_ivf_store(
     (one file set per batch per touched cell) is bounded by
     compact_partitioned(path, ["cell"]) — partition-preserving, reads
     only fragmented cells. Reference anchor: K3's append-into-state
-    fold (/root/reference/src/models/kv.go:50-53) applied to the index
+    fold (the reference's src/models/kv.go:50-53) applied to the index
     artifact."""
-    assign_cells(emb_batch, centroids, id_col, vec_col).write.mode(
+    ivf_cells(emb_batch, centroids, codebooks, id_col, vec_col).write.mode(
         "append"
     ).partitionBy("cell").parquet(path)
-
-
-def append_ivfpq_store(
-    emb_batch: DataFrame,
-    centroids: list,
-    codebooks: list[list[list[float]]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental maintenance for write_ivfpq_store: PQ-encode the
-    batch against the FROZEN codebooks (pq_encode is a deterministic
-    argmin given them), tag with the frozen-centroid cell, and append
-    into the existing `cell=` code layout. Same contract as
-    append_ivf_store: batch-proportional cost, pre-existing files
-    untouched, probe(append) ≡ probe(fresh full build) exactly;
-    compact_partitioned bounds file counts."""
-    coded = pq_encode(
-        assign_cells(emb_batch, centroids, id_col, vec_col),
-        codebooks,
-        id_col,
-        vec_col,
-        carry=("cell",),
-    )
-    coded.write.mode("append").partitionBy("cell").parquet(path)
 
 
 def assign_probe_cells(
@@ -987,7 +914,7 @@ def ivf_store_topk_batch(
     list, landing in PartitionFilters (plan-asserted) — then join
     store rows to the BROADCAST query-cell table so each row is scored
     only for the queries that probed its cell. Per-query results are
-    IDENTICAL to an ivf_store_topk loop (✓tested): same cells, same
+    IDENTICAL to an ivf_topk loop over the store (✓tested): same cells, same
     bit-exact scores, same (cos desc, id asc) top-k.
 
     Returns (qid, id, cos_sim), k rows per query. Scale shape: one

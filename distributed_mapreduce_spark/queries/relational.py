@@ -817,9 +817,7 @@ def rel_q20_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain filtered aggregate, and the query hard-fails if the pruner
     ever reads a superset it shouldn't (parity does that implicitly).
     """
-    import atexit as _atexit
     import os as _os
-    import shutil as _shutil
 
     from distributed_mapreduce_spark.sources.layout import write_zordered
     from distributed_mapreduce_spark.sources.manifest import read_pruned_multi
@@ -830,7 +828,6 @@ def rel_q20_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = _os.path.getsize(_os.path.join(sf_dir, "lineitem.parquet"))
     store = ephemeral_dir("dmr_zorder_", need_bytes=3 * src)
-    _atexit.register(_shutil.rmtree, store, ignore_errors=True)
     write_zordered(li, f"{store}/t", ["l_partkey", "l_quantity"], bits=5, n_files=16)
     pruned, _read, _total = read_pruned_multi(
         spark, f"{store}/t", {"l_partkey": (1, 100), "l_quantity": (10, 19)}

@@ -21,7 +21,6 @@ they read back from it.
 
 from __future__ import annotations
 
-import atexit
 import glob
 import shutil
 
@@ -76,7 +75,6 @@ def _staged(
     key = (sf_dir, table, n, exclude_source)
     if key not in _CHUNK_CACHE:
         _CHUNK_CACHE[key] = stage_chunks(sf_dir, table, n, exclude_source=exclude_source)
-        atexit.register(shutil.rmtree, _CHUNK_CACHE[key], ignore_errors=True)
     return _CHUNK_CACHE[key]
 
 
@@ -91,7 +89,6 @@ def _maintain(spark: SparkSession, tag: str, *starts) -> str:
     return."""
     store = ephemeral_dir(f"dmr_{tag}_store_")
     ckpt = ephemeral_dir(f"dmr_{tag}_ckpt_")
-    atexit.register(shutil.rmtree, store, ignore_errors=True)
     try:
         with stream_conf(spark):
             for start in starts:
@@ -643,9 +640,7 @@ def _shared_decontam_index(spark: SparkSession, sf_dir: str) -> str:
             bands=MINHASH_BANDS,
             max_bench_df=MAX_SHINGLE_DF,
         )
-        if sf_dir not in _DECONTAM_INDEX:
-            _DECONTAM_INDEX[sf_dir] = index
-            atexit.register(shutil.rmtree, index, ignore_errors=True)
+        _DECONTAM_INDEX[sf_dir] = index
     return _DECONTAM_INDEX[sf_dir]
 
 
@@ -841,19 +836,37 @@ SHADOW_QUERIES = {
 }
 
 
-def _st_q11_oracle() -> str:
-    # rel_q18's MERGE SQL with `ch` restricted to the exact change
-    # prefix batch AS_OF_BATCH had seen: chunks are event_id-ordered
-    # count-slices, so prefix membership is the integer rank predicate
-    # rk·K ≤ n·(v+1) (no division, no float boundary).
-    base = _st_q9_oracle()
-    prefix = f"""FROM (
-                SELECT e.*,
-                       row_number() OVER (ORDER BY event_id) AS __rk,
-                       count(*) OVER () AS __n
-                FROM events e
+def _ranked_events(indent: int) -> str:
+    """The events rows with their event_id rank `__rk` and the row count
+    `__n` — the source of the integer-rank chunk predicates below.
+    Lines after the first are indented by `indent` spaces, so the block
+    nests in the oracle SQL it is spliced into."""
+    pad = "\n" + " " * indent
+    return pad.join(
+        [
+            "SELECT e.*,",
+            "       row_number() OVER (ORDER BY event_id) AS __rk,",
+            "       count(*) OVER () AS __n",
+            "FROM events e",
+        ]
+    )
+
+
+def _as_of_events() -> str:
+    """A `FROM events` replacement restricted to the exact change prefix
+    batch AS_OF_BATCH had seen: chunks are event_id-ordered
+    count-slices, so prefix membership is the integer rank predicate
+    rk·K ≤ n·(v+1) (no division, no float boundary)."""
+    return f"""FROM (
+                {_ranked_events(16)}
             ) WHERE __rk * {N_CHUNKS} <= __n * {AS_OF_BATCH + 1}"""
-    sql = base.replace("FROM events\n", prefix + "\n", 1)
+
+
+def _st_q11_oracle() -> str:
+    # rel_q18's MERGE SQL with `ch` restricted to the AS_OF_BATCH
+    # change prefix (_as_of_events).
+    base = _st_q9_oracle()
+    sql = base.replace("FROM events\n", _as_of_events() + "\n", 1)
     assert sql != base, "rel_q18 oracle changed shape; fix the rewrite"
     return sql
 
@@ -1090,10 +1103,7 @@ def _st_q13_oracle() -> str:
                             THEN upper(event_type) || '#' || CAST(event_id AS VARCHAR)
                        END AS c_note
                 FROM (
-                    SELECT e.*,
-                           row_number() OVER (ORDER BY event_id) AS __rk,
-                           count(*) OVER () AS __n
-                    FROM events e
+                    {_ranked_events(20)}
                 ) e
             )"""
     sql = base.replace("value AS c_acctbal", "value AS c_acctbal,\n                   c_note", 1)
@@ -1121,15 +1131,10 @@ def _st_q13_oracle() -> str:
 def _kv_q5_oracle() -> str:
     # head = the one-shot state fold (operators/kv._FOLD_SQL verbatim);
     # asof = the same fold over the exact event-prefix batch AS_OF_BATCH
-    # had seen (the st_q11 integer-rank predicate); both left-joined
-    # onto the literal probe list with the ""-pad get contract.
-    prefix_src = f"""FROM (
-                SELECT e.*,
-                       row_number() OVER (ORDER BY event_id) AS __rk,
-                       count(*) OVER () AS __n
-                FROM events e
-            ) WHERE __rk * {N_CHUNKS} <= __n * {AS_OF_BATCH + 1}"""
-    prefix_fold = _FOLD_SQL.replace("FROM events\n", prefix_src + "\n", 1)
+    # had seen (_as_of_events, the st_q11 integer-rank predicate); both
+    # left-joined onto the literal probe list with the ""-pad get
+    # contract.
+    prefix_fold = _FOLD_SQL.replace("FROM events\n", _as_of_events() + "\n", 1)
     assert prefix_fold != _FOLD_SQL, "kv fold oracle changed shape; fix the rewrite"
     probe_rows = ",".join(f"('{k}')" for k in KV_SERVE_KEYS)
     return f"""

@@ -114,7 +114,12 @@ def _ship_package(spark: SparkSession) -> None:
     ModuleNotFoundError (found by the local-cluster smoke,
     tests/test_local_cluster.py). Zipping + addPyFile is exactly what
     spark-submit --py-files does; local[N] skips it (driver and
-    workers share one process tree and one sys.path)."""
+    workers share one process tree and one sys.path).
+
+    The zip is removed at interpreter exit, not earlier: executors
+    fetch it from the driver's file server for as long as the session
+    lives."""
+    import atexit
     import pathlib
     import shutil
     import tempfile
@@ -124,6 +129,7 @@ def _ship_package(spark: SparkSession) -> None:
     zip_path = shutil.make_archive(
         str(out), "zip", root_dir=pkg_dir.parent, base_dir=pkg_dir.name
     )
+    atexit.register(pathlib.Path(zip_path).unlink, missing_ok=True)
     spark.sparkContext.addPyFile(zip_path)
 
 

@@ -21,6 +21,7 @@ sets it before the first checkpoint, not after.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
 import shutil
@@ -57,6 +58,10 @@ def ephemeral_dir(prefix: str, need_bytes: int = 0) -> str:
     DMR_FORCE_DISK=1 — tmpfs ENOSPC mid-replay is strictly worse than a
     slower run (ADVICE r3).
 
+    The directory is removed at interpreter exit (registered here, so
+    no caller can forget it); callers that hold tmpfs for less than
+    the process lifetime still remove it themselves when done.
+
     Durability note, deliberately loud: a real deployment puts
     checkpoints on durable shared storage (HDFS/S3/ABFS) because the
     checkpoint IS the exactly-once contract across restarts. That is
@@ -69,7 +74,9 @@ def ephemeral_dir(prefix: str, need_bytes: int = 0) -> str:
         st = os.statvfs("/dev/shm")
         if st.f_bavail * st.f_frsize >= need_bytes + 64 * 1024 * 1024:
             base = "/dev/shm"
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    path = tempfile.mkdtemp(prefix=prefix, dir=base)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 # table -> (sort key, projected columns; None = all, stream schema).
@@ -96,8 +103,9 @@ def stage_chunks(
 ) -> str:
     """Split a fixture table (a CHUNK_TABLES key) into `n_chunks`
     key-ordered parquet files with strictly increasing mtimes (the
-    file source replays in mtime order). Returns the chunk directory;
-    caller owns cleanup.
+    file source replays in mtime order). Returns the chunk directory,
+    removed at process exit when stage_chunks made it (ephemeral_dir);
+    a caller-given `workdir` stays the caller's to clean up.
 
     `exclude_source` drops one documents source before chunking (the
     benchmark corpus is the static index side of decontamination, not

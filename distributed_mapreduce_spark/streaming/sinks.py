@@ -1426,22 +1426,20 @@ def foreach_batch_ann_ingest(
     same layout and manifest-`touched` pruning as the dedup sink's
     sidecars, see foreach_batch_dedup_ingest's cost model).
 
-    Probes (ann_ingest_topk) read only committed batch dirs and prune
-    to the nprobe nearest cells at the PARTITION level — per-probe IO
-    is ~nprobe/num_cells of the committed store, same as the
-    write_ivf_store layout; compact_ingest_store folds the batch
-    chain back into that single-tree layout when the per-batch dir
-    count grows."""
-    from distributed_mapreduce_spark.operators.similarity import (
-        assign_cells,
-        pq_encode,
-    )
+    Probes (similarity.ivf_topk over ann_ingest_members) read only
+    committed batch dirs and prune to the nprobe nearest cells at the
+    PARTITION level (`cell IN (...)` lands in PartitionFilters across
+    every batch dir — plan-asserted in tests) — per-probe IO is
+    ~nprobe/num_cells of the committed store, same as the
+    write_ivf_store layout, and the results are identical to probing
+    a one-shot write_ivf_store build over the same vectors (✓tested);
+    compact_ingest_store folds the batch chain back into that
+    single-tree layout when the per-batch dir count grows."""
+    from distributed_mapreduce_spark.operators.similarity import ivf_cells
 
     def step(b: _IngestBatch) -> dict:
-        coded = assign_cells(b.df, centroids, id_col, vec_col)
-        if codebooks is not None:
-            coded = pq_encode(coded, codebooks, id_col, vec_col, carry=("cell",))
-        coded = b.persist(coded)  # feeds count + data write + sidecar
+        # feeds count + data write + sidecar
+        coded = b.persist(ivf_cells(b.df, centroids, codebooks, id_col, vec_col))
         n = coded.count()
         coded.write.mode("overwrite").partitionBy("cell").parquet(b.dir())
         touched_acc = _write_sidecar(
@@ -1461,7 +1459,8 @@ def ann_ingest_members(
     column materializes. This is the `members=` input for
     `knn_join_ivf` (the all-rows kNN join over the MAINTAINED index —
     assignment amortized into ingest, ✓tested equal to a fresh
-    assignment) and the shared scan of the single/batched probes.
+    assignment) and the `cells` input of `ivf_topk` (the single-query
+    probe; exact, or ADC over a codebooks-built store).
 
     `as_of=k` is VERSION AS OF on the batch chain: only batches ≤ k,
     i.e. the index exactly as it stood after batch k committed (the
@@ -1472,43 +1471,6 @@ def ann_ingest_members(
 
     _, dirs = _ingest_dirs_as_of(store_path, as_of)
     return spark.read.option("basePath", str(pathlib.Path(store_path))).parquet(*dirs)
-
-
-def ann_ingest_topk(
-    spark,
-    store_path: str,
-    centroids: list,
-    query_vec: list,
-    k: int = 10,
-    nprobe: int = 4,
-    codebooks: list | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    as_of: int | None = None,
-) -> DataFrame:
-    """Probe a foreach_batch_ann_ingest store: committed batch dirs
-    only (manifest-gated — a torn batch write is invisible), pruned to
-    the nprobe nearest cells at the partition level (`cell IN (...)`
-    lands in PartitionFilters across every batch dir — plan-asserted
-    in tests), then exact cosine (or ADC when `codebooks` is given)
-    ranking. Results are identical to probing a one-shot
-    write_ivf_store/write_ivfpq_store build over the same vectors
-    (✓tested): frozen metadata makes the layout a pure re-bucketing of
-    the same rows. `as_of=k` probes the index exactly as it stood
-    after batch k (see ann_ingest_members)."""
-    from distributed_mapreduce_spark.operators.similarity import (
-        _probe_cells,
-        pq_adc_topk,
-        topk_cosine_literal,
-    )
-
-    probe = _probe_cells(centroids, query_vec, nprobe)
-    cand = ann_ingest_members(spark, store_path, as_of=as_of).where(
-        F.col("cell").isin(probe)
-    )
-    if codebooks is not None:
-        return pq_adc_topk(cand, codebooks, query_vec, k, id_col)
-    return topk_cosine_literal(cand, query_vec, k, id_col, vec_col)
 
 
 # --- streaming SemDeDup ingest (VERDICT r13 #2) -----------------------------

@@ -15,8 +15,8 @@ serialization (the verdict's named suspects):
 - closure captures in Arrow-lane folds: kv_q1 (applyInPandas fold),
   pack_q1 (sequential recurrence), st_q4 (applyInPandasWithState),
   ml_q1 (per-step GD closure over driver-held weights)
-- driver-side sketch/probe plumbing: dedup_q10 (theta + count-min
-  sketches built on executors, merged on the driver)
+- shuffle-join plumbing: dedup_q10 (the exact jaccard pair join over
+  shingle sets, then two provenance equi-joins — no sketch)
 - broadcast paths: contam_q1 (broadcast semi-join), sim_q3 (collected
   centroids re-broadcast), rel_q1 (plain SQL baseline)
 - foreachBatch driver/executor splits: st_q9 (partition-scoped CDC:
@@ -302,14 +302,14 @@ def test_ann_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from distributed_mapreduce_spark.operators.similarity import (
-        ivf_store_topk,
+        ivf_topk,
         train_centroids,
         write_ivf_store,
     )
     from distributed_mapreduce_spark.sources import table
     from distributed_mapreduce_spark.streaming import commitlog
     from distributed_mapreduce_spark.streaming.sinks import (
-        ann_ingest_topk,
+        ann_ingest_members,
         compact_ingest_store,
         foreach_batch_ann_ingest,
     )
@@ -379,10 +379,12 @@ def test_ann_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
         run()
 
         qvec = [float(x) for x in rows[42].embedding]
-        got = ann_ingest_topk(spark, store, cents, qvec, 10, nprobe=4).collect()
+        got = ivf_topk(
+            ann_ingest_members(spark, store), cents, qvec, 10, nprobe=4
+        ).collect()
         full = str(tmp_path / "full")
         write_ivf_store(emb.select("vec_id", "embedding"), cents, full)
-        want = ivf_store_topk(spark, full, cents, qvec, 10, nprobe=4).collect()
+        want = ivf_topk(spark.read.parquet(full), cents, qvec, 10, nprobe=4).collect()
         assert [(r.vec_id, r.cos_sim) for r in got] == [
             (r.vec_id, r.cos_sim) for r in want
         ]
@@ -396,7 +398,9 @@ def test_ann_ingest_pipeline_on_local_cluster(cluster_spark, tmp_path):
         )
         ids = [r.vec_id for r in back.select("vec_id").collect()]
         assert len(ids) == len(set(ids)) == len(rows), "replay duplicated vectors"
-        got2 = ann_ingest_topk(spark, store2, cents, qvec, 10, nprobe=4).collect()
+        got2 = ivf_topk(
+            ann_ingest_members(spark, store2), cents, qvec, 10, nprobe=4
+        ).collect()
         assert [(r.vec_id, r.cos_sim) for r in got2] == [
             (r.vec_id, r.cos_sim) for r in want
         ]

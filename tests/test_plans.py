@@ -59,11 +59,11 @@ def test_no_cartesian_in_any_registered_query(spark, sf_dir):
     # ev_q6 (non-equi band predicate over a 4-row dim — the intended
     # range-join form), kv_q3 (1-row point probe whose literal key
     # constant-folds into a filter, leaving a keyless 1-row join),
-    # sim_q3 (crossJoin against THE 1-row query vector). sim_q1 left
-    # this list in r5: the driver-held-query form has no join at all.
-    # sim_q5 composes sim_q3's IVF assignment (the same 16-row centroid
-    # crossJoin) ahead of the PQ encode; its only BNLJ side is that
-    # O(1)-row centroid table.
+    # sim_q3 (its IVF assignment crossJoins THE 16-row centroid table;
+    # the probe scores against the driver-held query, no join — sim_q1
+    # left this list in r5 for the same reason). sim_q5 composes the
+    # same assignment ahead of the PQ encode; for both, the only BNLJ
+    # side is that O(1)-row centroid table.
     # text_q13 crossJoins THE 1-row percentile-threshold aggregate.
     bnlj_allowed = {
         "ev_q6_value_bands",

@@ -51,7 +51,7 @@ ALLOWLIST = {
     "dedup and clean sink docstrings tell operators to run",
     "sources/files.py:compact_partitioned": "small-file maintenance for the "
     "cell-partitioned IVF, ANN and SemDeDup stores",
-    "streaming/sinks.py:ann_ingest_topk": "the only reader of the ANN ingest "
+    "streaming/sinks.py:ann_ingest_members": "the only reader of the ANN ingest "
     "store",
     "operators/bpe.py": "BPE merge training: iterative and not "
     "SQL-expressible, graded by its tests against the sequential "

@@ -15,7 +15,7 @@ from distributed_mapreduce_spark.operators.multimodal import (
 from distributed_mapreduce_spark.operators.similarity import (
     assign_cells,
     ivf_topk,
-    topk_cosine,
+    topk_cosine_literal,
     train_centroids,
 )
 from distributed_mapreduce_spark.sources import table
@@ -38,12 +38,13 @@ def test_cosine_expression(spark):
 def test_ivf_recall_vs_bruteforce(spark, emb):
     """IVF with nprobe=8/16 must recover most of the exact top-10 for a
     panel of query vectors (random-uniform data is the hard case)."""
+    cents = train_centroids(emb)
+    cells = assign_cells(emb, cents)
     total_hits = 0
     for qid in [0, 7, 42, 99, 123]:
-        q = emb.where(F.col("vec_id") == qid).select(F.col("embedding").alias("qv"))
         qvec = [float(x) for x in emb.where(F.col("vec_id") == qid).collect()[0]["embedding"]]
-        exact = [r.vec_id for r in topk_cosine(emb, q, 10).collect()]
-        approx = [r.vec_id for r in ivf_topk(emb, q, qvec, 10, nprobe=8).collect()]
+        exact = [r.vec_id for r in topk_cosine_literal(emb, qvec, 10).collect()]
+        approx = [r.vec_id for r in ivf_topk(cells, cents, qvec, 10, nprobe=8).collect()]
         total_hits += len(set(exact) & set(approx))
     assert total_hits >= 0.6 * 50, f"IVF recall too low: {total_hits}/50"
 
@@ -51,29 +52,25 @@ def test_ivf_recall_vs_bruteforce(spark, emb):
 def test_ivf_store_probe_matches_in_memory_and_prunes_partitions(
     spark, emb, tmp_path
 ):
-    """The materialized serving layout (write_ivf_store →
-    ivf_store_topk): the store probe returns the same ids+scores as
-    the in-memory ivf_topk on the same centroids, and the `cell IN`
-    predicate prunes at the PARTITION level — it must appear in the
-    scan's PartitionFilters (directory pruning), not as a post-scan
-    data filter."""
+    """The materialized serving layout (write_ivf_store → ivf_topk
+    over the read-back store): the store probe returns the same
+    ids+scores as the in-memory probe on the same centroids, and the
+    `cell IN` predicate prunes at the PARTITION level — it must appear
+    in the scan's PartitionFilters (directory pruning), not as a
+    post-scan data filter."""
     from distributed_mapreduce_spark import plans
-    from distributed_mapreduce_spark.operators.similarity import (
-        ivf_store_topk,
-        write_ivf_store,
-    )
+    from distributed_mapreduce_spark.operators.similarity import write_ivf_store
 
     cents = train_centroids(emb, 16)
     path = str(tmp_path / "ivf_store")
     write_ivf_store(emb, cents, path)
 
     qid = 42
-    q = emb.where(F.col("vec_id") == qid).select(F.col("embedding").alias("qv"))
     qvec = [
         float(x) for x in emb.where(F.col("vec_id") == qid).collect()[0]["embedding"]
     ]
-    mem = ivf_topk(emb, q, qvec, 10, num_cells=16, nprobe=4).collect()
-    store = ivf_store_topk(spark, path, cents, qvec, 10, nprobe=4)
+    mem = ivf_topk(assign_cells(emb, cents), cents, qvec, 10, nprobe=4).collect()
+    store = ivf_topk(spark.read.parquet(path), cents, qvec, 10, nprobe=4)
     got = store.collect()
     assert [(r.vec_id, r.cos_sim) for r in got] == [
         (r.vec_id, r.cos_sim) for r in mem
@@ -96,18 +93,17 @@ def test_ivf_store_probe_matches_in_memory_and_prunes_partitions(
 def test_ivfpq_store_probe_matches_in_memory_and_reads_only_codes(
     spark, emb, tmp_path
 ):
-    """The IVFADC store (write_ivfpq_store → ivfpq_store_topk): same
+    """The IVFADC store (write_ivf_store → ivf_topk, with codebooks): same
     result as the in-memory ivfpq_topk, the probe prunes partitions,
     AND the scan's ReadSchema is the code columns only — the
     storage-axis half of the claim (a probe of this layout never reads
     a float vector)."""
     from distributed_mapreduce_spark import plans
     from distributed_mapreduce_spark.operators.similarity import (
-        ivfpq_store_topk,
         ivfpq_topk,
         train_centroids,
         train_pq_codebooks,
-        write_ivfpq_store,
+        write_ivf_store,
     )
 
     qid = 42
@@ -117,10 +113,12 @@ def test_ivfpq_store_probe_matches_in_memory_and_reads_only_codes(
     cents = train_centroids(emb, 16)
     cbs = train_pq_codebooks(emb, 64)
     path = str(tmp_path / "ivfpq_store")
-    write_ivfpq_store(emb, cents, cbs, path)
+    write_ivf_store(emb, cents, path, cbs)
 
     mem = ivfpq_topk(emb, qvec, 10, num_cells=16, nprobe=4).collect()
-    store = ivfpq_store_topk(spark, path, cents, cbs, qvec, 10, nprobe=4)
+    store = ivf_topk(
+        spark.read.parquet(path), cents, qvec, 10, nprobe=4, codebooks=cbs
+    )
     got = store.collect()
     assert [(r.vec_id, r.approx_dot) for r in got] == [
         (r.vec_id, r.approx_dot) for r in mem
@@ -279,12 +277,11 @@ def test_pq_adc_approximates_exact_topk(spark, emb):
     try:
         hits = 0
         for qid in [0, 7, 42, 99, 123]:
-            q = emb.where(F.col("vec_id") == qid).select(F.col("embedding").alias("qv"))
             qvec = [
                 float(x)
                 for x in emb.where(F.col("vec_id") == qid).collect()[0]["embedding"]
             ]
-            exact = {r.vec_id for r in topk_cosine(emb, q, 10).collect()}
+            exact = {r.vec_id for r in topk_cosine_literal(emb, qvec, 10).collect()}
             approx = {r.vec_id for r in pq_adc_topk(codes, cbs, qvec, 10).collect()}
             hits += len(exact & approx)
         assert hits >= 10, f"PQ ADC overlap too low: {hits}/50"
@@ -339,7 +336,6 @@ def test_ivf_store_append_equals_full_build(spark, emb, tmp_path):
 
     from distributed_mapreduce_spark.operators.similarity import (
         append_ivf_store,
-        ivf_store_topk,
         write_ivf_store,
     )
 
@@ -369,46 +365,50 @@ def test_ivf_store_append_equals_full_build(spark, emb, tmp_path):
     qvec = [
         float(x) for x in emb.where(F.col("vec_id") == 42).collect()[0]["embedding"]
     ]
-    got_full = ivf_store_topk(spark, full, cents, qvec, 10, nprobe=4).collect()
-    got_inc = ivf_store_topk(spark, inc, cents, qvec, 10, nprobe=4).collect()
+    got_full = ivf_topk(spark.read.parquet(full), cents, qvec, 10, nprobe=4).collect()
+    got_inc = ivf_topk(spark.read.parquet(inc), cents, qvec, 10, nprobe=4).collect()
     assert [(r.vec_id, r.cos_sim) for r in got_inc] == [
         (r.vec_id, r.cos_sim) for r in got_full
     ]
 
 
 def test_ivfpq_store_append_equals_full_build_and_compacts(spark, emb, tmp_path):
-    """append_ivfpq_store: maintained store ≡ fresh full build under
-    ADC probes (frozen centroids + codebooks ⇒ deterministic encode),
-    and compact_partitioned bounds the append chain's file count
-    without changing a single probe result."""
+    """append_ivf_store with codebooks: maintained store ≡ fresh full
+    build under ADC probes (frozen centroids + codebooks ⇒
+    deterministic encode), and compact_partitioned bounds the append
+    chain's file count without changing a single probe result."""
     import pathlib
 
     from distributed_mapreduce_spark.operators.similarity import (
-        append_ivfpq_store,
-        ivfpq_store_topk,
+        append_ivf_store,
         train_pq_codebooks,
-        write_ivfpq_store,
+        write_ivf_store,
     )
     from distributed_mapreduce_spark.sources.files import compact_partitioned
 
     cents = train_centroids(emb, 16)
     cbs = train_pq_codebooks(emb, 64)
     full, inc = str(tmp_path / "full"), str(tmp_path / "inc")
-    write_ivfpq_store(emb, cents, cbs, full)
-    write_ivfpq_store(emb.where(F.col("vec_id") % 3 == 0), cents, cbs, inc)
-    append_ivfpq_store(emb.where(F.col("vec_id") % 3 == 1), cents, cbs, inc)
-    append_ivfpq_store(emb.where(F.col("vec_id") % 3 == 2), cents, cbs, inc)
+    write_ivf_store(emb, cents, full, cbs)
+    write_ivf_store(emb.where(F.col("vec_id") % 3 == 0), cents, inc, cbs)
+    append_ivf_store(emb.where(F.col("vec_id") % 3 == 1), cents, inc, cbs)
+    append_ivf_store(emb.where(F.col("vec_id") % 3 == 2), cents, inc, cbs)
+
+    def probe(path):
+        return ivf_topk(
+            spark.read.parquet(path), cents, qvec, 10, nprobe=4, codebooks=cbs
+        )
 
     qvec = [
         float(x) for x in emb.where(F.col("vec_id") == 7).collect()[0]["embedding"]
     ]
     want = [
         (r.vec_id, r.approx_dot)
-        for r in ivfpq_store_topk(spark, full, cents, cbs, qvec, 10, nprobe=4).collect()
+        for r in probe(full).collect()
     ]
     got = [
         (r.vec_id, r.approx_dot)
-        for r in ivfpq_store_topk(spark, inc, cents, cbs, qvec, 10, nprobe=4).collect()
+        for r in probe(inc).collect()
     ]
     assert got == want
 
@@ -419,7 +419,7 @@ def test_ivfpq_store_append_equals_full_build_and_compacts(spark, emb, tmp_path)
         assert len(list(d.glob("*.parquet"))) <= 2
     after = [
         (r.vec_id, r.approx_dot)
-        for r in ivfpq_store_topk(spark, inc, cents, cbs, qvec, 10, nprobe=4).collect()
+        for r in probe(inc).collect()
     ]
     assert after == want
 
@@ -453,11 +453,10 @@ def _assert_pruned_broadcast_plan(df, plans):
 def test_batched_ivf_store_probe_equals_per_query_loop(spark, emb, tmp_path):
     """ivf_store_topk_batch (VERDICT r8 #6): a multi-query serving
     batch probed in ONE plan/one store scan returns, per query,
-    exactly what the single-query ivf_store_topk loop returns — same
+    exactly what the single-query ivf_topk loop returns — same
     probe cells, bit-identical scores, same top-k order."""
     from distributed_mapreduce_spark import plans
     from distributed_mapreduce_spark.operators.similarity import (
-        ivf_store_topk,
         ivf_store_topk_batch,
         write_ivf_store,
     )
@@ -475,7 +474,9 @@ def test_batched_ivf_store_probe_equals_per_query_loop(spark, emb, tmp_path):
     for qid in qids:
         want = [
             (r.vec_id, r.cos_sim)
-            for r in ivf_store_topk(spark, path, cents, qvecs[qid], 10, nprobe=4).collect()
+            for r in ivf_topk(
+                spark.read.parquet(path), cents, qvecs[qid], 10, nprobe=4
+            ).collect()
         ]
         assert got[qid] == want, f"query {qid} diverged from the per-query loop"
 
@@ -488,7 +489,6 @@ def test_batched_probe_edge_cases(spark, emb, tmp_path):
     batched probe, and a single-query batch equals the
     single-query API exactly (the |Q|=1 degeneracy)."""
     from distributed_mapreduce_spark.operators.similarity import (
-        ivf_store_topk,
         ivf_store_topk_batch,
         write_ivf_store,
     )
@@ -507,7 +507,7 @@ def test_batched_probe_edge_cases(spark, emb, tmp_path):
     ]
     want = [
         (r.vec_id, r.cos_sim)
-        for r in ivf_store_topk(spark, path, cents, qvecs[42], 10).collect()
+        for r in ivf_topk(spark.read.parquet(path), cents, qvecs[42], 10).collect()
     ]
     assert got == want
 

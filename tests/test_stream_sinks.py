@@ -776,7 +776,7 @@ def test_streaming_ann_ingest_matches_one_shot_store(spark, tmp_path):
     """foreach_batch_ann_ingest: a chunked vector feed committed as
     manifest-gated batch/cell partitions probes IDENTICALLY to a
     one-shot write_ivf_store build (and, with codebooks, to the
-    IVFADC store); the probe prunes cells at the partition level
+    IVFADC code store); the probe prunes cells at the partition level
     across batch dirs; resume changes nothing; a fresh-checkpoint
     replay against the compacted store converges with no duplicate
     ids."""
@@ -788,16 +788,14 @@ def test_streaming_ann_ingest_matches_one_shot_store(spark, tmp_path):
 
     from distributed_mapreduce_spark import plans
     from distributed_mapreduce_spark.operators.similarity import (
-        ivf_store_topk,
-        ivfpq_store_topk,
+        ivf_topk,
         train_centroids,
         train_pq_codebooks,
         write_ivf_store,
-        write_ivfpq_store,
     )
     from distributed_mapreduce_spark.sources import table
     from distributed_mapreduce_spark.streaming.sinks import (
-        ann_ingest_topk,
+        ann_ingest_members,
         compact_ingest_store,
         foreach_batch_ann_ingest,
     )
@@ -844,11 +842,11 @@ def test_streaming_ann_ingest_matches_one_shot_store(spark, tmp_path):
 
     run(store, str(tmp_path / "ckpt1"))
     qvec = [float(x) for x in rows[42].embedding]
-    got = ann_ingest_topk(spark, store, cents, qvec, 10, nprobe=4)
+    got = ivf_topk(ann_ingest_members(spark, store), cents, qvec, 10, nprobe=4)
 
     full = str(tmp_path / "full")
     write_ivf_store(emb.select("vec_id", "embedding"), cents, full)
-    want = ivf_store_topk(spark, full, cents, qvec, 10, nprobe=4).collect()
+    want = ivf_topk(spark.read.parquet(full), cents, qvec, 10, nprobe=4).collect()
     assert [(r.vec_id, r.cos_sim) for r in got.collect()] == [
         (r.vec_id, r.cos_sim) for r in want
     ]
@@ -873,7 +871,9 @@ def test_streaming_ann_ingest_matches_one_shot_store(spark, tmp_path):
     )
     ids = [r.vec_id for r in back.select("vec_id").collect()]
     assert len(ids) == len(set(ids)) == len(rows), "replay duplicated vectors"
-    got2 = ann_ingest_topk(spark, store2, cents, qvec, 10, nprobe=4).collect()
+    got2 = ivf_topk(
+        ann_ingest_members(spark, store2), cents, qvec, 10, nprobe=4
+    ).collect()
     assert [(r.vec_id, r.cos_sim) for r in got2] == [
         (r.vec_id, r.cos_sim) for r in want
     ]
@@ -881,12 +881,14 @@ def test_streaming_ann_ingest_matches_one_shot_store(spark, tmp_path):
     # IVFADC form: codes-only store, ADC probe == one-shot IVFPQ store
     store3 = str(tmp_path / "store3")
     run(store3, str(tmp_path / "ckpt3"), codebooks=cbs)
-    got3 = ann_ingest_topk(
-        spark, store3, cents, qvec, 10, nprobe=4, codebooks=cbs
+    got3 = ivf_topk(
+        ann_ingest_members(spark, store3), cents, qvec, 10, nprobe=4, codebooks=cbs
     ).collect()
     full2 = str(tmp_path / "full2")
-    write_ivfpq_store(emb.select("vec_id", "embedding"), cents, cbs, full2)
-    want3 = ivfpq_store_topk(spark, full2, cents, cbs, qvec, 10, nprobe=4).collect()
+    write_ivf_store(emb.select("vec_id", "embedding"), cents, full2, cbs)
+    want3 = ivf_topk(
+        spark.read.parquet(full2), cents, qvec, 10, nprobe=4, codebooks=cbs
+    ).collect()
     assert [(r.vec_id, r.approx_dot) for r in got3] == [
         (r.vec_id, r.approx_dot) for r in want3
     ]
@@ -1524,10 +1526,11 @@ def _cdc_to_changes_cols(df):
 @pytest.mark.full_tier
 def test_ingest_store_time_travel(spark, tmp_path):
     """VERSION AS OF on the ingest-store batch chains (VERDICT r13
-    #6): as_of=k on read_ingest_accepted / ann_ingest_members /
-    ann_ingest_topk reproduces the post-batch-k state exactly at every
-    boundary (dedup: ≡ the one-shot keep-first policy over the id
-    prefix; ann: ≡ a one-shot IVF store over the prefix), and below a
+    #6): as_of=k on read_ingest_accepted / ann_ingest_members (and
+    the ivf_topk probe over it) reproduces the post-batch-k state
+    exactly at every boundary (dedup: ≡ the one-shot keep-first
+    policy over the id prefix; ann: ≡ a one-shot IVF store over the
+    prefix), and below a
     compacted store's history floor the readers refuse rather than
     surface the seed's folded head state."""
     import pyarrow as _pa
@@ -1536,14 +1539,13 @@ def test_ingest_store_time_travel(spark, tmp_path):
 
     from distributed_mapreduce_spark.operators.dedup import dedup_corpus_greedy
     from distributed_mapreduce_spark.operators.similarity import (
-        ivf_store_topk,
+        ivf_topk,
         train_centroids,
         write_ivf_store,
     )
     from distributed_mapreduce_spark.sources import table
     from distributed_mapreduce_spark.streaming.sinks import (
         ann_ingest_members,
-        ann_ingest_topk,
         compact_ingest_store,
         foreach_batch_dedup_ingest,
         foreach_batch_ann_ingest,
@@ -1665,9 +1667,9 @@ def test_ingest_store_time_travel(spark, tmp_path):
         write_ivf_store(
             emb.where(emb.vec_id < hi).select("vec_id", "embedding"), cents, full
         )
-        want = ivf_store_topk(spark, full, cents, qvec, 10, nprobe=4).collect()
-        got = ann_ingest_topk(
-            spark, estore, cents, qvec, 10, nprobe=4, as_of=k
+        want = ivf_topk(spark.read.parquet(full), cents, qvec, 10, nprobe=4).collect()
+        got = ivf_topk(
+            ann_ingest_members(spark, estore, as_of=k), cents, qvec, 10, nprobe=4
         ).collect()
         assert [(r.vec_id, r.cos_sim) for r in got] == [
             (r.vec_id, r.cos_sim) for r in want
