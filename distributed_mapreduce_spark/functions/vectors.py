@@ -37,7 +37,7 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
+def dot_unrolled(a: str, b: str, dim: int) -> Column:
     """Σ aᵢ·bᵢ as a flat 64-term expression instead of an array fold.
 
     Same left-associative accumulation (bit-identical to `dot` and to
@@ -46,61 +46,35 @@ def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
     while a flat arithmetic expression stays inside whole-stage codegen.
     Use when the dimension is statically known — the hot N² pair loops.
 
-    Pass column NAMES (possibly qualified) to build the identical tree
-    through ONE parsed SQL string — see the construction-cost note on
-    the *_expr_spark builders below."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(unrolled_dot_expr_spark(a, b, dim))
-    import functools
-    import operator
-
-    return functools.reduce(
-        operator.add,
-        [
-            F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-            for i in range(1, dim + 1)
-        ],
-    )
+    Takes column NAMES (possibly qualified) and builds the tree through
+    ONE parsed SQL string — see the construction-cost note on the
+    *_expr_spark builders below."""
+    return F.expr(unrolled_dot_expr_spark(a, b, dim))
 
 
-def dot_unrolled_literal(a: Column | str, vec: list[float]) -> Column:
+def dot_unrolled_literal(a: str, vec: list[float]) -> Column:
     """Σ aᵢ·vecᵢ with the second operand as driver-held literals.
     Same per-term values and left-associative order as `dot_unrolled`
     (a float32 element cast to double equals its Python-float literal
     bit-for-bit), but the expression tree halves: no element_at/cast
     pair on the literal side, and no broadcast join to carry the
-    query row. For the driver-held-query top-k path. A column NAME
-    builds as one parsed string (construction-cost note below)."""
-    if isinstance(a, str):
-        return F.expr(unrolled_dot_literal_expr_spark(a, vec))
-    import functools
-    import operator
-
-    return functools.reduce(
-        operator.add,
-        [
-            F.element_at(a, i + 1).cast("double") * F.lit(float(vec[i]))
-            for i in range(len(vec))
-        ],
-    )
+    query row. For the driver-held-query top-k path. Builds as one
+    parsed string (construction-cost note below)."""
+    return F.expr(unrolled_dot_literal_expr_spark(a, vec))
 
 
-def cosine_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
+def cosine_unrolled(a: str, b: str, dim: int) -> Column:
     """Unrolled-codegen cosine, op-order-identical to cosine_sql.
-    Column names build as one parsed string (note below)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(cosine_unrolled_expr_spark(a, b, dim))
-    d = dot_unrolled(a, b, dim)
-    denom = F.sqrt(dot_unrolled(a, a, dim)) * F.sqrt(dot_unrolled(b, b, dim))
-    return F.when(denom > 0, d / denom).otherwise(F.lit(0.0))
+    Builds as one parsed string (note below)."""
+    return F.expr(cosine_unrolled_expr_spark(a, b, dim))
 
 
 # ── Spark-SQL string builders (construction-cost tier, r16) ──────────
-# The unrolled Column-API trees above cost ~3 py4j round-trips per
-# term to CONSTRUCT (dim=64 ⇒ hundreds of driver⇄JVM messages per
-# expression; cProfile showed send_command dominating the heavy
-# builders). These mirrors emit the SAME tree through one parsed SQL
-# string: left-associative `+` chain, identical casts, double literals
+# An unrolled tree built term by term through the Column API costs ~3
+# py4j round-trips per term to CONSTRUCT (dim=64 ⇒ hundreds of
+# driver⇄JVM messages per expression; cProfile showed send_command
+# dominating the heavy builders). These builders emit the SAME tree
+# through one parsed SQL string: left-associative `+` chain, identical casts, double literals
 # rendered as exact-round-trip repr with the D suffix (Spark parses
 # bare decimal literals as DECIMAL — the D is semantic, not style).
 # Plans, codegen and result bits are unchanged; only build-time py4j

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.functions.vectors import (
     cosine_sql,
+    flat_normalized,
     pair_dot_expr_spark,
     unrolled_dot_sql,
 )
@@ -258,18 +259,6 @@ def _kmeans_sql() -> str:
 EMB_DUP_THRESHOLD = 0.4
 
 
-def _flat_normalized(
-    emb: DataFrame, id_alias: str, prefix: str, dim: int = DIM
-) -> DataFrame:
-    """Unit-normalize, then unpack the vector into `dim` scalar columns
-    — delegates to the shared functions/vectors.flat_normalized builder
-    (also the streaming SemDeDup sink's verify projection, so batch and
-    streamed rounded dots are bit-identical by construction)."""
-    from distributed_mapreduce_spark.functions.vectors import flat_normalized
-
-    return flat_normalized(emb, id_alias, prefix, dim)
-
-
 # Grid side length for the blocked exact all-pairs join: B² reducer
 # cells, each task's working set is two id-blocks (2·N/B vectors), and
 # each row is shuffled B times — the classic theta-join grid trade
@@ -356,7 +345,7 @@ def dedup_q6_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the single-file fixture scan is one partition; unwidened,
     # the whole normalize pass and every downstream explode would run
     # on one core. (On a real multi-partition table this is a no-op.)
-    flat = widen(_flat_normalized(emb, "id", "__v")).persist()
+    flat = widen(flat_normalized(emb, "id", "__v", DIM)).persist()
     dot = F.expr(pair_dot_expr_spark("a.__v", "b.__v", DIM))
     from distributed_mapreduce_spark.caching import attach_caches
 
@@ -446,7 +435,7 @@ def semdedup_representatives(
         assign = kmeans_assign(emb, centroids)  # (vec_id, cell)
     else:
         assign = kmeans_lloyd(emb, dim, k, iters)  # (vec_id, cell)
-    flat = widen(_flat_normalized(emb, "vec_id", "__v", dim))
+    flat = widen(flat_normalized(emb, "vec_id", "__v", dim))
     j = flat.join(assign, "vec_id").persist()
     dot = F.expr(pair_dot_expr_spark("a.__v", "b.__v", dim))
     a, b = j.alias("a"), j.alias("b")
@@ -990,7 +979,7 @@ def sim_q10_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributed_mapreduce_spark.sources import widen
 
     emb = _emb(spark, sf_dir)
-    flat = widen(_flat_normalized(emb, "id", "__v")).persist()
+    flat = widen(flat_normalized(emb, "id", "__v", DIM)).persist()
     dot = F.expr(pair_dot_expr_spark("a.__v", "b.__v", DIM))
     both = (
         _grid_self_pair_join(flat, EMB_GRID_BLOCKS)

@@ -11,23 +11,28 @@ listing/commit/seed steps independently (streaming/sinks.py grew
 replay edge cases are tested once (tests/test_commitlog.py) instead of
 per sink.
 
-Two physical layouts share the idiom:
+One class, `ManifestStore`, carries the chain in either of two on-disk
+layouts, each declared once as data (`Layout`: manifest path, data
+dir, whether the id is stamped into the payload); each store's own
+code picks its layout:
 
-* `ManifestStore` — a CENTRAL manifest directory
-  (`store/_manifests/<batch>.json`) gating per-batch data dirs
-  (`store[/subdir]/batch=<id>/...`). Used by the five ingest sinks
-  (dedup, ANN, SemDeDup, decontam, clean); batch ids are the stream
-  checkpoint's batch ids,
-  and `SEED = -1` is the one id no stream batch ever gets — the slot
-  a compactor's fold seeds a FRESH store with (see
-  sinks.compact_ingest_store for why in-place compaction can never
-  pick a safe id).
+* `INGEST` — a CENTRAL manifest directory
+  (`store/_manifests/<batch>.json`, payload stamped with `batch`)
+  gating per-batch data dirs (`store[/subdir]/batch=<id>/...`). Used
+  by the five ingest sinks (dedup, ANN, SemDeDup, decontam, clean);
+  batch ids are the stream checkpoint's batch ids.
 
-* `VersionManifests` — a PER-VERSION manifest (`v=<id>/_touched.json`)
+* `VERSIONED` — a PER-VERSION manifest (`v=<id>/_touched.json`)
   carrying the partition set that version rewrote plus pinned store
   invariants. Used by the two versioned stores, the partition-scoped
   CDC table store and the KV serving store, where the manifest payload
   (the touched-partition list) is itself the read-time routing table.
+
+In both, `SEED = -1` is the one id no stream batch ever gets — the
+slot a compactor's fold seeds a FRESH store with, after recording the
+store's history floor (`ManifestStore.seed`). `chain_as_of` is every
+store's VERSION AS OF: it truncates the chain and refuses a read below
+the floor exactly when the read would surface seed data.
 
 Commit visibility contract (both layouts): a manifest that EXISTS and
 PARSES is a committed batch; anything else — absent, half-written by a
@@ -42,6 +47,7 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+from typing import NamedTuple
 
 
 def atomic_write_json(path, payload: dict) -> None:
@@ -68,29 +74,45 @@ def read_json_tolerant(path) -> dict | None:
 HISTORY_FLOOR = "_history_floor.json"
 
 
-def write_history_floor(store, floor: int) -> None:
-    """Record a compacted store's history floor: the newest batch or
-    version of the source chain its seed folds. Write it BEFORE the
-    seed manifest: a crash in between leaves a store with no committed
-    seed (unreadable), never a readable store missing its floor."""
-    atomic_write_json(pathlib.Path(store) / HISTORY_FLOOR, {"floor": floor})
-
-
 def read_history_floor(store) -> int | None:
-    """The store's history floor, or None for a store never compacted."""
+    """The store's history floor — the newest batch or version of the
+    source chain its seed folds (`ManifestStore.seed` writes it) — or
+    None for a store never compacted."""
     rec = read_json_tolerant(pathlib.Path(store) / HISTORY_FLOOR)
     return None if rec is None else rec["floor"]
 
 
+class Layout(NamedTuple):
+    """A chain's on-disk layout: `manifest` and `data` are paths under
+    the store root with `{}` standing for the batch or version id, and
+    `stamp` says whether `commit` stamps the id into the payload as
+    `batch` (for debuggability)."""
+
+    manifest: str
+    data: str
+    stamp: bool
+
+
+# The five ingest stores: a central manifest dir gating
+# `root[/subdir]/batch=<id>/...` data dirs.
+INGEST = Layout("_manifests/{}.json", "batch={}", True)
+# The CDC table and KV serving stores: each version's manifest sits in
+# its own `v=<id>` dir and lists the partitions it rewrote.
+VERSIONED = Layout("v={}/_touched.json", "v={}", False)
+
+
 class ManifestStore:
-    """Central-manifest batch chain: `root/_manifests/<batch>.json`
-    gates `root[/subdir]/batch=<id>/...` data directories."""
+    """A store's committed chain, in the `layout` its store code picks
+    (`INGEST` unless given)."""
 
-    SEED = -1  # the compaction-seed batch id; no stream batch is ever -1
+    SEED = -1  # the compaction-seed id; no stream batch is ever -1
 
-    def __init__(self, root):
+    def __init__(self, root, layout: Layout = INGEST):
         self.root = pathlib.Path(root)
-        self.man_dir = self.root / "_manifests"
+        self.layout = layout
+
+    def manifest_path(self, batch_id: int) -> pathlib.Path:
+        return self.root / self.layout.manifest.format(batch_id)
 
     def is_committed(self, batch_id: int) -> bool:
         """Parse-verified, not a bare exists() check — the committed
@@ -99,45 +121,67 @@ class ManifestStore:
         as UNCOMMITTED here too: the sink's redelivery short-circuit
         keys off this, and a bare exists() would skip the replay while
         every reader skips the batch — data invisible forever."""
-        return read_json_tolerant(self.man_dir / f"{batch_id}.json") is not None
+        return read_json_tolerant(self.manifest_path(batch_id)) is not None
 
-    def committed(self) -> list[int]:
-        """Committed batch ids ascending. int() parse (not isdigit) so
-        the -1 seed is admitted; unparseable CONTENT is skipped (torn
-        manifest = uncommitted)."""
-        return [b for b, _ in self.manifests()]
-
-    def manifests(self) -> list[tuple[int, dict]]:
-        """(batch_id, payload) for every committed batch, ascending."""
+    def manifests(self, below: int | None = None) -> list[tuple[int, dict]]:
+        """(id, payload) for every committed id ascending, only ids <
+        `below` when given (newer manifests are not even read). int()
+        parse (not isdigit) so the -1 seed is admitted; a non-integer
+        entry and unparseable CONTENT are skipped (torn manifest =
+        uncommitted)."""
         out = []
-        for p in self.man_dir.glob("*.json"):
-            try:
-                b = int(p.stem)
-            except ValueError:
+        for b, p in self._entries(self.layout.manifest):
+            if below is not None and b >= below:
                 continue
             payload = read_json_tolerant(p)
-            if payload is None:
-                continue
-            out.append((b, payload))
-        return sorted(out)
+            if payload is not None:
+                out.append((b, payload))
+        return sorted(out, key=lambda t: t[0])
+
+    def data_dirs(self) -> list[tuple[int, pathlib.Path]]:
+        """(id, dir) of every top-level data dir, committed or not —
+        what vacuum walks; a non-integer entry is skipped."""
+        return self._entries(self.layout.data)
+
+    def _entries(self, template: str) -> list[tuple[int, pathlib.Path]]:
+        head, tail = template.split("{}")
+        out = []
+        for p in self.root.glob(template.format("*")):
+            rel = p.relative_to(self.root).as_posix()
+            try:
+                b = int(rel[len(head) : len(rel) - len(tail)])
+            except ValueError:
+                continue  # a foreign entry, not an id
+            out.append((b, p))
+        return out
 
     def commit(self, batch_id: int, payload: dict) -> None:
         """Make `batch_id` visible — call LAST, after every data file
-        of the batch is fully written. `batch` is stamped into the
-        payload for debuggability."""
-        self.man_dir.mkdir(parents=True, exist_ok=True)
-        atomic_write_json(
-            self.man_dir / f"{batch_id}.json", {"batch": batch_id, **payload}
-        )
+        of the batch is fully written. The manifest's dir is created
+        here: a versioned store's version that emptied every partition
+        it touched wrote no data files, so its manifest is the whole
+        version."""
+        path = self.manifest_path(batch_id)
+        path.parent.mkdir(parents=True, exist_ok=True)
+        if self.layout.stamp:
+            payload = {"batch": batch_id, **payload}
+        atomic_write_json(path, payload)
 
-    def seed(self, payload: dict) -> None:
-        """Commit the compaction seed (batch = SEED = -1): the one slot
-        a FRESH store's fold lands in (see module docstring)."""
+    def seed(self, payload: dict, floor: int | None = None) -> None:
+        """Commit the compaction seed (SEED = -1), the one slot a FRESH
+        store's fold lands in (see sinks.compact_ingest_store for why
+        in-place compaction can never pick a safe id). A compactor
+        passes `floor`, the newest source id its seed folds; it is
+        written BEFORE the seed manifest, so a crash in between leaves
+        a store with no committed seed (unreadable), never a readable
+        store missing its floor."""
+        if floor is not None:
+            atomic_write_json(self.root / HISTORY_FLOOR, {"floor": floor})
         self.commit(self.SEED, payload)
 
     def batch_dir(self, batch_id: int, subdir: str | None = None) -> pathlib.Path:
         base = self.root / subdir if subdir else self.root
-        return base / f"batch={batch_id}"
+        return base / self.layout.data.format(batch_id)
 
     def batch_dirs(
         self,
@@ -165,7 +209,7 @@ class ManifestStore:
         touched_key: str = "touched",
         leaf: str = "p",
     ) -> list[str]:
-        """Leaf dirs `batch=<id>[/subdir]/<leaf>=<k>` for k ∈ `buckets`,
+        """Leaf dirs `[subdir/]batch=<id>/<leaf>=<k>` for k ∈ `buckets`,
         committed batches only — the bucket-pruned read (VERDICT r9
         #1): a membership probe or keyed fetch lists ONLY the
         partitions its keys hash into, never the whole committed
@@ -196,93 +240,63 @@ class ManifestStore:
                     out.append(str(d))
         return out
 
-
-class VersionManifests:
-    """Per-version-manifest chain: `store/v=<id>/_touched.json`, where
-    the payload carries the partition values the version rewrote plus
-    pinned store invariants (n_buckets / ordered / key)."""
-
-    MANIFEST = "_touched.json"
-
-    def __init__(self, store_path):
-        self.store = pathlib.Path(store_path)
-
-    def version_dir(self, version: int) -> pathlib.Path:
-        return self.store / f"v={version}"
-
-    def commit(
-        self,
-        version: int,
-        touched: list[int],
-        n_buckets: int,
-        ordered: bool = False,
-        key: str | None = None,
-        schema: list | None = None,
-        bucket_expr: str | None = None,
-    ) -> None:
-        """Make a version visible — call LAST. `touched` lists the
-        partition values this version rewrote, INCLUDING ones it
-        emptied (touched-but-absent-as-dir means EMPTY, not unknown).
-        The version dir is created here because a version that emptied
-        EVERY partition it touched wrote no data files at all — its
-        manifest is the whole version. `schema` (optional, [[name,
-        ddl], ...]) records the snapshot schema AS OF this version —
-        the anchor mergeSchema evolution needs so a time-travel read
-        below a column addition returns the old schema and a read
-        above it can type the NULL pad for partitions never rewritten
-        since. `bucket_expr` names the partition-routing expression
-        when it is NOT the CDC default pmod(xxhash64(key), n) — e.g.
-        the KV serving store's 'key2shard' — so maintenance jobs that
-        REWRITE partitions (compact_store_partitioned) re-bucket with
-        the same expression instead of silently scattering every row
-        (r16; absent = the xxhash64 default)."""
-        self.version_dir(version).mkdir(parents=True, exist_ok=True)
-        payload = {
-            "touched": sorted(touched),
-            "n_buckets": n_buckets,
-            "ordered": ordered,
-            "key": key,
-        }
-        if schema is not None:
-            payload["schema"] = [[n, d] for n, d in schema]
-        if bucket_expr is not None:
-            payload["bucket_expr"] = bucket_expr
-        atomic_write_json(self.version_dir(version) / self.MANIFEST, payload)
-
-    def committed(self, below: int | None = None) -> list[tuple[int, dict]]:
-        """(version, payload) for every committed version ascending;
-        torn payloads are uncommitted (see module docstring)."""
-        out = []
-        for p in self.store.glob("v=*"):
-            v = int(p.name.split("=", 1)[1])
-            if below is not None and v >= below:
-                continue
-            payload = read_json_tolerant(p / self.MANIFEST)
-            if payload is None:
-                continue
-            out.append((v, payload))
-        return sorted(out)
-
     def leaf_dirs(self, current: dict[int, int], partitions=None) -> list[str]:
-        """Existing leaf dirs `v=<v>/p=<p>` of a partition map
-        (partition_versions), restricted to `partitions` when given. A
-        mapped partition with no dir was emptied by its newest rewrite
-        (touched-but-absent = empty), so it contributes no path."""
+        """Existing leaf dirs `v=<v>/p=<p>` of a versioned store's
+        partition map (partition_versions), restricted to `partitions`
+        (in their order) when given. A mapped partition with no dir was
+        emptied by its newest rewrite (touched-but-absent = empty), so
+        it contributes no path."""
         out = []
         for p in current if partitions is None else partitions:
             if p in current:
-                d = self.version_dir(current[p]) / f"p={p}"
+                d = self.batch_dir(current[p]) / f"p={p}"
                 if d.exists():
                     out.append(str(d))
         return out
 
+    def chain_as_of(self, as_of: int | None, dirs_of) -> tuple[list, list[str]]:
+        """(chain, dirs) of a read VERSION AS OF `as_of` (None = the
+        head): the committed chain truncated to ids ≤ `as_of`, and
+        `dirs_of(chain)`, the data dirs the read consumes. Raises
+        FileNotFoundError on an empty chain, and below a compacted
+        store's history floor exactly when one of the dirs is seed
+        data: the seed holds the HEAD state of the whole pre-compaction
+        chain, so surfacing it under an older id would fabricate
+        history. Below the floor a read stays possible when it
+        resolves past the seed: the documented resume restarts batch
+        ids at 0 in the compacted store, so a new-chain version that
+        rewrote every partition the read needs (or an ingest seed with
+        no rows under the read's subdir) is an unambiguous new-chain
+        state."""
+        chain = self.manifests(None if as_of is None else as_of + 1)
+        if not chain:
+            raise FileNotFoundError(
+                f"no committed version under {self.root}"
+                + ("" if as_of is None else f" at or below as_of={as_of}")
+            )
+        dirs = dirs_of(chain)
+        floor = None if as_of is None else read_history_floor(self.root)
+        seed = self.layout.data.format(self.SEED)
+        if (
+            floor is not None
+            and as_of < floor
+            and any(seed in pathlib.Path(d).relative_to(self.root).parts for d in dirs)
+        ):
+            raise FileNotFoundError(
+                f"as_of={as_of} sits below this store's compaction boundary "
+                f"(history floor {floor}) and the read would surface the "
+                f"{seed} seed — pre-compaction history is gone and the "
+                "seed's head state would fabricate it"
+            )
+        return chain, dirs
+
 
 def partition_versions(manifests: list[tuple[int, dict]]) -> dict[int, int]:
     """partition value -> newest version in `manifests` (an ascending
-    VersionManifests.committed chain) that rewrote it. Folding
-    manifests in version order is the read-time analog of the merge
-    itself: later rewrites shadow earlier ones. Taking the
-    already-listed chain lets each caller keep one manifest scan."""
+    VERSIONED chain) that rewrote it. Folding manifests in version
+    order is the read-time analog of the merge itself: later rewrites
+    shadow earlier ones. Taking the already-listed chain lets each
+    caller keep one manifest scan."""
     current: dict[int, int] = {}
     for v, payload in manifests:
         for p in payload["touched"]:

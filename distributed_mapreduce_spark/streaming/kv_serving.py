@@ -54,7 +54,7 @@ from distributed_mapreduce_spark.operators.kv import (
     key2shard_py,
 )
 from distributed_mapreduce_spark.sources.catalog import local_frame
-from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
+from distributed_mapreduce_spark.streaming.commitlog import VERSIONED, ManifestStore
 from distributed_mapreduce_spark.streaming.sinks import (
     _check_pins,
     _newest_recorded_schema,
@@ -86,7 +86,7 @@ def foreach_batch_kv_serving(
     order is fine, and redelivered rows are dropped by the persisted
     last_seq watermark (apply_kv_ops). Gets are filtered out of the
     feed (reads are served from the store, not folded through it)."""
-    vm = VersionManifests(store_path)
+    vm = ManifestStore(store_path, VERSIONED)
     committed = _check_pins(vm, "kv_serving", _KV_PINS)
     rec = _newest_recorded_schema(committed)
     if committed and rec != [list(t) for t in _KV_SCHEMA]:

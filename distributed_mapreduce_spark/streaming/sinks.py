@@ -4,9 +4,13 @@ Manifest-committed foreachBatch stores, for sinks without a transaction
 log: each micro-batch writes its own `batch=<id>` or `v=<id>` directory
 with overwrite — redelivery after a crash rewrites the same directory
 instead of appending twice — and one atomic manifest rename makes it
-visible (streaming/commitlog; the reference's temp-file+rename atomic
-commit, worker.go:184-198, extended across restarts). Two drivers
-carry every sink, and each sink passes only its own step:
+visible (the reference's temp-file+rename atomic commit,
+worker.go:184-198, extended across restarts). The chain is one
+`commitlog.ManifestStore` in the layout its store kind picks
+(`VERSIONED` or `INGEST`), and every reader's `as_of` goes through
+`ManifestStore.chain_as_of`, which also refuses a read below a
+compacted store's history floor that would surface seed data. Two
+drivers carry every sink, and each sink passes only its own step:
 
 - `_versioned_sink` drives the two versioned `v=<batch>/p=<partition>`
   stores, the CDC table store (`foreach_batch_cdc_merge_partitioned`)
@@ -23,7 +27,9 @@ carry every sink, and each sink passes only its own step:
 Maintenance: `compact_store_partitioned` and
 `vacuum_versions_partitioned` serve both versioned stores;
 `compact_ingest_store` folds any ingest store's batch chain into a fresh
-store's seed, reading the store kind from the store itself. Every sink
+store's seed, reading the store kind from the store itself. Both
+compactors commit through `ManifestStore.seed`, which records the
+history floor before the seed manifest. Every sink
 writes one file per shuffle partition per batch; at real scale compact
 or raise the per-batch trigger size.
 """
@@ -40,13 +46,11 @@ from distributed_mapreduce_spark.caching import persistent_rdd_ids, unpersist_rd
 from distributed_mapreduce_spark.operators.kv import key2shard
 from distributed_mapreduce_spark.sources.catalog import local_frame
 from distributed_mapreduce_spark.streaming.commitlog import (
+    VERSIONED,
     ManifestStore,
-    VersionManifests,
     atomic_write_json,
     partition_versions,
-    read_history_floor,
     read_json_tolerant,
-    write_history_floor,
 )
 
 
@@ -149,7 +153,7 @@ def foreach_batch_cdc_merge_partitioned(
         merge_changes_ordered,
     )
 
-    vm = VersionManifests(store_path)
+    vm = ManifestStore(store_path, VERSIONED)
 
     # Validate argument coherence BEFORE any side effect: a fresh
     # store seeded under a mis-called mode would be permanently pinned
@@ -222,8 +226,8 @@ def foreach_batch_cdc_merge_partitioned(
             ).withColumn(delete_col, F.lit(0))
         seed.withColumn("p", _route(pins)).write.mode(
             "overwrite"
-        ).partitionBy("p").parquet(str(vm.version_dir(-1)))
-        _commit_version(vm, pins, -1, list(range(n_buckets)), seed.schema)
+        ).partitionBy("p").parquet(str(vm.batch_dir(vm.SEED)))
+        vm.seed(_version_payload(pins, range(n_buckets), seed.schema))
 
     payload_cols = (
         init.columns
@@ -381,28 +385,39 @@ def _route(pins: dict):
     return _ROUTES[pins["bucket_expr"]](F.col(pins["key"]), pins["n_buckets"])
 
 
-def _commit_version(vm: VersionManifests, pins: dict, version: int, touched, schema):
-    """Commit a versioned-store manifest carrying the store's pins;
-    `schema` is the snapshot's StructType or [(name, ddl)]. Only a
-    non-default routing name is recorded, so CDC manifests keep their
-    pre-`bucket_expr` shape."""
+def _version_payload(pins: dict, touched, schema) -> dict:
+    """A versioned-store manifest payload: the partitions the version
+    rewrote, sorted, INCLUDING ones it emptied (touched-but-absent as a
+    dir means EMPTY, not unknown); the store's pins; and the snapshot
+    schema AS OF this version (`schema`: a StructType or [(name,
+    ddl)]) — the anchor mergeSchema evolution needs, so a time-travel
+    read below a column addition returns the old schema and a read
+    above it can type the NULL pad for partitions never rewritten
+    since. Only a non-default routing name is recorded (`bucket_expr`,
+    read by compact_store_partitioned to re-bucket with the same
+    expression), so CDC manifests keep their pre-`bucket_expr` shape."""
     if not isinstance(schema, list):
         schema = [(f.name, f.dataType.simpleString()) for f in schema.fields]
-    vm.commit(
-        version, touched, pins["n_buckets"], pins["ordered"], pins["key"],
-        schema=schema,
-        bucket_expr=None if pins["bucket_expr"] == "xxhash64" else pins["bucket_expr"],
-    )
+    payload = {
+        "touched": sorted(touched),
+        "n_buckets": pins["n_buckets"],
+        "ordered": pins["ordered"],
+        "key": pins["key"],
+        "schema": [[n, d] for n, d in schema],
+    }
+    if pins["bucket_expr"] != "xxhash64":
+        payload["bucket_expr"] = pins["bucket_expr"]
+    return payload
 
 
-def _check_pins(vm: VersionManifests, kind: str, pins: dict) -> list:
+def _check_pins(vm: ManifestStore, kind: str, pins: dict) -> list:
     """Refuse a store whose first manifest pins different routing or
     snapshot invariants than `pins` (n_buckets, ordered, key,
     bucket_expr): hash routing and the snapshot schema must stay stable
     for the store's lifetime, or merges rewrite buckets the store's own
     readers never probe. A manifest without a key predates key pinning
     and passes on the other fields. Returns the committed chain."""
-    committed = vm.committed()
+    committed = vm.manifests()
     if not committed:
         return committed
     first = committed[0][1]
@@ -415,7 +430,7 @@ def _check_pins(vm: VersionManifests, kind: str, pins: dict) -> list:
     bad = [f for f in pins if have[f] != pins[f]]
     if bad:
         raise ValueError(
-            f"store {vm.store} is not a {kind} store: it pins "
+            f"store {vm.root} is not a {kind} store: it pins "
             + ", ".join(f"{f}={have[f]!r} (got {pins[f]!r})" for f in bad)
             + " — hash routing and the snapshot schema must stay stable "
             "for the store's lifetime"
@@ -424,12 +439,12 @@ def _check_pins(vm: VersionManifests, kind: str, pins: dict) -> list:
 
 
 def _versioned_sink(
-    stream: DataFrame, vm: VersionManifests, checkpoint: str, pins: dict,
+    stream: DataFrame, vm: ManifestStore, checkpoint: str, pins: dict,
     schema: list, merge,
 ) -> StreamingQuery:
     """The exactly-once driver of the two versioned stores, the CDC
     table store and the KV serving store (`v=<batch>/p=<partition>`
-    dirs under commitlog.VersionManifests — the reference's
+    dirs under a commitlog.VERSIONED ManifestStore — the reference's
     worker.go:184-198 temp-file+rename, lifted to the batch). Per
     micro-batch:
 
@@ -457,15 +472,15 @@ def _versioned_sink(
                 r.p for r in df.select(_route(pins).alias("p")).distinct().collect()
             ]
             if not touched:
-                _commit_version(vm, pins, batch_id, [], schema)
+                vm.commit(batch_id, _version_payload(pins, [], schema))
                 return
-            manifests = vm.committed(below=batch_id)
+            manifests = vm.manifests(below=batch_id)
             base_paths = vm.leaf_dirs(partition_versions(manifests), touched)
             merged = merge(df, base_paths, manifests)
             merged.withColumn("p", _route(pins)).write.mode(
                 "overwrite"
-            ).partitionBy("p").parquet(str(vm.version_dir(batch_id)))
-            _commit_version(vm, pins, batch_id, touched, merged.schema)
+            ).partitionBy("p").parquet(str(vm.batch_dir(batch_id)))
+            vm.commit(batch_id, _version_payload(pins, touched, merged.schema))
         finally:
             df.unpersist()
 
@@ -531,7 +546,9 @@ def read_current_partitioned(
     data is copied or replayed. Time travel reaches exactly the
     versions `vacuum_versions_partitioned` has kept (the Delta
     contract: retention bounds history). Raises if no committed
-    version ≤ v exists.
+    version ≤ v exists, and below a compacted store's history floor
+    when some partition would resolve to the v=-1 seed
+    (commitlog.ManifestStore.chain_as_of).
 
     For an `ordered=True` store, `live_only=True` filters the delete
     tombstones out and drops the flag column — the row set a consumer
@@ -548,54 +565,22 @@ def read_current_partitioned(
     hold no data returns an EMPTY frame in the recorded schema
     (absent = empty is well-defined per partition) rather than
     raising."""
-    vm = VersionManifests(store_path)
-    store = vm.store
-    # one manifest scan serves both the existence check and the map
-    manifests = vm.committed(below=None if as_of is None else as_of + 1)
-    if not manifests:
-        raise FileNotFoundError(
-            f"no committed version under {store_path}"
-            + (f" at or below as_of={as_of}" if as_of is not None else "")
-        )
-    current = partition_versions(manifests)
-    if partitions is not None:
-        current = {p: v for p, v in current.items() if p in set(partitions)}
-    if as_of is not None:
-        # Soundness guard 1: a compacted store's v=-1 seed holds the
-        # HEAD snapshot of the pre-compaction chain; its recorded
-        # history floor (compact_store_partitioned writes it — the
-        # Delta-checkpoint retention contract) marks where seed
-        # content stops being readable as history.
-        floor = read_history_floor(store)
-        if (
-            floor is not None
-            and as_of < floor
-            and any(
-                v == -1 and (store / "v=-1" / f"p={p}").exists()
-                for p, v in current.items()
-            )
-        ):
-            # The floor is a SEED-SEMANTICS marker, not a blanket as_of
-            # lower bound (ADVICE r13): the documented resume contract
-            # restarts batch ids at 0 in the compacted store, so
-            # new-chain versions below the old chain's floor are
-            # legitimately committed states and must stay reachable.
-            # The actual head-state leak is only the fold that resolves
-            # some partition to the v=-1 seed while as_of sits below the
-            # floor — there the returned snapshot surfaces the
-            # pre-compaction HEAD of that partition labeled as an old
-            # version, which under the old-chain reading of the number
-            # is fabricated history. A fold whose every partition was
-            # rewritten by new-chain versions ≤ as_of contains no seed
-            # content and is the unambiguous new-chain state.
-            raise FileNotFoundError(
-                f"as_of={as_of} sits below this store's compaction "
-                f"boundary (history floor {floor}) and the "
-                f"fold still resolves some partition to the v=-1 seed — "
-                f"pre-compaction history is gone and surfacing the "
-                f"seed's head state here would fabricate it"
-            )
-        # Soundness guard 2: vacuum_versions_partitioned records each
+    vm = ManifestStore(store_path, VERSIONED)
+    want = None if partitions is None else set(partitions)
+
+    def leaves(manifests):
+        current = partition_versions(manifests)
+        if want is not None:
+            current = {p: v for p, v in current.items() if p in want}
+        return vm.leaf_dirs(current)
+
+    # one manifest scan serves the existence check, the history-floor
+    # guard (refused exactly when some partition the read resolves
+    # still reads the v=-1 seed's head state) and the leaf dirs
+    manifests, paths = vm.chain_as_of(as_of, leaves)
+    vac = None if as_of is None else read_json_tolerant(vm.root / "_vacuumed.json")
+    if vac:
+        # Vacuum guard: vacuum_versions_partitioned records each
         # reclaimed committed version's touched set in _vacuumed.json.
         # The historical fold is WRONG for partition P exactly when
         # some reclaimed version d ≤ as_of touched P and no surviving
@@ -603,51 +588,41 @@ def read_current_partitioned(
         # resolve P to a pre-d state (or to absent). Detect that case
         # per partition and refuse, rather than fabricate history —
         # the Delta/Iceberg "version reclaimed by retention" error.
-        vac = read_json_tolerant(store / "_vacuumed.json")
-        if vac:
-            for d_str, touched in vac.get("reclaimed", {}).items():
-                d = int(d_str)
-                if d > as_of:
-                    continue
-                for p in touched:
-                    if partitions is not None and p not in set(partitions):
-                        continue  # pruned read never touches p
-                    if current.get(p, d - 1) < d:
-                        raise FileNotFoundError(
-                            f"as_of={as_of} reaches version {d} of partition "
-                            f"p={p}, reclaimed by vacuum_versions_partitioned "
-                            f"— history below the retention window is gone"
-                        )
+        current = partition_versions(manifests)
+        for d_str, touched in vac.get("reclaimed", {}).items():
+            d = int(d_str)
+            if d > as_of:
+                continue
+            for p in touched:
+                if want is not None and p not in want:
+                    continue  # pruned read never touches p
+                if current.get(p, d - 1) < d:
+                    raise FileNotFoundError(
+                        f"as_of={as_of} reaches version {d} of partition "
+                        f"p={p}, reclaimed by vacuum_versions_partitioned "
+                        f"— history below the retention window is gone"
+                    )
     if live_only and not manifests[0][1].get("ordered", False):
         raise ValueError(
             f"store {store_path} is not an ordered CDC store — its "
             "snapshot has no tombstones to filter (live_only=True)"
         )
-    paths = vm.leaf_dirs(current)
-    if not paths and partitions is not None:
-        # a pruned read over empty/untouched partitions is a
-        # well-defined EMPTY result — serve it in the recorded schema
-        # (all kv_serving and schema-recording CDC stores have one)
-        target = _newest_recorded_schema(manifests)
-        if target is not None:
-            empty = local_frame(spark, [], _schema_ddl(target))
-            if live_only:
-                empty = empty.where(
-                    F.coalesce(F.col(delete_col).cast("int"), F.lit(0)) == 0
-                ).drop(delete_col)
-            return empty
-    if not paths:
-        # every partition empty: reconstruct the payload schema from
-        # any committed version's parquet footer is impossible with no
-        # files — callers with a fully-emptied store get 0 columns of
-        # nothing only if no file ever existed; seed stores always have
-        # v=-1 files. Empty DataFrame with no schema source is an
-        # error the caller should see.
-        raise FileNotFoundError(
-            f"store {store_path} has no surviving rows or files to "
-            "infer a schema from"
-        )
-    df = _read_with_recorded_schema(spark, paths, manifests)
+    if paths:
+        df = _read_with_recorded_schema(spark, paths, manifests)
+    else:
+        # A pruned read over empty/untouched partitions is a
+        # well-defined EMPTY result — served in the recorded schema
+        # (all kv_serving and schema-recording CDC stores have one).
+        # A whole-store read with no files has no schema source (seed
+        # stores always have v=-1 files): an error the caller should
+        # see.
+        target = None if partitions is None else _newest_recorded_schema(manifests)
+        if target is None:
+            raise FileNotFoundError(
+                f"store {store_path} has no surviving rows or files to "
+                "infer a schema from"
+            )
+        df = local_frame(spark, [], _schema_ddl(target))
     if live_only:
         df = df.where(
             F.coalesce(F.col(delete_col).cast("int"), F.lit(0)) == 0
@@ -696,10 +671,13 @@ def compact_store_partitioned(
     so it is not a free parameter; pass `key` only for stores written
     before the manifests carried it, and it must then match any
     pinned value."""
-    src = VersionManifests(src_path)
-    manifests = src.committed()
-    if not manifests:
-        raise FileNotFoundError(f"no committed version under {src_path}")
+    src = ManifestStore(src_path, VERSIONED)
+    # one manifest scan serves the invariants below AND the snapshot
+    # paths — the chain this function exists to shorten is not walked
+    # twice (code-review r7-final)
+    manifests, paths = src.chain_as_of(
+        None, lambda chain: src.leaf_dirs(partition_versions(chain))
+    )
     meta = manifests[0][1]
     n_buckets = meta["n_buckets"]
     # The routing EXPRESSION is pinned like the key (r16): rewriting
@@ -723,16 +701,12 @@ def compact_store_partitioned(
             f"store {src_path} predates key-pinned manifests; pass key= "
             "explicitly (it must be the key the sink routed on)"
         )
-    # one manifest scan serves the invariants above AND the snapshot
-    # paths below — the chain this function exists to shorten is not
-    # walked twice (code-review r7-final)
-    paths = src.leaf_dirs(partition_versions(manifests))
     if not paths:
         raise FileNotFoundError(
             f"store {src_path} has no surviving rows or files to compact"
         )
     snap = _read_with_recorded_schema(spark, paths, manifests)
-    dst = VersionManifests(dst_path)
+    dst = ManifestStore(dst_path, VERSIONED)
     # the routing pin survives the chain reset
     pins = {
         "n_buckets": n_buckets, "ordered": meta.get("ordered", False),
@@ -740,42 +714,42 @@ def compact_store_partitioned(
     }
     snap.withColumn("p", _route(pins)).write.mode("overwrite").partitionBy(
         "p"
-    ).parquet(str(dst.version_dir(-1)))
+    ).parquet(str(dst.batch_dir(dst.SEED)))
     # History floor (code-review r13; scope refined per ADVICE r13):
     # the v=-1 seed holds the HEAD snapshot of the source chain, so a
     # time-travel fold below the source's newest version that resolves
     # any partition to the seed would silently return head state
-    # labeled as old history. Record the boundary so
-    # read_current_partitioned (as_of=) refuses exactly that case —
-    # the Delta-checkpoint retention contract — while new-chain
-    # versions (batch ids restart at 0 after the fresh-checkpoint
-    # resume) whose folds contain no seed content stay reachable.
-    # Written BEFORE the seed manifest: a crash in between leaves a
-    # store with no committed version (unreadable), never a readable
-    # store missing its floor.
-    write_history_floor(dst.store, manifests[-1][0])
-    _commit_version(dst, pins, -1, list(range(n_buckets)), snap.drop("p").schema)
+    # labeled as old history. The boundary lets read_current_partitioned
+    # (as_of=) refuse exactly that case — the Delta-checkpoint
+    # retention contract — while new-chain versions (batch ids restart
+    # at 0 after the fresh-checkpoint resume) whose folds contain no
+    # seed content stay reachable.
+    dst.seed(
+        _version_payload(pins, range(n_buckets), snap.drop("p").schema),
+        floor=manifests[-1][0],
+    )
     return n_buckets
 
 
 def vacuum_versions_partitioned(store_path: str, keep: int = 2) -> list[int]:
-    """Reclaim CDC store versions: a version directory is debris once
-    NO partition's newest-`keep` rewrite history includes it. Each
-    partition's last `keep` rewriting versions must survive, and
-    keep >= 2 is the redelivery window: a crashed batch N re-reads
-    each touched partition's newest version < N, so the second-newest
-    must survive until N commits. Uncommitted dirs older than the
-    newest committed version are debris too; anything newer may be an
-    in-flight write, and a store with NO committed version is left
-    untouched (any dir there may be a live stream's first write).
-    Returns deleted version numbers."""
+    """Reclaim the versions of a versioned store (CDC table or KV
+    serving): a version directory is debris once NO partition's
+    newest-`keep` rewrite history includes it. Each partition's last
+    `keep` rewriting versions must survive, and keep >= 2 is the
+    redelivery window: a crashed batch N re-reads each touched
+    partition's newest version < N, so the second-newest must survive
+    until N commits. Uncommitted dirs older than the newest committed
+    version are debris too; anything newer may be an in-flight write,
+    and a store with NO committed version is left untouched (any dir
+    there may be a live stream's first write). Returns deleted version
+    numbers."""
     import shutil
 
     if keep < 2:
         raise ValueError("keep < 2 breaks crash-redelivery (see docstring)")
-    vm = VersionManifests(store_path)
-    store = vm.store
-    committed = vm.committed()
+    vm = ManifestStore(store_path, VERSIONED)
+    store = vm.root
+    committed = vm.manifests()
     if not committed:
         return []
     history: dict[int, list[int]] = {}
@@ -794,11 +768,10 @@ def vacuum_versions_partitioned(store_path: str, keep: int = 2) -> list[int]:
     by_version = dict(committed)
     doomed = []
     reclaimed: dict[str, list[int]] = {}
-    for p in store.glob("v=*"):
-        v = int(p.name.split("=", 1)[1])
+    for v, p in vm.data_dirs():
         if v in survivors:
             continue
-        if (p / vm.MANIFEST).exists() or v < newest:
+        if vm.manifest_path(v).exists() or v < newest:
             doomed.append((v, p))
             if v in by_version:
                 # Record the reclaimed COMMITTED version's touched set
@@ -1334,42 +1307,17 @@ def foreach_batch_dedup_ingest(
 
 def _ingest_dirs_as_of(store_path: str, as_of: int | None, subdir: str | None = None):
     """(manifests, dirs) of an ingest store: its committed (batch,
-    payload) chain and that chain's existing `[subdir/]batch=<id>` data
-    dirs, raising when there are none. The chain is optionally
-    truncated to batch ids ≤ `as_of` — VERSION AS OF on the batch
-    chain (VERDICT r13 #6), with the compaction seed-semantics guard
-    the CDC layouts established (ADVICE r13): the `batch=-1` seed of a
-    compacted store holds the FOLD of the whole pre-compaction chain,
-    so an as_of below the recorded history floor whose truncated chain
-    still includes the seed would surface post-boundary state labeled
-    as old history — refuse loudly; new-chain batches (ids restart at
-    0 after the documented fresh-checkpoint resume) whose folds merely
-    extend the seed at-or-above the floor stay reachable, as does any
-    as_of on an uncompacted store."""
+    payload) chain, optionally truncated to batch ids ≤ `as_of` —
+    VERSION AS OF on the batch chain (VERDICT r13 #6) — and that
+    chain's existing `[subdir/]batch=<id>` data dirs, raising when
+    there are none. Below a compacted store's history floor the read
+    refuses when it would surface the `batch=-1` seed, which holds the
+    fold of the whole pre-compaction chain
+    (commitlog.ManifestStore.chain_as_of)."""
     ms = ManifestStore(store_path)
-    manifests = [
-        (b, p) for b, p in ms.manifests() if as_of is None or b <= as_of
-    ]
-    if not manifests:
-        raise FileNotFoundError(
-            f"no committed batch under {store_path}"
-            + (f" at or below as_of={as_of}" if as_of is not None else "")
-        )
-    if as_of is not None:
-        floor = read_history_floor(store_path)
-        if (
-            floor is not None
-            and as_of < floor
-            and any(b == ms.SEED for b, _ in manifests)
-        ):
-            raise FileNotFoundError(
-                f"as_of={as_of} sits below this store's compaction "
-                f"boundary (history floor {floor}) and the "
-                "truncated chain still includes the batch=-1 seed — "
-                "pre-compaction history is gone and the seed's folded "
-                "state would fabricate it"
-            )
-    dirs = ms.batch_dirs(subdir, manifests=manifests)
+    manifests, dirs = ms.chain_as_of(
+        as_of, lambda chain: ms.batch_dirs(subdir, manifests=chain)
+    )
     if not dirs:
         raise ValueError(f"no committed batches under {store_path}")
     return manifests, dirs
@@ -2333,6 +2281,5 @@ def compact_ingest_store(spark, src_path: str, dst_path: str) -> int:
             payload[key] = touched
     if "merges" in carries:
         payload["merges"] = []
-    write_history_floor(dst_path, manifests[-1][0])
-    dst.seed(payload)
+    dst.seed(payload, floor=manifests[-1][0])
     return n

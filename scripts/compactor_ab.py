@@ -5,11 +5,17 @@ compact it, and write a CONTENT digest of both stores — row multisets
 per data dir and sidecar (file layout excluded: part-file names embed
 uuids; partition values included), every committed source manifest
 with `elapsed_s` dropped (a wall-clock stamp), the seed manifest
-payload, and the history floor. The versioned stores are digested the
-same way: a CDC table store in the st_q9 configuration, an
-`ordered=True` CDC store with an `init` seed (st_q10's), and a KV
-serving store fed in two batches — every `v=<id>/p=<k>` leaf's sorted
-rows and every `_touched.json` byte for byte. Run before and after a
+payload, and the history floor, each manifest with its key order. The
+versioned stores are digested the same way: a CDC table store in the
+st_q9 configuration, an `ordered=True` CDC store with an `init` seed
+(st_q10's), and a KV serving store fed in two batches — every
+`v=<id>/p=<k>` leaf's sorted rows and every `_touched.json` byte for
+byte. The store readers are digested too, as sorted rows of each
+as_of read at every committed id and at the head: `read_ingest_accepted`,
+`ann_ingest_members` or `read_semdedup_representatives` on each ingest
+source and its compacted store (a read refused below the history floor
+records the refusal), `read_current_partitioned` on the three versioned
+stores and `read_kv_state` on the KV store. Run before and after a
 refactor; the digests must be identical. The SemDeDup feed arrives in
 descending vec_id order, so a later batch holds smaller ids than the
 stored members it near-duplicates and the union by min id commits
@@ -37,14 +43,7 @@ import tempfile
 sys.path.insert(0, ".")
 
 
-def _rows_digest(spark, path) -> str | None:
-    p = pathlib.Path(path)
-    if not p.exists():
-        return None
-    files = sorted(str(f) for f in p.rglob("*.parquet"))
-    if not files:
-        return None
-    df = spark.read.option("basePath", str(p)).parquet(*files)
+def _frame_digest(df) -> str:
     rows = sorted(
         json.dumps(
             [None if v is None else str(v) for v in r],
@@ -53,6 +52,28 @@ def _rows_digest(spark, path) -> str | None:
         for r in df.collect()
     )
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+def _rows_digest(spark, path) -> str | None:
+    p = pathlib.Path(path)
+    if not p.exists():
+        return None
+    files = sorted(str(f) for f in p.rglob("*.parquet"))
+    if not files:
+        return None
+    return _frame_digest(spark.read.option("basePath", str(p)).parquet(*files))
+
+
+def _as_of_digests(read, ids) -> dict:
+    """The sorted-row digest of `read(as_of)` at each id in `ids` and
+    at the head (None); a refused read records its exception type."""
+    out = {}
+    for as_of in [*ids, None]:
+        try:
+            out[str(as_of)] = _frame_digest(read(as_of))
+        except (FileNotFoundError, ValueError) as e:
+            out[str(as_of)] = f"refused: {type(e).__name__}"
+    return out
 
 
 def main() -> int:
@@ -122,12 +143,12 @@ def _digests(spark, work: pathlib.Path, sf: str) -> dict:
                     spark, ms.batch_dir(b, sub)
                 )
         d["manifests"] = [
-            (b, {k: v for k, v in sorted(payload.items()) if k != "elapsed_s"})
+            (b, [[k, v] for k, v in payload.items() if k != "elapsed_s"])
             for b, payload in ms.manifests()
         ]
         return d
 
-    def digest(name, src, dst):
+    def digest(name, src, dst, reader):
         base = pathlib.Path(dst)
         d = {"source": digest_source(src)}
         for sub in subdirs:
@@ -135,12 +156,14 @@ def _digests(spark, work: pathlib.Path, sf: str) -> dict:
                 spark, base / sub if sub else base / "batch=-1"
             )
         ms = ManifestStore(dst)
-        d["seed"] = [
-            (b, {k: v for k, v in sorted(payload.items())})
-            for b, payload in ms.manifests()
-        ]
+        d["seed"] = [(b, list(payload.items())) for b, payload in ms.manifests()]
         fl = read_json_tolerant(pathlib.Path(dst) / "_history_floor.json")
         d["floor"] = fl
+        ids = [b for b, _ in ManifestStore(src).manifests()]
+        for side, store in (("source_as_of", src), ("compacted_as_of", dst)):
+            d[side] = _as_of_digests(
+                lambda as_of, store=store: reader(spark, store, as_of=as_of), ids
+            )
         digests[name] = d
 
     # dedup
@@ -152,7 +175,7 @@ def _digests(spark, work: pathlib.Path, sf: str) -> dict:
         "t_compab_dedup_bands",
     ).awaitTermination()
     S.compact_ingest_store(spark, src, dst)
-    digest("dedup", src, dst)
+    digest("dedup", src, dst, S.read_ingest_accepted)
 
     # ann / semdedup share frozen centroids
     from distributed_mapreduce_spark.operators.similarity import train_centroids
@@ -165,7 +188,7 @@ def _digests(spark, work: pathlib.Path, sf: str) -> dict:
         chunk_stream(spark, "embeddings", emb_chunks), src, str(work / "ann_ckpt"), cents
     ).awaitTermination()
     S.compact_ingest_store(spark, src, dst)
-    digest("ann", src, dst)
+    digest("ann", src, dst, S.ann_ingest_members)
 
     # semdedup (kmeans_train centroid format, the dedup_q19 loop)
     from distributed_mapreduce_spark.operators.similarity import (
@@ -186,7 +209,7 @@ def _digests(spark, work: pathlib.Path, sf: str) -> dict:
     if not any(m.get("merges") for _, m in ManifestStore(src).manifests()):
         raise SystemExit("semdedup feed committed no merge record")
     S.compact_ingest_store(spark, src, dst)
-    digest("semdedup", src, dst)
+    digest("semdedup", src, dst, S.read_semdedup_representatives)
 
     # decontam + clean share an index
     bench = widen(table(spark, sf, "documents")).where(
@@ -200,7 +223,7 @@ def _digests(spark, work: pathlib.Path, sf: str) -> dict:
         chunk_stream(spark, "documents", doc_chunks), src, str(work / "dec_ckpt"), index
     ).awaitTermination()
     S.compact_ingest_store(spark, src, dst)
-    digest("decontam", src, dst)
+    digest("decontam", src, dst, S.read_ingest_accepted)
 
     src, dst = str(work / "clean_src"), str(work / "clean_dst")
     S.foreach_batch_clean_ingest(
@@ -211,29 +234,36 @@ def _digests(spark, work: pathlib.Path, sf: str) -> dict:
         index,
     ).awaitTermination()
     S.compact_ingest_store(spark, src, dst)
-    digest("clean", src, dst)
+    digest("clean", src, dst, S.read_ingest_accepted)
 
     # the versioned stores: CDC (st_q9 and st_q10 configurations) and
     # KV serving, each over the same two-chunk event feed
     from distributed_mapreduce_spark.operators.kv import ops_projection
     from distributed_mapreduce_spark.streaming.kv_serving import (
         foreach_batch_kv_serving,
+        read_kv_state,
     )
     (work / "events").mkdir()
     ev_chunks = stage_chunks(sf, "events", 2, str(work / "events"))
 
-    def digest_versioned(store) -> dict:
+    def digest_versioned(store, readers) -> dict:
         d = {}
+        versions = []
         for v in pathlib.Path(store).glob("v=*"):
             d[f"{v.name}/_touched.json"] = (v / "_touched.json").read_text()
+            versions.append(int(v.name.split("=", 1)[1]))
             for leaf in v.glob("p=*"):
                 d[f"{v.name}/{leaf.name}"] = _rows_digest(spark, leaf)
+        for reader in readers:
+            d[f"{reader.__name__}_as_of"] = _as_of_digests(
+                lambda as_of: reader(spark, store, as_of=as_of), sorted(versions)
+            )
         return d
 
-    def versioned(name, start):
+    def versioned(name, start, readers=(S.read_current_partitioned,)):
         src = work / f"{name}_src"
         start(str(src), str(work / f"{name}_ckpt")).awaitTermination()
-        digests[name] = digest_versioned(src)
+        digests[name] = digest_versioned(str(src), readers)
 
     init = table(spark, sf, "customer").select(*CDC_COLUMNS)
     for name, ord_expr, ordered in (
@@ -255,6 +285,7 @@ def _digests(spark, work: pathlib.Path, sf: str) -> dict:
         lambda src, ckpt: foreach_batch_kv_serving(
             ops_projection(chunk_stream(spark, "events", ev_chunks)), src, ckpt
         ),
+        (S.read_current_partitioned, read_kv_state),
     )
     if len(list((work / "kv_serving_src").glob("v=*"))) != 2:
         raise SystemExit("KV serving feed did not commit two batches")

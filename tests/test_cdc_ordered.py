@@ -382,7 +382,10 @@ def test_compact_store_resets_chain_and_replay_converges(spark, tmp_path):
     is gated to a no-op by its own persisted ord, and new data merges
     normally — the final state equals a straight uncompacted run."""
     from distributed_mapreduce_spark.streaming import event_stream
-    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
+    from distributed_mapreduce_spark.streaming.commitlog import (
+        VERSIONED,
+        ManifestStore,
+    )
     from distributed_mapreduce_spark.streaming.sinks import (
         compact_store_partitioned,
         foreach_batch_cdc_merge_partitioned,
@@ -408,11 +411,11 @@ def test_compact_store_resets_chain_and_replay_converges(spark, tmp_path):
 
     s1 = str(tmp_path / "s1")
     run(s1, str(tmp_path / "ckpt1"))
-    assert len(VersionManifests(s1).committed()) == 2  # one per batch
+    assert len(ManifestStore(s1, VERSIONED).manifests()) == 2  # one per batch
 
     s2 = str(tmp_path / "s2")
     compact_store_partitioned(spark, s1, s2, "k")
-    assert len(VersionManifests(s2).committed()) == 1  # the chain reset
+    assert len(ManifestStore(s2, VERSIONED).manifests()) == 1  # the chain reset
     # snapshot identical through compaction, tombstone included
     assert sorted(
         (r.k, r.v, r.ord, r.is_delete)
@@ -453,7 +456,10 @@ def test_compact_store_unordered_replay_converges(spark, tmp_path):
     final state equals a straight run (the unordered snapshot has no
     tombstones — deletes replay as deletes)."""
     from distributed_mapreduce_spark.streaming import event_stream
-    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
+    from distributed_mapreduce_spark.streaming.commitlog import (
+        VERSIONED,
+        ManifestStore,
+    )
     from distributed_mapreduce_spark.streaming.sinks import (
         compact_store_partitioned,
         foreach_batch_cdc_merge_partitioned,
@@ -476,7 +482,7 @@ def test_compact_store_unordered_replay_converges(spark, tmp_path):
     run(s1, str(tmp_path / "ckpt1"))
     s2 = str(tmp_path / "s2")
     compact_store_partitioned(spark, s1, s2)  # key comes from the manifest
-    assert len(VersionManifests(s2).committed()) == 1
+    assert len(ManifestStore(s2, VERSIONED).manifests()) == 1
 
     _chunk(str(src / "c3.parquet"), [(5, 1, "up", 9.0), (6, 4, "up", 4.0)], base + 10)
     run(s2, str(tmp_path / "ckpt2"))

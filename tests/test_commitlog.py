@@ -18,8 +18,9 @@ import pathlib
 import pytest
 
 from distributed_mapreduce_spark.streaming.commitlog import (
+    HISTORY_FLOOR,
+    VERSIONED,
     ManifestStore,
-    VersionManifests,
     atomic_write_json,
     partition_versions,
     read_json_tolerant,
@@ -28,6 +29,7 @@ from distributed_mapreduce_spark.streaming.sinks import (
     _alias_map,
     _check_id_buckets,
     _pinned_id_buckets,
+    vacuum_versions_partitioned,
 )
 
 
@@ -59,11 +61,11 @@ def test_read_json_tolerant_absent_torn_binary(tmp_path):
 
 def test_manifest_store_commit_visibility(tmp_path):
     ms = ManifestStore(tmp_path / "store")
-    assert ms.committed() == []
+    assert ms.manifests() == []
     assert not ms.is_committed(0)
     for b in (2, 0, 1):  # out-of-order commits sort ascending
         ms.commit(b, {"accepted": b * 10})
-    assert ms.committed() == [0, 1, 2]
+    assert [b for b, _ in ms.manifests()] == [0, 1, 2]
     assert all(ms.is_committed(b) for b in (0, 1, 2))
     # commit stamps the batch id into the payload
     assert ms.manifests()[2] == (2, {"batch": 2, "accepted": 20})
@@ -75,7 +77,7 @@ def test_manifest_store_seed_admission(tmp_path):
     ms = ManifestStore(tmp_path / "store")
     ms.seed({"accepted": 7})
     ms.commit(0, {"accepted": 3})
-    assert ms.committed() == [-1, 0]
+    assert [b for b, _ in ms.manifests()] == [-1, 0]
     assert ms.is_committed(ManifestStore.SEED)
     assert ms.manifests()[0][1]["accepted"] == 7
 
@@ -87,21 +89,21 @@ def test_manifest_store_torn_manifest_is_uncommitted(tmp_path):
     redelivery while readers never see the data (invisible forever)."""
     ms = ManifestStore(tmp_path / "store")
     ms.commit(0, {"accepted": 1})
-    ms.man_dir.joinpath("1.json").write_text('{"batch": 1, "acc')  # torn
-    assert ms.committed() == [0]
+    ms.manifest_path(1).write_text('{"batch": 1, "acc')  # torn
+    assert [b for b, _ in ms.manifests()] == [0]
     assert not ms.is_committed(1), "torn manifest must read as uncommitted"
     # redelivery overwrites the torn manifest and the batch appears
     ms.commit(1, {"accepted": 2})
-    assert ms.committed() == [0, 1]
+    assert [b for b, _ in ms.manifests()] == [0, 1]
     assert ms.is_committed(1)
 
 
 def test_manifest_store_foreign_files_skipped(tmp_path):
     ms = ManifestStore(tmp_path / "store")
     ms.commit(3, {})
-    ms.man_dir.joinpath("_meta.json").write_text('{"note": "not a batch"}')
-    ms.man_dir.joinpath("garbage.json").write_text("{}")
-    assert ms.committed() == [3]
+    ms.manifest_path(3).with_name("_meta.json").write_text('{"note": "not a batch"}')
+    ms.manifest_path(3).with_name("garbage.json").write_text("{}")
+    assert [b for b, _ in ms.manifests()] == [3]
 
 
 def test_manifest_store_batch_dirs_and_snapshot_reuse(tmp_path):
@@ -222,38 +224,147 @@ def test_alias_map_resolves_chains_and_respects_prefix():
 
 
 def test_version_manifests_commit_fold_and_below(tmp_path):
-    vm = VersionManifests(tmp_path / "store")
-    vm.commit(0, [0, 1], n_buckets=4)
-    vm.commit(2, [1], n_buckets=4)
-    assert [v for v, _ in vm.committed()] == [0, 2]
+    vm = ManifestStore(tmp_path / "store", VERSIONED)
+    vm.commit(0, {"touched": [0, 1], "n_buckets": 4})
+    vm.commit(2, {"touched": [1], "n_buckets": 4})
+    assert [v for v, _ in vm.manifests()] == [0, 2]
     # later versions shadow earlier ones per partition
-    current = partition_versions(vm.committed())
+    current = partition_versions(vm.manifests())
     assert current == {0: 0, 1: 2}
-    assert partition_versions(vm.committed(below=2)) == {0: 0, 1: 0}
-    # touched is sorted and invariants are pinned in the payload
-    v0 = dict(vm.committed())[0]
+    assert partition_versions(vm.manifests(below=2)) == {0: 0, 1: 0}
+    # the payload is committed unstamped, invariants and all
+    v0 = dict(vm.manifests())[0]
     assert v0["touched"] == [0, 1] and v0["n_buckets"] == 4
     # leaf dirs: touched-but-absent reads as empty (no path), unmapped
     # partitions are skipped, and `partitions` order is kept
-    (vm.version_dir(0) / "p=0").mkdir()
-    (vm.version_dir(2) / "p=1").mkdir()
-    d0, d1 = str(vm.version_dir(0) / "p=0"), str(vm.version_dir(2) / "p=1")
+    (vm.batch_dir(0) / "p=0").mkdir()
+    (vm.batch_dir(2) / "p=1").mkdir()
+    d0, d1 = str(vm.batch_dir(0) / "p=0"), str(vm.batch_dir(2) / "p=1")
     assert vm.leaf_dirs(current) == [d0, d1]
     assert vm.leaf_dirs(current, [1, 3, 0]) == [d1, d0]
     assert vm.leaf_dirs({0: 2, 1: 2}) == [d1]
 
 
 def test_version_manifests_torn_manifest_is_uncommitted(tmp_path):
-    vm = VersionManifests(tmp_path / "store")
-    vm.commit(0, [0], n_buckets=2)
-    torn = vm.version_dir(1)
-    torn.mkdir(parents=True)
-    (torn / VersionManifests.MANIFEST).write_text('{"touched": [0')
-    assert [v for v, _ in vm.committed()] == [0]
-    assert partition_versions(vm.committed()) == {0: 0}
+    vm = ManifestStore(tmp_path / "store", VERSIONED)
+    vm.commit(0, {"touched": [0], "n_buckets": 2})
+    vm.batch_dir(1).mkdir(parents=True)
+    vm.manifest_path(1).write_text('{"touched": [0')
+    assert [v for v, _ in vm.manifests()] == [0]
+    assert partition_versions(vm.manifests()) == {0: 0}
     # redelivery overwrites the torn version and it becomes visible
-    vm.commit(1, [0], n_buckets=2)
-    assert partition_versions(vm.committed()) == {0: 1}
+    vm.commit(1, {"touched": [0], "n_buckets": 2})
+    assert partition_versions(vm.manifests()) == {0: 1}
+
+
+def test_chain_as_of_ingest_layout(tmp_path):
+    """VERSION AS OF on an ingest chain: truncation to ids ≤ as_of,
+    torn and non-integer manifests skipped, FileNotFoundError on an
+    empty chain, and below a compacted store's history floor a refusal
+    exactly when the read's dirs include seed data."""
+    ms = ManifestStore(tmp_path / "src")
+
+    def accepted(store):
+        return lambda chain: store.batch_dirs("accepted", manifests=chain)
+
+    with pytest.raises(FileNotFoundError, match="no committed version"):
+        ms.chain_as_of(None, accepted(ms))
+    for b in (0, 1, 2):
+        ms.commit(b, {})
+        ms.batch_dir(b, "accepted").mkdir(parents=True)
+    ms.manifest_path(3).write_text('{"batch": 3')  # torn
+    ms.manifest_path(0).with_name("notes.json").write_text("{}")
+    chain, dirs = ms.chain_as_of(1, accepted(ms))
+    assert [b for b, _ in chain] == [0, 1]
+    assert dirs == [str(ms.batch_dir(b, "accepted")) for b in (0, 1)]
+    assert [b for b, _ in ms.chain_as_of(None, accepted(ms))[0]] == [0, 1, 2]
+    with pytest.raises(FileNotFoundError, match="at or below as_of=-1"):
+        ms.chain_as_of(-1, accepted(ms))
+
+    # compacted: the seed folds source batches ≤ 2; the resumed stream
+    # restarts at batch 0
+    dst = ManifestStore(tmp_path / "dst")
+    dst.batch_dir(dst.SEED, "accepted").mkdir(parents=True)
+    dst.seed({}, floor=2)
+    assert json.loads((dst.root / HISTORY_FLOOR).read_text()) == {"floor": 2}
+    for b in (0, 1, 2):
+        dst.commit(b, {})
+        dst.batch_dir(b, "accepted").mkdir(parents=True)
+    for as_of in (-1, 0, 1):
+        with pytest.raises(FileNotFoundError, match="history floor 2"):
+            dst.chain_as_of(as_of, accepted(dst))
+    # at the floor and above, the seed is the folded history
+    for as_of in (2, None):
+        chain, dirs = dst.chain_as_of(as_of, accepted(dst))
+        assert [b for b, _ in chain] == [-1, 0, 1, 2]
+        assert dirs[0] == str(dst.batch_dir(dst.SEED, "accepted"))
+    # a seed holding no rows under the read's subdir surfaces nothing:
+    # the new-chain batches stay readable below the floor
+    dst.batch_dir(0, "ids").mkdir(parents=True)
+    ids = lambda chain: dst.batch_dirs("ids", manifests=chain)  # noqa: E731
+    assert dst.chain_as_of(0, ids)[1] == [str(dst.batch_dir(0, "ids"))]
+
+
+def test_chain_as_of_versioned_layout(tmp_path):
+    """VERSION AS OF on a versioned chain: the same truncation and
+    skips, and below the history floor a refusal exactly when some
+    partition the read resolves still reads the seed; a new-chain
+    version that rewrote (or emptied) every partition the read needs
+    shadows the seed and stays readable."""
+    vm = ManifestStore(tmp_path / "store", VERSIONED)
+
+    def leaves(partitions=None):
+        return lambda chain: vm.leaf_dirs(partition_versions(chain), partitions)
+
+    def leaf(v, p):
+        d = vm.batch_dir(v) / f"p={p}"
+        d.mkdir(parents=True)
+        return str(d)
+
+    with pytest.raises(FileNotFoundError, match="no committed version"):
+        vm.chain_as_of(3, leaves())
+    s0, s1, s2 = leaf(-1, 0), leaf(-1, 1), leaf(-1, 2)
+    vm.seed({"touched": [0, 1, 2]}, floor=5)
+    assert vm.chain_as_of(None, leaves())[1] == [s0, s1, s2]
+    with pytest.raises(FileNotFoundError, match="history floor 5"):
+        vm.chain_as_of(-1, leaves())
+    a0 = leaf(0, 0)
+    vm.commit(0, {"touched": [0]})
+    vm.commit(1, {"touched": [1, 2]})  # p=2 emptied: no dir
+    b1 = leaf(1, 1)
+    vm.batch_dir(2).mkdir()
+    vm.manifest_path(2).write_text('{"touched": [0')  # torn
+    (vm.root / "v=tmp").mkdir()  # non-integer entry
+    # as_of=0: p=1 and p=2 still resolve to the seed
+    with pytest.raises(FileNotFoundError, match="history floor 5"):
+        vm.chain_as_of(0, leaves())
+    # a pruned read of p=0 alone resolves past the seed
+    assert vm.chain_as_of(0, leaves([0]))[1] == [a0]
+    # as_of=1: every partition rewritten or emptied since the seed
+    chain, dirs = vm.chain_as_of(1, leaves())
+    assert [v for v, _ in chain] == [-1, 0, 1]
+    assert dirs == [a0, b1]
+    # at the floor and above, the seed is readable history
+    assert vm.chain_as_of(5, leaves())[1] == [a0, b1]
+    # a store never compacted (a CDC `init` seed) has no floor
+    fresh = ManifestStore(tmp_path / "fresh", VERSIONED)
+    (fresh.batch_dir(-1) / "p=0").mkdir(parents=True)
+    fresh.seed({"touched": [0]})
+    assert fresh.chain_as_of(-1, lambda c: fresh.leaf_dirs(partition_versions(c)))[
+        1
+    ] == [str(fresh.batch_dir(-1) / "p=0")]
+
+
+def test_vacuum_skips_non_integer_entries(tmp_path):
+    """Vacuum walks the same id-parsed entries as the manifest listing:
+    a foreign `v=<non-integer>` dir is left alone, not a crash."""
+    vm = ManifestStore(tmp_path / "store", VERSIONED)
+    for v in (0, 1, 2):
+        vm.commit(v, {"touched": [0]})
+    (vm.root / "v=tmp").mkdir()
+    assert sorted(v for v, _ in vm.data_dirs()) == [0, 1, 2]
+    assert vacuum_versions_partitioned(str(vm.root)) == [0]
+    assert (vm.root / "v=tmp").is_dir()
 
 
 def test_id_buckets_pin(tmp_path):

@@ -51,8 +51,6 @@ ALLOWLIST = {
     "dedup and clean sink docstrings tell operators to run",
     "sources/files.py:compact_partitioned": "small-file maintenance for the "
     "cell-partitioned IVF, ANN and SemDeDup stores",
-    "streaming/sinks.py:ann_ingest_members": "the only reader of the ANN ingest "
-    "store",
     "operators/bpe.py": "BPE merge training: iterative and not "
     "SQL-expressible, graded by its tests against the sequential "
     "pure-Python fold; kept until it is registered as an eager query "

@@ -419,7 +419,10 @@ def test_sf1_compact_store_replay_10x_batches(stress_spark, tmp_path):
     import pyarrow.parquet as pq2
 
     from distributed_mapreduce_spark.streaming import event_stream
-    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
+    from distributed_mapreduce_spark.streaming.commitlog import (
+        VERSIONED,
+        ManifestStore,
+    )
     from distributed_mapreduce_spark.streaming.sinks import (
         compact_store_partitioned,
         foreach_batch_cdc_merge_partitioned,
@@ -478,11 +481,11 @@ def test_sf1_compact_store_replay_10x_batches(stress_spark, tmp_path):
     t0 = time.perf_counter()
     s1 = str(tmp_path / "s1")
     run(s1, str(tmp_path / "ckpt1"))
-    assert len(VersionManifests(s1).committed()) == n_batches
+    assert len(ManifestStore(s1, VERSIONED).manifests()) == n_batches
 
     s2 = str(tmp_path / "s2")
     compact_store_partitioned(stress_spark, s1, s2, "k")
-    assert len(VersionManifests(s2).committed()) == 1
+    assert len(ManifestStore(s2, VERSIONED).manifests()) == 1
 
     for b in range(n_batches, n_batches + 4):
         rows = [(b * 1000 + k, k, "up", -b - k) for k in range(0, keys, 2)]

@@ -491,7 +491,10 @@ def test_vacuum_versions_keeps_redelivery_window(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from distributed_mapreduce_spark.streaming import event_stream
-    from distributed_mapreduce_spark.streaming.commitlog import VersionManifests
+    from distributed_mapreduce_spark.streaming.commitlog import (
+        VERSIONED,
+        ManifestStore,
+    )
     from distributed_mapreduce_spark.streaming.sinks import (
         foreach_batch_cdc_merge_partitioned,
         read_current_partitioned,
@@ -518,7 +521,7 @@ def test_vacuum_versions_keeps_redelivery_window(spark, tmp_path):
         to_changes(event_stream(spark, str(src))), store, ckpt, "k", n_buckets=1
     )
     q.awaitTermination()
-    assert (_pl.Path(store) / "v=1" / VersionManifests.MANIFEST).exists()
+    assert ManifestStore(store, VERSIONED).manifest_path(1).exists()
     before = {r.k: r.v for r in read_current_partitioned(spark, store).collect()}
 
     with _pt.raises(ValueError):
@@ -2198,7 +2201,7 @@ def test_decontam_ingest_streamed_equals_one_shot(spark, tmp_path):
     batches = [b for b, _ in ms.manifests()]
     pre = read_ingest_accepted(spark, store, as_of=batches[0])
     pre_ids = sorted(r.doc_id for r in pre.select("doc_id").collect())
-    (ms.man_dir / f"{batches[-1]}.json").unlink()
+    ms.manifest_path(batches[-1]).unlink()
     visible = sorted(
         r.doc_id
         for r in read_ingest_accepted(spark, store).select("doc_id").collect()
